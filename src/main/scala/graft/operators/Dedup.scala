@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions, VectorFunctions}
+import graft.sources.StoreParquet
 
 /** Deduplication operators for large-scale training-data pipelines
   * (EXT mandate; SURVEY.md §2.9 V4). The reference stores blindly duplicated
@@ -414,11 +415,11 @@ object Dedup {
     }
     val lineStore =
       if (classified(linePath) == graft.sources.PathState.Data)
-        spark.read.parquet(linePath)
+        StoreParquet.open(spark, linePath)
       else spark.emptyDataFrame.withColumn("_h", lit(null).cast("string")).limit(0)
     val docStore =
       if (classified(docPath) == graft.sources.PathState.Data)
-        spark.read.parquet(docPath)
+        StoreParquet.open(spark, docPath)
       else spark.emptyDataFrame.withColumn("_id", lit(null).cast("long")).limit(0)
     val fresh = batch.dropDuplicates(idCol)
       .join(docStore, batch(idCol) === docStore("_id"), "left_anti")
@@ -1210,8 +1211,7 @@ object Dedup {
         col("id").cast(idType).as("rep"), col("id").as("cluster_size"),
         col("id").as("weight_ppm"))
     import org.apache.spark.sql.expressions.Window
-    spark.read.option("basePath", weightsPath)
-      .parquet(committed.map(_._2): _*)
+    StoreParquet.open(spark, weightsPath, committed.map(_._2))
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("batch_id").desc)))
       .where(col("_rn") === 1)
@@ -1428,8 +1428,7 @@ object Dedup {
     val live = committed.filter(_._1 > upToBatchId)
     // ---- weights: latest-wins snapshot over the closed range ----
     import org.apache.spark.sql.expressions.Window
-    val snap = spark.read.option("basePath", weightsPath)
-      .parquet(closed.map(_._2): _*)
+    val snap = StoreParquet.open(spark, weightsPath, closed.map(_._2))
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("batch_id").desc)))
       .where(col("_rn") === 1)
@@ -1450,7 +1449,7 @@ object Dedup {
     // epochs since the boundary — the in-flight window)
     live.foreach { case (id, src) =>
       val dst = s"$dstPath/weights/batch_id=$id"
-      spark.read.parquet(src)
+      StoreParquet.open(spark, src)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst)
       markSubdirCommitted(dst, hconf)
     }
@@ -1491,7 +1490,9 @@ object Dedup {
     val closedPairsDirs = pairsCommitted.filter(_._1 <= upToBatchId)
     val livePairsDirs = pairsCommitted.filter(_._1 > upToBatchId)
     if (closedPairsDirs.nonEmpty) {
-      val closedPairs = spark.read.parquet(closedPairsDirs.map(_._2): _*)
+      // the batch subdirs are the data; the fold re-partitions them
+      val closedPairs = StoreParquet.open(spark, pairsPath,
+        closedPairsDirs.map(_._2)).drop("batch_id")
       val n = closedPairs.count()
       val dataCols = closedPairs.columns.toSeq.map(col)
       val foldDir = s"$dstPath/pairs/batch_id=$upToBatchId"
@@ -1499,13 +1500,13 @@ object Dedup {
           math.max(1, math.min(targetFiles, closedPairsDirs.size)), dataCols: _*)
         .sortWithinPartitions(dataCols: _*)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(foldDir)
-      val out = spark.read.parquet(foldDir).count()
+      val out = StoreParquet.open(spark, foldDir).count()
       require(out == n, s"pairs compaction row mismatch: source $n, folded $out")
       markSubdirCommitted(foldDir, hconf)
     }
     livePairsDirs.foreach { case (id, src) =>
       val dst = s"$dstPath/pairs/batch_id=$id"
-      spark.read.parquet(src)
+      StoreParquet.open(spark, src)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst)
       markSubdirCommitted(dst, hconf)
     }
@@ -1658,7 +1659,7 @@ object Dedup {
       compactSequenceStore(spark, live, staged, targetFiles)
       if (graft.sources.PathState.classify(s"$live/pairs", hconf) ==
           graft.sources.PathState.Data &&
-          spark.read.parquet(s"$live/pairs").limit(1).count() > 0)
+          StoreParquet.open(spark, s"$live/pairs").limit(1).count() > 0)
         compactSequencePairs(spark, live, staged, committedBatchId,
           targetFiles)
       afterRewrite()
@@ -2332,7 +2333,7 @@ object Dedup {
       s"signature store '$sigPath' exists but holds no parquet data files — " +
         "refusing to fold signatures into a directory that is not a store")
     val store =
-      if (state == graft.sources.PathState.Data) spark.read.parquet(sigPath)
+      if (state == graft.sources.PathState.Data) StoreParquet.open(spark, sigPath)
       else spark.emptyDataFrame
         .withColumn("id", lit(null).cast("long"))
         .withColumn("f", lit(null).cast("int"))
@@ -2438,7 +2439,7 @@ object Dedup {
         "refusing to fold sketches into a directory that is not a store")
     val storeExists = state == graft.sources.PathState.Data
     val store =
-      if (storeExists) spark.read.parquet(sketchPath)
+      if (storeExists) StoreParquet.open(spark, sketchPath)
       else spark.emptyDataFrame
         .withColumn("id", lit(null).cast("long"))
         .withColumn("sig", lit(null).cast("array<bigint>"))
@@ -2584,13 +2585,13 @@ object Dedup {
       src, spark.sparkContext.hadoopConfiguration)
     require(state == graft.sources.PathState.Data,
       s"'$src' holds no parquet data files — not a near-dup sketch store")
-    val sk = spark.read.parquet(src)
+    val sk = StoreParquet.open(spark, src)
     val n = sk.count()
     sk.repartitionByRange(targetFiles, col("id"))
       .sortWithinPartitions("id")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dstPath/sketches")
-    val out = spark.read.parquet(s"$dstPath/sketches").count()
+    val out = StoreParquet.open(spark, s"$dstPath/sketches").count()
     require(out == n, s"compaction row mismatch: source $n, compacted $out")
     out
   }
@@ -2619,13 +2620,13 @@ object Dedup {
       src, spark.sparkContext.hadoopConfiguration)
     require(state == graft.sources.PathState.Data,
       s"'$src' holds no parquet data files — not a signature store")
-    val sigs = spark.read.parquet(src)
+    val sigs = StoreParquet.open(spark, src)
     val n = sigs.count()
     sigs.repartitionByRange(targetFiles, col("id"), col("f"))
       .sortWithinPartitions("id", "f")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dstPath/sigs")
-    val out = spark.read.parquet(s"$dstPath/sigs").count()
+    val out = StoreParquet.open(spark, s"$dstPath/sigs").count()
     require(out == n, s"compaction row mismatch: source $n, compacted $out")
     out
   }
@@ -2666,7 +2667,7 @@ object Dedup {
       src, spark.sparkContext.hadoopConfiguration)
     require(state == graft.sources.PathState.Data,
       s"'$src' holds no parquet data files — not a pairs store")
-    val pairs = spark.read.parquet(src)
+    val pairs = StoreParquet.open(spark, src)
     require(pairs.columns.contains("batch_id"),
       s"'$src' has no batch_id partition column — not a streaming pairs store")
     val n = pairs.count()
@@ -2686,7 +2687,7 @@ object Dedup {
         .sortWithinPartitions(dataCols: _*)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$dstPath/pairs/batch_id=$upToBatchId")
-    val out = spark.read.parquet(s"$dstPath/pairs").count()
+    val out = StoreParquet.open(spark, s"$dstPath/pairs").count()
     require(out == n, s"compaction row mismatch: source $n, compacted $out")
     n
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.model._
 import graft.sources.PathState
+import graft.sources.StoreParquet
 
 /** The end-to-end indexing pipeline — the reference's whole purpose
   * (`/root/reference/index_documents.py:253-311`), as ONE lazy narrow
@@ -96,7 +97,7 @@ object Index {
     val existingIds =
       if (state == PathState.Empty)
         spark.emptyDataFrame.withColumn("doc_id", lit(null).cast("long")).limit(0)
-      else spark.read.parquet(path).select(col("doc_id")).distinct()
+      else StoreParquet.open(spark, path).select(col("doc_id")).distinct()
     // the anti join only excludes docs already ON DISK; an at-least-once
     // source can deliver the same doc_id twice WITHIN one batch — keep one
     // (retries carry identical payloads, so the winner is immaterial)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.sources.StoreParquet
 
 /** How library operators eagerly materialize a small result so the (large)
   * cached intermediates behind it can be released immediately — the
@@ -46,6 +47,6 @@ object CheckpointStrategy {
         df.checkpoint(true)
       case Parquet(dir) =>
         df.write.mode(SaveMode.Overwrite).parquet(dir)
-        df.sparkSession.read.parquet(dir)
+        StoreParquet.open(df.sparkSession, dir)
     }
 }

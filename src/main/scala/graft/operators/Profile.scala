@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.StoreParquet
 
 /** Dataset profiling — the observability pass a 100 TB ingest runs before
   * anything else touches the data (EXT): per-column quality cards (row/null/
@@ -233,7 +234,7 @@ object Profile {
     val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
     require(state != PathState.Foreign,
       s"profile store '$storeDir' holds non-parquet content — refusing to append")
-    if (state == PathState.Data && spark.read.parquet(storeDir)
+    if (state == PathState.Data && StoreParquet.open(spark, storeDir)
         .where(col("batch_id") === batchId).limit(1).count() > 0) return 0L
     // fractional min/max normalize -0.0 → 0.0 BEFORE rendering (ADVICE
     // r11): -0.0 and 0.0 parse back to EQUAL doubles but render as
@@ -275,7 +276,7 @@ object Profile {
     */
   def mergedProfile(spark: org.apache.spark.sql.SparkSession, storeDir: String,
       batchIds: Seq[String] = Nil): DataFrame = {
-    val base = spark.read.parquet(storeDir)
+    val base = StoreParquet.open(spark, storeDir)
     val scoped =
       if (batchIds.isEmpty) base else base.where(col("batch_id").isin(batchIds: _*))
     scoped.groupBy(col("column"), col("value_type"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.StoreParquet
 
 /** Similarity search — the reference's implied query surface (pgvector
   * `ORDER BY embedding <=> q LIMIT k`, `/root/reference/README.md:16,83-91`),
@@ -165,7 +166,7 @@ object Search {
     val base0 = docs.select(col(idCol).as("id"), col(tokensCol).as("toks"))
     val base = (if (state == PathState.Empty) base0
       else {
-        val existing = spark.read.parquet(s"$path/doclens").select(col("id"))
+        val existing = StoreParquet.open(spark, s"$path/doclens").select(col("id"))
         base0.join(existing, base0("id") === existing("id"), "left_anti")
       }).dropDuplicates("id").persist()
     try {
@@ -222,7 +223,7 @@ object Search {
     require(srcPath != dstPath,
       "removeFromTextIndex writes a NEW directory (caller swaps atomically)")
     val drop = removeIds.select(col(idCol).cast("long").as("id")).distinct()
-    spark.read.parquet(s"$srcPath/postings")
+    StoreParquet.open(spark, s"$srcPath/postings")
       .join(drop, Seq("id"), "left_anti")
       // re-dedup (term,id): orphan postings from a crashed append must not
       // survive into the rebuilt index with doubled tf
@@ -234,7 +235,7 @@ object Search {
     // R168 no-read-back discipline): the job-committed write's own counts
     // are exactly what a re-read would aggregate, without the extra scan
     val obs = org.apache.spark.sql.Observation()
-    spark.read.parquet(s"$srcPath/doclens")
+    StoreParquet.open(spark, s"$srcPath/doclens")
       .join(drop, Seq("id"), "left_anti")
       .observe(obs, count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
@@ -265,7 +266,7 @@ object Search {
     require(srcPath != dstPath,
       "removeFromIvfIndex writes a NEW directory (caller swaps atomically)")
     val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(spark.read.parquet(s"$srcPath/vectors")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/vectors")
         .join(drop, Seq(idCol), "left_anti"),
       s"$dstPath/vectors", partitionCol = Some("cluster_id"))
     copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
@@ -317,7 +318,7 @@ object Search {
         .unionByName(base.select(col("id"))).distinct()
       // survivors re-dedup (term,id) like removeFromTextIndex: orphan
       // postings from a crashed in-place append must not carry doubled tf
-      spark.read.parquet(s"$srcPath/postings")
+      StoreParquet.open(spark, s"$srcPath/postings")
         .join(drop, Seq("id"), "left_anti")
         .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
         .unionByName(postingsOf(base))
@@ -328,7 +329,7 @@ object Search {
       // the R168 no-read-back discipline): same exact values as the
       // re-read aggregate, two fewer jobs per update
       val obs = org.apache.spark.sql.Observation()
-      spark.read.parquet(s"$srcPath/doclens")
+      StoreParquet.open(spark, s"$srcPath/doclens")
         .join(drop, Seq("id"), "left_anti")
         .unionByName(doclensOf(base))
         .observe(obs, count(lit(1)).as("n_docs"),
@@ -358,7 +359,7 @@ object Search {
     require(srcPath != dstPath,
       "updateIvfIndex writes a NEW directory (caller swaps atomically)")
     val centroids = readIvfCentroids(spark, srcPath)
-    val existing = spark.read.parquet(s"$srcPath/vectors")
+    val existing = StoreParquet.open(spark, s"$srcPath/vectors")
     require(refreshBatch.columns.toSet + "cluster_id" == existing.columns.toSet,
       s"updateIvfIndex batch columns ${refreshBatch.columns.sorted.mkString(",")} " +
         s"must match the index's ${existing.columns.sorted.mkString(",")} (minus cluster_id)")
@@ -391,16 +392,16 @@ object Search {
       queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "BM25 needs at least one query term")
-    val hits = spark.read.parquet(s"$path/postings")
+    val hits = StoreParquet.open(spark, s"$path/postings")
       .where(col("term").isin(queryTerms: _*)) // parquet row-group prune
       .dropDuplicates("term", "id")            // crash-retry dup guard
       .withColumn("df",
         count(lit(1)).over(Window.partitionBy(col("term"))).cast("double"))
       .select(col("term"), col("df"), col("id"), col("tf").cast("double").as("tf"))
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = StoreParquet.open(spark, s"$path/stats")
       .select(col("n_docs"),
         (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
-    spark.read.parquet(s"$path/doclens")
+    StoreParquet.open(spark, s"$path/doclens")
       .join(broadcast(hits), "id")
       .crossJoin(broadcast(stats))
       .withColumn("idf", log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
@@ -623,18 +624,31 @@ object Search {
 
   /** Driver-side probe selection: the `nProbe` centroids nearest the query
     * (cosine; ties to the lowest id). Centroids are tiny — this is plain
-    * Scala, never a Spark job.
+    * Scala, never a Spark job: primitive loops, the query norm computed
+    * once per call.
     */
   def probeClusters(centroids: Seq[(Int, Array[Float])],
       query: Seq[Float], nProbe: Int): Seq[Int] = {
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      val d = a.lazyZip(b).foldLeft(0.0)((s, p) => s + p._1.toDouble * p._2)
-      val na = math.sqrt(a.foldLeft(0.0)((s, x) => s + x.toDouble * x))
-      val nb = math.sqrt(b.foldLeft(0.0)((s, x) => s + x.toDouble * x))
+    val q = query.toArray
+    var nq = 0.0
+    var i = 0
+    while (i < q.length) { nq += q(i).toDouble * q(i); i += 1 }
+    val nb = math.sqrt(nq)
+    def cos(a: Array[Float]): Double = {
+      // a·q over the shorter length, ‖a‖ over all of a, both accumulated
+      // in index order — ServePathSpec pins the ranking, ties included
+      var d = 0.0
+      var na2 = 0.0
+      val n = math.min(a.length, q.length)
+      var j = 0
+      while (j < n) { d += a(j).toDouble * q(j); j += 1 }
+      j = 0
+      while (j < a.length) { na2 += a(j).toDouble * a(j); j += 1 }
+      val na = math.sqrt(na2)
       if (na == 0 || nb == 0) 0.0 else d / (na * nb)
     }
     centroids
-      .map { case (cid, v) => (cos(v.toSeq, query), cid) }
+      .map { case (cid, v) => (cos(v), cid) }
       .sortBy { case (s, cid) => (-s, cid) }.take(nProbe).map(_._2)
   }
 
@@ -713,7 +727,7 @@ object Search {
       s"appendIvfIndex requires an existing index at '$path' " +
         "(writeIvfIndex first — appends need its frozen centroids)")
     val centroids = readIvfCentroids(spark, path)
-    val existing = spark.read.parquet(s"$path/vectors")
+    val existing = StoreParquet.open(spark, s"$path/vectors")
     // appended files must carry the index's exact column set — a silently
     // divergent schema would make later reads footer-dependent
     require(batch.columns.toSet + "cluster_id" == existing.columns.toSet,
@@ -759,9 +773,9 @@ object Search {
     * longer fits the data — time to re-cluster and rebuild.
     */
   def ivfDriftStats(spark: SparkSession, path: String, vecCol: String): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = StoreParquet.open(spark, s"$path/centroids")
       .select(col("cluster_id"), col("centroid").cast("array<float>").as("_c"))
-    spark.read.parquet(s"$path/vectors")
+    StoreParquet.open(spark, s"$path/vectors")
       .join(broadcast(cents), "cluster_id")
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n"),
@@ -830,7 +844,7 @@ object Search {
     */
   def ivfDriftStatsExact(spark: SparkSession, path: String,
       vecCol: String): DataFrame =
-    driftStatRows(spark.read.parquet(s"$path/vectors"), vecCol,
+    driftStatRows(StoreParquet.open(spark, s"$path/vectors"), vecCol,
       readIvfCentroids(spark, path))
 
   /** Content fingerprint of a store subdir: md5 over the sorted
@@ -955,7 +969,7 @@ object Search {
     */
   def seedIvfDriftStats(spark: SparkSession, path: String,
       vecCol: String): Long =
-    seedDriftStatsFrom(spark.read.parquet(s"$path/vectors"), vecCol,
+    seedDriftStatsFrom(StoreParquet.open(spark, s"$path/vectors"), vecCol,
       readIvfCentroids(spark, path), path)
 
   /** The sidecar's per-cluster totals IF they are provably current for
@@ -974,7 +988,7 @@ object Search {
       case Some(digest)
           if digest == storeFingerprint(spark, s"$path/vectors") &&
             PathState.classify(driftStatsDir(path), hconf) == PathState.Data =>
-        Some(guardDriftStatOverflow(spark.read.parquet(driftStatsDir(path))
+        Some(guardDriftStatOverflow(StoreParquet.open(spark, driftStatsDir(path))
           .groupBy(col("cluster_id"))
           .agg(sum(col("n")).as("n"), sum(col("sim_fp_sum")).as("sim_fp_sum"))))
       case _ => None
@@ -1020,15 +1034,19 @@ object Search {
   }
 
   /** ANN top-k against a persisted IVF index: probe clusters chosen
-    * driver-side from the sidecar, then a scan whose `cluster_id IN (...)`
-    * predicate prunes to the probed partitions' files only.
+    * driver-side from the sidecar, then a scan of the probed partitions'
+    * directories only ([[graft.sources.StoreParquet.openPartitions]] — no
+    * schema-inference or listing job, so the query is ONE Spark job at any
+    * cluster count); the `cluster_id IN (...)` predicate stays as the
+    * plan's partition filter.
     */
   def ivfTopKFromIndex(spark: SparkSession, path: String, vecCol: String,
       query: Seq[Float], k: Int, nProbe: Int = 1): DataFrame = {
     requireConsistentModel(spark, path, "ivfTopKFromIndex")
     val centroids = readIvfCentroids(spark, path)
     val probeIds = probeClusters(centroids, query, nProbe)
-    spark.read.parquet(s"$path/vectors")
+    StoreParquet.openPartitions(spark, s"$path/vectors", "cluster_id",
+        probeIds)
       .where(col("cluster_id").isin(probeIds: _*))
       .withColumn("score", cosine(col(vecCol), lit(query.toArray)))
       .orderBy(col("score").desc).limit(k)
@@ -1076,7 +1094,8 @@ object Search {
       val s = maxAbs / 127.0
       if (s == 0.0) query.map(_ => 0) else query.map(x => math.floor(x / s + 0.5).toInt)
     }
-    val candidates = spark.read.parquet(s"$path/vectors")
+    val candidates = StoreParquet.openPartitions(spark, s"$path/vectors",
+        "cluster_id", probeIds)
       .where(col("cluster_id").isin(probeIds: _*))
       .withColumn("qscore", VectorFunctions.i8Cosine(
         transform(col("codes"), _.cast("int")), lit(qCodes.toArray)))
@@ -1485,7 +1504,7 @@ object Search {
       query: Seq[Float], k: Int, rescore: Int = 50): DataFrame = {
     requireConsistentModel(spark, path, "opqTopKFromIndex")
     val model = readOpqModel(spark, path)
-    val encoded = spark.read.parquet(s"$path/codes")
+    val encoded = StoreParquet.open(spark, s"$path/codes")
       .select(col(idCol), transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
     opqTopK(encoded, fullPrecision, idCol, vecCol, model, query, k, rescore)
   }
@@ -1667,7 +1686,7 @@ object Search {
       query: Seq[Float], k: Int, rescore: Int = 50): DataFrame = {
     requireConsistentModel(spark, path, "pqTopKFromIndex")
     val cb = readPqCodebooks(spark, path)
-    val encoded = spark.read.parquet(s"$path/codes")
+    val encoded = StoreParquet.open(spark, s"$path/codes")
       .select(col(idCol), transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
     pqTopK(encoded, fullPrecision, idCol, vecCol, cb, query, k, rescore)
   }
@@ -1689,7 +1708,7 @@ object Search {
       s"appendPqIndex requires an existing index at '$path' " +
         "(pqWriteIndex first — appends need its frozen codebooks)")
     val cb = readPqCodebooks(spark, path)
-    val existing = spark.read.parquet(s"$path/codes").select(col(idCol))
+    val existing = StoreParquet.open(spark, s"$path/codes").select(col(idCol))
     val fresh = batch
       .join(existing, batch(idCol) === existing(idCol), "left_anti")
       .dropDuplicates(idCol).persist()
@@ -1767,7 +1786,8 @@ object Search {
     val cb = readPqCodebooks(spark, path)
     val probeIds = probeClusters(centroids, query, nProbe)
     val tables = pqAdcTables(cb, pqQueryCodes(query))
-    val candidates = spark.read.parquet(s"$path/codes")
+    val candidates = StoreParquet.openPartitions(spark, s"$path/codes",
+        "cluster_id", probeIds)
       .where(col("cluster_id").isin(probeIds: _*))
       .select(col(idCol),
         transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
@@ -1821,7 +1841,7 @@ object Search {
     requirePlainIvfPq(spark, path, "appendIvfPqIndex")
     val centroids = readIvfCentroids(spark, path)
     val cb = readPqCodebooks(spark, path)
-    val existing = spark.read.parquet(s"$path/codes").select(col(idCol))
+    val existing = StoreParquet.open(spark, s"$path/codes").select(col(idCol))
     val fresh = batch
       .join(existing, batch(idCol) === existing(idCol), "left_anti")
       .dropDuplicates(idCol).persist()
@@ -1853,7 +1873,7 @@ object Search {
       "removeFromIvfPqIndex writes a NEW directory (caller swaps atomically)")
     requirePlainIvfPq(spark, srcPath, "removeFromIvfPqIndex")
     val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(spark.read.parquet(s"$srcPath/codes")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq(idCol), "left_anti"),
       s"$dstPath/codes", partitionCol = Some("cluster_id"))
     copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
@@ -1882,7 +1902,7 @@ object Search {
     val fresh = refreshBatch.dropDuplicates(idCol)
     val drop = retireIds.select(col(idCol))
       .unionByName(fresh.select(col(idCol))).distinct()
-    val n = writeCounted(spark.read.parquet(s"$srcPath/codes")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq(idCol), "left_anti")
         .unionByName(ivfPqEncoded(fresh, idCol, vecCol, centroids, cb)),
       s"$dstPath/codes", partitionCol = Some("cluster_id"))
@@ -2064,7 +2084,8 @@ object Search {
         acc + a.toDouble * b.toDouble
       }
     }.toMap
-    spark.read.parquet(s"$path/codes")
+    StoreParquet.openPartitions(spark, s"$path/codes", "cluster_id",
+        probeIds)
       .where(col("cluster_id").isin(probeIds: _*))
       .select(col(idCol), col("cluster_id"),
         transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
@@ -2117,7 +2138,7 @@ object Search {
     requireResidualIvfPq(spark, path, "appendIvfPqResidualIndex")
     val centroids = readIvfCentroids(spark, path)
     val cb = readPqCodebooks(spark, path)
-    val existing = spark.read.parquet(s"$path/codes").select(col(idCol))
+    val existing = StoreParquet.open(spark, s"$path/codes").select(col(idCol))
     val fresh = batch
       .join(existing, batch(idCol) === existing(idCol), "left_anti")
       .dropDuplicates(idCol).persist()
@@ -2144,7 +2165,7 @@ object Search {
       "removeFromIvfPqResidualIndex writes a NEW directory (caller swaps atomically)")
     requireResidualIvfPq(spark, srcPath, "removeFromIvfPqResidualIndex")
     val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(spark.read.parquet(s"$srcPath/codes")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq(idCol), "left_anti"),
       s"$dstPath/codes", partitionCol = Some("cluster_id"))
     copyIvfPqSidecars(spark, srcPath, dstPath, withEncoding = true)
@@ -2169,7 +2190,7 @@ object Search {
     val fresh = refreshBatch.dropDuplicates(idCol)
     val drop = retireIds.select(col(idCol))
       .unionByName(fresh.select(col(idCol))).distinct()
-    val n = writeCounted(spark.read.parquet(s"$srcPath/codes")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq(idCol), "left_anti")
         .unionByName(ivfPqResidualEncoded(fresh, idCol, vecCol, centroids, cb)),
       s"$dstPath/codes", partitionCol = Some("cluster_id"))
@@ -2255,7 +2276,7 @@ object Search {
     require(srcPath != dstPath,
       "removeFromPqIndex writes a NEW directory (caller swaps atomically)")
     val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(spark.read.parquet(s"$srcPath/codes")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq(idCol), "left_anti"),
       s"$dstPath/codes")
     copySidecarFiles(spark, s"$srcPath/codebooks", s"$dstPath/codebooks")
@@ -2278,7 +2299,7 @@ object Search {
     val fresh = refreshBatch.dropDuplicates(idCol)
     val drop = retireIds.select(col(idCol))
       .unionByName(fresh.select(col(idCol))).distinct()
-    val n = writeCounted(spark.read.parquet(s"$srcPath/codes")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq(idCol), "left_anti")
         .unionByName(pqEncode(fresh, idCol, vecCol, cb)
           .select(col(idCol), transform(col("pq_codes"), _.cast("byte")).as("pq_codes"))),
@@ -2929,12 +2950,12 @@ object Search {
     require(graft.sources.PathState.classify(s"$srcPath/postings",
       spark.sparkContext.hadoopConfiguration) == graft.sources.PathState.Data,
       s"'$srcPath/postings' holds no parquet data files — not a text index")
-    spark.read.parquet(s"$srcPath/postings")
+    StoreParquet.open(spark, s"$srcPath/postings")
       .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
       .repartitionByRange(targetFiles, col("term"))
       .sortWithinPartitions(col("term"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dstPath/postings")
-    val dl = spark.read.parquet(s"$srcPath/doclens")
+    val dl = StoreParquet.open(spark, s"$srcPath/doclens")
     val n = dl.count()
     // stats come from an Observation ON the doclens write job — the same
     // "from the WRITTEN rows, cannot stale" guarantee the read-back gave,
@@ -3008,7 +3029,7 @@ object Search {
       "compactIvfIndex writes a NEW directory (caller swaps atomically)")
     require(targetFilesPerCluster > 0,
       s"targetFilesPerCluster must be positive, got $targetFilesPerCluster")
-    val src = spark.read.parquet(s"$srcPath/vectors")
+    val src = StoreParquet.open(spark, s"$srcPath/vectors")
     val n = src.count()
     val idCol = src.columns.find(_ != "cluster_id").head
     // nClusters comes from a driver-side sidecar read and the carry-over
@@ -3022,7 +3043,7 @@ object Search {
       .partitionBy("cluster_id").parquet(s"$dstPath/vectors")
     copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
     carryModelMarker(spark, srcPath, dstPath, Seq("vectors", "centroids"))
-    val out = spark.read.parquet(s"$dstPath/vectors").count()
+    val out = StoreParquet.open(spark, s"$dstPath/vectors").count()
     require(out == n, s"vectors compaction row mismatch: source $n, got $out")
     // compaction preserves content row-for-row, so a VALID source sidecar
     // carries verbatim (aggregated — the per-batch delta rows collapse);
@@ -3051,7 +3072,7 @@ object Search {
       "compactIvfPqIndex writes a NEW directory (caller swaps atomically)")
     require(targetFilesPerCluster > 0,
       s"targetFilesPerCluster must be positive, got $targetFilesPerCluster")
-    val src = spark.read.parquet(s"$srcPath/codes")
+    val src = StoreParquet.open(spark, s"$srcPath/codes")
     val n = src.count()
     val idCol = src.columns.find(c => c != "cluster_id" && c != "pq_codes").head
     // nClusters from a driver-side sidecar read — one fewer job (r20)
@@ -3065,7 +3086,7 @@ object Search {
       withEncoding = ivfPqEncoding(spark, srcPath).isDefined)
     carryModelMarker(spark, srcPath, dstPath,
       Seq("codes", "centroids", "codebooks", "encoding"))
-    val out = spark.read.parquet(s"$dstPath/codes").count()
+    val out = StoreParquet.open(spark, s"$dstPath/codes").count()
     require(out == n, s"codes compaction row mismatch: source $n, got $out")
     out
   }
@@ -3082,7 +3103,7 @@ object Search {
     require(srcPath != dstPath,
       "compactPqIndex writes a NEW directory (caller swaps atomically)")
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val src = spark.read.parquet(s"$srcPath/codes")
+    val src = StoreParquet.open(spark, s"$srcPath/codes")
     val n = src.count()
     val idCol = src.columns.find(_ != "pq_codes").head
     src.repartitionByRange(targetFiles, col(idCol))
@@ -3096,7 +3117,7 @@ object Search {
       copySidecarFiles(spark, s"$srcPath/rotation", s"$dstPath/rotation")
     carryModelMarker(spark, srcPath, dstPath,
       Seq("codes", "codebooks", "rotation"))
-    val out = spark.read.parquet(s"$dstPath/codes").count()
+    val out = StoreParquet.open(spark, s"$dstPath/codes").count()
     require(out == n, s"codes compaction row mismatch: source $n, got $out")
     out
   }
@@ -3267,7 +3288,7 @@ object Search {
       s"appendSeededLshIndex requires an existing index at '$path' " +
         "(writeSeededLshIndex first — appends need its frozen family shape)")
     val (dim, nt, bpt) = readSeededLshMeta(spark, path)
-    val existing = spark.read.parquet(s"$path/codes").select(col("id"))
+    val existing = StoreParquet.open(spark, s"$path/codes").select(col("id"))
     // exact duplicate rows (same id AND vector) collapse deterministically;
     // the same id carrying DIFFERENT vectors is refused loudly — a
     // dropDuplicates(id) would keep an arbitrary row, making the persisted
@@ -3308,9 +3329,9 @@ object Search {
     */
   def seededLshPairsFromIndex(spark: SparkSession, path: String,
       simThreshold: Double = 0.9): DataFrame = {
-    val banded = spark.read.parquet(s"$path/bands")
+    val banded = StoreParquet.open(spark, s"$path/bands")
       .select(col("id").as("_id"), col("t").as("_t"), col("bucket").as("_b"))
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = StoreParquet.open(spark, s"$path/codes")
       .select(col("id").as("_id"), col("code").as("_c"))
     seededVerifiedPairs(banded, codes, simThreshold)
   }
@@ -3331,11 +3352,11 @@ object Search {
     require(srcPath != dstPath,
       "removeFromSeededLshIndex writes a NEW directory (caller swaps atomically)")
     val drop = removeIds.select(col(idCol).as("id")).distinct()
-    spark.read.parquet(s"$srcPath/bands")
+    StoreParquet.open(spark, s"$srcPath/bands")
       .join(drop, Seq("id"), "left_anti")
       .dropDuplicates("id", "t", "bucket")
       .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$dstPath/bands")
-    val n = writeCounted(spark.read.parquet(s"$srcPath/codes")
+    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq("id"), "left_anti")
         .dropDuplicates("id"),
       s"$dstPath/codes")
@@ -3372,13 +3393,13 @@ object Search {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val out =
         try {
-          spark.read.parquet(s"$srcPath/bands")
+          StoreParquet.open(spark, s"$srcPath/bands")
             .join(drop, Seq("id"), "left_anti")
             .dropDuplicates("id", "t", "bucket")
             .unionByName(seededBands(codes, dim, nt, bpt)
               .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket")))
             .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$dstPath/bands")
-          writeCounted(spark.read.parquet(s"$srcPath/codes")
+          writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
               .join(drop, Seq("id"), "left_anti")
               .dropDuplicates("id")
               .unionByName(codes.select(col("_id").as("id"), col("_c").as("code"))),
@@ -3408,14 +3429,14 @@ object Search {
     val qCodes = seededCodes(queries, idCol, vecCol)
     val qBands = seededBands(qCodes, dim, nt, bpt)
       .select(col("_id").as("query_id"), col("_t"), col("_b"))
-    val ixBands = spark.read.parquet(s"$path/bands")
+    val ixBands = StoreParquet.open(spark, s"$path/bands")
       .select(col("id").as("index_id"), col("t").as("_t"), col("bucket").as("_b"))
     val cand = qBands.join(ixBands, Seq("_t", "_b"))
       .select(col("query_id"), col("index_id"))
       .dropDuplicates("query_id", "index_id")
     val withCodes = cand
       .join(qCodes.select(col("_id").as("query_id"), col("_c").as("_c1")), "query_id")
-      .join(spark.read.parquet(s"$path/codes")
+      .join(StoreParquet.open(spark, s"$path/codes")
         .select(col("id").as("index_id"), col("code").as("_c2")), "index_id")
     val n1 = dot(col("_c1"), col("_c1"))
     val n2 = dot(col("_c2"), col("_c2"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.StoreParquet
 
 /** Persisted mergeable sketches (EXT incremental-analytics surface):
   * "distinct users per domain per day" or "p95 doc length per source per
@@ -35,7 +36,7 @@ object Sketches {
       batchId: String): Boolean = {
     import graft.sources.{PathState, SidecarParquet}
     val conf = spark.sparkContext.hadoopConfiguration
-    val inMain = spark.read.parquet(storeDir)
+    val inMain = StoreParquet.open(spark, storeDir)
       .where(col("batch_id") === batchId).limit(1).count() > 0
     // the `_folded` leg reads the KB ledger sidecar DRIVER-SIDE (r20,
     // guide §5) — the store-body probe above stays a (limit-1) job
@@ -84,7 +85,7 @@ object Sketches {
     */
   def estimateDistinct(spark: SparkSession, storeDir: String,
       batchIds: Seq[String] = Nil): DataFrame = {
-    val base = spark.read.parquet(storeDir)
+    val base = StoreParquet.open(spark, storeDir)
     val scoped =
       if (batchIds.isEmpty) base else base.where(col("batch_id").isin(batchIds: _*))
     scoped.groupBy(col("group_key"))
@@ -266,7 +267,7 @@ object Sketches {
     import org.apache.datasketches.frequencies.ErrorType
     import spark.implicits._
     require(minCount > 0, "minCount must be positive")
-    val base = spark.read.parquet(storeDir)
+    val base = StoreParquet.open(spark, storeDir)
     val scoped =
       if (batchIds.isEmpty) base else base.where(col("batch_id").isin(batchIds: _*))
     scoped.select(col("group_key").cast("string"), col("sketch"))
@@ -366,7 +367,7 @@ object Sketches {
       s"op must be union|intersect|diff, got '$op'")
     require(batchIdsA.nonEmpty && batchIdsB.nonEmpty,
       "both batch ranges must be non-empty")
-    val base = spark.read.parquet(storeDir)
+    val base = StoreParquet.open(spark, storeDir)
       .where(col("batch_id").isin((batchIdsA ++ batchIdsB): _*))
       .select(col("group_key").cast("string"), col("batch_id"), col("sketch"))
     val aSet = batchIdsA.toSet
@@ -412,7 +413,7 @@ object Sketches {
     import spark.implicits._
     require(ranks.nonEmpty && ranks.forall(r => r >= 0.0 && r <= 1.0),
       "ranks must be in [0,1]")
-    val base = spark.read.parquet(storeDir)
+    val base = StoreParquet.open(spark, storeDir)
     val scoped =
       if (batchIds.isEmpty) base else base.where(col("batch_id").isin(batchIds: _*))
     scoped.select(col("group_key").cast("string"), col("sketch"))
@@ -469,7 +470,7 @@ object Sketches {
     require(batchIds.nonEmpty, "batchIds must name the closed range to fold")
     require(!batchIds.contains(compactedBatchId),
       "compactedBatchId must be a FRESH id, not one being folded")
-    val base = spark.read.parquet(srcDir)
+    val base = StoreParquet.open(spark, srcDir)
       .select(col("group_key"), col("sketch"), col("batch_id"))
     val idSet = batchIds.toSet
     // ONE probe job answers both guards (r20 optimization round, guide

@@ -467,7 +467,7 @@ object Streams {
               // both skipping and overwriting silently lose one side's
               // pairs, so refuse loudly instead (review r16). The set
               // compare is two anti-joins on per-epoch frames, no collect
-              val existing = spark.read.parquet(dir)
+              val existing = graft.sources.StoreParquet.open(spark, dir)
                 .select(out.columns.map(org.apache.spark.sql.functions.col): _*)
               require(out.exceptAll(existing).isEmpty &&
                   existing.exceptAll(out).isEmpty,

@@ -1,0 +1,69 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-inventory gate for store opens (modelled on
+  * [[CollectInventorySpec]]): every parquet store an operator writes is
+  * opened through [[graft.sources.StoreParquet]], which reads the schema
+  * from one footer on the driver. A bare `spark.read.parquet(store)` —
+  * or its `.read.option(...).parquet(...)` spelling — silently brings
+  * back a schema-inference Spark job per open (and a parallel-listing job
+  * past 32 partition directories). This scans `graft/operators` for that
+  * spelling, outside comments, and fails on any site not in the
+  * allow-list below: reads of CALLER-SUPPLIED input, whose layout graft
+  * does not own. A read that passes its own schema
+  * (`.read.schema(s).parquet(...)`) runs no inference and is not matched.
+  */
+class StoreReadInventorySpec extends AnyFunSuite {
+
+  /** file (relative to src/main/scala) -> allowed bare reads, and why */
+  private val allowed: Map[String, (Int, String)] = Map(
+    "graft/operators/Layout.scala" -> (2,
+      "compactParquet / zOrderParquet rewrite an arbitrary caller directory"))
+
+  private val bareRead =
+    """\.read\s*(\.\s*option\s*\([^()]*\)\s*)*\.\s*parquet\s*\(""".r
+
+  /** Source text minus `//` and scaladoc/block-comment lines. */
+  private def code(src: String): String =
+    src.linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      .map(l => l.indexOf("// ") match { case -1 => l; case i => l.take(i) })
+      .mkString("\n")
+
+  test("every bare .read.parquet( in graft/operators is an allow-listed caller-input read") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val ops = root.resolve("graft/operators")
+    assert(java.nio.file.Files.isDirectory(ops),
+      s"expected to run from the repo root, cwd=${sys.props("user.dir")}")
+    val counts = scala.collection.mutable.Map.empty[String, Int]
+    java.nio.file.Files.walk(ops).forEach { p =>
+      if (p.toString.endsWith(".scala")) {
+        val n = bareRead.findAllMatchIn(code(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))).size
+        if (n > 0) counts(root.relativize(p).toString) = n
+      }
+      ()
+    }
+    val diff = (counts.keySet ++ allowed.keySet).toSeq.sorted.flatMap { f =>
+      (counts.getOrElse(f, 0), allowed.get(f).fold(0)(_._1)) match {
+        case (o, a) if o == a => None
+        case (o, a) => Some(s"$f: $o bare read(s) in source vs $a allow-listed")
+      }
+    }
+    assert(diff.isEmpty,
+      "open graft-written stores with graft.sources.StoreParquet (no " +
+        "schema-inference job); allow-list only reads of caller-supplied " +
+        s"input, with the reason:\n  ${diff.mkString("\n  ")}")
+  }
+
+  test("the scan sees the spellings it gates") {
+    val src = """val a = spark.read.parquet(s"$p/vectors")
+      |val b = spark.read.option("basePath", w)
+      |  .parquet(dirs: _*)
+      |// spark.read.parquet(commented)
+      |  * `spark.read.parquet(src)` in a scaladoc
+      |val c = spark.read.schema(s).parquet(p)""".stripMargin
+    assert(bareRead.findAllMatchIn(code(src)).size == 2)
+  }
+}
