@@ -262,17 +262,9 @@ object Search {
     * @return number of surviving vectors
     */
   def removeFromIvfIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    require(srcPath != dstPath,
-      "removeFromIvfIndex writes a NEW directory (caller swaps atomically)")
-    val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/vectors")
-        .join(drop, Seq(idCol), "left_anti"),
-      s"$dstPath/vectors", partitionCol = Some("cluster_id"))
-    copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
-    carryModelMarker(spark, srcPath, dstPath, Seq("vectors", "centroids"))
-    n
-  }
+      dstPath: String, removeIds: DataFrame, idCol: String): Long =
+    VectorStores.remove(VectorStores.Ivf, "removeFromIvfIndex", spark,
+      srcPath, dstPath, removeIds, idCol)
 
   /** FUSED text-index update — the remove-then-append composition
     * ([[removeFromTextIndex]] + [[appendTextIndex]]) in ONE rewrite:
@@ -356,23 +348,11 @@ object Search {
   def updateIvfIndex(spark: SparkSession, srcPath: String, dstPath: String,
       retireIds: DataFrame, refreshBatch: DataFrame,
       idCol: String, vecCol: String): Long = {
-    require(srcPath != dstPath,
-      "updateIvfIndex writes a NEW directory (caller swaps atomically)")
-    val centroids = readIvfCentroids(spark, srcPath)
-    val existing = StoreParquet.open(spark, s"$srcPath/vectors")
-    require(refreshBatch.columns.toSet + "cluster_id" == existing.columns.toSet,
-      s"updateIvfIndex batch columns ${refreshBatch.columns.sorted.mkString(",")} " +
-        s"must match the index's ${existing.columns.sorted.mkString(",")} (minus cluster_id)")
-    val fresh = refreshBatch.dropDuplicates(idCol)
-    val drop = retireIds.select(col(idCol))
-      .unionByName(fresh.select(col(idCol))).distinct()
-    existing.join(drop, Seq(idCol), "left_anti")
-      .unionByName(ivfAssign(fresh, vecCol, centroids))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster_id").parquet(s"$dstPath/vectors")
-    copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
-    carryModelMarker(spark, srcPath, dstPath, Seq("vectors", "centroids"))
-    // the return count now comes from the drift-stats seed — a narrow
+    requireIvfBatchColumns("updateIvfIndex", refreshBatch,
+      StoreParquet.open(spark, s"$srcPath/vectors"))
+    VectorStores.update(VectorStores.Ivf, "updateIvfIndex", spark, srcPath,
+      dstPath, retireIds, refreshBatch, idCol, vecCol)
+    // the return count comes from the drift-stats seed — a narrow
     // (vec + cluster_id) scan of the NEW store, which is MORE than the
     // metadata-only count() it replaces but is bounded by the full-store
     // rewrite this op just paid, and it keeps every policy tick after an
@@ -728,11 +708,7 @@ object Search {
         "(writeIvfIndex first — appends need its frozen centroids)")
     val centroids = readIvfCentroids(spark, path)
     val existing = StoreParquet.open(spark, s"$path/vectors")
-    // appended files must carry the index's exact column set — a silently
-    // divergent schema would make later reads footer-dependent
-    require(batch.columns.toSet + "cluster_id" == existing.columns.toSet,
-      s"appendIvfIndex batch columns ${batch.columns.sorted.mkString(",")} " +
-        s"must match the index's ${existing.columns.sorted.mkString(",")} (minus cluster_id)")
+    requireIvfBatchColumns("appendIvfIndex", batch, existing)
     val fresh = batch
       .join(existing, batch(idCol) === existing(idCol), "left_anti")
       .dropDuplicates(idCol).persist()
@@ -766,6 +742,16 @@ object Search {
       n
     } finally { fresh.unpersist(); () }
   }
+
+  /** Files written into an IVF store must carry the index's exact column
+    * set — a silently divergent schema would make later reads
+    * footer-dependent.
+    */
+  private def requireIvfBatchColumns(op: String, batch: DataFrame,
+      existing: DataFrame): Unit =
+    require(batch.columns.toSet + "cluster_id" == existing.columns.toSet,
+      s"$op batch columns ${batch.columns.sorted.mkString(",")} " +
+        s"must match the index's ${existing.columns.sorted.mkString(",")} (minus cluster_id)")
 
   /** Per-cluster health of a persisted IVF index: occupancy and mean
     * cosine-to-assigned-centroid (one narrow scan + one small agg). Falling
@@ -1444,11 +1430,15 @@ object Search {
     OpqModel(rotation, cb)
   }
 
+  /** (id, R·vec as `vecCol`) — the rotated frame every OPQ encode takes. */
+  private[graft] def rotated(df: DataFrame, idCol: String, vecCol: String,
+      rotation: IndexedSeq[Array[Float]]): DataFrame =
+    df.select(col(idCol), rotateCol(col(vecCol), rotation).as(vecCol))
+
   /** Encode with an OPQ model: rotate, then the plain PQ encoder. */
   def opqEncode(df: DataFrame, idCol: String, vecCol: String,
       model: OpqModel): DataFrame =
-    pqEncode(df.select(col(idCol),
-      rotateCol(col(vecCol), model.rotation).as(vecCol)), idCol, vecCol,
+    pqEncode(rotated(df, idCol, vecCol, model.rotation), idCol, vecCol,
       model.cb)
 
   /** OPQ ANN top-k: ADC tables from the ROTATED query over the
@@ -1471,11 +1461,9 @@ object Search {
     */
   def opqWriteIndex(df: DataFrame, idCol: String, vecCol: String,
       model: OpqModel, path: String): Long = {
-    val n = pqWriteIndex(df.select(col(idCol),
-        rotateCol(col(vecCol), model.rotation).as(vecCol)),
-      idCol, vecCol, model.cb, path)
+    val n = pqWriteIndex(rotated(df, idCol, vecCol, model.rotation), idCol,
+      vecCol, model.cb, path)
     val spark = df.sparkSession
-    import spark.implicits._
     // driver-local model rows → driver-side write, zero jobs (r20)
     graft.sources.SidecarParquet.writeFlat(s"$path/rotation",
       spark.sparkContext.hadoopConfiguration,
@@ -1514,18 +1502,9 @@ object Search {
     * codebooks, id anti-join idempotency).
     */
   def appendOpqIndex(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Long = {
-    val spark = batch.sparkSession
-    val state = graft.sources.PathState.classify(s"$path/rotation",
-      spark.sparkContext.hadoopConfiguration)
-    require(state == graft.sources.PathState.Data,
-      s"appendOpqIndex requires an existing OPQ index at '$path' " +
-        "(opqWriteIndex first — appends need its frozen rotation)")
-    val model = readOpqModel(spark, path)
-    appendPqIndex(batch.select(col(idCol),
-        rotateCol(col(vecCol), model.rotation).as(vecCol)),
-      idCol, vecCol, path)
-  }
+      path: String): Long =
+    VectorStores.append(VectorStores.Opq, "appendOpqIndex", batch, idCol,
+      vecCol, path)
 
   /** The PQ code array (m small ints) for an i8-code column: per subspace,
     * the argmin-L2 center. Ranking key = c·c − 2·(sub·c) (the ||sub||² term
@@ -1630,8 +1609,19 @@ object Search {
       idCol: String, vecCol: String, tables: Seq[Array[Double]],
       query: Seq[Float], k: Int, rescore: Int): DataFrame = {
     require(rescore >= k, "rescore candidate count must be >= k")
-    val candidates = encoded
-      .withColumn("_adc", pqAdcScoreCol(col("pq_codes"), tables))
+    rescoreByAdc(encoded.withColumn("_adc",
+      pqAdcScoreCol(col("pq_codes"), tables)), fullPrecision, idCol, vecCol,
+      query, k, rescore)
+  }
+
+  /** Keep the top-`rescore` rows of `scored` by `_adc` (ties by id), then
+    * exact-cosine rescore those ids against the primary store (broadcast —
+    * the candidate set is `rescore` ids) and return the top-k.
+    */
+  private def rescoreByAdc(scored: DataFrame, fullPrecision: DataFrame,
+      idCol: String, vecCol: String, query: Seq[Float], k: Int,
+      rescore: Int): DataFrame = {
+    val candidates = scored
       .orderBy(col("_adc").desc, col(idCol))
       .limit(rescore)
       .select(col(idCol))
@@ -1651,14 +1641,17 @@ object Search {
   def pqWriteIndex(df: DataFrame, idCol: String, vecCol: String,
       cb: PqCodebooks, path: String): Long = {
     require(cb.ksub <= 128, s"ksub=${cb.ksub} > 128 codes do not fit tinyint")
-    val n = writeCounted(pqEncode(df, idCol, vecCol, cb)
-      .select(col(idCol), transform(col("pq_codes"), _.cast("byte")).as("pq_codes")),
+    val n = VectorStores.writeCounted(pqEncodedBytes(df, idCol, vecCol, cb),
       s"$path/codes")
-    val spark = df.sparkSession
-    import spark.implicits._
-    writeCodebooksSidecar(spark, path, cb)
+    writeCodebooksSidecar(df.sparkSession, path, cb)
     n
   }
+
+  /** [[pqEncode]] with the codes narrowed to the stored tinyint array. */
+  private[graft] def pqEncodedBytes(df: DataFrame, idCol: String,
+      vecCol: String, cb: PqCodebooks): DataFrame =
+    pqEncode(df, idCol, vecCol, cb)
+      .select(col(idCol), transform(col("pq_codes"), _.cast("byte")).as("pq_codes"))
 
   /** Load the sidecar codebooks of a persisted PQ index — driver-side
     * parquet read, zero Spark jobs ([[readIvfCentroids]]'s rationale).
@@ -1699,28 +1692,9 @@ object Search {
     * @return number of NEW vectors appended (0 for a pure replay)
     */
   def appendPqIndex(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Long = {
-    import graft.sources.PathState
-    val spark = batch.sparkSession
-    val state = PathState.classify(s"$path/codes",
-      spark.sparkContext.hadoopConfiguration)
-    require(state == PathState.Data,
-      s"appendPqIndex requires an existing index at '$path' " +
-        "(pqWriteIndex first — appends need its frozen codebooks)")
-    val cb = readPqCodebooks(spark, path)
-    val existing = StoreParquet.open(spark, s"$path/codes").select(col(idCol))
-    val fresh = batch
-      .join(existing, batch(idCol) === existing(idCol), "left_anti")
-      .dropDuplicates(idCol).persist()
-    try {
-      val n = fresh.count()
-      if (n > 0)
-        pqEncode(fresh, idCol, vecCol, cb)
-          .select(col(idCol), transform(col("pq_codes"), _.cast("byte")).as("pq_codes"))
-          .write.mode(SaveMode.Append).parquet(s"$path/codes")
-      n
-    } finally { fresh.unpersist(); () }
-  }
+      path: String): Long =
+    VectorStores.append(VectorStores.Pq, "appendPqIndex", batch, idCol,
+      vecCol, path)
 
   // ------------------------------------- composed IVF-PQ index (IVFADC) ---
 
@@ -1754,10 +1728,10 @@ object Search {
       centroids: Seq[(Int, Array[Float])], cb: PqCodebooks,
       path: String): Long = {
     require(cb.ksub <= 128, s"ksub=${cb.ksub} > 128 codes do not fit tinyint")
-    val n = writeCounted(ivfPqEncoded(df, idCol, vecCol, centroids, cb),
+    val n = VectorStores.writeCounted(
+      ivfPqEncoded(df, idCol, vecCol, centroids, cb),
       s"$path/codes", partitionCol = Some("cluster_id"))
     val spark = df.sparkSession
-    import spark.implicits._
     writeCentroidsSidecar(spark, path, centroids)
     writeCodebooksSidecar(spark, path, cb)
     n
@@ -1780,27 +1754,37 @@ object Search {
       query: Seq[Float], k: Int, nProbe: Int = 1,
       rescore: Int = 50): DataFrame = {
     require(rescore >= k, "rescore candidate count must be >= k")
-    requirePlainIvfPq(spark, path, "ivfPqTopKFromIndex")
+    VectorStores.requireEncoding(VectorStores.IvfPq, spark, path,
+      "ivfPqTopKFromIndex")
     requireConsistentModel(spark, path, "ivfPqTopKFromIndex")
     val centroids = readIvfCentroids(spark, path)
     val cb = readPqCodebooks(spark, path)
     val probeIds = probeClusters(centroids, query, nProbe)
-    val tables = pqAdcTables(cb, pqQueryCodes(query))
-    val candidates = StoreParquet.openPartitions(spark, s"$path/codes",
+    pqTopKCore(StoreParquet.openPartitions(spark, s"$path/codes",
         "cluster_id", probeIds)
       .where(col("cluster_id").isin(probeIds: _*))
       .select(col(idCol),
-        transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
-      .withColumn("_adc", pqAdcScoreCol(col("pq_codes"), tables))
-      .orderBy(col("_adc").desc, col(idCol))
-      .limit(rescore)
-      .select(col(idCol))
-    fullPrecision
-      .join(broadcast(candidates), idCol)
-      .withColumn("score", cosine(col(vecCol), typedLit(query)))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+        transform(col("pq_codes"), _.cast("int")).as("pq_codes")),
+      fullPrecision, idCol, vecCol, pqAdcTables(cb, pqQueryCodes(query)),
+      query, k, rescore)
   }
+
+  /** (id, cluster_id, pq_codes tinyint) for a vector batch under frozen
+    * models — the shared encode of the IVF-PQ write/append/update paths.
+    * The i8 codes stage as a materialized attribute for the same reason
+    * as [[pqEncode]]: inline, the nesting falls out of whole-stage
+    * codegen past ~100 dims and interpreted eval re-computes the i8
+    * scale per pqEncodeCol reference (the dim-768 audit, VERDICT r11
+    * item 7) — quadratic in dim; staged, every slice reference is cheap
+    * and under codegen the plan is the same work as the fused form.
+    */
+  private[graft] def ivfPqEncoded(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[(Int, Array[Float])], cb: PqCodebooks): DataFrame =
+    ivfAssign(df, vecCol, centroids)
+      .select(col(idCol), col("cluster_id"),
+        i8Codes(col(vecCol)).cast("array<float>").as("__i8"))
+      .select(col(idCol), col("cluster_id"),
+        transform(pqEncodeCol(col("__i8"), cb), _.cast("byte")).as("pq_codes"))
 
   /** Incrementally maintain a persisted IVF-PQ index: assign + encode a
     * NEW batch with BOTH frozen sidecar models (coarse centroids AND
@@ -1812,48 +1796,10 @@ object Search {
     *
     * @return number of NEW vectors appended (0 for a pure replay)
     */
-  /** (id, cluster_id, pq_codes tinyint) for a vector batch under frozen
-    * models — the shared encode of the IVF-PQ write/append/update paths.
-    * The i8 codes stage as a materialized attribute for the same reason
-    * as [[pqEncode]]: inline, the nesting falls out of whole-stage
-    * codegen past ~100 dims and interpreted eval re-computes the i8
-    * scale per pqEncodeCol reference (the dim-768 audit, VERDICT r11
-    * item 7) — quadratic in dim; staged, every slice reference is cheap
-    * and under codegen the plan is the same work as the fused form.
-    */
-  private def ivfPqEncoded(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Int, Array[Float])], cb: PqCodebooks): DataFrame =
-    ivfAssign(df, vecCol, centroids)
-      .select(col(idCol), col("cluster_id"),
-        i8Codes(col(vecCol)).cast("array<float>").as("__i8"))
-      .select(col(idCol), col("cluster_id"),
-        transform(pqEncodeCol(col("__i8"), cb), _.cast("byte")).as("pq_codes"))
-
   def appendIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Long = {
-    import graft.sources.PathState
-    val spark = batch.sparkSession
-    val state = PathState.classify(s"$path/codes",
-      spark.sparkContext.hadoopConfiguration)
-    require(state == PathState.Data,
-      s"appendIvfPqIndex requires an existing index at '$path' " +
-        "(writeIvfPqIndex first — appends need its frozen models)")
-    requirePlainIvfPq(spark, path, "appendIvfPqIndex")
-    val centroids = readIvfCentroids(spark, path)
-    val cb = readPqCodebooks(spark, path)
-    val existing = StoreParquet.open(spark, s"$path/codes").select(col(idCol))
-    val fresh = batch
-      .join(existing, batch(idCol) === existing(idCol), "left_anti")
-      .dropDuplicates(idCol).persist()
-    try {
-      val n = fresh.count()
-      if (n > 0)
-        ivfPqEncoded(fresh, idCol, vecCol, centroids, cb)
-          .write.mode(SaveMode.Append)
-          .partitionBy("cluster_id").parquet(s"$path/codes")
-      n
-    } finally { fresh.unpersist(); () }
-  }
+      path: String): Long =
+    VectorStores.append(VectorStores.IvfPq, "appendIvfPqIndex", batch, idCol,
+      vecCol, path)
 
   /** The delete half of IVF-PQ index maintenance — the
     * [[removeFromIvfIndex]] contract on the composed store: copy the
@@ -1868,20 +1814,9 @@ object Search {
     * @return number of surviving vectors
     */
   def removeFromIvfPqIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    require(srcPath != dstPath,
-      "removeFromIvfPqIndex writes a NEW directory (caller swaps atomically)")
-    requirePlainIvfPq(spark, srcPath, "removeFromIvfPqIndex")
-    val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-        .join(drop, Seq(idCol), "left_anti"),
-      s"$dstPath/codes", partitionCol = Some("cluster_id"))
-    copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
-    copySidecarFiles(spark, s"$srcPath/codebooks", s"$dstPath/codebooks")
-    carryModelMarker(spark, srcPath, dstPath,
-      Seq("codes", "centroids", "codebooks"))
-    n
-  }
+      dstPath: String, removeIds: DataFrame, idCol: String): Long =
+    VectorStores.remove(VectorStores.IvfPq, "removeFromIvfPqIndex", spark,
+      srcPath, dstPath, removeIds, idCol)
 
   /** FUSED IVF-PQ update — the [[updateIvfIndex]] contract on the
     * composed store: source codes minus `retireIds` minus the refresh
@@ -1893,59 +1828,11 @@ object Search {
     */
   def updateIvfPqIndex(spark: SparkSession, srcPath: String, dstPath: String,
       retireIds: DataFrame, refreshBatch: DataFrame,
-      idCol: String, vecCol: String): Long = {
-    require(srcPath != dstPath,
-      "updateIvfPqIndex writes a NEW directory (caller swaps atomically)")
-    requirePlainIvfPq(spark, srcPath, "updateIvfPqIndex")
-    val centroids = readIvfCentroids(spark, srcPath)
-    val cb = readPqCodebooks(spark, srcPath)
-    val fresh = refreshBatch.dropDuplicates(idCol)
-    val drop = retireIds.select(col(idCol))
-      .unionByName(fresh.select(col(idCol))).distinct()
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-        .join(drop, Seq(idCol), "left_anti")
-        .unionByName(ivfPqEncoded(fresh, idCol, vecCol, centroids, cb)),
-      s"$dstPath/codes", partitionCol = Some("cluster_id"))
-    copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
-    copySidecarFiles(spark, s"$srcPath/codebooks", s"$dstPath/codebooks")
-    carryModelMarker(spark, srcPath, dstPath,
-      Seq("codes", "centroids", "codebooks"))
-    n
-  }
+      idCol: String, vecCol: String): Long =
+    VectorStores.update(VectorStores.IvfPq, "updateIvfPqIndex", spark,
+      srcPath, dstPath, retireIds, refreshBatch, idCol, vecCol)
 
   // ------------------------------------------- residual IVF-PQ (IVFADC) ---
-
-  /** The encoding-marker sidecar of an IVF-PQ store, if present. Plain
-    * [[writeIvfPqIndex]] stores carry none (back-compatible); residual
-    * stores carry `encoding='fp_residual'`. Both query/maintenance
-    * families check it so a residual store can never be silently scored
-    * with plain-code semantics or vice versa.
-    */
-  private def ivfPqEncoding(spark: SparkSession, path: String): Option[String] = {
-    import graft.sources.{PathState, SidecarParquet}
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (PathState.classify(s"$path/encoding", hconf) == PathState.Data)
-      Some(SidecarParquet.stringAt(
-        SidecarParquet.readGroups(s"$path/encoding", hconf).head, "encoding"))
-    else None
-  }
-
-  private def requirePlainIvfPq(spark: SparkSession, path: String,
-      op: String): Unit = {
-    val enc = ivfPqEncoding(spark, path)
-    require(enc.isEmpty,
-      s"$op expects a PLAIN writeIvfPqIndex store but '$path' is encoded " +
-        s"'${enc.get}' — use the IvfPqResidual family for it")
-  }
-
-  private def requireResidualIvfPq(spark: SparkSession, path: String,
-      op: String): Unit = {
-    val enc = ivfPqEncoding(spark, path)
-    require(enc.contains("fp_residual"),
-      s"$op expects a writeIvfPqResidualIndex store but '$path' " +
-        enc.fold("carries no encoding marker (a plain IVF-PQ index? " +
-          "use the plain IvfPq family)")(e => s"is encoded '$e'"))
-  }
 
   /** (id, cluster_id, _r) fixed-point residuals under frozen coarse
     * centroids: `_r = fpCodes(vec) − fpCodes(centroid(cluster))`,
@@ -2006,7 +1893,7 @@ object Search {
     * attribute before [[pqEncodeCol]] consumes it m×ksub times (the
     * [[pqEncode]] interpreted-eval discipline).
     */
-  private def ivfPqResidualEncoded(df: DataFrame, idCol: String,
+  private[graft] def ivfPqResidualEncoded(df: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[(Int, Array[Float])],
       cb: PqCodebooks): DataFrame =
     ivfFpResiduals(df, idCol, vecCol, centroids)
@@ -2039,11 +1926,10 @@ object Search {
       centroids: Seq[(Int, Array[Float])], cb: PqCodebooks,
       path: String): Long = {
     require(cb.ksub <= 128, s"ksub=${cb.ksub} > 128 codes do not fit tinyint")
-    val n = writeCounted(
+    val n = VectorStores.writeCounted(
       ivfPqResidualEncoded(df, idCol, vecCol, centroids, cb),
       s"$path/codes", partitionCol = Some("cluster_id"))
     val spark = df.sparkSession
-    import spark.implicits._
     writeCentroidsSidecar(spark, path, centroids)
     writeCodebooksSidecar(spark, path, cb)
     // driver-local marker → driver-side write, zero jobs (r20)
@@ -2070,7 +1956,8 @@ object Search {
   def ivfPqResidualAdcScores(spark: SparkSession, path: String,
       idCol: String, query: Seq[Float], nProbe: Int): DataFrame = {
     import graft.functions.VectorFunctions.fpCodesLocal
-    requireResidualIvfPq(spark, path, "ivfPqResidualAdcScores")
+    VectorStores.requireEncoding(VectorStores.IvfPqResidual, spark, path,
+      "ivfPqResidualAdcScores")
     requireConsistentModel(spark, path, "ivfPqResidualAdcScores")
     val centroids = readIvfCentroids(spark, path)
     val cb = readPqCodebooks(spark, path)
@@ -2109,15 +1996,8 @@ object Search {
       query: Seq[Float], k: Int, nProbe: Int = 1,
       rescore: Int = 50): DataFrame = {
     require(rescore >= k, "rescore candidate count must be >= k")
-    val candidates = ivfPqResidualAdcScores(spark, path, idCol, query, nProbe)
-      .orderBy(col("_adc").desc, col(idCol))
-      .limit(rescore)
-      .select(col(idCol))
-    fullPrecision
-      .join(broadcast(candidates), idCol)
-      .withColumn("score", cosine(col(vecCol), typedLit(query)))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    rescoreByAdc(ivfPqResidualAdcScores(spark, path, idCol, query, nProbe),
+      fullPrecision, idCol, vecCol, query, k, rescore)
   }
 
   /** Incrementally maintain a persisted residual index — the
@@ -2127,30 +2007,9 @@ object Search {
     * @return number of NEW vectors appended (0 for a pure replay)
     */
   def appendIvfPqResidualIndex(batch: DataFrame, idCol: String,
-      vecCol: String, path: String): Long = {
-    import graft.sources.PathState
-    val spark = batch.sparkSession
-    val state = PathState.classify(s"$path/codes",
-      spark.sparkContext.hadoopConfiguration)
-    require(state == PathState.Data,
-      s"appendIvfPqResidualIndex requires an existing index at '$path' " +
-        "(writeIvfPqResidualIndex first — appends need its frozen models)")
-    requireResidualIvfPq(spark, path, "appendIvfPqResidualIndex")
-    val centroids = readIvfCentroids(spark, path)
-    val cb = readPqCodebooks(spark, path)
-    val existing = StoreParquet.open(spark, s"$path/codes").select(col(idCol))
-    val fresh = batch
-      .join(existing, batch(idCol) === existing(idCol), "left_anti")
-      .dropDuplicates(idCol).persist()
-    try {
-      val n = fresh.count()
-      if (n > 0)
-        ivfPqResidualEncoded(fresh, idCol, vecCol, centroids, cb)
-          .write.mode(SaveMode.Append)
-          .partitionBy("cluster_id").parquet(s"$path/codes")
-      n
-    } finally { fresh.unpersist(); () }
-  }
+      vecCol: String, path: String): Long =
+    VectorStores.append(VectorStores.IvfPqResidual,
+      "appendIvfPqResidualIndex", batch, idCol, vecCol, path)
 
   /** The delete half of residual-index maintenance
     * ([[removeFromIvfPqIndex]]'s contract; the encoding marker rides
@@ -2160,19 +2019,9 @@ object Search {
     * @return number of surviving vectors
     */
   def removeFromIvfPqResidualIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    require(srcPath != dstPath,
-      "removeFromIvfPqResidualIndex writes a NEW directory (caller swaps atomically)")
-    requireResidualIvfPq(spark, srcPath, "removeFromIvfPqResidualIndex")
-    val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-        .join(drop, Seq(idCol), "left_anti"),
-      s"$dstPath/codes", partitionCol = Some("cluster_id"))
-    copyIvfPqSidecars(spark, srcPath, dstPath, withEncoding = true)
-    carryModelMarker(spark, srcPath, dstPath,
-      Seq("codes", "centroids", "codebooks", "encoding"))
-    n
-  }
+      dstPath: String, removeIds: DataFrame, idCol: String): Long =
+    VectorStores.remove(VectorStores.IvfPqResidual,
+      "removeFromIvfPqResidualIndex", spark, srcPath, dstPath, removeIds, idCol)
 
   /** FUSED residual-index update — [[updateIvfPqIndex]]'s one-write
     * contract with the residual encode; all three sidecars copy verbatim.
@@ -2181,89 +2030,10 @@ object Search {
     */
   def updateIvfPqResidualIndex(spark: SparkSession, srcPath: String,
       dstPath: String, retireIds: DataFrame, refreshBatch: DataFrame,
-      idCol: String, vecCol: String): Long = {
-    require(srcPath != dstPath,
-      "updateIvfPqResidualIndex writes a NEW directory (caller swaps atomically)")
-    requireResidualIvfPq(spark, srcPath, "updateIvfPqResidualIndex")
-    val centroids = readIvfCentroids(spark, srcPath)
-    val cb = readPqCodebooks(spark, srcPath)
-    val fresh = refreshBatch.dropDuplicates(idCol)
-    val drop = retireIds.select(col(idCol))
-      .unionByName(fresh.select(col(idCol))).distinct()
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-        .join(drop, Seq(idCol), "left_anti")
-        .unionByName(ivfPqResidualEncoded(fresh, idCol, vecCol, centroids, cb)),
-      s"$dstPath/codes", partitionCol = Some("cluster_id"))
-    copyIvfPqSidecars(spark, srcPath, dstPath, withEncoding = true)
-    carryModelMarker(spark, srcPath, dstPath,
-      Seq("codes", "centroids", "codebooks", "encoding"))
-    n
-  }
-
-  /** Copy the frozen-model sidecars of an IVF-PQ store verbatim. */
-  private def copyIvfPqSidecars(spark: SparkSession, srcPath: String,
-      dstPath: String, withEncoding: Boolean): Unit = {
-    copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
-    copySidecarFiles(spark, s"$srcPath/codebooks", s"$dstPath/codebooks")
-    if (withEncoding)
-      copySidecarFiles(spark, s"$srcPath/encoding", s"$dstPath/encoding")
-  }
-
-  /** Verbatim sidecar carry-over as a DRIVER-SIDE byte copy of the
-    * parquet data files (+ `_SUCCESS` last), replacing the
-    * `spark.read.parquet(src).coalesce(1).write.parquet(dst)` rewrite
-    * (r19 optimization round, guide §5): sidecars are MODEL-scale
-    * (centroids / codebooks / rotation / encoding — KBs by construction),
-    * so moving them through a distributed read+shuffle+write job is two
-    * Spark jobs of pure overhead per maintenance op. A byte copy yields
-    * bit-identical files; version tags / model markers are written by the
-    * caller afterwards exactly as before (they are separate `_`-files and
-    * are deliberately NOT copied here, matching what the Spark rewrite
-    * carried — nothing). `_SUCCESS` copies last so a torn copy never
-    * classifies as a complete sidecar.
-    */
-  private def copySidecarFiles(spark: SparkSession, src: String,
-      dst: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(src)
-    val fs = srcP.getFileSystem(hconf)
-    val dstP = new org.apache.hadoop.fs.Path(dst)
-    if (fs.exists(dstP)) { fs.delete(dstP, true); () }
-    fs.mkdirs(dstP)
-    val files = fs.listStatus(srcP).filter(_.isFile)
-      .filter { f =>
-        val n = f.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    files.foreach { f =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-        new org.apache.hadoop.fs.Path(dstP, f.getPath.getName),
-        false, hconf)
-    }
-    val success = new org.apache.hadoop.fs.Path(srcP, "_SUCCESS")
-    if (fs.exists(success)) {
-      org.apache.hadoop.fs.FileUtil.copy(fs, success, fs,
-        new org.apache.hadoop.fs.Path(dstP, "_SUCCESS"), false, hconf)
-      ()
-    }
-  }
-
-  /** Row count observed ON the write job itself — the R168 "no read-back
-    * job" discipline applied to the index maintainers (r19 optimization
-    * round): every remove/update/refresh previously re-listed and
-    * re-counted the store it had just written, one full extra Spark job
-    * per maintenance op whose only output was the return value. The
-    * Observation's count is exactly the rows the (all-or-nothing,
-    * job-committed) write landed, so the value is identical.
-    */
-  private def writeCounted(df: DataFrame, path: String,
-      partitionCol: Option[String] = None,
-      mode: SaveMode = SaveMode.Overwrite): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    val w = df.observe(obs, count(lit(1)).as("rows")).write.mode(mode)
-    partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
-    obs.get("rows").asInstanceOf[Long]
-  }
+      idCol: String, vecCol: String): Long =
+    VectorStores.update(VectorStores.IvfPqResidual,
+      "updateIvfPqResidualIndex", spark, srcPath, dstPath, retireIds,
+      refreshBatch, idCol, vecCol)
 
   /** The delete half of flat-PQ index maintenance (same contract as
     * [[removeFromIvfPqIndex]], minus the coarse partitioning — the code
@@ -2272,17 +2042,9 @@ object Search {
     * @return number of surviving vectors
     */
   def removeFromPqIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    require(srcPath != dstPath,
-      "removeFromPqIndex writes a NEW directory (caller swaps atomically)")
-    val drop = removeIds.select(col(idCol)).distinct()
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-        .join(drop, Seq(idCol), "left_anti"),
-      s"$dstPath/codes")
-    copySidecarFiles(spark, s"$srcPath/codebooks", s"$dstPath/codebooks")
-    carryModelMarker(spark, srcPath, dstPath, Seq("codes", "codebooks"))
-    n
-  }
+      dstPath: String, removeIds: DataFrame, idCol: String): Long =
+    VectorStores.remove(VectorStores.Pq, "removeFromPqIndex", spark, srcPath,
+      dstPath, removeIds, idCol)
 
   /** FUSED flat-PQ update ([[updateIvfIndex]] contract, id-keyed flat
     * code store): survivors and the freshly encoded refresh batch land
@@ -2292,22 +2054,9 @@ object Search {
     */
   def updatePqIndex(spark: SparkSession, srcPath: String, dstPath: String,
       retireIds: DataFrame, refreshBatch: DataFrame,
-      idCol: String, vecCol: String): Long = {
-    require(srcPath != dstPath,
-      "updatePqIndex writes a NEW directory (caller swaps atomically)")
-    val cb = readPqCodebooks(spark, srcPath)
-    val fresh = refreshBatch.dropDuplicates(idCol)
-    val drop = retireIds.select(col(idCol))
-      .unionByName(fresh.select(col(idCol))).distinct()
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-        .join(drop, Seq(idCol), "left_anti")
-        .unionByName(pqEncode(fresh, idCol, vecCol, cb)
-          .select(col(idCol), transform(col("pq_codes"), _.cast("byte")).as("pq_codes"))),
-      s"$dstPath/codes")
-    copySidecarFiles(spark, s"$srcPath/codebooks", s"$dstPath/codebooks")
-    carryModelMarker(spark, srcPath, dstPath, Seq("codes", "codebooks"))
-    n
-  }
+      idCol: String, vecCol: String): Long =
+    VectorStores.update(VectorStores.Pq, "updatePqIndex", spark, srcPath,
+      dstPath, retireIds, refreshBatch, idCol, vecCol)
 
   /** The delete half of OPQ index maintenance: [[removeFromPqIndex]] plus
     * the rotation sidecar copied verbatim.
@@ -2315,31 +2064,21 @@ object Search {
     * @return number of surviving vectors
     */
   def removeFromOpqIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    val n = removeFromPqIndex(spark, srcPath, dstPath, removeIds, idCol)
-    copySidecarFiles(spark, s"$srcPath/rotation", s"$dstPath/rotation")
-    carryModelMarker(spark, srcPath, dstPath, Seq("rotation"))
-    n
-  }
+      dstPath: String, removeIds: DataFrame, idCol: String): Long =
+    VectorStores.remove(VectorStores.Opq, "removeFromOpqIndex", spark,
+      srcPath, dstPath, removeIds, idCol)
 
-  /** FUSED OPQ update: rotate the refresh batch under the frozen
-    * rotation, delegate to [[updatePqIndex]], and carry the rotation
-    * sidecar verbatim.
+  /** FUSED OPQ update: the [[updatePqIndex]] contract with the refresh
+    * batch rotated under the frozen rotation; the rotation sidecar copies
+    * verbatim.
     *
     * @return number of vectors in the new index
     */
   def updateOpqIndex(spark: SparkSession, srcPath: String, dstPath: String,
       retireIds: DataFrame, refreshBatch: DataFrame,
-      idCol: String, vecCol: String): Long = {
-    val model = readOpqModel(spark, srcPath)
-    val n = updatePqIndex(spark, srcPath, dstPath, retireIds,
-      refreshBatch.select(col(idCol),
-        rotateCol(col(vecCol), model.rotation).as(vecCol)),
-      idCol, vecCol)
-    copySidecarFiles(spark, s"$srcPath/rotation", s"$dstPath/rotation")
-    carryModelMarker(spark, srcPath, dstPath, Seq("rotation"))
-    n
-  }
+      idCol: String, vecCol: String): Long =
+    VectorStores.update(VectorStores.Opq, "updateOpqIndex", spark, srcPath,
+      dstPath, retireIds, refreshBatch, idCol, vecCol)
 
   // --------------------------- quantizer refresh (model re-train) ---
 
@@ -2399,101 +2138,19 @@ object Search {
         Window.orderBy(col("_h"), col("_id"))))
       .where(col("_rk") <= nClusters)
 
-  /** Model-version discipline for REFRESHED vector indexes
-    * (VERDICT r13 item 2): a refresh re-trains the quantizer, so serving
-    * a store whose artifacts mix two model generations — a subtree-level
-    * swap that died half-way — would be silently wrong (codes encoded
-    * under one model pruned/decoded under another). Refresh therefore
-    * tags every artifact directory it writes with a hidden
-    * `_v<version>` file and writes a `model` sidecar (version + family)
-    * LAST; [[requireConsistentModel]] — called by every family's
-    * topKFromIndex reader — verifies all tags agree with the marker and
-    * refuses loudly otherwise. Stores that were never refreshed carry no
-    * marker and skip the check entirely (legacy semantics, zero cost on
-    * the serving path).
+  /** Model version of a store: its `model` marker's, 0 for a store that
+    * was never refreshed ([[VectorStores]] holds the marker protocol).
     */
-  def readModelVersion(spark: SparkSession, path: String): Long = {
-    import graft.sources.{PathState, SidecarParquet}
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (PathState.classify(s"$path/model", hconf) == PathState.Data)
-      SidecarParquet.longAt(
-        SidecarParquet.readGroups(s"$path/model", hconf).head, "model_version")
-    else 0L
-  }
+  def readModelVersion(spark: SparkSession, path: String): Long =
+    VectorStores.readModelVersion(spark, path)
 
-  private def writeModelMarker(spark: SparkSession, path: String,
-      version: Long, family: String): Unit =
-    // driver-local values → driver-side parquet write, zero jobs (r20;
-    // this marker is (re)written by every refresh AND every CRUD carry)
-    graft.sources.SidecarParquet.writeFlat(s"$path/model",
-      spark.sparkContext.hadoopConfiguration,
-      Seq("model_version" -> "long", "family" -> "string"),
-      Seq(Seq(version, family)))
-
-  private def tagModelVersion(dir: String, version: Long,
-      hconf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, s"_v$version")
-    p.getFileSystem(hconf).create(p, true).close()
-  }
-
-  /** Distinct `_v<n>` tags present in an artifact dir (None = dir absent). */
-  private def artifactTags(dir: String,
-      hconf: org.apache.hadoop.conf.Configuration): Option[Set[Long]] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) None
-    else Some(fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("_v") && n.drop(2).nonEmpty &&
-        n.drop(2).forall(_.isDigit))
-      .map(_.drop(2).toLong).toSet)
-  }
-
+  /** Refuse a store whose artifacts carry another model generation's tags
+    * than its `model` marker — a refresh swap that died half-way. Run by
+    * every family's `*FromIndex` reader; unmarked stores pass at no cost.
+    */
   def requireConsistentModel(spark: SparkSession, path: String,
-      op: String): Unit = {
-    import graft.sources.{PathState, SidecarParquet}
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (PathState.classify(s"$path/model", hconf) != PathState.Data) return
-    // driver-side marker read (KB sidecar, zero jobs — r20, guide §5):
-    // this guard runs on EVERY family's topKFromIndex read, so the old
-    // one-row spark job was a per-serve scheduling tax
-    val version = SidecarParquet.longAt(
-      SidecarParquet.readGroups(s"$path/model", hconf).head, "model_version")
-    Seq("vectors", "codes", "centroids", "codebooks", "encoding",
-        "rotation").foreach { a =>
-      artifactTags(s"$path/$a", hconf).foreach { tags =>
-        require(tags == Set(version),
-          s"$op: '$path/$a' carries model tag(s) " +
-            s"${if (tags.isEmpty) "NONE" else tags.toSeq.sorted.map("v" + _).mkString(",")} " +
-            s"but the index marker says v$version — a mid-swap store (one " +
-            "generation's artifact under another generation's model); " +
-            "refusing to serve it")
-      }
-    }
-  }
-
-  /** Carry a refreshed store's model-version marker and artifact tags
-    * through a new-directory CRUD rewrite: remove/update keep the FROZEN
-    * model by contract, so the destination is the SAME model generation
-    * and must say so — without this, one update after a refresh would
-    * silently drop the mid-swap protection [[requireConsistentModel]]
-    * provides (the dst would read as a legacy unmarked store). Legacy
-    * sources (no marker) copy nothing — zero behavior change.
-    */
-  private def carryModelMarker(spark: SparkSession, srcPath: String,
-      dstPath: String, artifacts: Seq[String]): Unit = {
-    import graft.sources.{PathState, SidecarParquet}
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (PathState.classify(s"$srcPath/model", hconf) != PathState.Data) return
-    val row = SidecarParquet.readGroups(s"$srcPath/model", hconf).head
-    val (version, family) = (SidecarParquet.longAt(row, "model_version"),
-      SidecarParquet.stringAt(row, "family"))
-    artifacts.foreach { a =>
-      val p = new org.apache.hadoop.fs.Path(s"$dstPath/$a")
-      if (p.getFileSystem(hconf).exists(p))
-        tagModelVersion(s"$dstPath/$a", version, hconf)
-    }
-    writeModelMarker(spark, dstPath, version, family)
-  }
+      op: String): Unit =
+    VectorStores.requireConsistentModel(spark, path, op)
 
   /** Re-train the coarse quantizer of a persisted IVF index on the
     * CURRENT corpus and rebuild (VERDICT r13 item 2 — the operator
@@ -2514,23 +2171,10 @@ object Search {
     */
   def refreshIvfIndex(df: DataFrame, idCol: String, vecCol: String,
       srcPath: String, dstPath: String, nClusters: Int,
-      salt: String = "refresh"): Long = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(srcPath != dstPath,
-      "refreshIvfIndex writes a NEW directory (caller swaps atomically)")
-    require(graft.sources.PathState.classify(s"$srcPath/vectors", hconf) ==
-      graft.sources.PathState.Data,
-      s"refreshIvfIndex requires an existing index at '$srcPath' — a " +
-        "first build is writeIvfIndex")
-    val version = readModelVersion(spark, srcPath) + 1
-    val cents = sampledCentroids(df, idCol, vecCol, nClusters, salt)
-    val n = writeIvfIndex(df, vecCol, cents, dstPath)
-    tagModelVersion(s"$dstPath/vectors", version, hconf)
-    tagModelVersion(s"$dstPath/centroids", version, hconf)
-    writeModelMarker(spark, dstPath, version, "ivf")
-    n
-  }
+      salt: String = "refresh"): Long =
+    VectorStores.refresh(VectorStores.Ivf, "refreshIvfIndex", df, idCol,
+      vecCol, srcPath, dstPath)(
+      sampledCentroids(df, idCol, vecCol, nClusters, salt))
 
   /** [[refreshIvfIndex]] for the flat PQ family: codebooks re-train on
     * the current corpus via the deterministic sampled recipe
@@ -2540,23 +2184,10 @@ object Search {
     */
   def refreshPqIndex(df: DataFrame, idCol: String, vecCol: String,
       srcPath: String, dstPath: String, dim: Int, m: Int,
-      ksub: Int): Long = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(srcPath != dstPath,
-      "refreshPqIndex writes a NEW directory (caller swaps atomically)")
-    require(graft.sources.PathState.classify(s"$srcPath/codes", hconf) ==
-      graft.sources.PathState.Data,
-      s"refreshPqIndex requires an existing index at '$srcPath' — a " +
-        "first build is pqWriteIndex")
-    val version = readModelVersion(spark, srcPath) + 1
-    val cb = pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub)
-    val n = pqWriteIndex(df, idCol, vecCol, cb, dstPath)
-    tagModelVersion(s"$dstPath/codes", version, hconf)
-    tagModelVersion(s"$dstPath/codebooks", version, hconf)
-    writeModelMarker(spark, dstPath, version, "pq")
-    n
-  }
+      ksub: Int): Long =
+    VectorStores.refresh(VectorStores.Pq, "refreshPqIndex", df, idCol,
+      vecCol, srcPath, dstPath)(
+      pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub))
 
   /** [[refreshIvfIndex]] for the composed IVF-PQ family: BOTH models —
     * coarse centroids and PQ codebooks — re-train on the current corpus
@@ -2567,26 +2198,11 @@ object Search {
     */
   def refreshIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
       srcPath: String, dstPath: String, nClusters: Int, dim: Int, m: Int,
-      ksub: Int, salt: String = "refresh"): Long = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(srcPath != dstPath,
-      "refreshIvfPqIndex writes a NEW directory (caller swaps atomically)")
-    require(graft.sources.PathState.classify(s"$srcPath/codes", hconf) ==
-      graft.sources.PathState.Data,
-      s"refreshIvfPqIndex requires an existing index at '$srcPath' — a " +
-        "first build is writeIvfPqIndex")
-    requirePlainIvfPq(spark, srcPath, "refreshIvfPqIndex")
-    val version = readModelVersion(spark, srcPath) + 1
-    val cents = sampledCentroids(df, idCol, vecCol, nClusters, salt)
-    val cb = pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub)
-    val n = writeIvfPqIndex(df, idCol, vecCol, cents, cb, dstPath)
-    tagModelVersion(s"$dstPath/codes", version, hconf)
-    tagModelVersion(s"$dstPath/centroids", version, hconf)
-    tagModelVersion(s"$dstPath/codebooks", version, hconf)
-    writeModelMarker(spark, dstPath, version, "ivfpq")
-    n
-  }
+      ksub: Int, salt: String = "refresh"): Long =
+    VectorStores.refresh(VectorStores.IvfPq, "refreshIvfPqIndex", df, idCol,
+      vecCol, srcPath, dstPath)(
+      (sampledCentroids(df, idCol, vecCol, nClusters, salt),
+        pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub)))
 
   /** [[refreshIvfPqIndex]] for the RESIDUAL family: centroids re-sample,
     * residual codebooks re-train against them
@@ -2598,27 +2214,13 @@ object Search {
     */
   def refreshIvfPqResidualIndex(df: DataFrame, idCol: String,
       vecCol: String, srcPath: String, dstPath: String, nClusters: Int,
-      dim: Int, m: Int, ksub: Int, salt: String = "refresh"): Long = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(srcPath != dstPath,
-      "refreshIvfPqResidualIndex writes a NEW directory (caller swaps atomically)")
-    require(graft.sources.PathState.classify(s"$srcPath/codes", hconf) ==
-      graft.sources.PathState.Data,
-      s"refreshIvfPqResidualIndex requires an existing index at '$srcPath' " +
-        "— a first build is writeIvfPqResidualIndex")
-    requireResidualIvfPq(spark, srcPath, "refreshIvfPqResidualIndex")
-    val version = readModelVersion(spark, srcPath) + 1
-    val cents = sampledCentroids(df, idCol, vecCol, nClusters, salt)
-    val cb = pqResidualSampledCodebooks(df, idCol, vecCol, cents, dim, m, ksub)
-    val n = writeIvfPqResidualIndex(df, idCol, vecCol, cents, cb, dstPath)
-    tagModelVersion(s"$dstPath/codes", version, hconf)
-    tagModelVersion(s"$dstPath/centroids", version, hconf)
-    tagModelVersion(s"$dstPath/codebooks", version, hconf)
-    tagModelVersion(s"$dstPath/encoding", version, hconf)
-    writeModelMarker(spark, dstPath, version, "ivfpq_residual")
-    n
-  }
+      dim: Int, m: Int, ksub: Int, salt: String = "refresh"): Long =
+    VectorStores.refresh(VectorStores.IvfPqResidual,
+      "refreshIvfPqResidualIndex", df, idCol, vecCol, srcPath, dstPath) {
+      val cents = sampledCentroids(df, idCol, vecCol, nClusters, salt)
+      (cents, pqResidualSampledCodebooks(df, idCol, vecCol, cents, dim, m,
+        ksub))
+    }
 
   /** [[refreshPqIndex]] for the OPQ family — completing refresh symmetry
     * across all five persisted vector-index families. OPQ's models
@@ -2633,25 +2235,10 @@ object Search {
     */
   def refreshOpqIndex(df: DataFrame, idCol: String, vecCol: String,
       srcPath: String, dstPath: String, dim: Int, m: Int, ksub: Int,
-      seed: Long = 42L, maxIter: Int = 20, opqIters: Int = 4): Long = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    require(srcPath != dstPath,
-      "refreshOpqIndex writes a NEW directory (caller swaps atomically)")
-    require(graft.sources.PathState.classify(s"$srcPath/codes", hconf) ==
-      graft.sources.PathState.Data,
-      s"refreshOpqIndex requires an existing index at '$srcPath' — a " +
-        "first build is opqWriteIndex")
-    val version = readModelVersion(spark, srcPath) + 1
-    val model = opqTrainCodebooks(df, vecCol, dim, m, ksub, seed, maxIter,
-      opqIters)
-    val n = opqWriteIndex(df, idCol, vecCol, model, dstPath)
-    tagModelVersion(s"$dstPath/codes", version, hconf)
-    tagModelVersion(s"$dstPath/codebooks", version, hconf)
-    tagModelVersion(s"$dstPath/rotation", version, hconf)
-    writeModelMarker(spark, dstPath, version, "opq")
-    n
-  }
+      seed: Long = 42L, maxIter: Int = 20, opqIters: Int = 4): Long =
+    VectorStores.refresh(VectorStores.Opq, "refreshOpqIndex", df, idCol,
+      vecCol, srcPath, dstPath)(
+      opqTrainCodebooks(df, vecCol, dim, m, ksub, seed, maxIter, opqIters))
 
   // ------------- catalog-resolved serving + the drift-policy loop ---
 
@@ -2996,7 +2583,7 @@ object Search {
     * fewer, with id-sorted row groups either way (ADVICE r14 — the
     * parameter was previously validated but ignored).
     */
-  private def clusterCompactionLayout(src: DataFrame, idCol: String,
+  private[graft] def clusterCompactionLayout(src: DataFrame, idCol: String,
       nClusters: => Long, targetFilesPerCluster: Int): DataFrame = {
     // nClusters is by-name: the default one-file-per-cluster path never
     // evaluates it, so the centroids-count job only runs when the file
@@ -3017,34 +2604,15 @@ object Search {
     * file budget ([[clusterCompactionLayout]] — 1 = exactly one file per
     * cluster; above 1 a size-proportional target, so row-group stats
     * prune id probes too); centroids copy verbatim; a refreshed
-    * store's model marker + tags carry forward
-    * ([[carryModelMarker]] — compaction changes layout, not the model
-    * generation). Rows parity-verified.
+    * store's model marker + tags carry forward (compaction changes
+    * layout, not the model generation). Rows parity-verified.
     *
     * @return number of vectors in the compacted index
     */
   def compactIvfIndex(spark: SparkSession, srcPath: String,
       dstPath: String, targetFilesPerCluster: Int = 1): Long = {
-    require(srcPath != dstPath,
-      "compactIvfIndex writes a NEW directory (caller swaps atomically)")
-    require(targetFilesPerCluster > 0,
-      s"targetFilesPerCluster must be positive, got $targetFilesPerCluster")
-    val src = StoreParquet.open(spark, s"$srcPath/vectors")
-    val n = src.count()
-    val idCol = src.columns.find(_ != "cluster_id").head
-    // nClusters comes from a driver-side sidecar read and the carry-over
-    // is a verbatim byte copy — two fewer jobs per compaction (r20; the
-    // r19 copySidecarFiles discipline applied to the compactors)
-    clusterCompactionLayout(src, idCol,
-        graft.sources.SidecarParquet.readGroups(s"$srcPath/centroids",
-          spark.sparkContext.hadoopConfiguration).size.toLong,
-        targetFilesPerCluster)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster_id").parquet(s"$dstPath/vectors")
-    copySidecarFiles(spark, s"$srcPath/centroids", s"$dstPath/centroids")
-    carryModelMarker(spark, srcPath, dstPath, Seq("vectors", "centroids"))
-    val out = StoreParquet.open(spark, s"$dstPath/vectors").count()
-    require(out == n, s"vectors compaction row mismatch: source $n, got $out")
+    val out = VectorStores.compact(VectorStores.Ivf, "compactIvfIndex", spark,
+      srcPath, dstPath, targetFilesPerCluster)
     // compaction preserves content row-for-row, so a VALID source sidecar
     // carries verbatim (aggregated — the per-batch delta rows collapse);
     // a stale/absent one is simply not carried and heals later (R183)
@@ -3067,29 +2635,11 @@ object Search {
     * @return number of vectors in the compacted index
     */
   def compactIvfPqIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, targetFilesPerCluster: Int = 1): Long = {
-    require(srcPath != dstPath,
-      "compactIvfPqIndex writes a NEW directory (caller swaps atomically)")
-    require(targetFilesPerCluster > 0,
-      s"targetFilesPerCluster must be positive, got $targetFilesPerCluster")
-    val src = StoreParquet.open(spark, s"$srcPath/codes")
-    val n = src.count()
-    val idCol = src.columns.find(c => c != "cluster_id" && c != "pq_codes").head
-    // nClusters from a driver-side sidecar read — one fewer job (r20)
-    clusterCompactionLayout(src, idCol,
-        graft.sources.SidecarParquet.readGroups(s"$srcPath/centroids",
-          spark.sparkContext.hadoopConfiguration).size.toLong,
-        targetFilesPerCluster)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster_id").parquet(s"$dstPath/codes")
-    copyIvfPqSidecars(spark, srcPath, dstPath,
-      withEncoding = ivfPqEncoding(spark, srcPath).isDefined)
-    carryModelMarker(spark, srcPath, dstPath,
-      Seq("codes", "centroids", "codebooks", "encoding"))
-    val out = StoreParquet.open(spark, s"$dstPath/codes").count()
-    require(out == n, s"codes compaction row mismatch: source $n, got $out")
-    out
-  }
+      dstPath: String, targetFilesPerCluster: Int = 1): Long =
+    VectorStores.compact(
+      if (hasArtifact(spark, srcPath, "encoding")) VectorStores.IvfPqResidual
+      else VectorStores.IvfPq,
+      "compactIvfPqIndex", spark, srcPath, dstPath, targetFilesPerCluster)
 
   /** [[compactIvfIndex]] for the flat PQ/OPQ stores: codes rewrite into
     * `targetFiles` id-range-sorted files (id probes prune on row-group
@@ -3099,27 +2649,17 @@ object Search {
     * @return number of vectors in the compacted index
     */
   def compactPqIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, targetFiles: Int = 16): Long = {
-    require(srcPath != dstPath,
-      "compactPqIndex writes a NEW directory (caller swaps atomically)")
-    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val src = StoreParquet.open(spark, s"$srcPath/codes")
-    val n = src.count()
-    val idCol = src.columns.find(_ != "pq_codes").head
-    src.repartitionByRange(targetFiles, col(idCol))
-      .sortWithinPartitions(col(idCol))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dstPath/codes")
-    // verbatim byte copies — two fewer jobs per compaction (r20)
-    copySidecarFiles(spark, s"$srcPath/codebooks", s"$dstPath/codebooks")
-    val rotPath = new org.apache.hadoop.fs.Path(s"$srcPath/rotation")
-    if (rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(rotPath))
-      copySidecarFiles(spark, s"$srcPath/rotation", s"$dstPath/rotation")
-    carryModelMarker(spark, srcPath, dstPath,
-      Seq("codes", "codebooks", "rotation"))
-    val out = StoreParquet.open(spark, s"$dstPath/codes").count()
-    require(out == n, s"codes compaction row mismatch: source $n, got $out")
-    out
+      dstPath: String, targetFiles: Int = 16): Long =
+    if (hasArtifact(spark, srcPath, "rotation"))
+      VectorStores.compact(VectorStores.Opq, "compactPqIndex", spark, srcPath,
+        dstPath, targetFiles)
+    else VectorStores.compact(VectorStores.Pq, "compactPqIndex", spark,
+      srcPath, dstPath, targetFiles)
+
+  private def hasArtifact(spark: SparkSession, path: String,
+      artifact: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/$artifact")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Learn IVF centroids with MLlib KMeans (seeded, deterministic given the
@@ -3253,18 +2793,6 @@ object Search {
       Seq(Seq(dim, numTables, bitsPerTable)))
   }
 
-  /** Append a batch to a [[writeSeededLshIndex]] index under the frozen
-    * family shape — the R81/R85 maintenance discipline: already-indexed
-    * ids anti-join out against a column-pruned id scan of `codes`, so
-    * replays are no-ops; band rows commit FIRST and codes SECOND, because
-    * the CODES store is the idempotency gate — a crash between the two
-    * appends leaves orphan band rows the retry re-appends, which the read
-    * path's (id1, id2) dedup absorbs, whereas the reverse order would
-    * gate the retry out with its band rows never landed (silent recall
-    * loss).
-    *
-    * @return number of NEW vectors appended (0 for a pure replay)
-    */
   /** The seeded-LSH family-shape sidecar, read DRIVER-SIDE (one KB row;
     * the old one-row spark job ran per append/update/lookup — r20,
     * guide §5).
@@ -3278,6 +2806,18 @@ object Search {
       SidecarParquet.intAt(g, "bits_per_table"))
   }
 
+  /** Append a batch to a [[writeSeededLshIndex]] index under the frozen
+    * family shape — the R81/R85 maintenance discipline: already-indexed
+    * ids anti-join out against a column-pruned id scan of `codes`, so
+    * replays are no-ops; band rows commit FIRST and codes SECOND, because
+    * the CODES store is the idempotency gate — a crash between the two
+    * appends leaves orphan band rows the retry re-appends, which the read
+    * path's (id1, id2) dedup absorbs, whereas the reverse order would
+    * gate the retry out with its band rows never landed (silent recall
+    * loss).
+    *
+    * @return number of NEW vectors appended (0 for a pure replay)
+    */
   def appendSeededLshIndex(batch: DataFrame, idCol: String, vecCol: String,
       path: String): Long = {
     import graft.sources.PathState
@@ -3356,11 +2896,11 @@ object Search {
       .join(drop, Seq("id"), "left_anti")
       .dropDuplicates("id", "t", "bucket")
       .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$dstPath/bands")
-    val n = writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
+    val n = VectorStores.writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
         .join(drop, Seq("id"), "left_anti")
         .dropDuplicates("id"),
       s"$dstPath/codes")
-    copySidecarFiles(spark, s"$srcPath/meta", s"$dstPath/meta")
+    VectorStores.copySidecarFiles(spark, s"$srcPath/meta", s"$dstPath/meta")
     n
   }
 
@@ -3399,13 +2939,13 @@ object Search {
             .unionByName(seededBands(codes, dim, nt, bpt)
               .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket")))
             .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$dstPath/bands")
-          writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
+          VectorStores.writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
               .join(drop, Seq("id"), "left_anti")
               .dropDuplicates("id")
               .unionByName(codes.select(col("_id").as("id"), col("_c").as("code"))),
             s"$dstPath/codes")
         } finally { codes.unpersist(false); () }
-      copySidecarFiles(spark, s"$srcPath/meta", s"$dstPath/meta")
+      VectorStores.copySidecarFiles(spark, s"$srcPath/meta", s"$dstPath/meta")
       out
     } finally { fresh.unpersist(); () }
   }

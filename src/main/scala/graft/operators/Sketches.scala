@@ -48,7 +48,7 @@ object Sketches {
 
   /** Append sketch rows with the row count observed ON the write job
     * itself — one job instead of the old persist+count+write pair (r20
-    * optimization round; [[graft.operators.Search]]'s writeCounted
+    * optimization round; [[graft.operators.VectorStores]]'s writeCounted
     * discipline applied to the four sketch appends). The Observation's
     * count is exactly the rows the job-committed append landed.
     */

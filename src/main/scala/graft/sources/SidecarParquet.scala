@@ -18,7 +18,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * but ~100–200 ms of pure overhead at any scale) per sidecar per op.
   * Reading the same bytes with parquet-hadoop's example reader on the
   * driver is the same I/O with zero jobs — the byte-copy discipline
-  * ([[graft.operators.Search]]'s `copySidecarFiles`) applied to the read
+  * ([[graft.operators.VectorStores]]'s `copySidecarFiles`) applied to the read
   * side.
   *
   * Scale posture: callers must only point this at MODEL-scale artifacts

@@ -13,6 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * allow-list below: reads of CALLER-SUPPLIED input, whose layout graft
   * does not own. A read that passes its own schema
   * (`.read.schema(s).parquet(...)`) runs no inference and is not matched.
+  *
+  * A second pattern set keeps the vector-store marker protocol in one
+  * module: outside comments, `tagModelVersion(`, `writeModelMarker(` and
+  * `carryModelMarker(` may appear only in
+  * `graft/operators/VectorStores.scala`, so a new store family reuses the
+  * generic lifecycle instead of forking the marker-last protocol.
   */
 class StoreReadInventorySpec extends AnyFunSuite {
 
@@ -31,20 +37,35 @@ class StoreReadInventorySpec extends AnyFunSuite {
       .map(l => l.indexOf("// ") match { case -1 => l; case i => l.take(i) })
       .mkString("\n")
 
-  test("every bare .read.parquet( in graft/operators is an allow-listed caller-input read") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val ops = root.resolve("graft/operators")
-    assert(java.nio.file.Files.isDirectory(ops),
+  private val markerProtocol =
+    """\b(tagModelVersion|writeModelMarker|carryModelMarker)\s*\(""".r
+
+  private val markerHome = "graft/operators/VectorStores.scala"
+
+  private val root = java.nio.file.Paths.get("src/main/scala")
+
+  /** file (relative to src/main/scala) -> matches of `pattern` outside
+    * comments, for every .scala file under `dir` with at least one.
+    */
+  private def scan(dir: String,
+      pattern: scala.util.matching.Regex): Map[String, Int] = {
+    val base = root.resolve(dir)
+    assert(java.nio.file.Files.isDirectory(base),
       s"expected to run from the repo root, cwd=${sys.props("user.dir")}")
     val counts = scala.collection.mutable.Map.empty[String, Int]
-    java.nio.file.Files.walk(ops).forEach { p =>
+    java.nio.file.Files.walk(base).forEach { p =>
       if (p.toString.endsWith(".scala")) {
-        val n = bareRead.findAllMatchIn(code(
+        val n = pattern.findAllMatchIn(code(
           new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))).size
         if (n > 0) counts(root.relativize(p).toString) = n
       }
       ()
     }
+    counts.toMap
+  }
+
+  test("every bare .read.parquet( in graft/operators is an allow-listed caller-input read") {
+    val counts = scan("graft/operators", bareRead)
     val diff = (counts.keySet ++ allowed.keySet).toSeq.sorted.flatMap { f =>
       (counts.getOrElse(f, 0), allowed.get(f).fold(0)(_._1)) match {
         case (o, a) if o == a => None
@@ -57,6 +78,17 @@ class StoreReadInventorySpec extends AnyFunSuite {
         s"input, with the reason:\n  ${diff.mkString("\n  ")}")
   }
 
+  test("the vector-store marker protocol is spelled only in VectorStores.scala") {
+    val counts = scan("graft", markerProtocol)
+    val outside = counts.keySet - markerHome
+    assert(outside.isEmpty,
+      "tagModelVersion / writeModelMarker / carryModelMarker belong to " +
+        s"$markerHome (run the generic lifecycle over a VectorFamily " +
+        s"descriptor instead of forking it); found in: ${outside.toSeq.sorted.mkString(", ")}")
+    assert(counts.getOrElse(markerHome, 0) > 0,
+      s"expected the marker protocol in $markerHome")
+  }
+
   test("the scan sees the spellings it gates") {
     val src = """val a = spark.read.parquet(s"$p/vectors")
       |val b = spark.read.option("basePath", w)
@@ -65,5 +97,11 @@ class StoreReadInventorySpec extends AnyFunSuite {
       |  * `spark.read.parquet(src)` in a scaladoc
       |val c = spark.read.schema(s).parquet(p)""".stripMargin
     assert(bareRead.findAllMatchIn(code(src)).size == 2)
+    val marker = """writeModelMarker(spark, dst, v, f)
+      |  carryModelMarker (spark, s, d, a)
+      |// tagModelVersion(commented)
+      |  * [[tagModelVersion]] in a scaladoc, tagModelVersion(x) too
+      |val readModelVersion = 1""".stripMargin
+    assert(markerProtocol.findAllMatchIn(code(marker)).size == 2)
   }
 }
