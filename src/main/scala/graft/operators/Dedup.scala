@@ -1138,7 +1138,7 @@ object Dedup {
     * bounded by batches since the last [[compactSoftDedupWeights]] fold
     * (which is exactly what compaction bounds).
     */
-  private def batchDirs(root: String,
+  private[operators] def batchDirs(root: String,
       hconf: org.apache.hadoop.conf.Configuration)
       : (Seq[(Long, String)], Seq[(Long, String)]) = {
     val rp = new org.apache.hadoop.fs.Path(root)
@@ -1533,10 +1533,11 @@ object Dedup {
     * probes' caller-side subtree swap): what sustained micro-batch
     * ingest erodes is the batch-subdir COUNT the latest-wins reader
     * scans, so the policy observes the LIVE generation's committed
-    * weights batches (one driver-side listing — a healthy store costs
-    * nothing else) and only past `maxBatches` pays the
-    * [[compactSoftDedupWeights]] fold into a staged generation of a
-    * [[graft.sources.Generations]] catalog, then publishes atomically.
+    * weights batches (driver-side listings of the weights and pairs
+    * batches — a healthy store costs nothing else) and only past
+    * `maxBatches` pays the [[compactSoftDedupWeights]] fold into a staged
+    * generation of a [[graft.sources.Generations]] catalog, then
+    * publishes atomically.
     *
     * The catalog holds WHOLE-STORE generations: compaction writes the
     * weights + pairs subtrees; the `neardup` sketch store — untouched
@@ -1556,49 +1557,19 @@ object Dedup {
     * ledger keeps absorbed replays no-op across the swap, and
     * later-epoch subdirs carry over live.
     *
-    * QUIESCENCE: the tick must not race a fold that COMPLETES
-    * mid-compaction — its subdirs (and late sketch rows) would be
-    * missing from the staged generation. The policy detects this: the
-    * live generation's committed weights AND pairs batch sets are
-    * re-listed after the rewrite and any change REFUSES the publish
-    * (the staged generation is abandoned unpublished — vacuum reclaims
-    * it); re-run the tick while the stream is paused. Detection is
-    * best-effort (a fold landing between the re-check and the pointer
-    * rename is not seen) — pausing the single writer for the tick is
-    * the contract, the check is the tripwire.
+    * QUIESCENCE ([[Maintenance.tick]] states the contract): the tripwire
+    * fingerprint is the live generation's committed weights AND pairs
+    * batch sets — a fold completing during the compaction (its subdirs and
+    * late sketch rows missing from the staged generation) refuses the
+    * publish.
     *
     * @return the published generation name, or None when healthy
     */
   def maintainSoftDedupWeights(spark: SparkSession, catalogRoot: String,
       maxBatches: Int, committedBatchId: Long,
-      idCol: String = "id", targetFiles: Int = 4): Option[String] = {
-    require(maxBatches >= 1,
-      s"maxBatches must be >= 1 (a snapshot IS one batch subdir), got $maxBatches")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = graft.sources.Generations.resolve(catalogRoot, hconf)
-    def pairsBatches() = batchDirs(s"$live/pairs", hconf)._1.map(_._1)
-    val weightsBefore = committedWeightsBatches(spark, live)
-    if (weightsBefore.size <= maxBatches) None
-    else {
-      val pairsBefore = pairsBatches()
-      val staged = graft.sources.Generations.stage(catalogRoot, hconf)
-      compactSoftDedupWeights(spark, live, staged, committedBatchId,
-        idCol, targetFiles)
-      if (graft.sources.PathState.classify(s"$live/neardup/sketches",
-          hconf) == graft.sources.PathState.Data)
-        compactNearDupSketches(spark, s"$live/neardup", s"$staged/neardup")
-      val (weightsAfter, pairsAfter) =
-        (committedWeightsBatches(spark, live), pairsBatches())
-      QuiescenceRefusal.refuseUnless(
-        weightsAfter == weightsBefore && pairsAfter == pairsBefore,
-        s"maintainSoftDedupWeights: fold(s) landed in the live generation " +
-          s"mid-compaction (weights $weightsBefore -> $weightsAfter, pairs " +
-          s"$pairsBefore -> $pairsAfter) — refusing to publish a generation " +
-          "missing them; the staged dir is abandoned (vacuum reclaims it). " +
-          "Re-run the tick with the stream paused")
-      Some(graft.sources.Generations.publish(catalogRoot, staged, hconf))
-    }
-  }
+      idCol: String = "id", targetFiles: Int = 4): Option[String] =
+    Maintenance.tick(spark, Maintenance.WeightsPolicy(catalogRoot,
+      maxBatches, committedBatchId, idCol, targetFiles)).published.get
 
   /** The perceptual sequence store's maintenance policy —
     * [[maintainSoftDedupWeights]]'s contract on the FIFTH store axis
@@ -1606,23 +1577,19 @@ object Dedup {
     * sigs file-set and one `pairs/batch_id=<epoch>` subdir per
     * micro-batch, so both the banded self-join's scan and any pairs read
     * open O(batches) files forever. This observes the live generation's
-    * sigs data-file count (ONE driver listing — a healthy store costs
-    * nothing else) and, only past `maxSigFiles`, pays BOTH rewrites into
-    * a staged generation — [[compactSequenceStore]] (sigs re-range-sorted
-    * on (id, frame) into `targetFiles` files) and, when a pairs store
-    * exists, [[compactSequencePairs]] (closed epochs `<= committedBatchId`
+    * sigs data-file count (driver-side listings of sigs and pairs — a
+    * healthy store costs nothing else) and, only past `maxSigFiles`, pays
+    * BOTH rewrites into a staged generation — [[compactSequenceStore]]
+    * (sigs re-range-sorted on (id, frame) into `targetFiles` files) and,
+    * when a pairs store exists, [[compactSequencePairs]] (closed epochs `<= committedBatchId`
     * folded to one bounded subdir, live epochs carried untouched) — then
     * publishes atomically. Fold replay stays idempotent across the swap
     * (the sigs anti-join keys off store CONTENT, preserved row-for-row);
     * the boundary is the caller's checkpoint-committed epoch, per the
     * pairs compactor's contract.
     *
-    * QUIESCENCE: a fold whose job COMMITS between the compaction's source
-    * reads and the publish would exist only in the superseded generation
-    * — the policy re-lists the live sigs AND pairs file counts after the
-    * rewrite and REFUSES the publish on change (the staged generation is
-    * abandoned; vacuum reclaims it). Same best-effort tripwire +
-    * pause-the-writer contract as the other policies.
+    * QUIESCENCE ([[Maintenance.tick]] states the contract): the tripwire
+    * fingerprint is the live sigs AND pairs file counts.
     *
     * A pairs store whose every epoch holds ZERO rows (a dedup stream that
     * has found no duplicates yet — the sink still lands an empty epoch
@@ -1643,37 +1610,9 @@ object Dedup {
   def maintainSequenceStore(spark: SparkSession, catalogRoot: String,
       committedBatchId: Long, maxSigFiles: Int,
       targetFiles: Int = 16,
-      afterRewrite: () => Unit = () => ()): Option[String] = {
-    require(maxSigFiles >= targetFiles,
-      s"maxSigFiles ($maxSigFiles) below targetFiles ($targetFiles) " +
-        "would re-trigger compaction on every tick")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = graft.sources.Generations.resolve(catalogRoot, hconf)
-    def sigFiles() = Search.dataFileCount(spark, s"$live/sigs")
-    def pairFiles() = Search.dataFileCount(spark, s"$live/pairs")
-    val sigsBefore = sigFiles()
-    if (sigsBefore <= maxSigFiles) None // ONE listing — the healthy cost
-    else {
-      val pairsBefore = pairFiles()
-      val staged = graft.sources.Generations.stage(catalogRoot, hconf)
-      compactSequenceStore(spark, live, staged, targetFiles)
-      if (graft.sources.PathState.classify(s"$live/pairs", hconf) ==
-          graft.sources.PathState.Data &&
-          StoreParquet.open(spark, s"$live/pairs").limit(1).count() > 0)
-        compactSequencePairs(spark, live, staged, committedBatchId,
-          targetFiles)
-      afterRewrite()
-      val (sigsAfter, pairsAfter) = (sigFiles(), pairFiles())
-      QuiescenceRefusal.refuseUnless(
-        sigsAfter == sigsBefore && pairsAfter == pairsBefore,
-        s"maintainSequenceStore: fold(s) landed in the live generation " +
-          s"mid-compaction (sigs $sigsBefore -> $sigsAfter, pairs " +
-          s"$pairsBefore -> $pairsAfter) — refusing to publish a " +
-          "generation missing them; the staged dir is abandoned (vacuum " +
-          "reclaims it). Re-run the tick with the stream paused")
-      Some(graft.sources.Generations.publish(catalogRoot, staged, hconf))
-    }
-  }
+      afterRewrite: () => Unit = () => ()): Option[String] =
+    Maintenance.tick(spark, Maintenance.SequencePolicy(catalogRoot,
+      committedBatchId, maxSigFiles, targetFiles), afterRewrite).published.get
 
   /** SimHash fingerprint (bitwise majority of per-token hashes), `bits` wide.
     * Portable: bit i of md5-hash(token) taken via integer div/mod — identical

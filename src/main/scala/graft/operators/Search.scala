@@ -1320,7 +1320,8 @@ object Search {
     require(rotation.length == cb.dim, "rotation dim must match codebooks")
   }
 
-  /** R·vec as ONE codegen'd mat-vec kernel over the literal rotation —
+  /** R·vec as ONE codegen'd mat-vec kernel over the rotation (held as
+    * one primitive array, [[org.apache.spark.sql.graft.FloatMatrixExpr]]) —
     * narrow, whole-stage codegen, no shuffle. Previously composed as d
     * independent `dot(vec, row_i)` expressions in one `array(...)`: at
     * dim 768 that projection's generated method blew janino's 64 KB
@@ -1332,8 +1333,8 @@ object Search {
     * against the composed form at dims 4 and 768).
     */
   def rotateCol(vec: Column, rotation: IndexedSeq[Array[Float]]): Column =
-    org.apache.spark.sql.graft.VectorColumns.matVecFloat(
-      vec, typedLit(rotation.map(_.toSeq)))
+    org.apache.spark.sql.graft.VectorColumns.matVecFloat(vec,
+      org.apache.spark.sql.graft.VectorColumns.floatMatrix(rotation))
 
   /** Driver-side R·q with the same left-to-right double accumulation as
     * the fused dot kernel.
@@ -2389,41 +2390,17 @@ object Search {
     * caller's move (checkpoint-preserving — the R174 loop), since only
     * the caller owns the stream handle.
     *
-    * QUIESCENCE (ADVICE r15 — the tripwire both sibling policies carry):
-    * an append whose job COMMITS into the live generation between
-    * `observe` and the publish would exist only in the superseded
-    * generation — the refresh closure rebuilds from the caller's corpus
-    * snapshot, so the published store would silently drop it. The policy
-    * re-counts the live generation's data files (`vectors` + `codes` —
-    * whichever the family stores) after the refresh and REFUSES the
-    * publish on change (the staged generation is abandoned unpublished;
-    * vacuum reclaims it) — re-run the tick with the append stream
-    * paused. Best-effort detection, same contract as
-    * [[maintainTextIndex]]: pausing the single writer for the tick is
-    * the contract, the check is the tripwire.
+    * QUIESCENCE ([[Maintenance.tick]] states the contract): the tripwire
+    * fingerprint is the live generation's data-file count (`vectors` +
+    * `codes` — whichever the family stores), taken before `observe` —
+    * the refresh closure rebuilds from the caller's corpus snapshot, so
+    * an append committing meanwhile refuses the publish.
     */
   def maintainVectorIndex(spark: SparkSession, catalogRoot: String,
       threshold: Double, observe: String => Double,
-      refresh: (String, String) => Long): Option[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = graft.sources.Generations.resolve(catalogRoot, hconf)
-    def liveFiles(): Int =
-      dataFileCount(spark, s"$live/vectors") + dataFileCount(spark, s"$live/codes")
-    val before = liveFiles()
-    if (observe(live) >= threshold) None
-    else {
-      val staged = graft.sources.Generations.stage(catalogRoot, hconf)
-      refresh(live, staged)
-      val after = liveFiles()
-      QuiescenceRefusal.refuseUnless(after == before,
-        s"maintainVectorIndex: append(s) landed in the live generation " +
-          s"mid-refresh (data files $before -> $after) — refusing to " +
-          "publish a generation rebuilt from a corpus snapshot that " +
-          "misses them; the staged dir is abandoned (vacuum reclaims " +
-          "it). Re-run the tick with the append stream paused")
-      Some(graft.sources.Generations.publish(catalogRoot, staged, hconf))
-    }
-  }
+      refresh: (String, String) => Long): Option[String] =
+    Maintenance.tick(spark, Maintenance.VectorPolicy(catalogRoot, threshold,
+      observe, refresh)).published.get
 
   /** Visible parquet data files under one store subdir (driver-side
     * listing — the fragmentation observable a layout policy needs).
@@ -2475,38 +2452,15 @@ object Search {
     * across the swap); healthy stores cost one fs listing and nothing
     * else. Returns the published generation name, or None when healthy.
     *
-    * QUIESCENCE: an append whose job COMMITS between the compaction's
-    * source reads and the publish would exist only in the superseded
-    * generation — and a committed epoch never replays, so it would be
-    * silent loss. The policy re-lists the live postings after the
-    * rewrite and REFUSES the publish if the file count moved (the
-    * staged generation is abandoned; vacuum reclaims it) — re-run the
-    * tick with the append stream paused. Best-effort tripwire, same
-    * contract as [[graft.operators.Dedup.maintainSoftDedupWeights]]:
-    * the single writer pauses for the tick; the check catches the
-    * violation.
+    * QUIESCENCE ([[Maintenance.tick]] states the contract): the tripwire
+    * fingerprint is the live postings' file count — an append committing
+    * mid-compaction refuses the publish (a committed epoch never
+    * replays, so publishing would be silent loss).
     */
   def maintainTextIndex(spark: SparkSession, catalogRoot: String,
-      maxPostingsFiles: Int, targetFiles: Int = 16): Option[String] = {
-    require(maxPostingsFiles >= targetFiles,
-      s"maxPostingsFiles ($maxPostingsFiles) below targetFiles " +
-        s"($targetFiles) would re-trigger compaction on every tick")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = graft.sources.Generations.resolve(catalogRoot, hconf)
-    val before = dataFileCount(spark, s"$live/postings")
-    if (before <= maxPostingsFiles) None
-    else {
-      val staged = graft.sources.Generations.stage(catalogRoot, hconf)
-      compactTextIndex(spark, live, staged, targetFiles)
-      val after = dataFileCount(spark, s"$live/postings")
-      QuiescenceRefusal.refuseUnless(after == before,
-        s"maintainTextIndex: append(s) landed in the live generation " +
-          s"mid-compaction (postings files $before -> $after) — refusing " +
-          "to publish a generation missing them; the staged dir is " +
-          "abandoned (vacuum reclaims it). Re-run with the stream paused")
-      Some(graft.sources.Generations.publish(catalogRoot, staged, hconf))
-    }
-  }
+      maxPostingsFiles: Int, targetFiles: Int = 16): Option[String] =
+    Maintenance.tick(spark, Maintenance.TextPolicy(catalogRoot,
+      maxPostingsFiles, targetFiles)).published.get
 
   // ------------------------- persisted-store compaction (small files) ---
 

@@ -586,37 +586,16 @@ object Sketches {
     * associativity); absorbed replays stay no-ops via the carried
     * `_folded` ledger.
     *
-    * QUIESCENCE: an append whose job COMMITS between the compaction's
-    * source read and the publish would exist only in the superseded
-    * generation — the policy re-lists the live generation's data files
-    * after the rewrite and REFUSES the publish on change (the staged
-    * generation is abandoned; vacuum reclaims it). Same best-effort
-    * tripwire + pause-the-writer contract as the other three policies.
+    * QUIESCENCE ([[Maintenance.tick]] states the contract): the tripwire
+    * fingerprint is the live generation's data-file count.
     *
     * @return the published generation name, or None when healthy
     */
   def maintainSketchStore(spark: SparkSession, catalogRoot: String,
       family: String, closedBatchIds: Seq[String], compactedBatchId: String,
       maxDataFiles: Int, targetFiles: Int = 16, k: Int = 200,
-      maxMapSize: Int = 1024): Option[String] = {
-    require(maxDataFiles >= targetFiles,
-      s"maxDataFiles ($maxDataFiles) below targetFiles ($targetFiles) " +
-        "would re-trigger compaction on every tick")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = graft.sources.Generations.resolve(catalogRoot, hconf)
-    val before = Search.dataFileCount(spark, live)
-    if (before <= maxDataFiles) None
-    else {
-      val staged = graft.sources.Generations.stage(catalogRoot, hconf)
-      compactSketchStore(spark, live, staged, family, closedBatchIds,
-        compactedBatchId, k, maxMapSize, targetFiles)
-      val after = Search.dataFileCount(spark, live)
-      graft.operators.QuiescenceRefusal.refuseUnless(after == before,
-        s"maintainSketchStore: append(s) landed in the live generation " +
-          s"mid-compaction (data files $before -> $after) — refusing to " +
-          "publish a generation missing them; the staged dir is abandoned " +
-          "(vacuum reclaims it). Re-run the tick with the stream paused")
-      Some(graft.sources.Generations.publish(catalogRoot, staged, hconf))
-    }
-  }
+      maxMapSize: Int = 1024): Option[String] =
+    Maintenance.tick(spark, Maintenance.SketchPolicy(catalogRoot, family,
+      closedBatchIds, compactedBatchId, maxDataFiles, targetFiles, k,
+      maxMapSize)).published.get
 }

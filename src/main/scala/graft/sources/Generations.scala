@@ -36,17 +36,22 @@ object Generations {
   private def fc(p: Path, conf: org.apache.hadoop.conf.Configuration) =
     FileContext.getFileContext(p.toUri, conf)
 
-  /** Generation names present under the root, ascending by sequence. */
+  /** Generation names present under the root, ascending by sequence.
+    * Only `gen-<n>` with `n` an ASCII-digit non-negative Long counts: a
+    * stray `gen-` or an out-of-range digit run is skipped, never parsed
+    * into a NumberFormatException that would wedge every tick on the root.
+    */
   def history(root: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
     val rp = new Path(root)
     val fs = rp.getFileSystem(conf)
     if (!fs.exists(rp)) Seq.empty
-    else fs.listStatus(rp).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(GenPrefix)
-        && st.getPath.getName.stripPrefix(GenPrefix).forall(_.isDigit))
-      .map(_.getPath.getName)
-      .sortBy(_.stripPrefix(GenPrefix).toLong)
+    else fs.listStatus(rp).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith(GenPrefix))
+      .flatMap(name => Some(name.stripPrefix(GenPrefix))
+        .filter(_.forall(c => c >= '0' && c <= '9')).flatMap(_.toLongOption)
+        .map(_ -> name))
+      .sortBy(_._1).map(_._2)
   }
 
   /** Allocate the next generation directory (created empty, NOT yet

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  ExpectsInputTypes, LeafExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
@@ -320,6 +323,39 @@ case class MatVecFloatExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** A dense float matrix as a plan leaf (`array<array<float>>`) held as
+  * ONE primitive row-major array — the OPQ rotation's operand for
+  * [[MatVecFloatExpr]]. As a `typedLit` the d×d rotation was d² boxed
+  * floats in every plan: at d = 768 each job's plan-info rendering spent
+  * its time in `Literal.toString` and each task deserialized 590k boxed
+  * objects. Here a task deserializes one float array, and the plan
+  * prints a short `float_matrix(rows x cols)`.
+  *
+  * Not foldable: constant folding would turn it back into a boxed
+  * literal.
+  */
+case class FloatMatrixExpr(rows: Int, cols: Int, values: Array[Float])
+    extends LeafExpression {
+  override def dataType: DataType = ArrayType(
+    ArrayType(FloatType, containsNull = false), containsNull = false)
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+
+  @transient private lazy val matrix: ArrayData = new GenericArrayData(
+    Array.tabulate[Any](rows)(r => UnsafeArrayData.fromPrimitiveArray(
+      java.util.Arrays.copyOfRange(values, r * cols, (r + 1) * cols))))
+
+  override def eval(input: InternalRow): Any = matrix
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("floatMatrix", matrix, classOf[ArrayData].getName)
+    ev.copy(code = code"final ${classOf[ArrayData].getName} ${ev.value} = $m;",
+      isNull = FalseLiteral)
+  }
+
+  override def toString: String = s"float_matrix(${rows}x$cols)"
+}
+
 /** Column ⇄ Expression bridge for the DataFrame API (ExpressionUtils is
   * private[sql], hence this package).
   */
@@ -333,4 +369,9 @@ object VectorColumns {
     toCol(NearestCentroidExpr(ex(vec), ex(centroids)))
   def matVecFloat(vec: Column, matrix: Column): Column =
     toCol(MatVecFloatExpr(ex(vec), ex(matrix)))
+  def floatMatrix(rows: IndexedSeq[Array[Float]]): Column = {
+    val cols = rows.headOption.fold(0)(_.length)
+    require(rows.forall(_.length == cols), "matrix rows must share one length")
+    toCol(FloatMatrixExpr(rows.size, cols, Array.concat(rows: _*)))
+  }
 }

@@ -268,47 +268,42 @@ class MaintenanceSpec extends SparkSpec {
     // the "mid-compaction ("/"mid-refresh (" vocabulary operators read in
     // StoreReport.detail stays pinned, and — per ADVICE r17 — the scan
     // walks ALL of src/main/scala so a sixth policy family emitting its
-    // refusal from a new file must register here. Every emitting site
-    // must throw via QuiescenceRefusal.refuseUnless (the typed path);
-    // Queries.scala's single hit is a probe-scaladoc mention, pinned as
-    // comment-only.
+    // refusal from a new file must register here. The five policies'
+    // refusal details live on their StorePolicy wiring in
+    // Maintenance.scala, and the ONE tick throws them through the single
+    // typed QuiescenceRefusal.refuseUnless site; Queries.scala's hit is a
+    // probe-scaladoc mention, pinned as comment-only.
     def countIn(s: String, tok: String): Int = {
       var i = 0; var n = 0
       while ({ i = s.indexOf(tok, i); i >= 0 }) { n += 1; i += 1 }
       n
     }
     val root = java.nio.file.Paths.get("src/main/scala")
-    val found = scala.collection.mutable.Map[String, Map[String, Int]]()
-    val walk = java.nio.file.Files.walk(root)
-    try walk.forEach { p =>
-      if (p.toString.endsWith(".scala")) {
-        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val m = Seq("mid-refresh (", "mid-compaction (")
-          .map(t => t -> countIn(src, t)).filter(_._2 > 0).toMap
-        if (m.nonEmpty) found(root.relativize(p).toString) = m
-      }
-    } finally walk.close()
+    def scan(toks: Seq[String]): Map[String, Map[String, Int]] = {
+      val found = scala.collection.mutable.Map[String, Map[String, Int]]()
+      val walk = java.nio.file.Files.walk(root)
+      try walk.forEach { p =>
+        if (p.toString.endsWith(".scala")) {
+          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          val m = toks.map(t => t -> countIn(src, t)).filter(_._2 > 0).toMap
+          if (m.nonEmpty) found(root.relativize(p).toString) = m
+        }
+      } finally walk.close()
+      found.toMap
+    }
     val want = Map(
-      "graft/operators/Search.scala" ->
-        Map("mid-refresh (" -> 1, "mid-compaction (" -> 1),
-      "graft/operators/Dedup.scala" -> Map("mid-compaction (" -> 2),
-      "graft/operators/Sketches.scala" -> Map("mid-compaction (" -> 1),
+      "graft/operators/Maintenance.scala" ->
+        Map("mid-refresh (" -> 1, "mid-compaction (" -> 4),
       "graft/Queries.scala" -> Map("mid-compaction (" -> 1))
-    assert(found.toMap == want,
+    assert(scan(Seq("mid-refresh (", "mid-compaction (")) == want,
       "quiescence-vocabulary sites drifted — a new/reworded refusal " +
         "must keep the vocabulary AND throw QuiescenceRefusalException " +
-        "via QuiescenceRefusal.refuseUnless (update this pin with it)")
-    // and the five policy tripwires all use the typed throw
-    val typedSites = Map(
-      "graft/operators/Search.scala" -> 2,
-      "graft/operators/Dedup.scala" -> 2,
-      "graft/operators/Sketches.scala" -> 1)
-    typedSites.foreach { case (file, n) =>
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"src/main/scala/$file")), "UTF-8")
-      assert(countIn(src, "QuiescenceRefusal.refuseUnless(") == n,
-        s"$file: expected $n typed refusal throw(s)")
-    }
+        "via the maintenance tick's single typed throw (update this pin with it)")
+    // and the one typed throw is the tick's
+    assert(scan(Seq("QuiescenceRefusal.refuseUnless(")) == Map(
+      "graft/operators/Maintenance.scala" ->
+        Map("QuiescenceRefusal.refuseUnless(" -> 1)),
+      "expected exactly one typed refusal throw, in the maintenance tick")
   }
 
   test("maintainAll: a store that errors (no published generation) is reported and isolated") {

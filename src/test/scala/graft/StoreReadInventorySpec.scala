@@ -19,6 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `carryModelMarker(` may appear only in
   * `graft/operators/VectorStores.scala`, so a new store family reuses the
   * generic lifecycle instead of forking the marker-last protocol.
+  *
+  * A third keeps the generation publish protocol in one place: outside
+  * comments, `Generations.stage(`, `Generations.publish(` and
+  * `QuiescenceRefusal.refuseUnless(` appear in `graft/operators` and
+  * `graft/streaming` only in `graft/operators/Maintenance.scala`, once
+  * each — every maintenance policy publishes through its one tick.
   */
 class StoreReadInventorySpec extends AnyFunSuite {
 
@@ -41,6 +47,11 @@ class StoreReadInventorySpec extends AnyFunSuite {
     """\b(tagModelVersion|writeModelMarker|carryModelMarker)\s*\(""".r
 
   private val markerHome = "graft/operators/VectorStores.scala"
+
+  private val publishProtocol =
+    """\b(Generations\s*\.\s*(stage|publish)|QuiescenceRefusal\s*\.\s*refuseUnless)\s*\(""".r
+
+  private val publishHome = "graft/operators/Maintenance.scala"
 
   private val root = java.nio.file.Paths.get("src/main/scala")
 
@@ -89,6 +100,22 @@ class StoreReadInventorySpec extends AnyFunSuite {
       s"expected the marker protocol in $markerHome")
   }
 
+  test("the generation publish protocol is spelled once, in the maintenance tick") {
+    val counts = scan("graft/operators", publishProtocol) ++
+      scan("graft/streaming", publishProtocol)
+    assert(counts == Map(publishHome -> 3),
+      "Generations.stage / Generations.publish / " +
+        "QuiescenceRefusal.refuseUnless belong to the one tick in " +
+        s"$publishHome (give a new policy its Parts instead of forking " +
+        s"the publish path); found: $counts")
+    val home = new String(java.nio.file.Files.readAllBytes(
+      root.resolve(publishHome)), "UTF-8")
+    assert(publishProtocol.findAllMatchIn(code(home)).map(_.group(1))
+      .map(_.replaceAll("\\s", "")).toSeq.sorted == Seq(
+        "Generations.publish", "Generations.stage",
+        "QuiescenceRefusal.refuseUnless"))
+  }
+
   test("the scan sees the spellings it gates") {
     val src = """val a = spark.read.parquet(s"$p/vectors")
       |val b = spark.read.option("basePath", w)
@@ -103,5 +130,12 @@ class StoreReadInventorySpec extends AnyFunSuite {
       |  * [[tagModelVersion]] in a scaladoc, tagModelVersion(x) too
       |val readModelVersion = 1""".stripMargin
     assert(markerProtocol.findAllMatchIn(code(marker)).size == 2)
+    val publish = """val staged = Generations.stage(p.root, conf)
+      |  graft.sources.Generations.publish (root, g, conf)
+      |QuiescenceRefusal.refuseUnless(after == before, msg)
+      |// Generations.stage(commented)
+      |  * [[Generations.publish]] in a scaladoc, Generations.publish(x) too
+      |def refuseUnless(condition: Boolean, message: => String): Unit""".stripMargin
+    assert(publishProtocol.findAllMatchIn(code(publish)).size == 3)
   }
 }
