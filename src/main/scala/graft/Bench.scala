@@ -114,7 +114,7 @@ object Bench {
     "q21_minhash_neardup", "q43_lsh_ann", "q87_semantic_dedup",
     "q112_seeded_lsh", "q116_jaccard_join")
 
-  private def buildSession(cpus: String): SparkSession = {
+  private[graft] def buildSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

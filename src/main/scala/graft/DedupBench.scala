@@ -45,16 +45,7 @@ object DedupBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_DEDUP_DOCS", "100000").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup, same rationale as graft.Bench
-    spark.range(2000000).selectExpr("sum(id * 2)", "count(distinct id % 97)").collect()
+    val spark = Bench.buildSession(cpus)
     import spark.implicits._
 
     val docs = spark.range(n).map(id => (id, synthText(id, n)))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.operators.{Dedup, Maintenance, Search, Sketches}
 import graft.operators.Maintenance._
 import graft.sources.Generations
+import org.apache.spark.sql.graft.SparkJobs
 
 /** Fleet-scale maintenance-sweep floor (VERDICT r17 item 4): the claim
   * that an hourly [[Maintenance.maintainAll]] over hundreds of registered
@@ -18,8 +19,10 @@ import graft.sources.Generations
   * stores, fabricated in seconds. All budgets are generous, so every
   * store is HEALTHY: the sweep's contract is that a healthy tick costs
   * one recursive driver-side listing and runs ZERO Spark jobs, and the
-  * bench enforces that with a listener (any job → hard failure), so the
-  * recorded floor cannot silently absorb a regression into job-land.
+  * bench enforces that with the shared job counter
+  * ([[org.apache.spark.sql.graft.SparkJobs.count]]; any job → hard
+  * failure), so the recorded floor cannot silently absorb a regression
+  * into job-land.
   *
   * The vector family is excluded by design: its healthy tick reads the
   * driftstats sidecar through the caller-supplied `observe` (a small
@@ -48,40 +51,37 @@ object FleetBench {
     } finally walk.close()
   }
 
-  /** Wait for an async-listener-bus job counter to stop moving (3 quiet
-    * polls), with a 30 s deadline so a periodic background job or a stuck
-    * bus fails loudly instead of hanging the bench (ADVICE r18). One
-    * implementation for both sweep phases (review r19).
-    *
-    * @return the settled count
+  /** Time `reps` sweeps of `policies`: every store must read healthy and
+    * every sweep may start at most `maxJobs` Spark jobs, counted by the
+    * shared job counter. Returns (seconds, jobs) per sweep.
     */
-  private def settle(counter: java.util.concurrent.atomic.AtomicInteger,
-      what: String): Int = {
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    var last = -1; var stable = 0
-    while (stable < 3) {
-      require(System.nanoTime() < deadline,
-        s"$what bench: job counter did not settle within 30s " +
-          s"(count=${counter.get}) — something keeps scheduling Spark jobs")
-      Thread.sleep(100)
-      val c = counter.get
-      if (c == last) stable += 1 else { stable = 0; last = c }
+  private def sweep(spark: SparkSession, policies: Seq[StorePolicy], reps: Int,
+      what: String, maxJobs: Int, overBudget: String): Seq[(Double, Int)] =
+    (1 to reps).map { _ =>
+      val ((reports, sec), jobs) = SparkJobs.count(spark) {
+        val t0 = System.nanoTime()
+        val r = Maintenance.maintainAll(spark, policies)
+        (r, (System.nanoTime() - t0) / 1e9)
+      }
+      val bad = reports.filterNot(_.verdict == "healthy")
+      require(bad.isEmpty,
+        s"$what must read healthy, got: ${bad.take(3).mkString("; ")}")
+      require(jobs <= maxJobs, s"$what: saw $jobs Spark jobs — $overBudget")
+      (sec, jobs)
     }
-    counter.get
+
+  /** One result line: `fields`, then min / median / max of `runs`. */
+  private def line(metric: String, fields: String, runs: Seq[Double]): String = {
+    val sorted = runs.sorted
+    s"""{"metric":"$metric",$fields,"min_sec":${sorted.head},""" +
+      s""""median_sec":${Bench.median(runs)},"max_sec":${sorted.last}}"""
   }
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_FLEET_STORES", "100").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession(cpus)
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     def tmp(tag: String) =
@@ -146,37 +146,9 @@ object FleetBench {
     }
 
     // ---- the sweep, job-counted ---------------------------------------
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    // listener bus is async: wait for the count to stop moving (the
-    // seeding jobs above may still be draining through the bus — zeroing
-    // too early would blame them on the sweep; review r18)
-    def awaitStable(): Unit = { settle(jobs, "fleet"); () }
-    spark.sparkContext.addSparkListener(listener)
-    awaitStable()
-    val runs = (1 to reps).map { _ =>
-      jobs.set(0)
-      val t0 = System.nanoTime()
-      val reports = Maintenance.maintainAll(spark, policies)
-      val sec = (System.nanoTime() - t0) / 1e9
-      awaitStable()
-      val bad = reports.filterNot(_.verdict == "healthy")
-      require(bad.isEmpty,
-        s"fleet must read healthy, got: ${bad.take(3).mkString("; ")}")
-      require(jobs.get == 0,
-        s"a healthy fleet sweep must run ZERO Spark jobs, saw ${jobs.get}")
-      sec
-    }
-    spark.sparkContext.removeSparkListener(listener)
-    val sorted = runs.sorted
-    println(s"""{"metric":"fleet_sweep","stores":$n,"jobs":0,""" +
-      s""""min_sec":${sorted.head},"median_sec":${Bench.median(runs)},""" +
-      s""""max_sec":${sorted.last}}""")
+    val runs = sweep(spark, policies, reps, "fleet", maxJobs = 0,
+      "a healthy fleet sweep must run ZERO Spark jobs").map(_._1)
+    println(line("fleet_sweep", s""""stores":$n,"jobs":0""", runs))
 
     // ---- the vector family's own floor (VERDICT r18 item 7) -----------
     // Excluded from the zero-job sweep BY DESIGN: a healthy vector tick
@@ -208,40 +180,15 @@ object FleetBench {
         refresh = (_, _) => sys.error(
           "a healthy vector store must never refresh in the fleet floor"))
     }
-    val vecJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val vecListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        vecJobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(vecListener)
-    def awaitVecStable(): Int = settle(vecJobs, "vector fleet")
-    awaitVecStable()
-    var vecJobCount = 0
-    val vecRuns = (1 to reps).map { _ =>
-      vecJobs.set(0)
-      val t0 = System.nanoTime()
-      val reports = Maintenance.maintainAll(spark, vecPolicies)
-      val sec = (System.nanoTime() - t0) / 1e9
-      vecJobCount = awaitVecStable()
-      val bad = reports.filterNot(_.verdict == "healthy")
-      require(bad.isEmpty,
-        s"vector fleet must read healthy, got: ${bad.take(3).mkString("; ")}")
-      require(vecJobCount <= 4 * n,
-        s"a healthy vector tick is budgeted ≤ 4 Spark jobs per store " +
-          s"(footer read + 3 AQE stages of the KB sidecar aggregate); " +
-          s"saw $vecJobCount jobs for $n stores — the sidecar " +
-          "fingerprint is stale (exact-recompute fallback, ~8 jobs) or " +
-          "the tick grew a job")
-      sec
-    }
-    spark.sparkContext.removeSparkListener(vecListener)
-    val vecSorted = vecRuns.sorted
-    println(s"""{"metric":"fleet_sweep_vector","stores":$n,""" +
-      s""""jobs":$vecJobCount,"jobs_per_store":${vecJobCount.toDouble / n},""" +
-      s""""min_sec":${vecSorted.head},"median_sec":${Bench.median(vecRuns)},""" +
-      s""""max_sec":${vecSorted.last}}""")
+    val vecSweeps = sweep(spark, vecPolicies, reps, "vector fleet",
+      maxJobs = 4 * n,
+      "a healthy vector tick is budgeted ≤ 4 Spark jobs per store " +
+        "(footer read + 3 AQE stages of the KB sidecar aggregate); over " +
+        s"${4 * n} for $n stores means the sidecar fingerprint is stale " +
+        "(exact-recompute fallback, ~8 jobs) or the tick grew a job")
+    val vecJobCount = vecSweeps.last._2
+    println(line("fleet_sweep_vector", s""""stores":$n,"jobs":$vecJobCount,""" +
+      s""""jobs_per_store":${vecJobCount.toDouble / n}""", vecSweeps.map(_._1)))
     spark.stop()
   }
 }

@@ -303,7 +303,7 @@ object Queries {
     * last 30 chars dropped) — deterministic near-dup planting so dedup
     * probes have non-trivial positives. Restricted to doc_id < 60.
     */
-  private[graft] def docsWithNearDups(s: SparkSession, dir: String): DataFrame = {
+  private def docsWithNearDups(s: SparkSession, dir: String): DataFrame = {
     val base = documents(s, dir).where(col("doc_id") < 60)
       .select(col("doc_id"), col("text"))
     val mutated = base.select((col("doc_id") + 100000).as("doc_id"),
@@ -723,7 +723,7 @@ object Queries {
     * `!fresh` and call `commit()` AFTER the rebuild lands (crash before
     * commit ⇒ next run re-stages).
     */
-  private[graft] def stagedRoot(tag: String, dir: String, src: java.nio.file.Path)
+  private def stagedRoot(tag: String, dir: String, src: java.nio.file.Path)
       : (java.nio.file.Path, Boolean, () => Unit) = {
     val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"${tag}_$safe")

@@ -26,9 +26,7 @@ class CollectInventorySpec extends AnyFunSuite {
     "graft/operators/Index.scala" -> 1,
     "graft/functions/TextFeatures.scala" -> 1,
     "graft/functions/Bpe.scala" -> 1,
-    "graft/DedupBench.scala" -> 1,
     "graft/Bench.scala" -> 1,
-    "graft/PhaseBench.scala" -> 1,
     "graft/PlanDump.scala" -> 1,
     "graft/CensusChannel.scala" -> 1)
 

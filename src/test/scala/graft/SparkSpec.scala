@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.SparkJobs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
@@ -42,28 +43,8 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** Run `body` and return (result, Spark jobs started by it) — the
     * regression gate for "no read-back job" contracts (VERDICT r14: the
-    * Observation discipline in the store compactors). The listener bus is
-    * async, so the count is read only once it has been stable for 300 ms.
+    * Observation discipline in the store compactors). Counted by
+    * [[org.apache.spark.sql.graft.SparkJobs.count]].
     */
-  def countJobs[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      (r, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  def countJobs[T](body: => T): (T, Int) = SparkJobs.count(spark)(body)
 }

@@ -25,6 +25,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `QuiescenceRefusal.refuseUnless(` appear in `graft/operators` and
   * `graft/streaming` only in `graft/operators/Maintenance.scala`, once
   * each — every maintenance policy publishes through its one tick.
+  *
+  * A fourth keeps one Spark job counter: outside comments, a listener is
+  * declared or attached (`SparkListener {`, `extends SparkListener`,
+  * `addSparkListener(`) under `src/main/scala` and `src/test/scala` only
+  * in [[org.apache.spark.sql.graft.SparkJobs]] and its spec's bus stall.
   */
 class StoreReadInventorySpec extends AnyFunSuite {
 
@@ -53,14 +58,20 @@ class StoreReadInventorySpec extends AnyFunSuite {
 
   private val publishHome = "graft/operators/Maintenance.scala"
 
-  private val root = java.nio.file.Paths.get("src/main/scala")
+  private val listenerSpelling =
+    """(SparkListener\s*\{|\bextends\s+SparkListener\b|\baddSparkListener\s*\()""".r
+  private val counterHome = "org/apache/spark/sql/graft/SparkJobs.scala"
+  private val stallHome = "graft/SparkJobsSpec.scala"
 
-  /** file (relative to src/main/scala) -> matches of `pattern` outside
-    * comments, for every .scala file under `dir` with at least one.
+  private val root = java.nio.file.Paths.get("src/main/scala")
+  private val testRoot = java.nio.file.Paths.get("src/test/scala")
+
+  /** file (relative to `in`) -> matches of `pattern` outside comments,
+    * for every .scala file under `dir` with at least one.
     */
-  private def scan(dir: String,
-      pattern: scala.util.matching.Regex): Map[String, Int] = {
-    val base = root.resolve(dir)
+  private def scan(dir: String, pattern: scala.util.matching.Regex,
+      in: java.nio.file.Path = root): Map[String, Int] = {
+    val base = in.resolve(dir)
     assert(java.nio.file.Files.isDirectory(base),
       s"expected to run from the repo root, cwd=${sys.props("user.dir")}")
     val counts = scala.collection.mutable.Map.empty[String, Int]
@@ -68,7 +79,7 @@ class StoreReadInventorySpec extends AnyFunSuite {
       if (p.toString.endsWith(".scala")) {
         val n = pattern.findAllMatchIn(code(
           new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))).size
-        if (n > 0) counts(root.relativize(p).toString) = n
+        if (n > 0) counts(in.relativize(p).toString) = n
       }
       ()
     }
@@ -116,6 +127,15 @@ class StoreReadInventorySpec extends AnyFunSuite {
         "QuiescenceRefusal.refuseUnless"))
   }
 
+  test("one SparkListener: the job counter's, plus its spec's bus stall") {
+    val main = scan("", listenerSpelling)
+    val test = scan("", listenerSpelling, testRoot)
+    assert(main.keySet == Set(counterHome) && test.keySet.subsetOf(Set(stallHome)),
+      "count Spark jobs with org.apache.spark.sql.graft.SparkJobs.count " +
+        "(one listener, drained bus) instead of attaching a listener; " +
+        s"found under src/main/scala: $main, under src/test/scala: $test")
+  }
+
   test("the scan sees the spellings it gates") {
     val src = """val a = spark.read.parquet(s"$p/vectors")
       |val b = spark.read.option("basePath", w)
@@ -137,5 +157,14 @@ class StoreReadInventorySpec extends AnyFunSuite {
       |  * [[Generations.publish]] in a scaladoc, Generations.publish(x) too
       |def refuseUnless(condition: Boolean, message: => String): Unit""".stripMargin
     assert(publishProtocol.findAllMatchIn(code(publish)).size == 3)
+    // spelled through `L` so this file stays out of its own scan
+    val L = "SparkListener"
+    val listeners = s"""val l = new $L {
+      |private class Stall extends $L {
+      |spark.sparkContext.add$L(l)
+      |  * [[$L]] in a scaladoc, new $L { too
+      |override def onJobStart(e: ${L}JobStart): Unit = {
+      |class Q extends StreamingQueryListener {""".stripMargin
+    assert(listenerSpelling.findAllMatchIn(code(listeners)).size == 3)
   }
 }
