@@ -3493,7 +3493,7 @@ object Queries {
     * corpus — coarse centroids re-sampled by md5 rank (salt 'rf',
     * [[Search.sampledCentroids]]), codebooks re-sampled by the q130
     * recipe — re-encodes the corpus in FULL into a NEW directory
-    * (model-version marker, [[Search.requireConsistentModel]]-guarded
+    * (model-version marker, [[graft.operators.VectorStores.open]]-guarded
     * read), and answers the q148 query through the REFRESHED index. The
     * oracle replays the entire refresh relationally: q148's CTE chain
     * with the seed-centroid CTE swapped for the md5-ranked selection and
@@ -3766,8 +3766,8 @@ object Queries {
     * generation (both models retrained on the full corpus — q158's
     * recipe, salt 'rf') → `vacuum(keep = 0)` reclaims every superseded
     * generation → the q148 query is answered through the catalog pointer
-    * ([[Search.ivfPqTopKFromCatalog]] resolves once and reads the live
-    * generation). The oracle is q158's relational retrain replay
+    * (`ivfPqTopKFromIndex` over `Generations.resolve` — one resolve, then
+    * the live generation is read). The oracle is q158's relational retrain replay
     * VERBATIM — DuckDB never sees staging, pointers, compaction or
     * vacuum — so the hash match proves the catalog lifecycle collapses
     * to the refreshed index's defined semantics (the q161 discipline
@@ -3811,8 +3811,8 @@ object Queries {
     Generations.vacuum(root, keep = 0, hconf)
     val query = emb.where(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
-    Search.ivfPqTopKFromCatalog(s, root, corpus, "vec_id", "embedding",
-        query, k = 10, nProbe = 4, rescore = 50)
+    Search.ivfPqTopKFromIndex(s, Generations.resolve(root, hconf), corpus,
+        "vec_id", "embedding", query, k = 10, nProbe = 4, rescore = 50)
       .select(col("vec_id"), fl(col("score"), 3).as("cos_sim"))
   }
 
@@ -3824,7 +3824,7 @@ object Queries {
     * fragmentation past its budget, pays the compaction into a staged
     * generation and publishes it; a second tick no-ops (healthy — the
     * require pins both policy verdicts); the query is answered through
-    * the pointer ([[Search.bm25TopKFromCatalog]]). The oracle is q97's
+    * the pointer (`bm25TopKFromIndex` over `Generations.resolve`). The oracle is q97's
     * BM25 recompute BY REFERENCE — DuckDB never sees the policy, the
     * catalog or the layout — so the hash match proves the policy's
     * rewrite + swap is answer-invariant. The budget is 1/1 so the trip
@@ -3852,7 +3852,7 @@ object Queries {
     require(Search.maintainTextIndex(s, root,
         maxPostingsFiles = 1, targetFiles = 1).isEmpty,
       "the compacted generation must read healthy on the next tick")
-    Search.bm25TopKFromCatalog(s, root,
+    Search.bm25TopKFromIndex(s, Generations.resolve(root, hconf),
         queryTerms = Seq("data", "model", "search"), k = 10)
       .select(col("id").as("doc_id"), fl(col("score") * 1000, 0).as("score_m"))
   }
@@ -3867,8 +3867,8 @@ object Queries {
     * second tick past any attainable cosine mean trips the drift branch,
     * which RE-TRAINS both models on the FULL corpus (q158's recipe, salt
     * 'rf') into a staged generation and publishes it atomically; the
-    * query is answered through the pointer
-    * ([[Search.ivfPqTopKFromCatalog]]). The observable is the
+    * query is answered through the pointer (`ivfPqTopKFromIndex` over
+    * `Generations.resolve`). The observable is the
     * codes-family form ([[Search.minCorpusClusterSimilarity]] — the
     * store holds PQ codes, so drift is scored on the full-precision
     * corpus against the live generation's centroids). The oracle is
@@ -3911,8 +3911,8 @@ object Queries {
       s"the drifted tick must refresh and publish gen-1, got $tick2")
     val query = emb.where(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
-    Search.ivfPqTopKFromCatalog(s, root, corpus, "vec_id", "embedding",
-        query, k = 10, nProbe = 4, rescore = 50)
+    Search.ivfPqTopKFromIndex(s, Generations.resolve(root, hconf), corpus,
+        "vec_id", "embedding", query, k = 10, nProbe = 4, rescore = 50)
       .select(col("vec_id"), fl(col("score"), 3).as("cos_sim"))
   }
 
@@ -3927,7 +3927,7 @@ object Queries {
     * snapshot IS one batch — healthy); a third batch folds into the NEW
     * live generation (replay protection carries — the compacted ledger
     * and sketches survive the swap); the read goes through the pointer
-    * ([[Dedup.readSoftDedupWeightsFromCatalog]]). The oracle is q154's
+    * (`readSoftDedupWeights` over `Generations.resolve`). The oracle is q154's
     * SQL BY REFERENCE — DuckDB never sees batching, compaction, the
     * catalog or the policy — so the hash match proves the policy's
     * observe → compact → publish is latest-wins-invariant.
@@ -3955,7 +3955,7 @@ object Queries {
     Dedup.foldSoftDedupWeightsBatch(docs.where(col("doc_id") >= 100000),
       "doc_id", "toks", Generations.resolve(root, hconf), batchId = 2,
       threshold = 0.4)
-    Dedup.readSoftDedupWeightsFromCatalog(s, root, "doc_id")
+    Dedup.readSoftDedupWeights(s, Generations.resolve(root, hconf), "doc_id")
       .orderBy(col("doc_id"))
   }
 
@@ -3969,7 +3969,7 @@ object Queries {
     * and publishes it atomically; a second tick reads healthy (the
     * compaction's file budget — both verdicts require-pinned); the
     * heavy-hitter candidates are read through the pointer
-    * ([[graft.operators.Sketches.heavyHitterCandidatesFromCatalog]]) and
+    * (`heavyHitterCandidates` over `Generations.resolve`) and
     * verified exactly, q120's discipline (candidates are a superset of
     * the true heavy hitters by the sketch's no-false-negative guarantee,
     * invariant under merge; the exact recount drops false positives).
@@ -4001,8 +4001,8 @@ object Queries {
       "the compacted generation must read healthy on the next tick")
     val total = stream.count()
     val minCount = total / 100 // 1% support, integer threshold (DuckDB //)
-    val cand = Sketches.heavyHitterCandidatesFromCatalog(s, root,
-      minCount = minCount)
+    val cand = Sketches.heavyHitterCandidates(s,
+      Generations.resolve(root, hconf), minCount = minCount)
     stream
       .join(broadcast(cand.select(col("item"))), Seq("item"), "left_semi")
       .groupBy(col("item"))
@@ -4179,8 +4179,8 @@ object Queries {
     // the compacted sketch catalog still serves (no-false-negative):
     // every hot item survives as a candidate at 1% support
     val total = stream.count()
-    val cand = Sketches.heavyHitterCandidatesFromCatalog(s, skRoot,
-      minCount = total / 100).select("item")
+    val cand = Sketches.heavyHitterCandidates(s,
+      Generations.resolve(skRoot, hconf), minCount = total / 100).select("item")
       .collect().map(_.getString(0)).toSet
     // residues with r % 4 == 3 route to cold_<id>, so only six hot items
     // exist by construction

@@ -1218,18 +1218,6 @@ object Dedup {
       .select(col(idCol), col("rep"), col("cluster_size"), col("weight_ppm"))
   }
 
-  /** [[readSoftDedupWeights]] against a [[graft.sources.Generations]]
-    * catalog: resolve the live generation once, then read it undisturbed
-    * by any publish landing meanwhile (VERDICT r15 item 4 — the weights
-    * read's catalog twin, so no caller passes a raw generation path).
-    */
-  def readSoftDedupWeightsFromCatalog(spark: SparkSession,
-      catalogRoot: String, idCol: String = "id",
-      idType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.LongType): DataFrame =
-    readSoftDedupWeights(spark, graft.sources.Generations.resolve(
-      catalogRoot, spark.sparkContext.hadoopConfiguration), idCol, idType)
-
   /** One micro-batch of STREAMING soft-dedup weight maintenance (the
     * foreachBatch body of `Streams.streamingSoftDedupWeights`, exposed so
     * specs can drive batches and crash orderings directly).

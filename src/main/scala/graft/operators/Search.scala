@@ -58,15 +58,23 @@ object Search {
       .agg(count(lit(1)).cast("double").as("tf"))
     val df_ = hits.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
+    bm25Sum(hits.join(broadcast(df_), "term"), stats, k1, b)
+  }
+
+  /** The BM25 formula over per-(id, term) hits carrying (df, tf, dl):
+    * cross-join the one-row (n_docs, avgdl) stats, weigh each hit, and sum
+    * per doc through DECIMAL(24,12) — shared by [[bm25Scores]] and
+    * [[bm25TopKFromIndex]], so the two stay bit-identical.
+    */
+  private def bm25Sum(hits: DataFrame, stats: DataFrame, k1: Double,
+      b: Double): DataFrame =
     hits
-      .join(broadcast(df_), "term")
       .crossJoin(broadcast(stats)) // one row: N + avgdl
       .withColumn("idf", log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
       .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1)) /
         (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
       .groupBy(col("id"))
       .agg(sum(col("w").cast("decimal(24,12)")).cast("double").as("score"))
-  }
 
   /** Materialized inverted index (EXT): the persisted sibling of
     * [[bm25Scores]]'s transient corpus statistics — one row per distinct
@@ -189,14 +197,55 @@ object Search {
           }
         postingsOf(base).write.mode(SaveMode.Append).parquet(s"$path/postings")
         doclensOf(base).write.mode(SaveMode.Append).parquet(s"$path/doclens")
-        // driver-local totals → driver-side stats write, zero jobs (r20)
-        graft.sources.SidecarParquet.writeFlat(s"$path/stats",
-          spark.sparkContext.hadoopConfiguration,
-          Seq("n_docs" -> "long", "sum_dl" -> "long"),
-          Seq(Seq(oldN + batch.getLong(0), oldSum + batch.getLong(1))))
+        writeTextStats(spark, path, oldN + batch.getLong(0),
+          oldSum + batch.getLong(1))
       }
       n
     } finally base.unpersist()
+  }
+
+  /** The one-row exact-long (n_docs, sum_dl) stats sidecar of a text
+    * index: driver-local totals, a driver-side write, zero jobs (r20).
+    */
+  private def writeTextStats(spark: SparkSession, path: String,
+      nDocs: Long, sumDl: Long): Unit =
+    graft.sources.SidecarParquet.writeFlat(s"$path/stats",
+      spark.sparkContext.hadoopConfiguration,
+      Seq("n_docs" -> "long", "sum_dl" -> "long"), Seq(Seq(nDocs, sumDl)))
+
+  /** The new-directory rewrite shared by [[removeFromTextIndex]] and
+    * [[updateTextIndex]]: the source minus `drop`, with survivor postings
+    * re-deduped per (term, id) — orphan postings from a crashed append
+    * must not survive with doubled tf — plus `fresh` docs indexed anew;
+    * postings re-range-partitioned on term, then doclens, with the stats
+    * observed ON the doclens write (r19 — the R168 no-read-back
+    * discipline: the job-committed write's own counts are exactly what a
+    * re-read would aggregate, without the extra scan).
+    *
+    * @return number of documents in the new index
+    */
+  private def rewriteTextIndex(spark: SparkSession, op: String,
+      srcPath: String, dstPath: String, drop: DataFrame,
+      fresh: Option[DataFrame]): Long = {
+    require(srcPath != dstPath,
+      s"$op writes a NEW directory (caller swaps atomically)")
+    val survivors = StoreParquet.open(spark, s"$srcPath/postings")
+      .join(drop, Seq("id"), "left_anti")
+      .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
+    fresh.fold(survivors)(f => survivors.unionByName(postingsOf(f)))
+      .repartitionByRange(col("term"))
+      .sortWithinPartitions(col("term"))
+      .write.mode("overwrite").parquet(s"$dstPath/postings")
+    val obs = org.apache.spark.sql.Observation()
+    val doclens = StoreParquet.open(spark, s"$srcPath/doclens")
+      .join(drop, Seq("id"), "left_anti")
+    fresh.fold(doclens)(f => doclens.unionByName(doclensOf(f)))
+      .observe(obs, count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
+      .write.mode("overwrite").parquet(s"$dstPath/doclens")
+    val n = obs.get("n_docs").asInstanceOf[Long]
+    writeTextStats(spark, dstPath, n, obs.get("sum_dl").asInstanceOf[Long])
+    n
   }
 
   /** Rebuild a text index MINUS the given doc ids into a NEW directory —
@@ -219,35 +268,9 @@ object Search {
     * @return number of surviving documents in the new index
     */
   def removeFromTextIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    require(srcPath != dstPath,
-      "removeFromTextIndex writes a NEW directory (caller swaps atomically)")
-    val drop = removeIds.select(col(idCol).cast("long").as("id")).distinct()
-    StoreParquet.open(spark, s"$srcPath/postings")
-      .join(drop, Seq("id"), "left_anti")
-      // re-dedup (term,id): orphan postings from a crashed append must not
-      // survive into the rebuilt index with doubled tf
-      .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$dstPath/postings")
-    // stats observed ON the doclens write (r19 optimization round — the
-    // R168 no-read-back discipline): the job-committed write's own counts
-    // are exactly what a re-read would aggregate, without the extra scan
-    val obs = org.apache.spark.sql.Observation()
-    StoreParquet.open(spark, s"$srcPath/doclens")
-      .join(drop, Seq("id"), "left_anti")
-      .observe(obs, count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$dstPath/doclens")
-    val n = obs.get("n_docs").asInstanceOf[Long]
-    // driver-local totals → driver-side stats write, zero jobs (r20)
-    graft.sources.SidecarParquet.writeFlat(s"$dstPath/stats",
-      spark.sparkContext.hadoopConfiguration,
-      Seq("n_docs" -> "long", "sum_dl" -> "long"),
-      Seq(Seq(n, obs.get("sum_dl").asInstanceOf[Long])))
-    n
-  }
+      dstPath: String, removeIds: DataFrame, idCol: String): Long =
+    rewriteTextIndex(spark, "removeFromTextIndex", srcPath, dstPath,
+      removeIds.select(col(idCol).cast("long").as("id")).distinct(), None)
 
   /** The IVF twin of [[removeFromTextIndex]]: copy a persisted IVF index
     * minus the given ids into a NEW directory. The vector store is
@@ -299,42 +322,14 @@ object Search {
   def updateTextIndex(spark: SparkSession, srcPath: String, dstPath: String,
       retireIds: DataFrame, retireIdCol: String,
       refreshDocs: DataFrame, idCol: String, tokensCol: String): Long = {
-    require(srcPath != dstPath,
-      "updateTextIndex writes a NEW directory (caller swaps atomically)")
     val base = refreshDocs
       .select(col(idCol).cast("long").as("id"), col(tokensCol).as("toks"))
       .dropDuplicates("id")
       .persist()
-    try {
-      val drop = retireIds.select(col(retireIdCol).cast("long").as("id"))
-        .unionByName(base.select(col("id"))).distinct()
-      // survivors re-dedup (term,id) like removeFromTextIndex: orphan
-      // postings from a crashed in-place append must not carry doubled tf
-      StoreParquet.open(spark, s"$srcPath/postings")
-        .join(drop, Seq("id"), "left_anti")
-        .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
-        .unionByName(postingsOf(base))
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").parquet(s"$dstPath/postings")
-      // stats observed ON the doclens write (r19 optimization round —
-      // the R168 no-read-back discipline): same exact values as the
-      // re-read aggregate, two fewer jobs per update
-      val obs = org.apache.spark.sql.Observation()
-      StoreParquet.open(spark, s"$srcPath/doclens")
-        .join(drop, Seq("id"), "left_anti")
-        .unionByName(doclensOf(base))
-        .observe(obs, count(lit(1)).as("n_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$dstPath/doclens")
-      val n = obs.get("n_docs").asInstanceOf[Long]
-      // driver-local totals → driver-side stats write, zero jobs (r20)
-      graft.sources.SidecarParquet.writeFlat(s"$dstPath/stats",
-        spark.sparkContext.hadoopConfiguration,
-        Seq("n_docs" -> "long", "sum_dl" -> "long"),
-        Seq(Seq(n, obs.get("sum_dl").asInstanceOf[Long])))
-      n
-    } finally { base.unpersist(); () }
+    try rewriteTextIndex(spark, "updateTextIndex", srcPath, dstPath,
+      retireIds.select(col(retireIdCol).cast("long").as("id"))
+        .unionByName(base.select(col("id"))).distinct(), Some(base))
+    finally { base.unpersist(); () }
   }
 
   /** The IVF twin of [[updateTextIndex]]: source index minus `retireIds`
@@ -381,14 +376,8 @@ object Search {
     val stats = StoreParquet.open(spark, s"$path/stats")
       .select(col("n_docs"),
         (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
-    StoreParquet.open(spark, s"$path/doclens")
-      .join(broadcast(hits), "id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1)) /
-        (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy(col("id"))
-      .agg(sum(col("w").cast("decimal(24,12)")).cast("double").as("score"))
+    bm25Sum(StoreParquet.open(spark, s"$path/doclens")
+        .join(broadcast(hits), "id"), stats, k1, b)
       .orderBy(col("score").desc, col("id"))
       .limit(k)
   }
@@ -1028,13 +1017,9 @@ object Search {
     */
   def ivfTopKFromIndex(spark: SparkSession, path: String, vecCol: String,
       query: Seq[Float], k: Int, nProbe: Int = 1): DataFrame = {
-    requireConsistentModel(spark, path, "ivfTopKFromIndex")
-    val centroids = readIvfCentroids(spark, path)
-    val probeIds = probeClusters(centroids, query, nProbe)
-    StoreParquet.openPartitions(spark, s"$path/vectors", "cluster_id",
-        probeIds)
-      .where(col("cluster_id").isin(probeIds: _*))
-      .withColumn("score", cosine(col(vecCol), lit(query.toArray)))
+    val (_, _, vectors) = VectorStores.open(VectorStores.Ivf,
+      "ivfTopKFromIndex", spark, path)(probeClusters(_, query, nProbe))
+    vectors.withColumn("score", cosine(col(vecCol), lit(query.toArray)))
       .orderBy(col("score").desc).limit(k)
   }
 
@@ -1072,19 +1057,12 @@ object Search {
       query: Seq[Float], k: Int, nProbe: Int = 1, rescore: Int = 50): DataFrame = {
     import graft.functions.VectorFunctions
     require(rescore >= k, "rescore candidate count must be >= k")
-    val centroids = readIvfCentroids(spark, path)
-    val probeIds = probeClusters(centroids, query, nProbe)
-    val qCodes = {
-      // quantize the query driver-side with the same floor(x+0.5) rule
-      val maxAbs = query.foldLeft(0.0)((m, x) => math.max(m, math.abs(x.toDouble)))
-      val s = maxAbs / 127.0
-      if (s == 0.0) query.map(_ => 0) else query.map(x => math.floor(x / s + 0.5).toInt)
-    }
-    val candidates = StoreParquet.openPartitions(spark, s"$path/vectors",
-        "cluster_id", probeIds)
-      .where(col("cluster_id").isin(probeIds: _*))
+    val qCodes = pqQueryCodes(query).map(_.toInt) // integral, exact
+    val (_, _, vectors) = VectorStores.open(VectorStores.Ivf,
+      "ivfTopKFromIndexQuantized", spark, path)(probeClusters(_, query, nProbe))
+    val candidates = vectors
       .withColumn("qscore", VectorFunctions.i8Cosine(
-        transform(col("codes"), _.cast("int")), lit(qCodes.toArray)))
+        transform(col("codes"), _.cast("int")), lit(qCodes)))
       .orderBy(col("qscore").desc, col(idCol))
       .limit(rescore)
       .select(col(idCol))
@@ -1491,11 +1469,10 @@ object Search {
   def opqTopKFromIndex(spark: SparkSession, path: String,
       fullPrecision: DataFrame, idCol: String, vecCol: String,
       query: Seq[Float], k: Int, rescore: Int = 50): DataFrame = {
-    requireConsistentModel(spark, path, "opqTopKFromIndex")
-    val model = readOpqModel(spark, path)
-    val encoded = StoreParquet.open(spark, s"$path/codes")
-      .select(col(idCol), transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
-    opqTopK(encoded, fullPrecision, idCol, vecCol, model, query, k, rescore)
+    val (model, _, codes) = VectorStores.open(VectorStores.Opq,
+      "opqTopKFromIndex", spark, path)(_ => Nil)
+    opqTopK(intCodes(codes, idCol), fullPrecision, idCol, vecCol, model,
+      query, k, rescore)
   }
 
   /** Incrementally maintain a persisted OPQ index: rotate the batch with
@@ -1603,6 +1580,11 @@ object Search {
     pqTopKCore(encoded, fullPrecision, idCol, vecCol,
       pqAdcTables(cb, pqQueryCodes(query)), query, k, rescore)
 
+  /** A code store's `keep` columns plus its tinyint codes widened to int. */
+  private def intCodes(codes: DataFrame, keep: String*): DataFrame =
+    codes.select(keep.map(col) :+
+      transform(col("pq_codes"), _.cast("int")).as("pq_codes"): _*)
+
   /** Shared candidate-then-rescore body: ADC rank by the given tables,
     * exact-cosine rescore with `query` against the primary store.
     */
@@ -1678,11 +1660,10 @@ object Search {
   def pqTopKFromIndex(spark: SparkSession, path: String,
       fullPrecision: DataFrame, idCol: String, vecCol: String,
       query: Seq[Float], k: Int, rescore: Int = 50): DataFrame = {
-    requireConsistentModel(spark, path, "pqTopKFromIndex")
-    val cb = readPqCodebooks(spark, path)
-    val encoded = StoreParquet.open(spark, s"$path/codes")
-      .select(col(idCol), transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
-    pqTopK(encoded, fullPrecision, idCol, vecCol, cb, query, k, rescore)
+    val (cb, _, codes) = VectorStores.open(VectorStores.Pq,
+      "pqTopKFromIndex", spark, path)(_ => Nil)
+    pqTopK(intCodes(codes, idCol), fullPrecision, idCol, vecCol, cb, query, k,
+      rescore)
   }
 
   /** Incrementally maintain a persisted PQ index: encode a NEW batch with
@@ -1755,19 +1736,10 @@ object Search {
       query: Seq[Float], k: Int, nProbe: Int = 1,
       rescore: Int = 50): DataFrame = {
     require(rescore >= k, "rescore candidate count must be >= k")
-    VectorStores.requireEncoding(VectorStores.IvfPq, spark, path,
-      "ivfPqTopKFromIndex")
-    requireConsistentModel(spark, path, "ivfPqTopKFromIndex")
-    val centroids = readIvfCentroids(spark, path)
-    val cb = readPqCodebooks(spark, path)
-    val probeIds = probeClusters(centroids, query, nProbe)
-    pqTopKCore(StoreParquet.openPartitions(spark, s"$path/codes",
-        "cluster_id", probeIds)
-      .where(col("cluster_id").isin(probeIds: _*))
-      .select(col(idCol),
-        transform(col("pq_codes"), _.cast("int")).as("pq_codes")),
-      fullPrecision, idCol, vecCol, pqAdcTables(cb, pqQueryCodes(query)),
-      query, k, rescore)
+    val ((_, cb), _, codes) = VectorStores.open(VectorStores.IvfPq,
+      "ivfPqTopKFromIndex", spark, path)(m => probeClusters(m._1, query, nProbe))
+    pqTopK(intCodes(codes, idCol), fullPrecision, idCol, vecCol, cb, query, k,
+      rescore)
   }
 
   /** (id, cluster_id, pq_codes tinyint) for a vector batch under frozen
@@ -1957,12 +1929,9 @@ object Search {
   def ivfPqResidualAdcScores(spark: SparkSession, path: String,
       idCol: String, query: Seq[Float], nProbe: Int): DataFrame = {
     import graft.functions.VectorFunctions.fpCodesLocal
-    VectorStores.requireEncoding(VectorStores.IvfPqResidual, spark, path,
-      "ivfPqResidualAdcScores")
-    requireConsistentModel(spark, path, "ivfPqResidualAdcScores")
-    val centroids = readIvfCentroids(spark, path)
-    val cb = readPqCodebooks(spark, path)
-    val probeIds = probeClusters(centroids, query, nProbe)
+    val ((centroids, cb), probeIds, codes) = VectorStores.open(
+      VectorStores.IvfPqResidual, "ivfPqResidualAdcScores", spark, path)(
+      m => probeClusters(m._1, query, nProbe))
     val qFp = fpCodesLocal(query)
     val byId = centroids.toMap
     val tables = pqAdcTables(cb, qFp)
@@ -1972,11 +1941,7 @@ object Search {
         acc + a.toDouble * b.toDouble
       }
     }.toMap
-    StoreParquet.openPartitions(spark, s"$path/codes", "cluster_id",
-        probeIds)
-      .where(col("cluster_id").isin(probeIds: _*))
-      .select(col(idCol), col("cluster_id"),
-        transform(col("pq_codes"), _.cast("int")).as("pq_codes"))
+    intCodes(codes, idCol, "cluster_id")
       .withColumn("_adc", pqAdcScoreCol(col("pq_codes"), tables) +
         element_at(typedLit(offsets), col("cluster_id")))
       .select(col(idCol), col("cluster_id"), col("_adc"))
@@ -2145,14 +2110,6 @@ object Search {
   def readModelVersion(spark: SparkSession, path: String): Long =
     VectorStores.readModelVersion(spark, path)
 
-  /** Refuse a store whose artifacts carry another model generation's tags
-    * than its `model` marker — a refresh swap that died half-way. Run by
-    * every family's `*FromIndex` reader; unmarked stores pass at no cost.
-    */
-  def requireConsistentModel(spark: SparkSession, path: String,
-      op: String): Unit =
-    VectorStores.requireConsistentModel(spark, path, op)
-
   /** Re-train the coarse quantizer of a persisted IVF index on the
     * CURRENT corpus and rebuild (VERDICT r13 item 2 — the operator
     * [[ivfDriftStats]] exists to trigger): appends keep the quantizer
@@ -2164,7 +2121,7 @@ object Search {
     * the caller swaps the ROOT atomically), every artifact tagged with
     * model version = src version + 1 and the `model` marker written
     * last, so a query against a mid-swap store refuses loudly
-    * ([[requireConsistentModel]]).
+    * ([[VectorStores.open]]).
     *
     * @param df the current full-precision corpus (id + vector + any
     *        payload columns — they ride into the rebuilt store verbatim)
@@ -2241,84 +2198,11 @@ object Search {
       vecCol, srcPath, dstPath)(
       opqTrainCodebooks(df, vecCol, dim, m, ksub, seed, maxIter, opqIters))
 
-  // ------------- catalog-resolved serving + the drift-policy loop ---
-
-  /** Resolve the live generation of a [[graft.sources.Generations]]
-    * catalog once (one tiny pointer read) for a serving call.
-    */
-  private def resolved(spark: SparkSession, catalogRoot: String): String =
-    graft.sources.Generations.resolve(catalogRoot,
-      spark.sparkContext.hadoopConfiguration)
-
-  /** Resolve-aware serving (VERDICT r14 — the last inch of the
-    * operational story): every maintenance op here writes a NEW
-    * directory and defers the swap to the caller, and
-    * [[graft.sources.Generations]] IS that swap. These entry points
-    * close the loop: they take a CATALOG ROOT instead of a raw store
-    * path, resolve the live generation ONCE, and read it undisturbed by
-    * any publish that lands meanwhile (vacuum stays a separate,
-    * explicitly-deferred decision). Named variants exist for the
-    * families the lifecycle probes drive; every other `*FromIndex`
-    * entry point composes identically —
-    * `opqTopKFromIndex(spark, Generations.resolve(root, hconf), …)`.
-    */
-  def bm25TopKFromCatalog(spark: SparkSession, catalogRoot: String,
-      queryTerms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopKFromIndex(spark, resolved(spark, catalogRoot), queryTerms, k, k1, b)
-
-  /** [[bm25TopKFromCatalog]] for the plain IVF family. */
-  def ivfTopKFromCatalog(spark: SparkSession, catalogRoot: String,
-      vecCol: String, query: Seq[Float], k: Int, nProbe: Int = 1): DataFrame =
-    ivfTopKFromIndex(spark, resolved(spark, catalogRoot), vecCol, query, k,
-      nProbe)
-
-  /** [[bm25TopKFromCatalog]] for the composed IVF-PQ family (q162). */
-  def ivfPqTopKFromCatalog(spark: SparkSession, catalogRoot: String,
-      fullPrecision: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, nProbe: Int = 1,
-      rescore: Int = 50): DataFrame =
-    ivfPqTopKFromIndex(spark, resolved(spark, catalogRoot), fullPrecision,
-      idCol, vecCol, query, k, nProbe, rescore)
-
-  /** [[bm25TopKFromCatalog]] for the quantized-IVF family (VERDICT r15
-    * item 4 — every read entry point gets a catalog twin, so no caller
-    * ever passes a raw generation path again).
-    */
-  def ivfTopKFromCatalogQuantized(spark: SparkSession, catalogRoot: String,
-      fullPrecision: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, nProbe: Int = 1,
-      rescore: Int = 50): DataFrame =
-    ivfTopKFromIndexQuantized(spark, resolved(spark, catalogRoot),
-      fullPrecision, idCol, vecCol, query, k, nProbe, rescore)
-
-  /** [[bm25TopKFromCatalog]] for the flat PQ family. */
-  def pqTopKFromCatalog(spark: SparkSession, catalogRoot: String,
-      fullPrecision: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, rescore: Int = 50): DataFrame =
-    pqTopKFromIndex(spark, resolved(spark, catalogRoot), fullPrecision,
-      idCol, vecCol, query, k, rescore)
-
-  /** [[bm25TopKFromCatalog]] for the OPQ family. */
-  def opqTopKFromCatalog(spark: SparkSession, catalogRoot: String,
-      fullPrecision: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, rescore: Int = 50): DataFrame =
-    opqTopKFromIndex(spark, resolved(spark, catalogRoot), fullPrecision,
-      idCol, vecCol, query, k, rescore)
-
-  /** [[bm25TopKFromCatalog]] for the residual IVF-PQ family. */
-  def ivfPqResidualTopKFromCatalog(spark: SparkSession, catalogRoot: String,
-      fullPrecision: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, nProbe: Int = 1,
-      rescore: Int = 50): DataFrame =
-    ivfPqResidualTopKFromIndex(spark, resolved(spark, catalogRoot),
-      fullPrecision, idCol, vecCol, query, k, nProbe, rescore)
-
-  /** [[bm25TopKFromCatalog]] for the seeded-LSH pair reader. */
-  def seededLshPairsFromCatalog(spark: SparkSession, catalogRoot: String,
-      simThreshold: Double = 0.9): DataFrame =
-    seededLshPairsFromIndex(spark, resolved(spark, catalogRoot),
-      simThreshold)
+  // ------------------------------------------ the drift-policy loop ---
+  //
+  // A reader serves a generation catalog by resolving the live generation
+  // once and reading it undisturbed by any publish landing meanwhile:
+  // `ivfPqTopKFromIndex(spark, Generations.resolve(root, hconf), …)`.
 
   /** [[minClusterSimilarity]] for the families that store only CODES
     * (PQ / IVF-PQ / residual): the store has no raw vectors to score, so
@@ -2514,15 +2398,10 @@ object Search {
     val written = obs.get("n_docs").asInstanceOf[Long]
     require(written == n,
       s"doclens compaction row mismatch: source $n, wrote $written")
-    val sumDl = obs.get("sum_dl") match {
+    writeTextStats(spark, dstPath, written, obs.get("sum_dl") match {
       case null => 0L
       case x: java.lang.Number => x.longValue
-    }
-    // driver-local totals → driver-side stats write, zero jobs (r20)
-    graft.sources.SidecarParquet.writeFlat(s"$dstPath/stats",
-      spark.sparkContext.hadoopConfiguration,
-      Seq("n_docs" -> "long", "sum_dl" -> "long"),
-      Seq(Seq(written, sumDl)))
+    })
     written
   }
 
@@ -2695,6 +2574,42 @@ object Search {
       .select(col("_id"), col("_tb.t").as("_t"), col("_tb.bucket").as("_b"))
   }
 
+  /** [[seededBands]] as the persisted `bands` rows (id, t, bucket). */
+  private def seededBandRows(codes: DataFrame, dim: Int, numTables: Int,
+      bitsPerTable: Int): DataFrame =
+    seededBands(codes, dim, numTables, bitsPerTable)
+      .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket"))
+
+  /** Keep the candidate pairs (`a`, `b`) whose float codes `_c1`/`_c2`
+    * reach `simThreshold` in quantized cosine — integer-exact dots,
+    * zero-norm → 0 — as (a, b, cos8_m = floor(1000·cosine)).
+    */
+  private def seededVerified(candidates: DataFrame, a: String, b: String,
+      simThreshold: Double): DataFrame = {
+    val n1 = dot(col("_c1"), col("_c1"))
+    val n2 = dot(col("_c2"), col("_c2"))
+    val cos = when(n1 === 0.0 || n2 === 0.0, lit(0.0))
+      .otherwise(dot(col("_c1"), col("_c2")) / (sqrt(n1) * sqrt(n2)))
+    candidates
+      .withColumn("_cos", cos)
+      .where(col("_cos") >= simThreshold)
+      .select(col(a), col(b), (floor(col("_cos") * 1000) / 1).as("cos8_m"))
+  }
+
+  /** Refuse a batch of `n` distinct (id, vector) rows that carries two
+    * different vectors under one id: the persisted codes/bands would be
+    * nondeterministic across retries and partitionings (ADVICE r7) and
+    * build + append ≡ full build would silently break.
+    */
+  private def requireUniqueSeededIds(op: String, fresh: DataFrame,
+      idCol: String, n: Long): Unit = {
+    val nIds = fresh.select(col(idCol)).distinct().count()
+    require(nIds == n,
+      s"$op: batch carries ${n - nIds} conflicting " +
+        s"vector(s) for the same $idCol — refusing a nondeterministic " +
+        "index (dedupe upstream or fix the ids)")
+  }
+
   // the band self-join shuffles ONLY (t, bucket, id) — never the code
   // arrays (the library's no-vectors-through-exchanges principle); codes
   // re-join by id onto the (far smaller) deduped candidate set. The
@@ -2709,16 +2624,7 @@ object Search {
       .dropDuplicates("id1", "id2")
       .join(codes.select(col("_id").as("id1"), col("_c").as("_c1")), "id1")
       .join(codes.select(col("_id").as("id2"), col("_c").as("_c2")), "id2")
-    // quantized cosine on the float codes: integer-exact dots, zero-norm → 0
-    val n1 = dot(col("_c1"), col("_c1"))
-    val n2 = dot(col("_c2"), col("_c2"))
-    val cos = when(n1 === 0.0 || n2 === 0.0, lit(0.0))
-      .otherwise(dot(col("_c1"), col("_c2")) / (sqrt(n1) * sqrt(n2)))
-    candidates
-      .withColumn("_cos", cos)
-      .where(col("_cos") >= simThreshold)
-      .select(col("id1"), col("id2"),
-        (floor(col("_cos") * 1000) / 1).as("cos8_m"))
+    seededVerified(candidates, "id1", "id2", simThreshold)
   }
 
   /** Materialize the seeded-LSH tier as a PERSISTED index (VERDICT r6
@@ -2735,8 +2641,7 @@ object Search {
     val spark = df.sparkSession
     import spark.implicits._
     val codes = seededCodes(df, idCol, vecCol)
-    seededBands(codes, dim, numTables, bitsPerTable)
-      .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket"))
+    seededBandRows(codes, dim, numTables, bitsPerTable)
       .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$path/bands")
     codes.select(col("_id").as("id"), col("_c").as("code"))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
@@ -2794,18 +2699,11 @@ object Search {
     try {
       val n = fresh.count()
       if (n > 0) {
-        val nIds = fresh.select(col(idCol)).distinct().count()
-        require(nIds == n,
-          s"appendSeededLshIndex: batch carries ${n - nIds} conflicting " +
-            s"vector(s) for the same $idCol — refusing a nondeterministic " +
-            "index (dedupe upstream or fix the ids)")
-      }
-      if (n > 0) {
+        requireUniqueSeededIds("appendSeededLshIndex", fresh, idCol, n)
         val codes = seededCodes(fresh, idCol, vecCol)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          seededBands(codes, dim, nt, bpt)
-            .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket"))
+          seededBandRows(codes, dim, nt, bpt)
             .write.mode(SaveMode.Append).partitionBy("t").parquet(s"$path/bands")
           codes.select(col("_id").as("id"), col("_c").as("code"))
             .write.mode(SaveMode.Append).parquet(s"$path/codes")
@@ -2875,12 +2773,8 @@ object Search {
     val (dim, nt, bpt) = readSeededLshMeta(spark, srcPath)
     val fresh = refreshBatch.dropDuplicates(idCol, vecCol).persist()
     try {
-      val n = fresh.count()
-      val nIds = fresh.select(col(idCol)).distinct().count()
-      require(nIds == n,
-        s"updateSeededLshIndex: batch carries ${n - nIds} conflicting " +
-          s"vector(s) for the same $idCol — refusing a nondeterministic " +
-          "index (dedupe upstream or fix the ids)")
+      requireUniqueSeededIds("updateSeededLshIndex", fresh, idCol,
+        fresh.count())
       val drop = retireIds.select(col(idCol).as("id"))
         .unionByName(fresh.select(col(idCol).as("id"))).distinct()
       val codes = seededCodes(fresh, idCol, vecCol)
@@ -2890,8 +2784,7 @@ object Search {
           StoreParquet.open(spark, s"$srcPath/bands")
             .join(drop, Seq("id"), "left_anti")
             .dropDuplicates("id", "t", "bucket")
-            .unionByName(seededBands(codes, dim, nt, bpt)
-              .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket")))
+            .unionByName(seededBandRows(codes, dim, nt, bpt))
             .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$dstPath/bands")
           VectorStores.writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
               .join(drop, Seq("id"), "left_anti")
@@ -2928,18 +2821,11 @@ object Search {
     val cand = qBands.join(ixBands, Seq("_t", "_b"))
       .select(col("query_id"), col("index_id"))
       .dropDuplicates("query_id", "index_id")
-    val withCodes = cand
+    seededVerified(cand
       .join(qCodes.select(col("_id").as("query_id"), col("_c").as("_c1")), "query_id")
       .join(StoreParquet.open(spark, s"$path/codes")
-        .select(col("id").as("index_id"), col("code").as("_c2")), "index_id")
-    val n1 = dot(col("_c1"), col("_c1"))
-    val n2 = dot(col("_c2"), col("_c2"))
-    val cos = when(n1 === 0.0 || n2 === 0.0, lit(0.0))
-      .otherwise(dot(col("_c1"), col("_c2")) / (sqrt(n1) * sqrt(n2)))
-    withCodes.withColumn("_cos", cos)
-      .where(col("_cos") >= simThreshold)
-      .select(col("query_id"), col("index_id"),
-        (floor(col("_cos") * 1000) / 1).as("cos8_m"))
+        .select(col("id").as("index_id"), col("code").as("_c2")), "index_id"),
+      "query_id", "index_id", simThreshold)
   }
 
   /** MLlib BucketedRandomProjectionLSH wrapper over `array<float>` columns

@@ -94,29 +94,6 @@ object Sketches {
       .orderBy(col("group_key"))
   }
 
-  /** [[estimateDistinct]] / [[estimateSetOp]] / [[estimateQuantiles]]
-    * against a [[graft.sources.Generations]] catalog (VERDICT r15 item 4
-    * — the sketch stores' catalog twins): resolve the live generation
-    * once, then read it undisturbed by any publish landing meanwhile.
-    */
-  def estimateDistinctFromCatalog(spark: SparkSession, catalogRoot: String,
-      batchIds: Seq[String] = Nil): DataFrame =
-    estimateDistinct(spark, graft.sources.Generations.resolve(catalogRoot,
-      spark.sparkContext.hadoopConfiguration), batchIds)
-
-  /** [[estimateDistinctFromCatalog]] for the theta set-op store. */
-  def estimateSetOpFromCatalog(spark: SparkSession, catalogRoot: String,
-      op: String, batchIdsA: Seq[String], batchIdsB: Seq[String]): DataFrame =
-    estimateSetOp(spark, graft.sources.Generations.resolve(catalogRoot,
-      spark.sparkContext.hadoopConfiguration), op, batchIdsA, batchIdsB)
-
-  /** [[estimateDistinctFromCatalog]] for the KLL quantile store. */
-  def estimateQuantilesFromCatalog(spark: SparkSession, catalogRoot: String,
-      ranks: Seq[Double], batchIds: Seq[String] = Nil,
-      k: Int = 200): DataFrame =
-    estimateQuantiles(spark, graft.sources.Generations.resolve(catalogRoot,
-      spark.sparkContext.hadoopConfiguration), ranks, batchIds, k)
-
   // ---- mergeable QUANTILE sketches (KLL) — the HLL store's sibling -----
   //
   // "p95 document length per source per day" over history has the same
@@ -557,16 +534,6 @@ object Sketches {
         .map(p => Seq(p._1, p._2)))
     Option(obs.get("compacted_rows")).map(_.asInstanceOf[Long]).getOrElse(0L)
   }
-
-  /** [[heavyHitterCandidates]] against a [[graft.sources.Generations]]
-    * catalog — the freq store's read twin (R187 discipline).
-    */
-  def heavyHitterCandidatesFromCatalog(spark: SparkSession,
-      catalogRoot: String, minCount: Long, batchIds: Seq[String] = Nil,
-      maxMapSize: Int = 1024): DataFrame =
-    heavyHitterCandidates(spark, graft.sources.Generations.resolve(
-      catalogRoot, spark.sparkContext.hadoopConfiguration),
-      minCount, batchIds, maxMapSize)
 
   /** The sketch stores' maintenance policy —
     * [[graft.operators.Search.maintainTextIndex]]'s contract on the

@@ -10,7 +10,8 @@ import Search.{OpqModel, PqCodebooks}
 /** The lifecycle of the five persisted quantized vector-store families —
   * IVF, flat PQ, OPQ, IVF-PQ and residual IVF-PQ — written once over a
   * [[VectorFamily]] descriptor. `Search`'s public maintainers forward
-  * here with their own name, which every refusal message carries.
+  * here with their own name, which every refusal message carries, and
+  * its `*FromIndex` readers open their store through [[open]].
   *
   * Store layout: one data artifact (`vectors` or `codes`, optionally
   * partitioned by `cluster_id`) plus frozen-model sidecars (centroids,
@@ -27,12 +28,12 @@ import Search.{OpqModel, PqCodebooks}
   * silently wrong (codes encoded under one model decoded under another).
   * Refresh therefore tags every artifact directory with a hidden
   * `_v<version>` file and writes the `model` marker (version + family)
-  * LAST; [[requireConsistentModel]] — run by every family's reader and by
-  * every rewrite on its source — verifies all tags agree with the marker
-  * and refuses loudly otherwise. Rewrites keep the frozen model, so they
-  * carry the marker and tags to the destination, marker last. Stores that
-  * were never refreshed carry no marker and skip the check (zero cost).
-  * Only this module writes markers and tags.
+  * LAST; [[requireConsistentModel]] — run by every family's reader
+  * (through [[open]]) and by every rewrite on its source — verifies all
+  * tags agree with the marker and refuses loudly otherwise. Rewrites keep
+  * the frozen model, so they carry the marker and tags to the destination,
+  * marker last. Stores that were never refreshed carry no marker and skip
+  * the check (zero cost). Only this module writes markers and tags.
   */
 private[graft] object VectorStores {
 
@@ -253,11 +254,35 @@ private[graft] object VectorStores {
     partitionCol(f).fold(w)(c => w.partitionBy(c)).parquet(s"$path/${f.data}")
   }
 
+  /** The one read entry of every family's `*FromIndex` reader: refuse a
+    * store of another encoding or a torn model generation (driver-side,
+    * zero jobs), load the frozen model, and open the data artifact
+    * through [[StoreParquet]]. A partitioned family opens only the
+    * directories of the clusters `probe` picks from the model, and keeps
+    * `cluster_id IN (…)` as the plan's partition filter; a flat family
+    * ignores `probe`.
+    *
+    * @return (model, probed cluster ids — empty for a flat family, data)
+    */
+  def open[M](f: VectorFamily[M], op: String, spark: SparkSession,
+      path: String)(probe: M => Seq[Int]): (M, Seq[Int], DataFrame) = {
+    requireEncoding(f, spark, path, op)
+    requireConsistentModel(spark, path, op)
+    val model = f.readModel(spark, path)
+    val dir = s"$path/${f.data}"
+    if (!f.partitioned) (model, Nil, StoreParquet.open(spark, dir))
+    else {
+      val ids = probe(model)
+      (model, ids, StoreParquet.openPartitions(spark, dir, "cluster_id", ids)
+        .where(col("cluster_id").isin(ids: _*)))
+    }
+  }
+
   /** Refuse a store whose `encoding` sidecar (absent on plain stores,
     * `fp_residual` on residual IVF-PQ ones) is not `f`'s, so the plain and
     * residual ADC semantics can never be crossed.
     */
-  def requireEncoding[M](f: VectorFamily[M], spark: SparkSession,
+  private def requireEncoding[M](f: VectorFamily[M], spark: SparkSession,
       path: String, op: String): Unit = {
     val enc =
       if (PathState.classify(s"$path/encoding", hconf(spark)) != PathState.Data) None
@@ -307,7 +332,7 @@ private[graft] object VectorStores {
     * its `model` marker. Driver-side (KB marker, one listing per
     * artifact), zero Spark jobs; unmarked stores return at once.
     */
-  def requireConsistentModel(spark: SparkSession, path: String,
+  private def requireConsistentModel(spark: SparkSession, path: String,
       op: String): Unit = {
     val version = readModelVersion(spark, path)
     if (version > 0) families.flatMap(_.artifacts).distinct.foreach { a =>

@@ -176,7 +176,7 @@ class MaintenanceSpec extends SparkSpec {
         docs.where(col("doc_id") >= i * 100 && col("doc_id") < (i + 1) * 100),
         "doc_id", "toks", Generations.resolve(textRoot, conf))
     }
-    val bmBefore = Search.bm25TopKFromCatalog(spark, textRoot,
+    val bmBefore = Search.bm25TopKFromIndex(spark, Generations.resolve(textRoot, conf),
       Seq("data", "model", "search"), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val ta = "alpha beta gamma delta"; val tb = "epsilon zeta eta theta"
@@ -191,8 +191,8 @@ class MaintenanceSpec extends SparkSpec {
       "toks", Generations.resolve(wRoot, conf), 1) > 0L)
     assert(Dedup.foldSoftDedupWeightsBatch(wdocs(21L -> tb), "doc_id",
       "toks", Generations.resolve(wRoot, conf), 2) > 0L)
-    def weightsRead() = Dedup.readSoftDedupWeightsFromCatalog(spark, wRoot,
-        idCol = "doc_id").orderBy("doc_id").collect()
+    def weightsRead() = Dedup.readSoftDedupWeights(spark,
+        Generations.resolve(wRoot, conf), idCol = "doc_id").orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     val wBefore = weightsRead()
@@ -223,7 +223,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(sweep(2).observed == 3.0, "weights observable = committed batches")
     assert(sweep(3).observed == 3.0, "sketch observable = live data files")
     // every ticked store's answer is unchanged through its swap
-    assert(Search.bm25TopKFromCatalog(spark, textRoot,
+    assert(Search.bm25TopKFromIndex(spark, Generations.resolve(textRoot, conf),
       Seq("data", "model", "search"), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == bmBefore,
       "bm25 scores bit-identical through the text compaction")

@@ -1468,7 +1468,7 @@ class SearchSpec extends SparkSpec {
     java.nio.file.Files.writeString(orphan.resolve("part-junk.parquet"), "x")
     assert(Search.dataFileCount(spark,
       s"${Generations.resolve(root, conf)}/postings") == frag)
-    val before = Search.bm25TopKFromCatalog(spark, root,
+    val before = Search.bm25TopKFromIndex(spark, Generations.resolve(root, conf),
         Seq("data", "model", "search"), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // within budget: a TRUE no-op — nothing staged, the pointer unmoved
@@ -1481,7 +1481,7 @@ class SearchSpec extends SparkSpec {
     assert(Search.dataFileCount(spark,
       s"${Generations.resolve(root, conf)}/postings") <= 4)
     // scores bit-identical through the policy's rewrite + swap
-    assert(Search.bm25TopKFromCatalog(spark, root,
+    assert(Search.bm25TopKFromIndex(spark, Generations.resolve(root, conf),
         Seq("data", "model", "search"), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == before)
     // replay no-op survives the generation swap
@@ -1575,8 +1575,9 @@ class SearchSpec extends SparkSpec {
     assert(Search.readModelVersion(spark,
       Generations.resolve(root, conf)) == 1L)
     val q = rows.head._2.toSeq
-    assert(Search.ivfPqTopKFromCatalog(spark, root, df, "vec_id",
-      "embedding", q, k = 5, nProbe = 2, rescore = 20).count() == 5L)
+    assert(Search.ivfPqTopKFromIndex(spark, Generations.resolve(root, conf),
+      df, "vec_id", "embedding", q, k = 5, nProbe = 2, rescore = 20)
+      .count() == 5L)
   }
 
   test("quantizer refresh recovers recall after drift (the ivfDriftStats → refresh loop)") {
@@ -1688,8 +1689,8 @@ class SearchSpec extends SparkSpec {
         val exact = all.filter(_._1 != qid)
           .map { case (id, w) => (id, cosRef(w, qv)) }
           .sortBy { case (id, s) => (-s, id) }.take(5).map(_._1).toSet
-        val got = Search.ivfTopKFromCatalog(spark, root, "embedding",
-            qv, k = 6, nProbe = 1)
+        val got = Search.ivfTopKFromIndex(spark,
+            Generations.resolve(root, conf), "embedding", qv, k = 6, nProbe = 1)
           .select("vec_id").collect().map(_.getLong(0))
           .filter(_ != qid).take(5).toSet
         exact.intersect(got).size.toDouble / 5.0

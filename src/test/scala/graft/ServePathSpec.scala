@@ -186,6 +186,34 @@ class ServePathSpec extends SparkSpec {
           .select(col("vec_id")), q)
       }
     }
+    // every other family's reader refuses the residual store before any
+    // job: plain ADC tables over residual codes would rank silently wrong
+    val q = vecs(queries.head)
+    Seq[(String, () => DataFrame)](
+      "pqTopKFromIndex" -> (() => Search.pqTopKFromIndex(spark, resid, emb,
+        "vec_id", "embedding", q, k = 10, rescore = 30)),
+      "opqTopKFromIndex" -> (() => Search.opqTopKFromIndex(spark, resid, emb,
+        "vec_id", "embedding", q, k = 10, rescore = 30)),
+      "ivfTopKFromIndex" -> (() => Search.ivfTopKFromIndex(spark, resid,
+        "embedding", q, k = 10, nProbe = 4)),
+      "ivfTopKFromIndexQuantized" -> (() => Search.ivfTopKFromIndexQuantized(
+        spark, resid, emb, "vec_id", "embedding", q, k = 10, nProbe = 4,
+        rescore = 30)),
+      "ivfPqTopKFromIndex" -> (() => Search.ivfPqTopKFromIndex(spark, resid,
+        emb, "vec_id", "embedding", q, k = 10, nProbe = 4, rescore = 30))
+    ).foreach { case (reader, read) =>
+      val (refusal, jobs) = countJobs(
+        scala.util.Try(read().collect()).failed.toOption)
+      refusal match {
+        case Some(e: IllegalArgumentException) =>
+          assert(e.getMessage.contains("fp_residual"),
+            s"$reader: the refusal must name the store's encoding: ${e.getMessage}")
+        case other =>
+          fail(s"$reader over a residual IVF-PQ store: expected an " +
+            s"IllegalArgumentException, got $other")
+      }
+      assert(jobs == 0, s"$reader: $jobs Spark jobs before the refusal")
+    }
   }
 
   /** [[Search.ivfPqResidualAdcScores]]' pre-change spelling. */

@@ -314,7 +314,7 @@ class SketchesSpec extends SparkSpec {
       Sketches.appendDistinctSketches(df, "domain", "uid", id, g0); ()
     }
     Generations.publish(root, g0, conf)
-    val before = Sketches.estimateDistinctFromCatalog(spark, root)
+    val before = Sketches.estimateDistinct(spark, Generations.resolve(root, conf))
       .as[(String, Long)].collect().toMap
     val files = graft.operators.Search.dataFileCount(spark,
       Generations.resolve(root, conf))
@@ -328,10 +328,11 @@ class SketchesSpec extends SparkSpec {
       "m1-2", maxDataFiles = files - 1, targetFiles = 1).contains("gen-1"))
     assert(Generations.resolve(root, conf).endsWith("gen-1"))
     // estimates invariant through the swap, all scopings
-    val after = Sketches.estimateDistinctFromCatalog(spark, root)
+    val after = Sketches.estimateDistinct(spark, Generations.resolve(root, conf))
       .as[(String, Long)].collect().toMap
     assert(after === before, "all-batches estimate must survive the swap")
-    assert(Sketches.estimateDistinctFromCatalog(spark, root, Seq("m1-2", "m3"))
+    assert(Sketches.estimateDistinct(spark, Generations.resolve(root, conf),
+      Seq("m1-2", "m3"))
       .as[(String, Long)].collect().toMap === before)
     // compaction honored its file budget: the next tick reads healthy at
     // a budget of targetFiles, under any shuffle-partition count
@@ -345,7 +346,8 @@ class SketchesSpec extends SparkSpec {
       "domain", "uid", "m4", Generations.resolve(root, conf)) === 2L)
     // vacuum stays separate; the live generation keeps serving
     assert(Generations.vacuum(root, keep = 0, conf) == Seq("gen-0"))
-    assert(Sketches.estimateDistinctFromCatalog(spark, root).count() === 2L)
+    assert(Sketches.estimateDistinct(spark, Generations.resolve(root, conf))
+      .count() === 2L)
     // a budget below the compaction target refuses (self-thrash)
     intercept[IllegalArgumentException](Sketches.maintainSketchStore(spark,
       root, "hll", Seq("m4"), "m4c", maxDataFiles = 1, targetFiles = 2))

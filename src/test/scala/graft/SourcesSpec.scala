@@ -1631,13 +1631,15 @@ class SourcesSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(root, "_current.tmp"), "gen-999")
     assert(Generations.resolve(root, conf) == g0)
-    assert(Search.ivfTopKFromCatalog(spark, root, "embedding", q, 5, 2)
+    assert(Search.ivfTopKFromIndex(spark, Generations.resolve(root, conf),
+        "embedding", q, 5, 2)
       .select("vec_id").collect().map(_.getLong(0)).toSeq == a0)
     // ...as does a crash that staged a data-bearing generation but died
     // BEFORE publish: the unreferenced dir changes nothing a reader sees
     val gStale = Generations.stage(root, conf)
     vecs0.limit(10).select("vec_id", "embedding").write.parquet(s"$gStale/vectors")
-    assert(Search.ivfTopKFromCatalog(spark, root, "embedding", q, 5, 2)
+    assert(Search.ivfTopKFromIndex(spark, Generations.resolve(root, conf),
+        "embedding", q, 5, 2)
       .select("vec_id").collect().map(_.getLong(0)).toSeq == a0)
     java.nio.file.Files.walk(java.nio.file.Paths.get(gStale))
       .sorted(java.util.Comparator.reverseOrder())
@@ -1680,102 +1682,5 @@ class SourcesSpec extends SparkSpec {
     // cross-filesystem genDir still refuses (qualification, not string play)
     intercept[IllegalArgumentException] {
       Generations.publish(relRoot, s"file:/nonexistent/gen-0", conf) }
-  }
-
-  test("catalog twins: every remaining read entry point resolves once and matches its direct form (R187)") {
-    import graft.sources.Generations
-    import graft.operators.{Dedup, Search, Sketches}
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val emb = Tables.embeddings(spark, sf001).where(col("vec_id") =!= 0)
-      .limit(120).persist()
-    val q = Tables.embeddings(spark, sf001).where(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0)
-    def cat(build: String => Unit): String = {
-      val root = java.nio.file.Files.createTempDirectory("twin").toString
-      val g0 = Generations.stage(root, conf)
-      build(g0)
-      Generations.publish(root, g0, conf)
-      root
-    }
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq
-    try {
-      val cents = Search.sampledCentroids(emb, "vec_id", "embedding", 4, "tw")
-      // quantized IVF
-      val rQ = cat(g => Search.writeIvfIndexQuantized(emb, "vec_id",
-        "embedding", cents, g))
-      assert(rows(Search.ivfTopKFromCatalogQuantized(spark, rQ, emb,
-          "vec_id", "embedding", q, 5, nProbe = 2)) ==
-        rows(Search.ivfTopKFromIndexQuantized(spark,
-          Generations.resolve(rQ, conf), emb, "vec_id", "embedding", q, 5,
-          nProbe = 2)))
-      // flat PQ
-      val cb = Search.pqSampledCodebooks(emb, "vec_id", "embedding",
-        dim = 64, m = 8, ksub = 16)
-      val rPq = cat(g => Search.pqWriteIndex(emb, "vec_id", "embedding",
-        cb, g))
-      assert(rows(Search.pqTopKFromCatalog(spark, rPq, emb, "vec_id",
-          "embedding", q, 5)) ==
-        rows(Search.pqTopKFromIndex(spark, Generations.resolve(rPq, conf),
-          emb, "vec_id", "embedding", q, 5)))
-      // OPQ
-      val opq = Search.opqTrainCodebooks(emb, "embedding", dim = 64, m = 8,
-        ksub = 16)
-      val rOpq = cat(g => Search.opqWriteIndex(emb, "vec_id", "embedding",
-        opq, g))
-      assert(rows(Search.opqTopKFromCatalog(spark, rOpq, emb, "vec_id",
-          "embedding", q, 5)) ==
-        rows(Search.opqTopKFromIndex(spark, Generations.resolve(rOpq, conf),
-          emb, "vec_id", "embedding", q, 5)))
-      // residual IVF-PQ
-      val rcb = Search.pqResidualSampledCodebooks(emb, "vec_id",
-        "embedding", cents, dim = 64, m = 8, ksub = 16)
-      val rRes = cat(g => Search.writeIvfPqResidualIndex(emb, "vec_id",
-        "embedding", cents, rcb, g))
-      assert(rows(Search.ivfPqResidualTopKFromCatalog(spark, rRes, emb,
-          "vec_id", "embedding", q, 5, nProbe = 2)) ==
-        rows(Search.ivfPqResidualTopKFromIndex(spark,
-          Generations.resolve(rRes, conf), emb, "vec_id", "embedding", q, 5,
-          nProbe = 2)))
-      // seeded LSH
-      val rLsh = cat(g => Search.writeSeededLshIndex(emb, "vec_id",
-        "embedding", dim = 64, path = g))
-      assert(rows(Search.seededLshPairsFromCatalog(spark, rLsh, 0.8)) ==
-        rows(Search.seededLshPairsFromIndex(spark,
-          Generations.resolve(rLsh, conf), 0.8)))
-      // soft-dedup weights
-      val docs = Seq((1L, Seq("a", "b", "c")), (2L, Seq("a", "b", "c")),
-        (3L, Seq("x", "y", "z"))).toDF("doc_id", "toks")
-      val rW = cat(g => { Dedup.foldSoftDedupWeightsBatch(docs, "doc_id",
-        "toks", g, batchId = 0, threshold = 0.4, shingleN = 1); () })
-      assert(rows(Dedup.readSoftDedupWeightsFromCatalog(spark, rW, "doc_id")
-          .orderBy("doc_id")) ==
-        rows(Dedup.readSoftDedupWeights(spark,
-          Generations.resolve(rW, conf), "doc_id").orderBy("doc_id")))
-      // sketch stores (the generation dir IS the store dir): HLL distinct,
-      // theta set ops, KLL quantiles
-      val ev = Seq(("g1", 1.0), ("g1", 2.0), ("g2", 3.0), ("g2", 3.0))
-        .toDF("grp", "v")
-      val evL = ev.withColumn("v", col("v").cast("long")) // HLL/theta want ints
-      val rH = cat(g => { Sketches.appendDistinctSketches(evL, "grp", "v",
-        "b0", g); () })
-      assert(rows(Sketches.estimateDistinctFromCatalog(spark, rH)) ==
-        rows(Sketches.estimateDistinct(spark, Generations.resolve(rH, conf))))
-      val rT = cat(g => { Sketches.appendThetaSketches(evL, "grp", "v",
-        "b0", g); Sketches.appendThetaSketches(evL, "grp", "v", "b1", g); () })
-      assert(rows(Sketches.estimateSetOpFromCatalog(spark, rT, "union",
-          Seq("b0"), Seq("b1"))) ==
-        rows(Sketches.estimateSetOp(spark, Generations.resolve(rT, conf),
-          "union", Seq("b0"), Seq("b1"))))
-      val rK = cat(g => { Sketches.appendQuantileSketches(ev, "grp", "v",
-        "b0", g); () })
-      assert(rows(Sketches.estimateQuantilesFromCatalog(spark, rK,
-          Seq(0.5))) ==
-        rows(Sketches.estimateQuantiles(spark, Generations.resolve(rK, conf),
-          Seq(0.5))))
-      ()
-    } finally { emb.unpersist(); () }
   }
 }

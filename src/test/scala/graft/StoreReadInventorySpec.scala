@@ -30,6 +30,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * declared or attached (`SparkListener {`, `extends SparkListener`,
   * `addSparkListener(`) under `src/main/scala` and `src/test/scala` only
   * in [[org.apache.spark.sql.graft.SparkJobs]] and its spec's bus stall.
+  *
+  * A fifth keeps one read path for the vector stores: outside comments,
+  * the read guards `requireEncoding(` and `requireConsistentModel(` appear
+  * under `graft/operators` only in `graft/operators/VectorStores.scala`
+  * (every `*FromIndex` reader opens through `VectorStores.open`), and no
+  * `def …FromCatalog` exists under `src/main/scala` — a catalog read is
+  * the reader over `Generations.resolve(root, hconf)`.
   */
 class StoreReadInventorySpec extends AnyFunSuite {
 
@@ -62,6 +69,11 @@ class StoreReadInventorySpec extends AnyFunSuite {
     """(SparkListener\s*\{|\bextends\s+SparkListener\b|\baddSparkListener\s*\()""".r
   private val counterHome = "org/apache/spark/sql/graft/SparkJobs.scala"
   private val stallHome = "graft/SparkJobsSpec.scala"
+
+  private val readGuards =
+    """\b(requireEncoding|requireConsistentModel)\s*(\[[^\]]*\])?\s*\(""".r
+  private val readHome = "graft/operators/VectorStores.scala"
+  private val catalogTwin = """\bdef\s+\w*FromCatalog\w*""".r
 
   private val root = java.nio.file.Paths.get("src/main/scala")
   private val testRoot = java.nio.file.Paths.get("src/test/scala")
@@ -136,6 +148,18 @@ class StoreReadInventorySpec extends AnyFunSuite {
         s"found under src/main/scala: $main, under src/test/scala: $test")
   }
 
+  test("one vector-store read path: the read guards live in VectorStores.scala, and no catalog twins") {
+    val guards = scan("graft/operators", readGuards)
+    assert(guards.keySet == Set(readHome),
+      "requireEncoding / requireConsistentModel belong to " +
+        s"$readHome (open the store through VectorStores.open instead of " +
+        s"spelling the guards in a reader); found: $guards")
+    val twins = scan("", catalogTwin)
+    assert(twins.isEmpty,
+      "read a catalog as the reader over Generations.resolve(root, hconf) " +
+        s"instead of adding a *FromCatalog twin; found: $twins")
+  }
+
   test("the scan sees the spellings it gates") {
     val src = """val a = spark.read.parquet(s"$p/vectors")
       |val b = spark.read.option("basePath", w)
@@ -166,5 +190,18 @@ class StoreReadInventorySpec extends AnyFunSuite {
       |override def onJobStart(e: ${L}JobStart): Unit = {
       |class Q extends StreamingQueryListener {""".stripMargin
     assert(listenerSpelling.findAllMatchIn(code(listeners)).size == 3)
+    val guards = """requireConsistentModel(spark, path, op)
+      |  VectorStores.requireEncoding (VectorStores.IvfPq, spark, path, op)
+      |private def requireEncoding[M](f: VectorFamily[M], spark: SparkSession,
+      |// requireEncoding(commented)
+      |  * [[requireConsistentModel]] in a scaladoc, requireEncoding(x) too
+      |val requireConsistent = 1""".stripMargin
+    assert(readGuards.findAllMatchIn(code(guards)).size == 3)
+    val twins = """def bm25TopKFromCatalog(spark: SparkSession, root: String,
+      |  def  ivfTopKFromCatalogQuantized(spark: SparkSession,
+      |// def pqTopKFromCatalog(commented)
+      |  * [[opqTopKFromCatalog]] in a scaladoc, def opqTopKFromCatalog too
+      |Search.ivfTopKFromCatalog(spark, root, "embedding", q, 5)""".stripMargin
+    assert(catalogTwin.findAllMatchIn(code(twins)).size == 2)
   }
 }

@@ -1056,7 +1056,7 @@ class StreamsSpec extends SparkSpec {
     assert(live.endsWith("gen-1"))
     assert(spark.read.parquet(s"$live/doclens").count() == 5L,
       "every document exactly once: no loss, no replay duplication")
-    val got = Search.bm25TopKFromCatalog(spark, cat, Seq("data"), 5)
+    val got = Search.bm25TopKFromIndex(spark, live, Seq("data"), 5)
       .collect().map(_.getLong(0)).toSeq
     val want = Search.bm25TopK(docsOf(a ++ b ++ c), "doc_id", "toks",
       Seq("data"), 5).collect().map(_.getLong(0)).toSeq
@@ -1119,7 +1119,8 @@ class StreamsSpec extends SparkSpec {
       .write.mode("append").parquet(src)
     val q2 = stream(Generations.resolve(cat, conf))
     try q2.processAllAvailable() finally q2.stop()
-    val served = Dedup.readSoftDedupWeightsFromCatalog(spark, cat, "doc_id")
+    val served = Dedup.readSoftDedupWeights(spark,
+      Generations.resolve(cat, conf), "doc_id")
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     val all = (1L to 12L).map(i => (i, t(i))).toDF("doc_id", "text")
