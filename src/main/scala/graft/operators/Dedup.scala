@@ -1642,6 +1642,89 @@ object Dedup {
       .select(col("id1"), col("id2"), col("cos_sim"))
   }
 
+  // ---- the banded-hash core of the seven 64-bit near-dup operators: the
+  // pigeonhole guards, the band rows, the hot-bucket refusal and the exact
+  // vote threshold ([[hammingNearDupPairs]] states the technique) ----
+
+  private def requireBanding(maxHamming: Int, numBands: Int): Unit = {
+    require(numBands > 0 && 64 % numBands == 0,
+      s"numBands must divide 64, got $numBands")
+    require(maxHamming >= 0 && maxHamming < numBands,
+      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
+        s"$maxHamming with $numBands bands; raise numBands for a larger radius")
+  }
+
+  private def requireVote(maxHamming: Int, numBands: Int,
+      minVoteFrac: Double, maxBandBucket: Long): Unit = {
+    requireBanding(maxHamming, numBands)
+    require(minVoteFrac > 0.0 && minVoteFrac <= 1.0,
+      s"minVoteFrac must be in (0, 1] — at 0 every pair qualifies and " +
+        s"band candidates are no longer lossless; got $minVoteFrac")
+    require(maxBandBucket > 0, s"maxBandBucket must be positive, got $maxBandBucket")
+  }
+
+  /** One row per bit-band of the 64-bit column `h`: `_bi` is the band
+    * index, `_bv` the band value, and the `keep` columns ride along.
+    */
+  private def bandRows(df: DataFrame, h: String, numBands: Int,
+      keep: String*): DataFrame = {
+    val width = 64 / numBands
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    df.withColumn("_band", explode(array((0 until numBands).map { b =>
+        struct(lit(b).as("i"),
+          shiftrightunsigned(col(h), b * width).bitwiseAND(lit(mask)).as("v"))
+      }: _*)))
+      .select(keep.map(col) ++ Seq(col("_band.i").as("_bi"), col("_band.v").as("_bv")): _*)
+  }
+
+  /** Refuse (the jaccardJoinPrefix discipline) when a bucket at `grain`
+    * holds more than `maxBandBucket` rows — a near-constant corpus would
+    * make the candidate join quadratic.
+    */
+  private def refuseHotBucket(banded: DataFrame, maxBandBucket: Long,
+      rows: String, grain: String*): Unit = {
+    val hottestRow = banded.groupBy(grain.map(col): _*)
+      .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
+    val hottest = if (hottestRow.isNullAt(0)) 0L else hottestRow.getLong(0)
+    val key = grain.map(Map("_f" -> "frame", "_bi" -> "band", "_bv" -> "value"))
+    require(hottest <= maxBandBucket,
+      s"a ${key.mkString("(", ", ", ")")} bucket is shared by $hottest $rows " +
+        s"(> maxBandBucket $maxBandBucket) — the candidate block would be " +
+        "quadratic; pre-drop constant/low-entropy signatures")
+  }
+
+  /** Join each side's signature count (`n1` holds `_n1`, `n2` holds `_n2`,
+    * keyed by their other columns), set `total_frames = greatest(n₁, n₂)`
+    * and keep the qualifying votes. The threshold is an integer ppm
+    * cross-multiply so boundary votes (exactly 4/5 at minVoteFrac=0.8)
+    * never depend on double rounding; FLOOR, not round, keeps a 2/3 vote
+    * at minVoteFrac=2.0/3.0, which is ≥ the threshold in exact rationals.
+    */
+  private def qualifyVotes(matched: DataFrame, n1: DataFrame, n2: DataFrame,
+      minVoteFrac: Double): DataFrame =
+    matched
+      .join(n1, n1.columns.toSeq.filterNot(_ == "_n1"))
+      .join(n2, n2.columns.toSeq.filterNot(_ == "_n2"))
+      .withColumn("total_frames", greatest(col("_n1"), col("_n2")))
+      .where(col("matched_frames") * lit(1000000L) >=
+        col("total_frames") * lit(math.floor(minVoteFrac * 1e6).toLong))
+
+  /** An output column only — never compared (see [[qualifyVotes]]). */
+  private def voteFrac: Column =
+    col("matched_frames").cast("double") / col("total_frames")
+
+  /** `base`'s per-`_id` counts as the `id1` / `id2` [[qualifyVotes]] sides. */
+  private def pairCounts(base: DataFrame): (DataFrame, DataFrame) = {
+    val counts = base.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
+    (counts.select(col("_id").as("id1"), col("_n").as("_n1")),
+      counts.select(col("_id").as("id2"), col("_n").as("_n2")))
+  }
+
+  private def frameSigs(sigs: DataFrame, idCol: String, frameCol: String,
+      hashCol: String): DataFrame =
+    sigs.select(col(idCol).as("_id"), col(frameCol).cast("int").as("_f"),
+      col(hashCol).cast("long").as("_h"))
+
   /** EXACT Hamming near-dup pairs over 64-bit perceptual hashes (the
     * image-dedup step after [[graft.sources.Multimodal.imageDHashes]],
     * equally valid for any 64-bit signature): split the hash into
@@ -1656,21 +1739,10 @@ object Dedup {
     */
   def hammingNearDupPairs(df: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3, numBands: Int = 4): DataFrame = {
-    require(numBands > 0 && 64 % numBands == 0,
-      s"numBands must divide 64, got $numBands")
-    require(maxHamming >= 0 && maxHamming < numBands,
-      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
-        s"$maxHamming with $numBands bands; raise numBands for a larger radius")
-    val width = 64 / numBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val banded = df
-      .select(col(idCol).as("_id"), col(hashCol).cast("long").as("_h"))
-      .withColumn("_band", explode(array((0 until numBands).map { b =>
-        struct(lit(b).as("i"),
-          shiftrightunsigned(col("_h"), b * width).bitwiseAND(lit(mask)).as("v"))
-      }: _*)))
-      .select(col("_id"), col("_h"),
-        col("_band.i").as("_bi"), col("_band.v").as("_bv"))
+    requireBanding(maxHamming, numBands)
+    val banded = bandRows(
+      df.select(col(idCol).as("_id"), col(hashCol).cast("long").as("_h")),
+      "_h", numBands, "_id", "_h")
     banded.select(col("_bi"), col("_bv"), col("_id").as("id1"), col("_h").as("h1"))
       .join(banded.select(
         col("_bi"), col("_bv"), col("_id").as("id2"), col("_h").as("h2")),
@@ -1716,38 +1788,12 @@ object Dedup {
       numBands: Int = 4, minVoteFrac: Double = 0.8,
       maxBandBucket: Long = 100000L,
       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    require(numBands > 0 && 64 % numBands == 0,
-      s"numBands must divide 64, got $numBands")
-    require(maxHamming >= 0 && maxHamming < numBands,
-      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
-        s"$maxHamming with $numBands bands; raise numBands for a larger radius")
-    require(minVoteFrac > 0.0 && minVoteFrac <= 1.0,
-      s"minVoteFrac must be in (0, 1] — at 0 every pair qualifies and " +
-        s"band candidates are no longer lossless; got $minVoteFrac")
-    require(maxBandBucket > 0, s"maxBandBucket must be positive")
-    val width = 64 / numBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val base = sigs
-      .select(col(idCol).as("_id"), col(frameCol).cast("int").as("_f"),
-        col(hashCol).cast("long").as("_h"))
-      .persist()
+    requireVote(maxHamming, numBands, minVoteFrac, maxBandBucket)
+    val base = frameSigs(sigs, idCol, frameCol, hashCol).persist()
     try {
-      val banded = base
-        .withColumn("_band", explode(array((0 until numBands).map { b =>
-          struct(lit(b).as("i"),
-            shiftrightunsigned(col("_h"), b * width).bitwiseAND(lit(mask)).as("v"))
-        }: _*)))
-        .select(col("_id"), col("_f"),
-          col("_band.i").as("_bi"), col("_band.v").as("_bv"))
-        .persist()
+      val banded = bandRows(base, "_h", numBands, "_id", "_f").persist()
       try {
-        val hottestRow = banded.groupBy(col("_f"), col("_bi"), col("_bv"))
-          .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
-        val hottest = if (hottestRow.isNullAt(0)) 0L else hottestRow.getLong(0)
-        require(hottest <= maxBandBucket,
-          s"a (frame, band) bucket is shared by $hottest sequences (> " +
-            s"maxBandBucket $maxBandBucket) — the candidate block would be " +
-            "quadratic; pre-drop constant/low-entropy frames")
+        refuseHotBucket(banded, maxBandBucket, "sequences", "_f", "_bi", "_bv")
         val cand = banded
           .select(col("_f"), col("_bi"), col("_bv"), col("_id").as("id1"))
           .join(banded.select(
@@ -1755,7 +1801,7 @@ object Dedup {
             Seq("_f", "_bi", "_bv"))
           .where(col("id1") < col("id2"))
           .select(col("id1"), col("id2")).distinct()
-        val counts = base.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
+        val (n1, n2) = pairCounts(base)
         val matched = cand
           .join(base.select(col("_id").as("id1"), col("_f"), col("_h").as("h1")),
             Seq("id1"))
@@ -1764,21 +1810,8 @@ object Dedup {
           .where(bit_count(col("h1").bitwiseXOR(col("h2"))) <= maxHamming)
           .groupBy(col("id1"), col("id2"))
           .agg(count(lit(1)).as("matched_frames"))
-        val out = matched
-          .join(counts.select(col("_id").as("id1"), col("_n").as("_n1")), Seq("id1"))
-          .join(counts.select(col("_id").as("id2"), col("_n").as("_n2")), Seq("id2"))
-          .withColumn("total_frames", greatest(col("_n1"), col("_n2")))
-          // threshold in ppm with an integer cross-multiply (the
-          // jaccardJoinPrefix discipline): boundary votes (e.g. exactly
-          // 4/5 at minVoteFrac=0.8) must not depend on double rounding;
-          // vote_frac is an OUTPUT column only, never compared. FLOOR, not
-          // round: a 2/3 vote at minVoteFrac=2.0/3.0 is ≥ the double
-          // threshold in exact rationals, and floor(666666.66) keeps it
-          // where round would drop it
-          .where(col("matched_frames") * lit(1000000L) >=
-            col("total_frames") * lit(math.floor(minVoteFrac * 1e6).toLong))
-          .withColumn("vote_frac",
-            col("matched_frames").cast("double") / col("total_frames"))
+        val out = qualifyVotes(matched, n1, n2, minVoteFrac)
+          .withColumn("vote_frac", voteFrac)
           .select(col("id1"), col("id2"), col("matched_frames"),
             col("total_frames"), col("vote_frac"))
         // materialize the (small) verified pair set so the signature caches
@@ -1824,41 +1857,15 @@ object Dedup {
       numBands: Int = 4, minVoteFrac: Double = 0.8, maxShift: Int = 3,
       maxBandBucket: Long = 100000L,
       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    require(numBands > 0 && 64 % numBands == 0,
-      s"numBands must divide 64, got $numBands")
-    require(maxHamming >= 0 && maxHamming < numBands,
-      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
-        s"$maxHamming with $numBands bands; raise numBands for a larger radius")
-    require(minVoteFrac > 0.0 && minVoteFrac <= 1.0,
-      s"minVoteFrac must be in (0, 1] — at 0 every pair qualifies and " +
-        s"band candidates are no longer lossless; got $minVoteFrac")
+    requireVote(maxHamming, numBands, minVoteFrac, maxBandBucket)
     require(maxShift >= 0, s"maxShift must be ≥ 0, got $maxShift")
-    require(maxBandBucket > 0, s"maxBandBucket must be positive")
-    val width = 64 / numBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val base = sigs
-      .select(col(idCol).as("_id"), col(frameCol).cast("int").as("_f"),
-        col(hashCol).cast("long").as("_h"))
-      .persist()
+    val base = frameSigs(sigs, idCol, frameCol, hashCol).persist()
     try {
-      val banded = base
-        .withColumn("_band", explode(array((0 until numBands).map { b =>
-          struct(lit(b).as("i"),
-            shiftrightunsigned(col("_h"), b * width).bitwiseAND(lit(mask)).as("v"))
-        }: _*)))
-        .select(col("_id"), col("_f"),
-          col("_band.i").as("_bi"), col("_band.v").as("_bv"))
-        .persist()
+      val banded = bandRows(base, "_h", numBands, "_id", "_f").persist()
       try {
         // bucket grain is (band, value) — coarser than the aligned
-        // variant's (frame, band, value) by design; refuse before the join
-        val hottestRow = banded.groupBy(col("_bi"), col("_bv"))
-          .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
-        val hottest = if (hottestRow.isNullAt(0)) 0L else hottestRow.getLong(0)
-        require(hottest <= maxBandBucket,
-          s"a (band, value) bucket is shared by $hottest frame rows (> " +
-            s"maxBandBucket $maxBandBucket) — the candidate block would be " +
-            "quadratic; pre-drop constant/low-entropy frames")
+        // variant's (frame, band, value) by design
+        refuseHotBucket(banded, maxBandBucket, "frame rows", "_bi", "_bv")
         val cand = banded
           .select(col("_bi"), col("_bv"), col("_id").as("id1"), col("_f").as("_f1"))
           .join(banded.select(
@@ -1918,21 +1925,11 @@ object Dedup {
       numBands: Int = 4, minVoteFrac: Double = 0.5, maxShiftX: Int = 2,
       maxShiftY: Int = 2, maxBandBucket: Long = 100000L,
       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    require(numBands > 0 && 64 % numBands == 0,
-      s"numBands must divide 64, got $numBands")
-    require(maxHamming >= 0 && maxHamming < numBands,
-      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
-        s"$maxHamming with $numBands bands; raise numBands for a larger radius")
-    require(minVoteFrac > 0.0 && minVoteFrac <= 1.0,
-      s"minVoteFrac must be in (0, 1] — at 0 every pair qualifies and " +
-        s"band candidates are no longer lossless; got $minVoteFrac")
+    requireVote(maxHamming, numBands, minVoteFrac, maxBandBucket)
     require(maxShiftX >= 0 && maxShiftY >= 0,
       s"shift window must be ≥ 0, got ($maxShiftX, $maxShiftY)")
-    require(maxBandBucket > 0, s"maxBandBucket must be positive")
     val axisK = 1 << 16
     require(maxShiftY < axisK, s"maxShiftY must be < $axisK")
-    val width = 64 / numBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
     val coords = tiles
       .select(col(idCol).as("_id"), col(xCol).cast("int").as("_tx"),
         col(yCol).cast("int").as("_ty"), col(hashCol).cast("long").as("_h"))
@@ -1954,24 +1951,10 @@ object Dedup {
       }
       val base = coords.select(col("_id"),
         (col("_tx") * axisK + col("_ty")).as("_f"), col("_h"))
-      val banded = coords
-        .withColumn("_band", explode(array((0 until numBands).map { bi =>
-          struct(lit(bi).as("i"),
-            shiftrightunsigned(col("_h"), bi * width).bitwiseAND(lit(mask)).as("v"))
-        }: _*)))
-        .select(col("_id"), col("_tx"), col("_ty"),
-          col("_band.i").as("_bi"), col("_band.v").as("_bv"))
-        .persist()
+      val banded = bandRows(coords, "_h", numBands, "_id", "_tx", "_ty").persist()
       try {
-        // bucket grain is (band, value) — the shift-tolerant coarsening;
-        // refuse a quadratic block before the join (the R135 guard)
-        val hottestRow = banded.groupBy(col("_bi"), col("_bv"))
-          .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
-        val hottest = if (hottestRow.isNullAt(0)) 0L else hottestRow.getLong(0)
-        require(hottest <= maxBandBucket,
-          s"a (band, value) bucket is shared by $hottest tile rows (> " +
-            s"maxBandBucket $maxBandBucket) — the candidate block would be " +
-            "quadratic; pre-drop constant/low-entropy tiles")
+        // bucket grain is (band, value) — the shift-tolerant coarsening
+        refuseHotBucket(banded, maxBandBucket, "tile rows", "_bi", "_bv")
         val cand = banded
           .select(col("_bi"), col("_bv"), col("_id").as("id1"),
             col("_tx").as("_x1"), col("_ty").as("_y1"))
@@ -2052,24 +2035,11 @@ object Dedup {
       numBands: Int = 4, minVoteFrac: Double = 0.7, maxShift: Int = 3,
       maxStride: Int = 2, maxBandBucket: Long = 100000L,
       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    require(numBands > 0 && 64 % numBands == 0,
-      s"numBands must divide 64, got $numBands")
-    require(maxHamming >= 0 && maxHamming < numBands,
-      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
-        s"$maxHamming with $numBands bands; raise numBands for a larger radius")
-    require(minVoteFrac > 0.0 && minVoteFrac <= 1.0,
-      s"minVoteFrac must be in (0, 1] — at 0 every pair qualifies and " +
-        s"band candidates are no longer lossless; got $minVoteFrac")
+    requireVote(maxHamming, numBands, minVoteFrac, maxBandBucket)
     require(maxShift >= 0, s"maxShift must be ≥ 0, got $maxShift")
     require(maxStride >= 1 && maxStride <= 16,
       s"maxStride must be in [1, 16], got $maxStride")
-    require(maxBandBucket > 0, s"maxBandBucket must be positive")
-    val width = 64 / numBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val base = sigs
-      .select(col(idCol).as("_id"), col(frameCol).cast("int").as("_f"),
-        col(hashCol).cast("long").as("_h"))
-      .persist()
+    val base = frameSigs(sigs, idCol, frameCol, hashCol).persist()
     try {
       // decimation index arithmetic needs non-negative frame indexes
       val fmin = base.agg(min(col("_f"))).head()
@@ -2085,24 +2055,12 @@ object Dedup {
       try {
         val counts = vbase.groupBy(col("_id"), col("_s"), col("_r"))
           .agg(count(lit(1)).as("_n"))
-        val banded = vbase
-          .withColumn("_band", explode(array((0 until numBands).map { b =>
-            struct(lit(b).as("i"),
-              shiftrightunsigned(col("_h"), b * width).bitwiseAND(lit(mask)).as("v"))
-          }: _*)))
-          .select(col("_id"), col("_s"), col("_r"), col("_vf"),
-            col("_band.i").as("_bi"), col("_band.v").as("_bv"))
+        val banded = bandRows(vbase, "_h", numBands, "_id", "_s", "_r", "_vf")
           .persist()
         try {
           // bucket grain is (band, value) over ALL variants — ~maxStride×
-          // hotter than the shifted family's; refuse before the join
-          val hottestRow = banded.groupBy(col("_bi"), col("_bv"))
-            .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
-          val hottest = if (hottestRow.isNullAt(0)) 0L else hottestRow.getLong(0)
-          require(hottest <= maxBandBucket,
-            s"a (band, value) bucket is shared by $hottest variant frame rows " +
-              s"(> maxBandBucket $maxBandBucket) — the candidate block would " +
-              "be quadratic; pre-drop constant/low-entropy frames")
+          // hotter than the shifted family's
+          refuseHotBucket(banded, maxBandBucket, "variant frame rows", "_bi", "_bv")
           // fast side = the identity view; slow side = any (s, r) variant.
           // stride-1 pairs are the plain shifted family — emit once (idB <
           // idA); stride > 1 keeps both orientations (either id may be the
@@ -2131,15 +2089,12 @@ object Dedup {
             .where(bit_count(col("_hA").bitwiseXOR(col("_hB"))) <= maxHamming)
             .groupBy(col("_idA"), col("_s"), col("_r"), col("_idB"), col("_d"))
             .agg(count(lit(1)).as("matched_frames"))
-          val qualified = matched
-            .join(counts.select(col("_id").as("_idA"), col("_s"), col("_r"),
-              col("_n").as("_nA")), Seq("_idA", "_s", "_r"))
-            .join(counts.where(col("_s") === 1)
-              .select(col("_id").as("_idB"), col("_n").as("_nB")), Seq("_idB"))
-            .withColumn("total_frames", greatest(col("_nA"), col("_nB")))
-            // ppm cross-multiply, floor — the sequenceVoteNearDupPairs rule
-            .where(col("matched_frames") * lit(1000000L) >=
-              col("total_frames") * lit(math.floor(minVoteFrac * 1e6).toLong))
+          val qualified = qualifyVotes(matched,
+            counts.select(col("_id").as("_idA"), col("_s"), col("_r"),
+              col("_n").as("_n1")),
+            counts.where(col("_s") === 1)
+              .select(col("_id").as("_idB"), col("_n").as("_n2")),
+            minVoteFrac)
             .withColumn("id1", least(col("_idA"), col("_idB")))
             .withColumn("id2", greatest(col("_idA"), col("_idB")))
             .withColumn("stride", col("_s"))
@@ -2155,8 +2110,7 @@ object Dedup {
           val out = qualified
             .withColumn("_rk", row_number().over(w))
             .where(col("_rk") === 1)
-            .withColumn("vote_frac",
-              col("matched_frames").cast("double") / col("total_frames"))
+            .withColumn("vote_frac", voteFrac)
             .select(col("id1"), col("id2"), col("stride"), col("phase"),
               col("decimated"), col("frame_offset"), col("matched_frames"),
               col("total_frames"), col("vote_frac"))
@@ -2176,7 +2130,7 @@ object Dedup {
     */
   private def offsetVoteFromCandidates(cand: DataFrame, base: DataFrame,
       maxHamming: Int, minVoteFrac: Double): DataFrame = {
-    val counts = base.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
+    val (n1, n2) = pairCounts(base)
     val matched = cand
       .join(base.select(col("_id").as("id1"), col("_f").as("_f1"),
         col("_h").as("h1")), Seq("id1"))
@@ -2186,24 +2140,16 @@ object Dedup {
       .where(bit_count(col("h1").bitwiseXOR(col("h2"))) <= maxHamming)
       .groupBy(col("id1"), col("id2"), col("frame_offset"))
       .agg(count(lit(1)).as("matched_frames"))
-    val qualified = matched
-      .join(counts.select(col("_id").as("id1"), col("_n").as("_n1")), Seq("id1"))
-      .join(counts.select(col("_id").as("id2"), col("_n").as("_n2")), Seq("id2"))
-      .withColumn("total_frames", greatest(col("_n1"), col("_n2")))
-      // ppm cross-multiply, floor — the sequenceVoteNearDupPairs rule
-      .where(col("matched_frames") * lit(1000000L) >=
-        col("total_frames") * lit(math.floor(minVoteFrac * 1e6).toLong))
     // best offset per pair; threshold-first shrinks the window input
     // and cannot change the winner (the max-vote row qualifies iff any)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id1"), col("id2"))
       .orderBy(col("matched_frames").desc, abs(col("frame_offset")).asc,
         col("frame_offset").asc)
-    qualified
+    qualifyVotes(matched, n1, n2, minVoteFrac)
       .withColumn("_rk", row_number().over(w))
       .where(col("_rk") === 1)
-      .withColumn("vote_frac",
-        col("matched_frames").cast("double") / col("total_frames"))
+      .withColumn("vote_frac", voteFrac)
       .select(col("id1"), col("id2"), col("frame_offset"),
         col("matched_frames"), col("total_frames"), col("vote_frac"))
   }
@@ -2243,15 +2189,8 @@ object Dedup {
       onPairs: DataFrame => Unit = _ => (),
       checkpoint: CheckpointStrategy = CheckpointStrategy.Local,
       pairsSink: Option[DataFrame => DataFrame] = None): DataFrame = {
-    require(numBands > 0 && 64 % numBands == 0,
-      s"numBands must divide 64, got $numBands")
-    require(maxHamming >= 0 && maxHamming < numBands,
-      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
-        s"$maxHamming with $numBands bands")
-    require(minVoteFrac > 0.0 && minVoteFrac <= 1.0,
-      s"minVoteFrac must be in (0, 1], got $minVoteFrac")
+    requireVote(maxHamming, numBands, minVoteFrac, maxBandBucket)
     require(maxShift >= 0, s"maxShift must be ≥ 0, got $maxShift")
-    require(maxBandBucket > 0, s"maxBandBucket must be positive")
     val spark = batch.sparkSession
     val sigPath = s"$storePath/sigs"
     val state = graft.sources.PathState.classify(
@@ -2265,8 +2204,6 @@ object Dedup {
         .withColumn("id", lit(null).cast("long"))
         .withColumn("f", lit(null).cast("int"))
         .withColumn("h", lit(null).cast("long")).limit(0)
-    val width = 64 / numBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
     val fresh = batch
       .select(col(idCol).cast("long").as("id"), col(frameCol).cast("int").as("f"),
         col(hashCol).cast("long").as("h"))
@@ -2278,24 +2215,12 @@ object Dedup {
         .unionByName(store.withColumn("_new", lit(false)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        def bands(df: DataFrame): DataFrame = df
-          .withColumn("_band", explode(array((0 until numBands).map { b =>
-            struct(lit(b).as("i"),
-              shiftrightunsigned(col("h"), b * width).bitwiseAND(lit(mask)).as("v"))
-          }: _*)))
-          .select(col("id"), col("f"), col("_new"),
-            col("_band.i").as("_bi"), col("_band.v").as("_bv"))
-        val bandedAll = bands(all)
+        val bandedAll = bandRows(all, "h", numBands, "id", "f", "_new")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val hottestRow = bandedAll.groupBy(col("_bi"), col("_bv"))
-            .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
-          val hottest = if (hottestRow.isNullAt(0)) 0L else hottestRow.getLong(0)
-          require(hottest <= maxBandBucket,
-            s"a (band, value) bucket is shared by $hottest frame rows (> " +
-              s"maxBandBucket $maxBandBucket) — the candidate block would be " +
-              "quadratic; pre-drop constant/low-entropy frames")
-          val a = bands(fresh.withColumn("_new", lit(true)))
+          refuseHotBucket(bandedAll, maxBandBucket, "frame rows", "_bi", "_bv")
+          val a = bandRows(fresh.withColumn("_new", lit(true)), "h", numBands,
+            "id", "f", "_new")
           val cand = a.as("a").join(bandedAll.as("b"),
               col("a._bi") === col("b._bi") && col("a._bv") === col("b._bv") &&
                 abs(col("b.f") - col("a.f")) <= maxShift &&
@@ -2460,25 +2385,14 @@ object Dedup {
   def hammingContaminationPairs(corpus: DataFrame, idCol: String,
       hashCol: String, evalSet: DataFrame, evalIdCol: String,
       evalHashCol: String, maxHamming: Int = 3, numBands: Int = 4): DataFrame = {
-    require(numBands > 0 && 64 % numBands == 0,
-      s"numBands must divide 64, got $numBands")
-    require(maxHamming >= 0 && maxHamming < numBands,
-      s"exactness needs maxHamming < numBands (pigeonhole) — got " +
-        s"$maxHamming with $numBands bands; raise numBands for a larger radius")
+    requireBanding(maxHamming, numBands)
     require(idCol != evalIdCol,
       s"idCol and evalIdCol are both '$idCol' — the output carries one column " +
         "per side, so identical names make every downstream select ambiguous; " +
         "alias one side (e.g. eval.withColumnRenamed) before calling")
-    val width = 64 / numBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
     def banded(df: DataFrame, id: String, h: String, outId: String, outH: String) =
-      df.select(col(id).as(outId), col(h).cast("long").as(outH))
-        .withColumn("_band", explode(array((0 until numBands).map { b =>
-          struct(lit(b).as("i"),
-            shiftrightunsigned(col(outH), b * width).bitwiseAND(lit(mask)).as("v"))
-        }: _*)))
-        .select(col(outId), col(outH),
-          col("_band.i").as("_bi"), col("_band.v").as("_bv"))
+      bandRows(df.select(col(id).as(outId), col(h).cast("long").as(outH)),
+        outH, numBands, outId, outH)
     banded(corpus, idCol, hashCol, "_cid", "_ch")
       .join(broadcast(banded(evalSet, evalIdCol, evalHashCol, "_eid", "_eh")),
         Seq("_bi", "_bv"))

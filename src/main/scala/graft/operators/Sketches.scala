@@ -46,17 +46,25 @@ object Sketches {
         .exists(g => SidecarParquet.stringAt(g, "batch_id") == batchId))
   }
 
-  /** Append sketch rows with the row count observed ON the write job
-    * itself — one job instead of the old persist+count+write pair (r20
-    * optimization round; [[graft.operators.VectorStores]]'s writeCounted
-    * discipline applied to the four sketch appends). The Observation's
-    * count is exactly the rows the job-committed append landed.
+  /** The append gate shared by all four stores: refuse a directory that
+    * holds non-parquet content, no-op a replayed `batchId`
+    * ([[alreadyApplied]]), otherwise append `sketches` tagged with the
+    * batch id. The row count is observed ON the write job itself
+    * ([[VectorStores.writeCounted]]) — one job, exactly the rows the
+    * job-committed append landed.
+    *
+    * @return number of group rows appended (0 on replay)
     */
-  private def appendCounted(sk: DataFrame, storeDir: String): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    sk.observe(obs, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Append).parquet(storeDir)
-    obs.get("rows").asInstanceOf[Long]
+  private def appendOnce(df: DataFrame, batchId: String, storeDir: String)(
+      sketches: => DataFrame): Long = {
+    import graft.sources.PathState
+    val spark = df.sparkSession
+    val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
+    require(state != PathState.Foreign,
+      s"sketch store '$storeDir' holds non-parquet content — refusing to append")
+    if (state == PathState.Data && alreadyApplied(spark, storeDir, batchId)) 0L
+    else VectorStores.writeCounted(sketches.withColumn("batch_id", lit(batchId)),
+      storeDir, mode = SaveMode.Append)
   }
 
   /** Build per-(group, batch) HLL sketches of `valueCol` and append them
@@ -66,18 +74,11 @@ object Sketches {
     * @return number of group rows appended (0 on replay)
     */
   def appendDistinctSketches(df: DataFrame, groupCol: String, valueCol: String,
-      batchId: String, storeDir: String): Long = {
-    val spark = df.sparkSession
-    import graft.sources.PathState
-    val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
-      s"sketch store '$storeDir' holds non-parquet content — refusing to append")
-    if (state == PathState.Data && alreadyApplied(spark, storeDir, batchId)) return 0L
-    val sk = df.groupBy(col(groupCol).as("group_key"))
-      .agg(expr(s"hll_sketch_agg($valueCol)").as("sketch"))
-      .withColumn("batch_id", lit(batchId))
-    appendCounted(sk, storeDir)
-  }
+      batchId: String, storeDir: String): Long =
+    appendOnce(df, batchId, storeDir) {
+      df.groupBy(col(groupCol).as("group_key"))
+        .agg(expr(s"hll_sketch_agg($valueCol)").as("sketch"))
+    }
 
   /** Distinct-count estimates per group across a set of batches (all
     * batches when `batchIds` is empty): one scan of the sketch rows, one
@@ -128,12 +129,7 @@ object Sketches {
     import org.apache.datasketches.kll.KllDoublesSketch
     val spark = df.sparkSession
     import spark.implicits._
-    import graft.sources.PathState
-    val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
-      s"sketch store '$storeDir' holds non-parquet content — refusing to append")
-    if (state == PathState.Data && alreadyApplied(spark, storeDir, batchId)) return 0L
-    val sk = df
+    appendOnce(df, batchId, storeDir)(df
       .select(col(groupCol).cast("string").as("g"), col(valueCol).cast("double").as("v"))
       .as[(String, Double)]
       .mapPartitions { it =>
@@ -148,9 +144,7 @@ object Sketches {
       .agg(collect_list(col("part")).as("parts")) // ≤ one blob per partition
       .as[(String, Seq[Array[Byte]])]
       .map { case (g, parts) => (g, mergeSketchBlobs(parts.iterator, k).toByteArray) }
-      .toDF("group_key", "sketch")
-      .withColumn("batch_id", lit(batchId))
-    appendCounted(sk, storeDir)
+      .toDF("group_key", "sketch"))
   }
 
   // ---- mergeable FREQUENCY sketches (Misra-Gries) — the store's third leg
@@ -196,12 +190,7 @@ object Sketches {
       s"maxMapSize must be a power of two >= 8, got $maxMapSize")
     val spark = df.sparkSession
     import spark.implicits._
-    import graft.sources.PathState
-    val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
-      s"sketch store '$storeDir' holds non-parquet content — refusing to append")
-    if (state == PathState.Data && alreadyApplied(spark, storeDir, batchId)) return 0L
-    val sk = df
+    appendOnce(df, batchId, storeDir)(df
       .select(col(groupCol).cast("string").as("g"), col(valueCol).cast("string").as("v"))
       .as[(String, String)]
       .mapPartitions { it =>
@@ -219,9 +208,7 @@ object Sketches {
       .map { case (g, parts) =>
         (g, mergeFreqBlobs(parts.iterator, maxMapSize).toByteArray(freqSerde))
       }
-      .toDF("group_key", "sketch")
-      .withColumn("batch_id", lit(batchId))
-    appendCounted(sk, storeDir)
+      .toDF("group_key", "sketch"))
   }
 
   /** Heavy-hitter CANDIDATES per group across a set of batches (all when
@@ -298,12 +285,7 @@ object Sketches {
     import org.apache.datasketches.theta.UpdateSketch
     val spark = df.sparkSession
     import spark.implicits._
-    import graft.sources.PathState
-    val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
-      s"sketch store '$storeDir' holds non-parquet content — refusing to append")
-    if (state == PathState.Data && alreadyApplied(spark, storeDir, batchId)) return 0L
-    val sk = df
+    appendOnce(df, batchId, storeDir)(df
       .select(col(groupCol).cast("string").as("g"), col(valueCol).cast("string").as("v"))
       .as[(String, String)]
       .mapPartitions { it =>
@@ -320,9 +302,7 @@ object Sketches {
       .map { case (g, parts) =>
         (g, mergeThetaBlobs(parts.iterator).getResult.toByteArray)
       }
-      .toDF("group_key", "sketch")
-      .withColumn("batch_id", lit(batchId))
-    appendCounted(sk, storeDir)
+      .toDF("group_key", "sketch"))
   }
 
   /** Distinct-count SET ALGEBRA per group between two batch ranges: for

@@ -181,6 +181,20 @@ object Streams {
       .outputMode("append")
       .start()
 
+  /** The one `foreachBatch` wiring behind every maintenance wrapper below:
+    * `body` runs on each micro-batch with its epoch id, and the epoch
+    * commits to `checkpoint` only after `body` returns.
+    */
+  private def foreachEpoch(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        body(batch, id)
+      }
+      .outputMode("update")
+      .start()
+
   /** Streaming index maintenance: a stream of documents (doc_id, source,
     * text) continuously folded into a chunk index via `foreachBatch` +
     * [[graft.operators.Index.appendIndex]] — each micro-batch anti-joins
@@ -193,15 +207,10 @@ object Streams {
       checkpoint: String,
       cfg: graft.operators.Index.IndexConfig = graft.operators.Index.IndexConfig())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        implicit val spark: SparkSession = batch.sparkSession
-        graft.operators.Index.appendIndex(batch.toDF(), indexPath, cfg)
-        () // foreachBatch is Unit-typed; appendIndex returns the row count
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(docs, checkpoint) { (batch, _) =>
+      implicit val spark: SparkSession = batch.sparkSession
+      graft.operators.Index.appendIndex(batch, indexPath, cfg)
+    }
 
   /** Streaming TEXT-index maintenance: each micro-batch of documents folds
     * into a persisted BM25 index via
@@ -217,16 +226,11 @@ object Streams {
   def streamingTextIndexMaintenance(docs: DataFrame, idCol: String,
       tokenize: org.apache.spark.sql.Column, indexPath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        implicit val spark: SparkSession = batch.sparkSession
-        graft.operators.Search.appendTextIndex(
-          batch.toDF().withColumn("_toks", tokenize), idCol, "_toks", indexPath)
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(docs, checkpoint) { (batch, _) =>
+      implicit val spark: SparkSession = batch.sparkSession
+      graft.operators.Search.appendTextIndex(
+        batch.withColumn("_toks", tokenize), idCol, "_toks", indexPath)
+    }
 
   /** Streaming near-dup maintenance: every micro-batch is checked against
     * the ENTIRE historical corpus via the persisted sketch store
@@ -244,23 +248,18 @@ object Streams {
     val sink = pairsSink.getOrElse { df: DataFrame =>
       df.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(pairsOut)
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // pairs are written via onPairs BEFORE the sketch store mutates:
-        // a crash between the two replays the batch and re-emits the same
-        // pairs (at-least-once) instead of losing them (see
-        // Dedup.incrementalNearDupPairs ordering note; the kill-between-
-        // sink-and-append recovery is an executable proof in StreamsSpec).
-        // `pairsSink` is injectable so that proof can crash at exactly the
-        // sink/store boundary.
-        graft.operators.Dedup.incrementalNearDupPairs(
-          batch.toDF(), idCol, tokensCol, storePath, threshold = threshold,
-          onPairs = sink)
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(docs, checkpoint) { (batch, _) =>
+      // pairs are written via onPairs BEFORE the sketch store mutates:
+      // a crash between the two replays the batch and re-emits the same
+      // pairs (at-least-once) instead of losing them (see
+      // Dedup.incrementalNearDupPairs ordering note; the kill-between-
+      // sink-and-append recovery is an executable proof in StreamsSpec).
+      // `pairsSink` is injectable so that proof can crash at exactly the
+      // sink/store boundary.
+      graft.operators.Dedup.incrementalNearDupPairs(
+        batch, idCol, tokensCol, storePath, threshold = threshold,
+        onPairs = sink)
+    }
   }
 
   /** Streaming corpus-level line dedup: each micro-batch keeps only
@@ -278,15 +277,10 @@ object Streams {
     val sink = batchSink.getOrElse { df: DataFrame =>
       df.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Dedup.incrementalLineDedup(
-          batch.toDF(), idCol, textCol, storePath, delim, onBatch = sink)
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(docs, checkpoint) { (batch, _) =>
+      graft.operators.Dedup.incrementalLineDedup(
+        batch, idCol, textCol, storePath, delim, onBatch = sink)
+    }
   }
 
   /** Streaming SKETCH-store maintenance: every micro-batch folds a
@@ -307,22 +301,16 @@ object Streams {
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     require(Set("hll", "kll", "freq", "theta").contains(kind),
       s"kind must be hll|kll|freq|theta, got '$kind'")
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        import graft.operators.Sketches
-        val df = batch.toDF()
-        val bid = s"stream-$id"
-        kind match {
-          case "hll"   => Sketches.appendDistinctSketches(df, groupCol, valueCol, bid, storeDir)
-          case "kll"   => Sketches.appendQuantileSketches(df, groupCol, valueCol, bid, storeDir)
-          case "freq"  => Sketches.appendFrequencySketches(df, groupCol, valueCol, bid, storeDir)
-          case "theta" => Sketches.appendThetaSketches(df, groupCol, valueCol, bid, storeDir)
-        }
-        ()
+    foreachEpoch(rows, checkpoint) { (df, id) =>
+      import graft.operators.Sketches
+      val bid = s"stream-$id"
+      kind match {
+        case "hll"   => Sketches.appendDistinctSketches(df, groupCol, valueCol, bid, storeDir)
+        case "kll"   => Sketches.appendQuantileSketches(df, groupCol, valueCol, bid, storeDir)
+        case "freq"  => Sketches.appendFrequencySketches(df, groupCol, valueCol, bid, storeDir)
+        case "theta" => Sketches.appendThetaSketches(df, groupCol, valueCol, bid, storeDir)
       }
-      .outputMode("update")
-      .start()
+    }
   }
 
   /** Streaming maintenance of a seeded-LSH index
@@ -340,15 +328,10 @@ object Streams {
   def streamingLshMaintenance(rows: DataFrame, idCol: String, vecCol: String,
       indexPath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Search.appendSeededLshIndex(
-          batch.toDF(), idCol, vecCol, indexPath)
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(rows, checkpoint) { (batch, _) =>
+      graft.operators.Search.appendSeededLshIndex(
+        batch, idCol, vecCol, indexPath)
+    }
   }
 
   /** Streaming maintenance of a persisted VECTOR index (VERDICT r12 item
@@ -385,14 +368,9 @@ object Streams {
       case other => throw new IllegalArgumentException(
         s"family must be ivf|pq|opq|ivfpq|ivfpqres, got '$other'")
     }
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        append(batch.toDF())
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(rows, checkpoint) { (batch, _) =>
+      append(batch)
+    }
   }
 
   /** Streaming perceptual dedup at ingest: each micro-batch of
@@ -435,53 +413,48 @@ object Streams {
       maxHamming: Int = 3, numBands: Int = 4, minVoteFrac: Double = 0.8,
       maxShift: Int = 3, afterFold: Long => Unit = _ => ())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    sigs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val dir = s"$storePath/pairs/batch_id=$batchId"
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        // durability is data-or-marker, not the marker alone:
-        // compactSequencePairs carries live epochs via a partitionBy
-        // write whose single `_SUCCESS` sits at the pairs ROOT — a
-        // marker-only probe would read a carried subdir as non-durable
-        // and let the post-swap replay empty it (review r16)
-        val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-        val durable = success.getFileSystem(hconf).exists(success) ||
-          graft.sources.PathState.classify(dir, hconf) ==
-            graft.sources.PathState.Data
-        graft.operators.Dedup.incrementalSequenceNearDups(
-          batch.toDF(), idCol, frameCol, hashCol, storePath,
-          maxHamming = maxHamming, numBands = numBands,
-          minVoteFrac = minVoteFrac, maxShift = maxShift,
-          onPairs = out =>
-            if (!durable) {
-              out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(dir)
-              ()
-            } else if (!out.isEmpty) {
-              // a durable subdir plus a NON-empty recompute is either the
-              // pre-fold crash retry (recompute ≡ durable rows — skip,
-              // idempotent) or a FRESH-checkpoint stream whose epoch ids
-              // collide with a previous stream's durable epochs — there
-              // both skipping and overwriting silently lose one side's
-              // pairs, so refuse loudly instead (review r16). The set
-              // compare is two anti-joins on per-epoch frames, no collect
-              val existing = graft.sources.StoreParquet.open(spark, dir)
-                .select(out.columns.map(org.apache.spark.sql.functions.col): _*)
-              require(out.exceptAll(existing).isEmpty &&
-                  existing.exceptAll(out).isEmpty,
-                s"pairs epoch subdir '$dir' already holds DIFFERENT " +
-                  "durable content — a stream restarted with a fresh " +
-                  "checkpoint is colliding with a previous stream's " +
-                  "epochs; resume from the original checkpoint or point " +
-                  "the stream at a new store generation")
-            })
-        afterFold(batchId)
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(sigs, checkpoint) { (batch, batchId) =>
+      val dir = s"$storePath/pairs/batch_id=$batchId"
+      val spark = batch.sparkSession
+      val hconf = spark.sparkContext.hadoopConfiguration
+      // durability is data-or-marker, not the marker alone:
+      // compactSequencePairs carries live epochs via a partitionBy
+      // write whose single `_SUCCESS` sits at the pairs ROOT — a
+      // marker-only probe would read a carried subdir as non-durable
+      // and let the post-swap replay empty it (review r16)
+      val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+      val durable = success.getFileSystem(hconf).exists(success) ||
+        graft.sources.PathState.classify(dir, hconf) ==
+          graft.sources.PathState.Data
+      graft.operators.Dedup.incrementalSequenceNearDups(
+        batch, idCol, frameCol, hashCol, storePath,
+        maxHamming = maxHamming, numBands = numBands,
+        minVoteFrac = minVoteFrac, maxShift = maxShift,
+        onPairs = out =>
+          if (!durable) {
+            out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(dir)
+            ()
+          } else if (!out.isEmpty) {
+            // a durable subdir plus a NON-empty recompute is either the
+            // pre-fold crash retry (recompute ≡ durable rows — skip,
+            // idempotent) or a FRESH-checkpoint stream whose epoch ids
+            // collide with a previous stream's durable epochs — there
+            // both skipping and overwriting silently lose one side's
+            // pairs, so refuse loudly instead (review r16). The set
+            // compare is two anti-joins on per-epoch frames, no collect
+            val existing = graft.sources.StoreParquet.open(spark, dir)
+              .select(out.columns.map(org.apache.spark.sql.functions.col): _*)
+            require(out.exceptAll(existing).isEmpty &&
+                existing.exceptAll(out).isEmpty,
+              s"pairs epoch subdir '$dir' already holds DIFFERENT " +
+                "durable content — a stream restarted with a fresh " +
+                "checkpoint is colliding with a previous stream's " +
+                "epochs; resume from the original checkpoint or point " +
+                "the stream at a new store generation")
+          })
+      afterFold(batchId)
+    }
   }
 
   /** Streaming soft-dedup weight maintenance — the continuous form of
@@ -501,17 +474,12 @@ object Streams {
       shingleN: Int = 3, numHashes: Int = 12, numBands: Int = 4,
       threshold: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Dedup.foldSoftDedupWeightsBatch(
-          batch.toDF(), idCol, tokensCol, storePath, batchId,
-          shingleN = shingleN, numHashes = numHashes, numBands = numBands,
-          threshold = threshold)
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(docs, checkpoint) { (batch, batchId) =>
+      graft.operators.Dedup.foldSoftDedupWeightsBatch(
+        batch, idCol, tokensCol, storePath, batchId,
+        shingleN = shingleN, numHashes = numHashes, numBands = numBands,
+        threshold = threshold)
+    }
   }
 
   /** Streaming quality-card maintenance — the continuous form of
@@ -525,15 +493,10 @@ object Streams {
     */
   def streamingProfile(rows: DataFrame, cols: Seq[String], storePath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Profile.appendProfile(
-          batch.toDF(), cols, s"epoch_$batchId", storePath)
-        ()
-      }
-      .outputMode("update")
-      .start()
+    foreachEpoch(rows, checkpoint) { (batch, batchId) =>
+      graft.operators.Profile.appendProfile(
+        batch, cols, s"epoch_$batchId", storePath)
+    }
   }
 
   /** File-stream wiring: an events parquet directory tailed as a stream →

@@ -656,9 +656,10 @@ class DedupSpec extends SparkSpec {
       eval.toDF("eid", "eh"), "eid", "eh").queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
       s"eval side must broadcast:\n$plan")
-    intercept[IllegalArgumentException](Dedup.hammingContaminationPairs(
-      corpus.toDF("id", "h"), "id", "h",
-      eval.toDF("eid", "eh"), "eid", "eh", maxHamming = 4, numBands = 4))
+    for ((t, bands) <- Seq((4, 4), (3, 7)))
+      intercept[IllegalArgumentException](Dedup.hammingContaminationPairs(
+        corpus.toDF("id", "h"), "id", "h",
+        eval.toDF("eid", "eh"), "eid", "eh", maxHamming = t, numBands = bands))
   }
 
   test("incrementalSequenceNearDups: history pairing, replay idempotence, foreign refusal") {
@@ -699,6 +700,20 @@ class DedupSpec extends SparkSpec {
     assert(run(batch2) === Set.empty)
     assert(spark.read.parquet(s"$store/sigs").count() ==
       storeRows1 + 8 + 10 + 8 + 6)
+    // guards refuse before the fold: the store keeps its row count
+    val sigsBefore = spark.read.parquet(s"$store/sigs").count()
+    val fresh = rows(Seq((400L, Seq.fill(8)(rnd.nextLong()))))
+    val constantFrame = rows((500L until 550L).map(i => (i, Seq(0L))))
+    def refuses(call: => Any): Unit = {
+      intercept[IllegalArgumentException](call)
+      assert(spark.read.parquet(s"$store/sigs").count() == sigsBefore)
+    }
+    refuses(Dedup.incrementalSequenceNearDups(fresh, "id", "f", "h", store,
+      maxHamming = 4, numBands = 4))
+    refuses(Dedup.incrementalSequenceNearDups(fresh, "id", "f", "h", store,
+      minVoteFrac = 0.0))
+    refuses(Dedup.incrementalSequenceNearDups(constantFrame, "id", "f", "h", store,
+      maxBandBucket = 10L))
     // crash-recovery classification: a visibly-foreign directory refuses
     val foreign = java.nio.file.Files.createTempDirectory("seqforeign")
     java.nio.file.Files.createDirectories(foreign.resolve("sigs"))

@@ -37,6 +37,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * (every `*FromIndex` reader opens through `VectorStores.open`), and no
   * `def …FromCatalog` exists under `src/main/scala` — a catalog read is
   * the reader over `Generations.resolve(root, hconf)`.
+  *
+  * A sixth keeps one banded-hash core and one streaming sink wiring:
+  * outside comments, `shiftrightunsigned(` (the bit-band projection)
+  * appears once under `graft/operators` — in `Dedup`'s shared band
+  * helper — and `.foreachBatch {` appears once in
+  * `graft/streaming/Streams.scala`.
   */
 class StoreReadInventorySpec extends AnyFunSuite {
 
@@ -74,6 +80,11 @@ class StoreReadInventorySpec extends AnyFunSuite {
     """\b(requireEncoding|requireConsistentModel)\s*(\[[^\]]*\])?\s*\(""".r
   private val readHome = "graft/operators/VectorStores.scala"
   private val catalogTwin = """\bdef\s+\w*FromCatalog\w*""".r
+
+  private val bandProjection = """\bshiftrightunsigned\s*\(""".r
+  private val bandHome = "graft/operators/Dedup.scala"
+  private val sinkWiring = """\.\s*foreachBatch\s*\{""".r
+  private val sinkHome = "graft/streaming/Streams.scala"
 
   private val root = java.nio.file.Paths.get("src/main/scala")
   private val testRoot = java.nio.file.Paths.get("src/test/scala")
@@ -160,6 +171,17 @@ class StoreReadInventorySpec extends AnyFunSuite {
         s"instead of adding a *FromCatalog twin; found: $twins")
   }
 
+  test("one banded-hash core in Dedup and one foreachBatch wiring in Streams") {
+    val bands = scan("graft/operators", bandProjection)
+    assert(bands == Map(bandHome -> 1),
+      "split 64-bit hashes into bit-bands through Dedup's shared band " +
+        s"helper instead of spelling the projection again; found: $bands")
+    val sinks = scan("graft/streaming", sinkWiring)
+    assert(sinks == Map(sinkHome -> 1),
+      "wire a streaming maintenance wrapper through Streams' shared " +
+        s"foreachBatch helper instead of spelling the chain again; found: $sinks")
+  }
+
   test("the scan sees the spellings it gates") {
     val src = """val a = spark.read.parquet(s"$p/vectors")
       |val b = spark.read.option("basePath", w)
@@ -203,5 +225,17 @@ class StoreReadInventorySpec extends AnyFunSuite {
       |  * [[opqTopKFromCatalog]] in a scaladoc, def opqTopKFromCatalog too
       |Search.ivfTopKFromCatalog(spark, root, "embedding", q, 5)""".stripMargin
     assert(catalogTwin.findAllMatchIn(code(twins)).size == 2)
+    val band = """shiftrightunsigned(col(h), b * width).bitwiseAND(lit(mask))
+      |  functions.shiftrightunsigned (c, 16)
+      |// shiftrightunsigned(commented)
+      |  * [[shiftrightunsigned]] in a scaladoc, shiftrightunsigned(x) too
+      |val shiftrightunsignedBits = 1""".stripMargin
+    assert(bandProjection.findAllMatchIn(code(band)).size == 2)
+    val sink = """.foreachBatch { (batch: Dataset[Row], id: Long) =>
+      |  stream.writeStream. foreachBatch {
+      |// .foreachBatch { commented
+      |  * via `foreachBatch` + appendIndex in a scaladoc, .foreachBatch { too
+      |.foreachBatch(new VoidFunction2[Dataset[Row], java.lang.Long] {""".stripMargin
+    assert(sinkWiring.findAllMatchIn(code(sink)).size == 2)
   }
 }
