@@ -406,43 +406,44 @@ object Dedup {
     val spark = batch.sparkSession
     val linePath = s"$storePath/lines"
     val docPath = s"$storePath/docs"
-    def classified(p: String): graft.sources.PathState.Value =
-      graft.sources.PathState.classify(p, spark.sparkContext.hadoopConfiguration)
-    Seq(linePath, docPath).foreach { p =>
-      require(classified(p) != graft.sources.PathState.Foreign,
+    def store(p: String, cols: (String, String)*): DataFrame =
+      StoreParquet.openAppendable(spark, p,
         s"line-dedup store '$p' exists but holds no parquet data files — " +
           "refusing to fold state into a directory that is not a store")
+        .getOrElse(StoreParquet.emptyStore(spark, cols: _*))
+    val lineStore = store(linePath, "_h" -> "string")
+    val docStore = store(docPath, "_id" -> "long")
+    withCached { cache =>
+      val fresh = cache(batch.dropDuplicates(idCol)
+        .join(docStore, batch(idCol) === docStore("_id"), "left_anti"))
+      val lines = explodeLines(fresh, idCol, textCol, delim)
+        .withColumn("_h", sha2(col("_line"), 256))
+      val winners = cache(lines.groupBy(col("_h"))
+        .agg(min(struct(col(idCol), col("_idx"))).as("_win"))
+        .join(lineStore, Seq("_h"), "left_anti"))
+      val flagged = lines.join(winners, Seq("_h"), "left")
+        .withColumn("_keep", col("_win").isNotNull &&
+          col("_win")(idCol) === col(idCol) && col("_win")("_idx") === col("_idx"))
+      val out = CheckpointStrategy.materialize(
+        rebuildFromLines(fresh, flagged, idCol, delim), checkpoint)
+      onBatch(out)
+      fresh.select(col(idCol).as("_id")).write
+        .mode(org.apache.spark.sql.SaveMode.Append).parquet(docPath)
+      winners.select(col("_h")).write
+        .mode(org.apache.spark.sql.SaveMode.Append).parquet(linePath)
+      out
     }
-    val lineStore =
-      if (classified(linePath) == graft.sources.PathState.Data)
-        StoreParquet.open(spark, linePath)
-      else spark.emptyDataFrame.withColumn("_h", lit(null).cast("string")).limit(0)
-    val docStore =
-      if (classified(docPath) == graft.sources.PathState.Data)
-        StoreParquet.open(spark, docPath)
-      else spark.emptyDataFrame.withColumn("_id", lit(null).cast("long")).limit(0)
-    val fresh = batch.dropDuplicates(idCol)
-      .join(docStore, batch(idCol) === docStore("_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lines = explodeLines(fresh, idCol, textCol, delim)
-      .withColumn("_h", sha2(col("_line"), 256))
-    val winners = lines.groupBy(col("_h"))
-      .agg(min(struct(col(idCol), col("_idx"))).as("_win"))
-      .join(lineStore, Seq("_h"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val flagged = lines.join(winners, Seq("_h"), "left")
-      .withColumn("_keep", col("_win").isNotNull &&
-        col("_win")(idCol) === col(idCol) && col("_win")("_idx") === col("_idx"))
-    val out = CheckpointStrategy.materialize(
-      rebuildFromLines(fresh, flagged, idCol, delim), checkpoint)
-    onBatch(out)
-    fresh.select(col(idCol).as("_id")).write
-      .mode(org.apache.spark.sql.SaveMode.Append).parquet(docPath)
-    winners.select(col("_h")).write
-      .mode(org.apache.spark.sql.SaveMode.Append).parquet(linePath)
-    fresh.unpersist(false)
-    winners.unpersist(false)
-    out
+  }
+
+  /** Runs `body` with a `cache` (persist, memory and disk) whose frames are
+    * all released, newest first, however `body` ends.
+    */
+  private def withCached[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df =>
+      held += df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    } finally held.reverseIterator.foreach(_.unpersist(false))
   }
 
   /** Exact duplicate-SPAN removal (Lee et al. 2022 "Deduplicating Training
@@ -1117,9 +1118,7 @@ object Dedup {
           "ONLY for _SUCCESS-less deployments after certifying completeness)")
       val adoptable =
         if (assumeJobCommitted)
-          unmarked.filter { case (_, p) =>
-            graft.sources.PathState.classify(p, hconf) ==
-              graft.sources.PathState.Data }
+          unmarked.filter(e => graft.sources.PathState.hasData(e._2, hconf))
         else unmarked
       // mark in DESCENDING batch-id order: a crash mid-loop then leaves
       // the unmarked leftovers at ids BELOW some marked batch — a shape
@@ -1187,12 +1186,10 @@ object Dedup {
         org.apache.spark.sql.types.LongType): DataFrame = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val weightsPath = s"$storePath/weights"
-    val state = graft.sources.PathState.classify(weightsPath, hconf)
-    require(state != graft.sources.PathState.Foreign,
-      s"weights store '$weightsPath' holds non-parquet content — refusing " +
-        "to read it as an empty store")
     val committed =
-      if (state == graft.sources.PathState.Data) {
+      if (StoreParquet.appendable(spark, weightsPath,
+          s"weights store '$weightsPath' holds non-parquet content — refusing " +
+            "to read it as an empty store")) {
         val (ok, partial) = batchDirs(weightsPath, hconf)
         val maxCommitted = ok.lastOption.map(_._1)
         val jobCommitted = partial
@@ -1267,8 +1264,7 @@ object Dedup {
     // at the TOP of every fold, so it taxed every micro-batch once the
     // store had ever compacted (r20 optimization round, guide §5;
     // VERDICT r19 item 2's "Observation-fed ledger" shape)
-    if (graft.sources.PathState.classify(ledgerPath, hconf) ==
-        graft.sources.PathState.Data &&
+    if (graft.sources.PathState.hasData(ledgerPath, hconf) &&
         graft.sources.SidecarParquet.readGroups(ledgerPath, hconf)
           .exists(g =>
             graft.sources.SidecarParquet.longAt(g, "batch_id") == batchId))
@@ -1389,13 +1385,11 @@ object Dedup {
   def compactSoftDedupWeights(spark: SparkSession, storePath: String,
       dstPath: String, upToBatchId: Long, idCol: String = "id",
       targetFiles: Int = 4): Long = {
-    require(storePath != dstPath,
-      "compactSoftDedupWeights writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory("compactSoftDedupWeights", storePath, dstPath)
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
     val hconf = spark.sparkContext.hadoopConfiguration
     val weightsPath = s"$storePath/weights"
-    require(graft.sources.PathState.classify(weightsPath, hconf) ==
-      graft.sources.PathState.Data,
+    StoreParquet.requireExisting(spark, weightsPath,
       s"'$weightsPath' holds no parquet data files — not a weights store")
     // legacy (job-committed, marker-less) subdirs refuse EVERYWHERE, not
     // just below the boundary: one above it would be silently dropped
@@ -1435,12 +1429,14 @@ object Dedup {
     markSubdirCommitted(snapDir, hconf)
     // live patches carried over verbatim, one small job each (bounded by
     // epochs since the boundary — the in-flight window)
-    live.foreach { case (id, src) =>
-      val dst = s"$dstPath/weights/batch_id=$id"
-      StoreParquet.open(spark, src)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst)
-      markSubdirCommitted(dst, hconf)
-    }
+    def carry(dirs: Seq[(Long, String)], leg: String): Unit =
+      dirs.foreach { case (id, src) =>
+        val dst = s"$dstPath/$leg/batch_id=$id"
+        StoreParquet.open(spark, src)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst)
+        markSubdirCommitted(dst, hconf)
+      }
+    carry(live, "weights")
     // ---- ledger: prior generations' absorbed ids carried forward ----
     import spark.implicits._
     val ledgerPath = s"$weightsPath/_folded"
@@ -1449,8 +1445,7 @@ object Dedup {
     // a bounded local computation, so the ledger write job runs over a
     // LocalTableScan instead of union+aggregate subtrees
     val prior: Seq[(Long, Long)] =
-      if (graft.sources.PathState.classify(ledgerPath, hconf) ==
-          graft.sources.PathState.Data)
+      if (graft.sources.PathState.hasData(ledgerPath, hconf))
         graft.sources.SidecarParquet.readGroups(ledgerPath, hconf)
           .map(g => (graft.sources.SidecarParquet.longAt(g, "batch_id"),
             graft.sources.SidecarParquet.longAt(g, "folded_into")))
@@ -1482,22 +1477,14 @@ object Dedup {
       val closedPairs = StoreParquet.open(spark, pairsPath,
         closedPairsDirs.map(_._2)).drop("batch_id")
       val n = closedPairs.count()
-      val dataCols = closedPairs.columns.toSeq.map(col)
       val foldDir = s"$dstPath/pairs/batch_id=$upToBatchId"
-      closedPairs.repartitionByRange(
-          math.max(1, math.min(targetFiles, closedPairsDirs.size)), dataCols: _*)
-        .sortWithinPartitions(dataCols: _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(foldDir)
-      val out = StoreParquet.open(spark, foldDir).count()
+      val out = StoreParquet.rewriteSorted(closedPairs,
+        closedPairs.columns.toSeq.map(col),
+        math.max(1, math.min(targetFiles, closedPairsDirs.size)), foldDir)
       require(out == n, s"pairs compaction row mismatch: source $n, folded $out")
       markSubdirCommitted(foldDir, hconf)
     }
-    livePairsDirs.foreach { case (id, src) =>
-      val dst = s"$dstPath/pairs/batch_id=$id"
-      StoreParquet.open(spark, src)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dst)
-      markSubdirCommitted(dst, hconf)
-    }
+    carry(livePairsDirs, "pairs")
     snapObs.get("rows").asInstanceOf[Long]
   }
 
@@ -1510,8 +1497,7 @@ object Dedup {
       storePath: String): Seq[Long] = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val weightsPath = s"$storePath/weights"
-    if (graft.sources.PathState.classify(weightsPath, hconf) !=
-      graft.sources.PathState.Data) Seq.empty
+    if (!graft.sources.PathState.hasData(weightsPath, hconf)) Seq.empty
     else batchDirs(weightsPath, hconf)._1.map(_._1)
   }
 
@@ -2154,6 +2140,48 @@ object Dedup {
         col("matched_frames"), col("total_frames"), col("vote_frac"))
   }
 
+  /** The fold both incremental twins run, under [[withCached]]: `fresh`
+    * (the `unseen` batch rows) and `all` (fresh ∪ store, flagged `_new`)
+    * go to `pairsOf`, whose pairs are emitted before `fresh` appends to
+    * `storePath`.
+    */
+  private def foldIncremental(unseen: DataFrame, store: DataFrame,
+      storePath: String, onPairs: DataFrame => Unit,
+      checkpoint: CheckpointStrategy, pairsSink: Option[DataFrame => DataFrame])(
+      pairsOf: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame =
+    withCached { cache =>
+      val fresh = cache(unseen)
+      val all = cache(fresh.withColumn("_new", lit(true))
+        .unionByName(store.withColumn("_new", lit(false))))
+      val verified = pairsOf(fresh, all, cache)
+      // ORDERING MATTERS for durability: materialize pairs, hand them to the
+      // caller's sink (`onPairs` — e.g. the streaming wrapper's parquet
+      // append) and only THEN fold the batch into the store. A crash after
+      // the sink but before the store append replays the batch and at worst
+      // re-emits the same pairs (at-least-once); the reverse order would
+      // LOSE them forever (replayed ids anti-join out, pairs never written).
+      // Durability of the cut itself is the caller's CheckpointStrategy
+      // (cluster runs: Reliable or Parquet — the default Local cut is
+      // single-JVM, as in minhashNearDupPairs).
+      //
+      // `pairsSink` (r20 optimization round, guide §1.2): when the caller's
+      // sink is itself a durable parquet write, that write IS the
+      // materialization — sink the UNmaterialized pairs and continue from
+      // the durable frame the sink returns, one job instead of
+      // checkpoint-then-write. Same crash ordering (the sink still runs
+      // before the store fold); a sink that skips the write on a replayed
+      // durable epoch simply never evaluates the pair subtree at all.
+      val out = pairsSink match {
+        case Some(sink) => sink(verified)
+        case None =>
+          val m = CheckpointStrategy.materialize(verified, checkpoint)
+          onPairs(m)
+          m
+      }
+      fresh.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(storePath)
+      out
+    }
+
   /** INCREMENTAL sequence near-dup detection against a persisted signature
     * store — the continuous-ingest shape for perceptual video/audio dedup
     * ([[incrementalNearDupPairs]]'s discipline applied to R135/R136): each
@@ -2193,63 +2221,37 @@ object Dedup {
     require(maxShift >= 0, s"maxShift must be ≥ 0, got $maxShift")
     val spark = batch.sparkSession
     val sigPath = s"$storePath/sigs"
-    val state = graft.sources.PathState.classify(
-      sigPath, spark.sparkContext.hadoopConfiguration)
-    require(state != graft.sources.PathState.Foreign,
+    val store = StoreParquet.openAppendable(spark, sigPath,
       s"signature store '$sigPath' exists but holds no parquet data files — " +
         "refusing to fold signatures into a directory that is not a store")
-    val store =
-      if (state == graft.sources.PathState.Data) StoreParquet.open(spark, sigPath)
-      else spark.emptyDataFrame
-        .withColumn("id", lit(null).cast("long"))
-        .withColumn("f", lit(null).cast("int"))
-        .withColumn("h", lit(null).cast("long")).limit(0)
-    val fresh = batch
+      .getOrElse(StoreParquet.emptyStore(spark, "id" -> "long", "f" -> "int",
+        "h" -> "long"))
+    val unseen = batch
       .select(col(idCol).cast("long").as("id"), col(frameCol).cast("int").as("f"),
         col(hashCol).cast("long").as("h"))
       .dropDuplicates("id", "f")
       .join(store.select(col("id")).distinct(), Seq("id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val all = fresh.withColumn("_new", lit(true))
-        .unionByName(store.withColumn("_new", lit(false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val bandedAll = bandRows(all, "h", numBands, "id", "f", "_new")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          refuseHotBucket(bandedAll, maxBandBucket, "frame rows", "_bi", "_bv")
-          val a = bandRows(fresh.withColumn("_new", lit(true)), "h", numBands,
-            "id", "f", "_new")
-          val cand = a.as("a").join(bandedAll.as("b"),
-              col("a._bi") === col("b._bi") && col("a._bv") === col("b._bv") &&
-                abs(col("b.f") - col("a.f")) <= maxShift &&
-                // new×new once; new×old always from the new side
-                when(col("b._new"), col("a.id") < col("b.id"))
-                  .otherwise(col("a.id") =!= col("b.id")))
-            // normalize to id1 < id2; the offset sign follows the swap
-            .select(least(col("a.id"), col("b.id")).as("id1"),
-              greatest(col("a.id"), col("b.id")).as("id2"),
-              when(col("a.id") < col("b.id"), col("b.f") - col("a.f"))
-                .otherwise(col("a.f") - col("b.f")).as("frame_offset"))
-            .distinct()
-          val base = all.select(col("id").as("_id"), col("f").as("_f"), col("h").as("_h"))
-          val verified = offsetVoteFromCandidates(cand, base, maxHamming, minVoteFrac)
-          // materialize-via-sink when the caller's durable write can BE
-          // the cut (one job instead of checkpoint-then-write — see
-          // incrementalNearDupPairs's ordering + pairsSink notes)
-          val out = pairsSink match {
-            case Some(sink) => sink(verified)
-            case None =>
-              val m = CheckpointStrategy.materialize(verified, checkpoint)
-              onPairs(m)
-              m
-          }
-          fresh.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sigPath)
-          out
-        } finally { bandedAll.unpersist(false); () }
-      } finally { all.unpersist(false); () }
-    } finally { fresh.unpersist(false); () }
+    foldIncremental(unseen, store, sigPath, onPairs, checkpoint,
+        pairsSink) { (fresh, all, cache) =>
+      val bandedAll = cache(bandRows(all, "h", numBands, "id", "f", "_new"))
+      refuseHotBucket(bandedAll, maxBandBucket, "frame rows", "_bi", "_bv")
+      val a = bandRows(fresh.withColumn("_new", lit(true)), "h", numBands,
+        "id", "f", "_new")
+      val cand = a.as("a").join(bandedAll.as("b"),
+          col("a._bi") === col("b._bi") && col("a._bv") === col("b._bv") &&
+            abs(col("b.f") - col("a.f")) <= maxShift &&
+            // new×new once; new×old always from the new side
+            when(col("b._new"), col("a.id") < col("b.id"))
+              .otherwise(col("a.id") =!= col("b.id")))
+        // normalize to id1 < id2; the offset sign follows the swap
+        .select(least(col("a.id"), col("b.id")).as("id1"),
+          greatest(col("a.id"), col("b.id")).as("id2"),
+          when(col("a.id") < col("b.id"), col("b.f") - col("a.f"))
+            .otherwise(col("a.f") - col("b.f")).as("frame_offset"))
+        .distinct()
+      val base = all.select(col("id").as("_id"), col("f").as("_f"), col("h").as("_h"))
+      offsetVoteFromCandidates(cand, base, maxHamming, minVoteFrac)
+    }
   }
 
   /** Incremental near-dup detection against a persisted sketch store (EXT):
@@ -2281,22 +2283,15 @@ object Dedup {
     val spark = batch.sparkSession
     val rowsPerBand = numHashes / numBands
     val sketchPath = s"$storePath/sketches"
-    // explicit FS classification shared with Index.appendIndex: a
-    // crashed previous append (only _temporary leftovers) classifies as
-    // Empty and RECOVERS; visible foreign content refuses loudly
-    val state = graft.sources.PathState.classify(
-      sketchPath, spark.sparkContext.hadoopConfiguration)
-    require(state != graft.sources.PathState.Foreign,
+    // the append-or-create gate shared with Index.appendIndex: a crashed
+    // previous append (only _temporary leftovers) reads as empty and
+    // RECOVERS; visible foreign content refuses loudly
+    val store = StoreParquet.openAppendable(spark, sketchPath,
       s"sketch store '$sketchPath' exists but holds no parquet data files — " +
         "refusing to fold sketches into a directory that is not a store")
-    val storeExists = state == graft.sources.PathState.Data
-    val store =
-      if (storeExists) StoreParquet.open(spark, sketchPath)
-      else spark.emptyDataFrame
-        .withColumn("id", lit(null).cast("long"))
-        .withColumn("sig", lit(null).cast("array<bigint>"))
-        .withColumn("shl", lit(null).cast("array<bigint>")).limit(0)
-    val fresh = batch
+      .getOrElse(StoreParquet.emptyStore(spark, "id" -> "long",
+        "sig" -> "array<bigint>", "shl" -> "array<bigint>"))
+    val unseen = batch
       .select(col(idCol).as("id"), TextFunctions.shingles(col(tokensCol), shingleN).as("sh0"))
       .where(size(col("sh0")) > 0)
       .select(col("id"),
@@ -2306,62 +2301,33 @@ object Dedup {
         org.apache.spark.sql.graft.HashColumns.md5PrefixLongArray(col("sh0")).as("shl"))
       .dropDuplicates("id")
       .join(store.select(col("id")), Seq("id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = fresh.withColumn("_new", lit(true))
-      .unionByName(store.withColumn("_new", lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def bands(df: DataFrame) = df.select(col("id"), col("_new"),
-      explode(lshBandKeys(col("sig"), numBands, rowsPerBand)).as("band"))
-    // salted asymmetric join: the (small) new side replicates over salts,
-    // the full side carries a deterministic id-hash salt — same result set
-    // as the unsalted join, mega-bands spread over bandSalts tasks
-    val a = bands(fresh.withColumn("_new", lit(true)))
-      .withColumn("_sa", explode(sequence(lit(0), lit(bandSalts - 1))))
-    val b = bands(all).withColumn("_sb", pmod(hash(col("id")), lit(bandSalts)))
-    val cand = a.as("a").join(b.as("b"),
-        col("a.band") === col("b.band") && col("a._sa") === col("b._sb") &&
-          // new×new once (a.id < b.id); new×old always from the new side
-          (when(col("b._new"), col("a.id") < col("b.id"))
-            .otherwise(col("a.id") =!= col("b.id"))))
-      .select(least(col("a.id"), col("b.id")).as("id1"),
-        greatest(col("a.id"), col("b.id")).as("id2"))
-      .distinct()
-    val verified = cand
-      .join(all.select(col("id").as("id1"), col("shl").as("sh1")), "id1")
-      .join(all.select(col("id").as("id2"), col("shl").as("sh2")), "id2")
-      .withColumn("_inter", size(array_intersect(col("sh1"), col("sh2"))))
-      .withColumn("jaccard",
-        col("_inter").cast("double") / (size(col("sh1")) + size(col("sh2")) - col("_inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("jaccard"))
-    // ORDERING MATTERS for durability: materialize pairs, hand them to the
-    // caller's sink (`onPairs` — e.g. the streaming wrapper's parquet
-    // append) and only THEN fold sketches into the store. A crash after
-    // the sink but before the store append replays the batch and at worst
-    // re-emits the same pairs (at-least-once); the reverse order would
-    // LOSE them forever (replayed ids anti-join out, pairs never written).
-    // Durability of the cut itself is the caller's CheckpointStrategy
-    // (cluster runs: Reliable or Parquet — the default Local cut is
-    // single-JVM, as in minhashNearDupPairs).
-    //
-    // `pairsSink` (r20 optimization round, guide §1.2): when the caller's
-    // sink is itself a durable parquet write, that write IS the
-    // materialization — sink the UNmaterialized pairs and continue from
-    // the durable frame the sink returns, one job instead of
-    // checkpoint-then-write. Same crash ordering (the sink still runs
-    // before the sketch fold); a sink that skips the write on a replayed
-    // durable epoch simply never evaluates the pair subtree at all.
-    val out = pairsSink match {
-      case Some(sink) => sink(verified)
-      case None =>
-        val m = CheckpointStrategy.materialize(verified, checkpoint)
-        onPairs(m)
-        m
+    foldIncremental(unseen, store, sketchPath, onPairs, checkpoint,
+        pairsSink) { (fresh, all, _) =>
+      def bands(df: DataFrame) = df.select(col("id"), col("_new"),
+        explode(lshBandKeys(col("sig"), numBands, rowsPerBand)).as("band"))
+      // salted asymmetric join: the (small) new side replicates over salts,
+      // the full side carries a deterministic id-hash salt — same result set
+      // as the unsalted join, mega-bands spread over bandSalts tasks
+      val a = bands(fresh.withColumn("_new", lit(true)))
+        .withColumn("_sa", explode(sequence(lit(0), lit(bandSalts - 1))))
+      val b = bands(all).withColumn("_sb", pmod(hash(col("id")), lit(bandSalts)))
+      val cand = a.as("a").join(b.as("b"),
+          col("a.band") === col("b.band") && col("a._sa") === col("b._sb") &&
+            // new×new once (a.id < b.id); new×old always from the new side
+            (when(col("b._new"), col("a.id") < col("b.id"))
+              .otherwise(col("a.id") =!= col("b.id"))))
+        .select(least(col("a.id"), col("b.id")).as("id1"),
+          greatest(col("a.id"), col("b.id")).as("id2"))
+        .distinct()
+      cand
+        .join(all.select(col("id").as("id1"), col("shl").as("sh1")), "id1")
+        .join(all.select(col("id").as("id2"), col("shl").as("sh2")), "id2")
+        .withColumn("_inter", size(array_intersect(col("sh1"), col("sh2"))))
+        .withColumn("jaccard",
+          col("_inter").cast("double") / (size(col("sh1")) + size(col("sh2")) - col("_inter")))
+        .where(col("jaccard") >= threshold)
+        .select(col("id1"), col("id2"), col("jaccard"))
     }
-    fresh.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sketchPath)
-    fresh.unpersist(false)
-    all.unpersist(false)
-    out
   }
 
   /** Cross-corpus perceptual CONTAMINATION (the text-decontamination
@@ -2417,25 +2383,9 @@ object Dedup {
     * @return number of sketch rows (== source)
     */
   def compactNearDupSketches(spark: SparkSession, storePath: String,
-      dstPath: String, targetFiles: Int = 16): Long = {
-    require(storePath != dstPath,
-      "compactNearDupSketches writes a NEW directory (caller swaps atomically)")
-    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val src = s"$storePath/sketches"
-    val state = graft.sources.PathState.classify(
-      src, spark.sparkContext.hadoopConfiguration)
-    require(state == graft.sources.PathState.Data,
-      s"'$src' holds no parquet data files — not a near-dup sketch store")
-    val sk = StoreParquet.open(spark, src)
-    val n = sk.count()
-    sk.repartitionByRange(targetFiles, col("id"))
-      .sortWithinPartitions("id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dstPath/sketches")
-    val out = StoreParquet.open(spark, s"$dstPath/sketches").count()
-    require(out == n, s"compaction row mismatch: source $n, compacted $out")
-    out
-  }
+      dstPath: String, targetFiles: Int = 16): Long =
+    compactIdStore(spark, "compactNearDupSketches", storePath, dstPath,
+      targetFiles, "sketches", Seq("id"), "near-dup sketch store")
 
   /** Compact the incremental sequence-signature store
     * ([[incrementalSequenceNearDups]]): sustained ingest appends one
@@ -2452,22 +2402,26 @@ object Dedup {
     * Row-count parity is verified before returning.
     */
   def compactSequenceStore(spark: SparkSession, storePath: String,
-      dstPath: String, targetFiles: Int = 16): Long = {
-    require(storePath != dstPath,
-      "compactSequenceStore writes a NEW directory (caller swaps atomically)")
+      dstPath: String, targetFiles: Int = 16): Long =
+    compactIdStore(spark, "compactSequenceStore", storePath, dstPath,
+      targetFiles, "sigs", Seq("id", "f"), "signature store")
+
+  /** The new-directory compactor of the id-keyed incremental stores
+    * ([[compactNearDupSketches]], [[compactSequenceStore]]): the `leg`
+    * rewritten into `targetFiles` files range-sorted on `keys`, its row
+    * count parity-checked against the source.
+    */
+  private def compactIdStore(spark: SparkSession, op: String,
+      storePath: String, dstPath: String, targetFiles: Int, leg: String,
+      keys: Seq[String], noun: String): Long = {
+    StoreParquet.requireNewDirectory(op, storePath, dstPath)
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val src = s"$storePath/sigs"
-    val state = graft.sources.PathState.classify(
-      src, spark.sparkContext.hadoopConfiguration)
-    require(state == graft.sources.PathState.Data,
-      s"'$src' holds no parquet data files — not a signature store")
-    val sigs = StoreParquet.open(spark, src)
-    val n = sigs.count()
-    sigs.repartitionByRange(targetFiles, col("id"), col("f"))
-      .sortWithinPartitions("id", "f")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dstPath/sigs")
-    val out = StoreParquet.open(spark, s"$dstPath/sigs").count()
+    val src = s"$storePath/$leg"
+    val store = StoreParquet.openExisting(spark, src,
+      s"'$src' holds no parquet data files — not a $noun")
+    val n = store.count()
+    val out = StoreParquet.rewriteSorted(store, keys.map(col), targetFiles,
+      s"$dstPath/$leg")
     require(out == n, s"compaction row mismatch: source $n, compacted $out")
     out
   }
@@ -2500,15 +2454,11 @@ object Dedup {
     */
   def compactSequencePairs(spark: SparkSession, storePath: String,
       dstPath: String, upToBatchId: Long, targetFiles: Int = 16): Long = {
-    require(storePath != dstPath,
-      "compactSequencePairs writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory("compactSequencePairs", storePath, dstPath)
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
     val src = s"$storePath/pairs"
-    val state = graft.sources.PathState.classify(
-      src, spark.sparkContext.hadoopConfiguration)
-    require(state == graft.sources.PathState.Data,
+    val pairs = StoreParquet.openExisting(spark, src,
       s"'$src' holds no parquet data files — not a pairs store")
-    val pairs = StoreParquet.open(spark, src)
     require(pairs.columns.contains("batch_id"),
       s"'$src' has no batch_id partition column — not a streaming pairs store")
     val n = pairs.count()
@@ -2523,12 +2473,12 @@ object Dedup {
         .parquet(s"$dstPath/pairs")
     val closed = pairs.where(col("batch_id") <= upToBatchId)
       .select(dataCols: _*)
-    if (closed.limit(1).count() > 0)
-      closed.repartitionByRange(targetFiles, dataCols: _*)
-        .sortWithinPartitions(dataCols: _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$dstPath/pairs/batch_id=$upToBatchId")
-    val out = StoreParquet.open(spark, s"$dstPath/pairs").count()
+    // the parity read-back spans the whole root, carried live rows too
+    val out =
+      if (closed.limit(1).count() > 0) StoreParquet.rewriteSorted(closed,
+        dataCols, targetFiles, s"$dstPath/pairs/batch_id=$upToBatchId",
+        countAt = Some(s"$dstPath/pairs"))
+      else StoreParquet.open(spark, s"$dstPath/pairs").count()
     require(out == n, s"compaction row mismatch: source $n, compacted $out")
     n
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.model._
-import graft.sources.PathState
 import graft.sources.StoreParquet
 
 /** The end-to-end indexing pipeline — the reference's whole purpose
@@ -85,19 +84,13 @@ object Index {
       cfg: IndexConfig = IndexConfig(),
       createdAt: Option[java.time.Instant] = None)(
       implicit spark: SparkSession): Long = {
-    // Explicit filesystem classification (graft.sources.PathState — shared
-    // with the dedup sketch store): empty/failed-first-write targets
-    // recover, parquet targets are read (corrupt footers fail the read
-    // loudly), and a directory holding OTHER visible files is refused —
-    // appending chunks into a non-index would duplicate/mix data.
-    val state = PathState.classify(path, spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
+    // the append-or-create gate: a failed first write recovers; a directory
+    // of OTHER visible files is refused (appending would mix data into it)
+    val existingIds = StoreParquet.openAppendable(spark, path,
       s"appendIndex target '$path' exists but contains no parquet data files — " +
         "refusing to append into a directory that is not an index")
-    val existingIds =
-      if (state == PathState.Empty)
-        spark.emptyDataFrame.withColumn("doc_id", lit(null).cast("long")).limit(0)
-      else StoreParquet.open(spark, path).select(col("doc_id")).distinct()
+      .map(_.select(col("doc_id")).distinct())
+      .getOrElse(StoreParquet.emptyStore(spark, "doc_id" -> "long"))
     // the anti join only excludes docs already ON DISK; an at-least-once
     // source can deliver the same doc_id twice WITHIN one batch — keep one
     // (retries carry identical payloads, so the winner is immaterial)

@@ -160,8 +160,7 @@ object Layout {
     require(inDir != outDir,
       "compactParquet writes a NEW directory — overwriting the input while " +
         "reading it would corrupt the lake; swap via atomic rename after")
-    val bytes = parquetBytes(spark, inDir)
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+    val n = filesFor(spark, inDir, targetBytes)
     val df = spark.read.parquet(inDir).repartition(n)
     val sorted = if (sortWithin.isEmpty) df else df.sortWithinPartitions(sortWithin: _*)
     sorted.write.mode(SaveMode.Overwrite).parquet(outDir)
@@ -184,23 +183,19 @@ object Layout {
     require(targetBytes > 0, "targetBytes must be positive")
     require(inDir != outDir,
       "recluster writes a NEW directory (same contract as compactParquet)")
-    val n = math.max(1L,
-      (parquetBytes(spark, inDir) + targetBytes - 1) / targetBytes).toInt
+    val n = filesFor(spark, inDir, targetBytes)
     writeZOrdered(spark.read.parquet(inDir), outDir, zCols, bits, n)
     n
   }
 
-  private def parquetBytes(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var bytes = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
-    }
-    bytes
+  /** Output files of ~`targetBytes` for the VISIBLE parquet bytes under
+    * `dir`: a crashed writer's `_temporary/…` orphans are not input.
+    */
+  private def filesFor(spark: org.apache.spark.sql.SparkSession, dir: String,
+      targetBytes: Long): Int = {
+    val bytes = graft.sources.PathState.visibleParquet(dir,
+      spark.sparkContext.hadoopConfiguration).map(_._2.getLen).sum
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
   }
 
   /** Per-file bounding boxes of `cols` for a parquet directory — the

@@ -103,8 +103,7 @@ object Maintenance {
         (live, staged) => {
           Dedup.compactSoftDedupWeights(spark, live, staged,
             committedBatchId, idCol, targetFiles)
-          if (PathState.classify(s"$live/neardup/sketches", conf) ==
-              PathState.Data)
+          if (PathState.hasData(s"$live/neardup/sketches", conf))
             Dedup.compactNearDupSketches(spark, s"$live/neardup",
               s"$staged/neardup")
         },
@@ -141,8 +140,7 @@ object Maintenance {
         (live, staged) => {
           Dedup.compactSequenceStore(spark, live, staged, targetFiles)
           // an all-empty pairs store is skipped, not folded (see the policy)
-          if (PathState.classify(s"$live/pairs",
-                spark.sparkContext.hadoopConfiguration) == PathState.Data &&
+          if (PathState.hasData(s"$live/pairs", spark.sparkContext.hadoopConfiguration) &&
               StoreParquet.open(spark, s"$live/pairs").limit(1).count() > 0)
             Dedup.compactSequencePairs(spark, live, staged, committedBatchId,
               targetFiles)

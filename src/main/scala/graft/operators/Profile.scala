@@ -225,17 +225,14 @@ object Profile {
   def appendProfile(df: DataFrame, cols: Seq[String], batchId: String,
       storeDir: String): Long = {
     val spark = df.sparkSession
-    import graft.sources.PathState
     require(cols.nonEmpty, "appendProfile needs at least one column")
     require(cols.distinct.size == cols.size, s"duplicate columns in $cols")
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"columns not in schema: ${missing.mkString(", ")}")
     val vt = cols.map(c => c -> valueTypeOf(df.schema(c).dataType)).toMap
-    val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
-      s"profile store '$storeDir' holds non-parquet content — refusing to append")
-    if (state == PathState.Data && StoreParquet.open(spark, storeDir)
-        .where(col("batch_id") === batchId).limit(1).count() > 0) return 0L
+    if (StoreParquet.openAppendable(spark, storeDir,
+        s"profile store '$storeDir' holds non-parquet content — refusing to append")
+        .exists(_.where(col("batch_id") === batchId).limit(1).count() > 0)) return 0L
     // fractional min/max normalize -0.0 → 0.0 BEFORE rendering (ADVICE
     // r11): -0.0 and 0.0 parse back to EQUAL doubles but render as
     // DISTINCT strings, so a stored "-0.0" would make [[mergedProfile]]'s

@@ -165,18 +165,14 @@ object Search {
     */
   def appendTextIndex(docs: DataFrame, idCol: String, tokensCol: String,
       path: String)(implicit spark: SparkSession): Long = {
-    import graft.sources.PathState
-    val state = PathState.classify(s"$path/doclens",
-      spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
+    val stored = StoreParquet.openAppendable(spark, s"$path/doclens",
       s"appendTextIndex target '$path/doclens' exists but holds no parquet — " +
         "refusing to append into a directory that is not a text index")
     val base0 = docs.select(col(idCol).as("id"), col(tokensCol).as("toks"))
-    val base = (if (state == PathState.Empty) base0
-      else {
-        val existing = StoreParquet.open(spark, s"$path/doclens").select(col("id"))
-        base0.join(existing, base0("id") === existing("id"), "left_anti")
-      }).dropDuplicates("id").persist()
+    val base = stored.fold(base0) { dl =>
+      val existing = dl.select(col("id"))
+      base0.join(existing, base0("id") === existing("id"), "left_anti")
+    }.dropDuplicates("id").persist()
     try {
       val n = base.count()
       if (n > 0) {
@@ -186,7 +182,7 @@ object Search {
         // base would see its own ids as "already indexed" and go empty
         val batch = statsOf(base).head()
         val (oldN, oldSum) =
-          if (state == PathState.Empty) (0L, 0L)
+          if (stored.isEmpty) (0L, 0L)
           else {
             // driver-side read of the 1-row stats sidecar (zero jobs — r20)
             import graft.sources.SidecarParquet
@@ -227,8 +223,7 @@ object Search {
   private def rewriteTextIndex(spark: SparkSession, op: String,
       srcPath: String, dstPath: String, drop: DataFrame,
       fresh: Option[DataFrame]): Long = {
-    require(srcPath != dstPath,
-      s"$op writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory(op, srcPath, dstPath)
     val survivors = StoreParquet.open(spark, s"$srcPath/postings")
       .join(drop, Seq("id"), "left_anti")
       .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
@@ -688,15 +683,11 @@ object Search {
     */
   def appendIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
       path: String): Long = {
-    import graft.sources.PathState
     val spark = batch.sparkSession
-    val state = PathState.classify(s"$path/vectors",
-      spark.sparkContext.hadoopConfiguration)
-    require(state == PathState.Data,
+    val existing = StoreParquet.openExisting(spark, s"$path/vectors",
       s"appendIvfIndex requires an existing index at '$path' " +
         "(writeIvfIndex first — appends need its frozen centroids)")
     val centroids = readIvfCentroids(spark, path)
-    val existing = StoreParquet.open(spark, s"$path/vectors")
     requireIvfBatchColumns("appendIvfIndex", batch, existing)
     val fresh = batch
       .join(existing, batch(idCol) === existing(idCol), "left_anti")
@@ -841,8 +832,9 @@ object Search {
     * sidecar exists to avoid.)
     */
   def storeFingerprint(spark: SparkSession, dir: String): String = {
-    val entries = visibleParquetFiles(spark, dir)
-      .map { case (rel, len, mtime) => s"$rel:$len:$mtime" }.sorted
+    val entries = graft.sources.PathState.visibleParquet(dir,
+        spark.sparkContext.hadoopConfiguration)
+      .map { case (rel, f) => s"$rel:${f.getLen}:${f.getModificationTime}" }.sorted
     java.security.MessageDigest.getInstance("MD5")
       .digest(entries.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -962,7 +954,7 @@ object Search {
     readDriftMarker(spark, path) match {
       case Some(digest)
           if digest == storeFingerprint(spark, s"$path/vectors") &&
-            PathState.classify(driftStatsDir(path), hconf) == PathState.Data =>
+            PathState.hasData(driftStatsDir(path), hconf) =>
         Some(guardDriftStatOverflow(StoreParquet.open(spark, driftStatsDir(path))
           .groupBy(col("cluster_id"))
           .agg(sum(col("n")).as("n"), sum(col("sim_fp_sum")).as("sim_fp_sum"))))
@@ -2295,34 +2287,8 @@ object Search {
     * file count does not justify.
     */
   def dataFileCount(spark: SparkSession, dir: String): Int =
-    visibleParquetFiles(spark, dir).size
-
-  /** (relative path, length, mtime) of every visible parquet data file
-    * under `dir` — the one recursive listing [[dataFileCount]] and
-    * [[storeFingerprint]] share. Visibility is judged on EVERY path
-    * component below the target (the [[graft.sources.PathState]] rule).
-    */
-  private def visibleParquetFiles(spark: SparkSession,
-      dir: String): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val rootUri = fs.makeQualified(p).toUri.getPath.stripSuffix("/")
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        val f = st.getPath
-        val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        val hidden = rel.split('/')
-          .exists(c => c.startsWith("_") || c.startsWith("."))
-        if (!hidden && f.getName.endsWith(".parquet"))
-          buf += ((rel, st.getLen, st.getModificationTime))
-      }
-      buf.toSeq
-    }
-  }
+    graft.sources.PathState.visibleParquet(dir,
+      spark.sparkContext.hadoopConfiguration).size
 
   /** [[maintainVectorIndex]] on the LAYOUT axis for the text index: a
     * text store has no model to drift — what sustained
@@ -2369,13 +2335,10 @@ object Search {
     */
   def compactTextIndex(spark: SparkSession, srcPath: String,
       dstPath: String, targetFiles: Int = 16): Long = {
-    require(srcPath != dstPath,
-      "compactTextIndex writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory("compactTextIndex", srcPath, dstPath)
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    require(graft.sources.PathState.classify(s"$srcPath/postings",
-      spark.sparkContext.hadoopConfiguration) == graft.sources.PathState.Data,
+    StoreParquet.openExisting(spark, s"$srcPath/postings",
       s"'$srcPath/postings' holds no parquet data files — not a text index")
-    StoreParquet.open(spark, s"$srcPath/postings")
       .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
       .repartitionByRange(targetFiles, col("term"))
       .sortWithinPartitions(col("term"))
@@ -2679,15 +2642,12 @@ object Search {
     */
   def appendSeededLshIndex(batch: DataFrame, idCol: String, vecCol: String,
       path: String): Long = {
-    import graft.sources.PathState
     val spark = batch.sparkSession
-    val state = PathState.classify(s"$path/codes",
-      spark.sparkContext.hadoopConfiguration)
-    require(state == PathState.Data,
+    val existing = StoreParquet.openExisting(spark, s"$path/codes",
       s"appendSeededLshIndex requires an existing index at '$path' " +
         "(writeSeededLshIndex first — appends need its frozen family shape)")
+      .select(col("id"))
     val (dim, nt, bpt) = readSeededLshMeta(spark, path)
-    val existing = StoreParquet.open(spark, s"$path/codes").select(col("id"))
     // exact duplicate rows (same id AND vector) collapse deterministically;
     // the same id carrying DIFFERENT vectors is refused loudly — a
     // dropDuplicates(id) would keep an arbitrary row, making the persisted
@@ -2741,8 +2701,7 @@ object Search {
     */
   def removeFromSeededLshIndex(spark: SparkSession, srcPath: String,
       dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    require(srcPath != dstPath,
-      "removeFromSeededLshIndex writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory("removeFromSeededLshIndex", srcPath, dstPath)
     val drop = removeIds.select(col(idCol).as("id")).distinct()
     StoreParquet.open(spark, s"$srcPath/bands")
       .join(drop, Seq("id"), "left_anti")
@@ -2768,8 +2727,7 @@ object Search {
   def updateSeededLshIndex(spark: SparkSession, srcPath: String,
       dstPath: String, retireIds: DataFrame, refreshBatch: DataFrame,
       idCol: String, vecCol: String): Long = {
-    require(srcPath != dstPath,
-      "updateSeededLshIndex writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory("updateSeededLshIndex", srcPath, dstPath)
     val (dim, nt, bpt) = readSeededLshMeta(spark, srcPath)
     val fresh = refreshBatch.dropDuplicates(idCol, vecCol).persist()
     try {

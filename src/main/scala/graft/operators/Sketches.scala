@@ -33,15 +33,14 @@ object Sketches {
     * Spark's hidden-file filter excludes from reads of the store itself.
     */
   private def alreadyApplied(spark: SparkSession, storeDir: String,
-      batchId: String): Boolean = {
+      store: DataFrame, batchId: String): Boolean = {
     import graft.sources.{PathState, SidecarParquet}
     val conf = spark.sparkContext.hadoopConfiguration
-    val inMain = StoreParquet.open(spark, storeDir)
-      .where(col("batch_id") === batchId).limit(1).count() > 0
+    val inMain = store.where(col("batch_id") === batchId).limit(1).count() > 0
     // the `_folded` leg reads the KB ledger sidecar DRIVER-SIDE (r20,
     // guide §5) — the store-body probe above stays a (limit-1) job
     // because the body is data-scale
-    inMain || (PathState.classify(s"$storeDir/_folded", conf) == PathState.Data &&
+    inMain || (PathState.hasData(s"$storeDir/_folded", conf) &&
       SidecarParquet.readGroups(s"$storeDir/_folded", conf)
         .exists(g => SidecarParquet.stringAt(g, "batch_id") == batchId))
   }
@@ -57,12 +56,10 @@ object Sketches {
     */
   private def appendOnce(df: DataFrame, batchId: String, storeDir: String)(
       sketches: => DataFrame): Long = {
-    import graft.sources.PathState
     val spark = df.sparkSession
-    val state = PathState.classify(storeDir, spark.sparkContext.hadoopConfiguration)
-    require(state != PathState.Foreign,
-      s"sketch store '$storeDir' holds non-parquet content — refusing to append")
-    if (state == PathState.Data && alreadyApplied(spark, storeDir, batchId)) 0L
+    if (StoreParquet.openAppendable(spark, storeDir,
+        s"sketch store '$storeDir' holds non-parquet content — refusing to append")
+        .exists(alreadyApplied(spark, storeDir, _, batchId))) 0L
     else VectorStores.writeCounted(sketches.withColumn("batch_id", lit(batchId)),
       storeDir, mode = SaveMode.Append)
   }
@@ -419,8 +416,7 @@ object Sketches {
       family: String, batchIds: Seq[String], compactedBatchId: String,
       k: Int = 200, maxMapSize: Int = 1024, targetFiles: Int = 16): Long = {
     import spark.implicits._
-    require(srcDir != dstDir,
-      "compactSketchStore writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory("compactSketchStore", srcDir, dstDir)
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
     require(Set("hll", "kll", "freq", "theta").contains(family),
       s"family must be hll|kll|freq|theta, got '$family'")
@@ -499,8 +495,7 @@ object Sketches {
     // prior ledger rows read DRIVER-SIDE (KB sidecar — the fold probe's
     // rationale); the ledger write runs over a LocalTableScan
     val prior: Seq[(String, String)] =
-      if (PathState.classify(s"$srcDir/_folded",
-          spark.sparkContext.hadoopConfiguration) == PathState.Data)
+      if (PathState.hasData(s"$srcDir/_folded", spark.sparkContext.hadoopConfiguration))
         SidecarParquet.readGroups(s"$srcDir/_folded",
             spark.sparkContext.hadoopConfiguration)
           .map(g => (SidecarParquet.stringAt(g, "batch_id"),

@@ -112,10 +112,9 @@ private[graft] object VectorStores {
   def append[M](f: VectorFamily[M], op: String, batch: DataFrame,
       idCol: String, vecCol: String, path: String): Long = {
     val spark = batch.sparkSession
-    require(f.artifacts.forall(a =>
-      PathState.classify(s"$path/$a", hconf(spark)) == PathState.Data),
+    f.artifacts.foreach(a => StoreParquet.requireExisting(spark, s"$path/$a",
       s"$op requires an existing index at '$path' " +
-        s"(${f.writer} first — appends need its frozen models)")
+        s"(${f.writer} first — appends need its frozen models)"))
     requireEncoding(f, spark, path, op)
     val model = f.readModel(spark, path)
     val existing = StoreParquet.open(spark, s"$path/${f.data}").select(col(idCol))
@@ -179,16 +178,18 @@ private[graft] object VectorStores {
       val src = StoreParquet.open(spark, s"$srcPath/${f.data}")
       val n = src.count()
       val idCol = src.columns.find(c => c != "cluster_id" && c != "pq_codes").head
-      // nClusters from a driver-side sidecar read, evaluated only when the
-      // per-cluster file budget needs it
-      val laid =
-        if (f.partitioned) Search.clusterCompactionLayout(src, idCol,
-          SidecarParquet.readGroups(s"$srcPath/centroids", hconf(spark))
-            .size.toLong, targetFiles)
-        else src.repartitionByRange(targetFiles, col(idCol))
-          .sortWithinPartitions(col(idCol))
-      writeData(f, laid, dstPath, SaveMode.Overwrite)
-      val out = StoreParquet.open(spark, s"$dstPath/${f.data}").count()
+      val dst = s"$dstPath/${f.data}"
+      val out =
+        if (!f.partitioned)
+          StoreParquet.rewriteSorted(src, Seq(col(idCol)), targetFiles, dst)
+        else {
+          // nClusters from a driver-side sidecar read, evaluated only when
+          // the per-cluster file budget needs it
+          writeData(f, Search.clusterCompactionLayout(src, idCol,
+            SidecarParquet.readGroups(s"$srcPath/centroids", hconf(spark))
+              .size.toLong, targetFiles), dstPath, SaveMode.Overwrite)
+          StoreParquet.open(spark, dst).count()
+        }
       require(out == n,
         s"${f.data} compaction row mismatch: source $n, got $out")
       out
@@ -205,10 +206,8 @@ private[graft] object VectorStores {
       idCol: String, vecCol: String, srcPath: String, dstPath: String)(
       train: => M): Long = {
     val spark = df.sparkSession
-    require(srcPath != dstPath,
-      s"$op writes a NEW directory (caller swaps atomically)")
-    require(PathState.classify(s"$srcPath/${f.data}", hconf(spark)) ==
-      PathState.Data,
+    StoreParquet.requireNewDirectory(op, srcPath, dstPath)
+    StoreParquet.requireExisting(spark, s"$srcPath/${f.data}",
       s"$op requires an existing index at '$srcPath' — a first build is " +
         f.writer)
     requireEncoding(f, spark, srcPath, op)
@@ -228,8 +227,7 @@ private[graft] object VectorStores {
   private def rewrite[M](f: VectorFamily[M], op: String,
       spark: SparkSession, srcPath: String, dstPath: String)(
       body: => Long): Long = {
-    require(srcPath != dstPath,
-      s"$op writes a NEW directory (caller swaps atomically)")
+    StoreParquet.requireNewDirectory(op, srcPath, dstPath)
     requireEncoding(f, spark, srcPath, op)
     requireConsistentModel(spark, srcPath, op)
     val n = body
@@ -285,7 +283,7 @@ private[graft] object VectorStores {
   private def requireEncoding[M](f: VectorFamily[M], spark: SparkSession,
       path: String, op: String): Unit = {
     val enc =
-      if (PathState.classify(s"$path/encoding", hconf(spark)) != PathState.Data) None
+      if (!PathState.hasData(s"$path/encoding", hconf(spark))) None
       else Some(SidecarParquet.stringAt(SidecarParquet.readGroups(
         s"$path/encoding", hconf(spark)).head, "encoding"))
     require(enc == f.encoding,
@@ -298,7 +296,7 @@ private[graft] object VectorStores {
 
   /** The model version of a store: the `model` marker's, 0 if none. */
   def readModelVersion(spark: SparkSession, path: String): Long =
-    if (PathState.classify(s"$path/model", hconf(spark)) == PathState.Data)
+    if (PathState.hasData(s"$path/model", hconf(spark)))
       SidecarParquet.longAt(SidecarParquet.readGroups(s"$path/model",
         hconf(spark)).head, "model_version")
     else 0L
@@ -355,7 +353,7 @@ private[graft] object VectorStores {
     */
   private def carryModelMarker(spark: SparkSession, srcPath: String,
       dstPath: String, artifacts: Seq[String]): Unit =
-    if (PathState.classify(s"$srcPath/model", hconf(spark)) == PathState.Data) {
+    if (PathState.hasData(s"$srcPath/model", hconf(spark))) {
       val row = SidecarParquet.readGroups(s"$srcPath/model", hconf(spark)).head
       val version = SidecarParquet.longAt(row, "model_version")
       artifacts.foreach { a =>

@@ -88,7 +88,7 @@ object Generations {
     require(rootFs.makeQualified(gp).getParent ==
       rootFs.makeQualified(new Path(root)),
       s"'$genDir' is not a child of the catalog root '$root'")
-    require(PathState.classify(genDir, conf) == PathState.Data,
+    require(PathState.hasData(genDir, conf),
       s"'$genDir' holds no parquet data — refusing to publish an empty " +
         "or foreign generation")
     val rp = new Path(root)

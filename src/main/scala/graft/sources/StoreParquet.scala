@@ -5,7 +5,8 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import scala.util.control.NonFatal
@@ -35,6 +36,9 @@ import scala.util.control.NonFatal
   * footer cannot be read (corrupt) falls through to the plain inferring
   * read, so it fails with exactly the error it always did; so does a
   * session with `mergeSchema` on, where inference reads every footer.
+  *
+  * Operators open their stores through its two gates, [[openAppendable]]
+  * and [[openExisting]]; compactors rewrite a leg with [[rewriteSorted]].
   */
 object StoreParquet {
 
@@ -76,6 +80,51 @@ object StoreParquet {
     val dirs = if (probed.nonEmpty) probed else present.take(1)
     if (dirs.isEmpty) open(spark, root)
     else open(spark, root, dirs.map(d => new Path(rootP, d).toString))
+  }
+
+  /** The append-or-create gate: whether `path` holds a store yet; visible
+    * non-parquet content is refused with `refusal`.
+    */
+  private[graft] def appendable(spark: SparkSession, path: String,
+      refusal: => String): Boolean = {
+    val state = PathState.classify(path, spark.sparkContext.hadoopConfiguration)
+    require(state != PathState.Foreign, refusal)
+    state == PathState.Data
+  }
+
+  private[graft] def openAppendable(spark: SparkSession, path: String,
+      refusal: => String): Option[DataFrame] =
+    if (appendable(spark, path, refusal)) Some(open(spark, path)) else None
+
+  /** The must-exist gate: anything but a store at `path` is refused. */
+  private[graft] def requireExisting(spark: SparkSession, path: String,
+      refusal: => String): Unit =
+    require(PathState.hasData(path, spark.sparkContext.hadoopConfiguration), refusal)
+
+  private[graft] def openExisting(spark: SparkSession, path: String,
+      refusal: => String): DataFrame = {
+    requireExisting(spark, path, refusal)
+    open(spark, path)
+  }
+
+  /** A rewrite writes a NEW directory; the caller swaps it in atomically. */
+  private[graft] def requireNewDirectory(op: String, src: String, dst: String): Unit =
+    require(src != dst, s"$op writes a NEW directory (caller swaps atomically)")
+
+  /** The typed zero-row frame read for a store not written yet. */
+  private[graft] def emptyStore(spark: SparkSession,
+      cols: (String, String)*): DataFrame =
+    cols.foldLeft(spark.emptyDataFrame) { case (df, (c, t)) =>
+      df.withColumn(c, lit(null).cast(t)) }.limit(0)
+
+  /** One compaction leg: `df` range-sorted on `keys` into `files` files over
+    * `dir`; returns the rows read back at `countAt` (default `dir`).
+    */
+  private[graft] def rewriteSorted(df: DataFrame, keys: Seq[Column], files: Int,
+      dir: String, countAt: Option[String] = None): Long = {
+    df.repartitionByRange(files, keys: _*).sortWithinPartitions(keys: _*)
+      .write.mode(SaveMode.Overwrite).parquet(dir)
+    open(df.sparkSession, countAt.getOrElse(dir)).count()
   }
 
   private def read(spark: SparkSession, paths: Seq[String],

@@ -424,8 +424,7 @@ object Streams {
       // and let the post-swap replay empty it (review r16)
       val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
       val durable = success.getFileSystem(hconf).exists(success) ||
-        graft.sources.PathState.classify(dir, hconf) ==
-          graft.sources.PathState.Data
+        graft.sources.PathState.hasData(dir, hconf)
       graft.operators.Dedup.incrementalSequenceNearDups(
         batch, idCol, frameCol, hashCol, storePath,
         maxHamming = maxHamming, numBands = numBands,

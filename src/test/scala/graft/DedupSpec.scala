@@ -1992,6 +1992,34 @@ class DedupSpec extends SparkSpec {
     assert(spark.read.parquet(s"$store/sketches").count() == 5L)
   }
 
+  test("incremental pairs / line dedup: a sink that throws leaves no cached frame behind") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.split
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def boom(df: org.apache.spark.sql.DataFrame): Nothing = {
+      df.count()
+      throw new IllegalStateException("sink down")
+    }
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g")).toDF("doc_id", "text")
+      .withColumn("toks", split(col("text"), " "))
+    spark.catalog.clearCache()
+    val e1 = intercept[IllegalStateException] {
+      Dedup.incrementalNearDupPairs(docs, "doc_id", "toks",
+        java.nio.file.Files.createTempDirectory("nds-leak").toString + "/s",
+        threshold = 0.4, pairsSink = Some(df => boom(df)))
+    }
+    assert(e1.getMessage == "sink down")
+    assert(cache.isEmpty, "incrementalNearDupPairs left frames cached")
+    val e2 = intercept[IllegalStateException] {
+      Dedup.incrementalLineDedup(docs, "doc_id", "text",
+        java.nio.file.Files.createTempDirectory("ld-leak").toString + "/s",
+        delim = " ", onBatch = df => boom(df))
+    }
+    assert(e2.getMessage == "sink down")
+    assert(cache.isEmpty, "incrementalLineDedup left frames cached")
+  }
+
   test("contaminationScores: benchmark members 1.0, partial overlap exact, disjoint 0") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, split}

@@ -149,6 +149,30 @@ class LayoutSpec extends SparkSpec {
     assert(spread(out) < spread(in), s"${spread(out)} !< ${spread(in)}")
   }
 
+  test("compactParquet / recluster: a crashed writer's _temporary orphan does not size the output") {
+    val base = Files.createTempDirectory("orphan").toString
+    val in = base + "/in"
+    val df = (0 until 2000).map(i => (i.toLong, i % 32L, s"row-$i-${"x" * 50}"))
+      .toDF("x", "y", "s")
+    df.repartition(8).write.parquet(in)
+    val files = new java.io.File(in).listFiles().filter(_.getName.endsWith(".parquet"))
+    val target = files.map(_.length).sum / 2
+    def chosen(tag: String): (Int, Int) =
+      (Layout.compactParquet(spark, in, s"$base/c-$tag", targetBytes = target),
+        Layout.recluster(spark, in, s"$base/z-$tag", Seq(col("x"), col("y")),
+          bits = 5, targetBytes = target))
+    val clean = chosen("clean")
+    // ten times the visible bytes, left under the job's hidden staging dir
+    val orphanDir = java.nio.file.Paths.get(in, "_temporary", "0", "_temporary",
+      "attempt_0")
+    Files.createDirectories(orphanDir)
+    (0 until 10).foreach(i => files.foreach(f => Files.copy(f.toPath,
+      orphanDir.resolve(s"part-$i-${f.getName}"))))
+    assert(spark.read.parquet(in).count() === 2000L)
+    assert(chosen("orphaned") == clean,
+      "an orphan under _temporary changed the file count chosen")
+  }
+
   test("writeWithBloomFilters: footer carries a working bloom on the keyed column only") {
     import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("blm").toString + "/t"

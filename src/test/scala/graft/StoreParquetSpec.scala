@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Search, Sketches}
+import graft.operators.{Dedup, Index, Profile, Search, Sketches}
 import graft.sources.StoreParquet
 
 /** [[StoreParquet]] opens a store with the schema read from one footer on
@@ -11,7 +11,11 @@ import graft.sources.StoreParquet
   * spark.read.parquet(dir).schema` for every store family graft writes,
   * after the write, an append and a compaction; plus the edges where the
   * helper falls back: a probed cluster with no partition directory, a
-  * missing store and a `_SUCCESS`-only store.
+  * missing store and a `_SUCCESS`-only store. Last, every operator's
+  * store gate once: the append-or-create sites refuse a foreign
+  * directory without writing into it and treat commit leftovers as an
+  * empty store; the must-exist sites refuse an empty or missing store
+  * before any write.
   */
 class StoreParquetSpec extends SparkSpec {
   import spark.implicits._
@@ -187,6 +191,111 @@ class StoreParquetSpec extends SparkSpec {
       assert(errorOf(StoreParquet.open(spark, p)) == today, p)
       assert(errorOf(StoreParquet.openPartitions(spark, p, "cluster_id",
         Seq(1))) == today, p)
+    }
+  }
+
+  /** Every file under `root`, hidden ones included (empty when absent). */
+  private def tree(root: String): Set[String] = {
+    val p = java.nio.file.Paths.get(root)
+    if (!java.nio.file.Files.exists(p)) Set.empty
+    else {
+      val it = java.nio.file.Files.walk(p)
+      try {
+        val b = Set.newBuilder[String]
+        it.forEach(f => { b += p.relativize(f).toString; () })
+        b.result()
+      } finally it.close()
+    }
+  }
+
+  /** `leg` under a fresh store root, in one of the states a gate tells
+    * apart: a foreign file, a `_SUCCESS`-only commit, or a crashed task's
+    * orphan under `_temporary` (junk bytes: reading it would fail).
+    */
+  private def seeded(state: String, leg: String): String = {
+    val root = s"${tmp(s"gate-$state")}/store"
+    val dir = java.nio.file.Paths.get(root, leg)
+    state match {
+      case "foreign" =>
+        java.nio.file.Files.createDirectories(dir)
+        java.nio.file.Files.write(dir.resolve("notes.txt"), "x".getBytes)
+      case "success" =>
+        java.nio.file.Files.createDirectories(dir)
+        java.nio.file.Files.createFile(dir.resolve("_SUCCESS"))
+      case "temporary" =>
+        val t = dir.resolve("_temporary/0/_temporary/attempt_0")
+        java.nio.file.Files.createDirectories(t)
+        java.nio.file.Files.write(t.resolve("part-00000.parquet"), "junk".getBytes)
+    }
+    root
+  }
+
+  test("append-or-create gates: a foreign directory refuses unwritten; commit leftovers are an empty store") {
+    val toks = Seq((1L, "a b c d e f g"), (2L, "a b c d e f h")).toDF("doc_id", "text")
+      .withColumn("toks", split(col("text"), " "))
+    val seqs = (0 until 6).map(f => (1L, f, 0x5a5aL * (f + 1))).toDF("id", "f", "h")
+    val cfg = Index.IndexConfig(graft.model.SplitStrategy.Fixed(100, 20), 8)
+    val sites: Seq[(String, String, String => Unit)] = Seq(
+      ("Index.appendIndex", "", root => assert(Index.appendIndex(
+        toks.select(col("doc_id"), lit("s").as("source"), col("text")), root, cfg) > 0)),
+      ("Search.appendTextIndex", "doclens", root =>
+        assert(Search.appendTextIndex(toks, "doc_id", "toks", root) == 2)),
+      ("Dedup.incrementalLineDedup lines", "lines", root => assert(Dedup
+        .incrementalLineDedup(toks, "doc_id", "text", root, delim = " ").count() == 2)),
+      ("Dedup.incrementalLineDedup docs", "docs", root => assert(Dedup
+        .incrementalLineDedup(toks, "doc_id", "text", root, delim = " ").count() == 2)),
+      // a read: the leftovers read as the typed empty store
+      ("Dedup.readSoftDedupWeights", "weights", root =>
+        assert(Dedup.readSoftDedupWeights(spark, root).count() == 0)),
+      ("Dedup.incrementalSequenceNearDups", "sigs", root => {
+        Dedup.incrementalSequenceNearDups(seqs, "id", "f", "h", root).collect()
+        assert(StoreParquet.open(spark, s"$root/sigs").count() == 6)
+      }),
+      ("Dedup.incrementalNearDupPairs", "sketches", root => {
+        Dedup.incrementalNearDupPairs(toks, "doc_id", "toks", root).collect()
+        assert(StoreParquet.open(spark, s"$root/sketches").count() == 2)
+      }),
+      ("Sketches.appendDistinctSketches", "", root => assert(
+        Sketches.appendDistinctSketches(toks, "doc_id", "text", "b0", root) == 2)),
+      ("Profile.appendProfile", "", root => assert(
+        Profile.appendProfile(toks, Seq("doc_id"), "b0", root) == 1)))
+    sites.foreach { case (site, leg, append) =>
+      val foreign = seeded("foreign", leg)
+      val before = tree(foreign)
+      intercept[IllegalArgumentException](append(foreign))
+      assert(tree(foreign) == before, s"$site wrote under a refused store")
+      Seq("success", "temporary").foreach(st => append(seeded(st, leg)))
+    }
+  }
+
+  test("must-exist gates: an empty or missing store refuses before any write") {
+    val vecs = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    val sites: Seq[(String, String, (String, String) => Unit)] = Seq(
+      ("Search.appendIvfIndex", "vectors", (src, _) => {
+        Search.appendIvfIndex(vecs, "vec_id", "embedding", src); () }),
+      ("Search.appendSeededLshIndex", "codes", (src, _) => {
+        Search.appendSeededLshIndex(vecs, "vec_id", "embedding", src); () }),
+      ("Search.refreshIvfIndex", "vectors", (src, dst) => {
+        Search.refreshIvfIndex(vecs, "vec_id", "embedding", src, dst, 2); () }),
+      ("Search.compactTextIndex", "postings", (src, dst) => {
+        Search.compactTextIndex(spark, src, dst); () }),
+      ("Dedup.compactSoftDedupWeights", "weights", (src, dst) => {
+        Dedup.compactSoftDedupWeights(spark, src, dst, upToBatchId = 0); () }),
+      ("Dedup.compactNearDupSketches", "sketches", (src, dst) => {
+        Dedup.compactNearDupSketches(spark, src, dst); () }),
+      ("Dedup.compactSequenceStore", "sigs", (src, dst) => {
+        Dedup.compactSequenceStore(spark, src, dst); () }),
+      ("Dedup.compactSequencePairs", "pairs", (src, dst) => {
+        Dedup.compactSequencePairs(spark, src, dst, upToBatchId = 0); () }))
+    sites.foreach { case (site, leg, run) =>
+      val missing = s"${tmp("gate-missing")}/store"
+      Seq(missing, seeded("success", leg)).foreach { src =>
+        val dst = s"${tmp("gate-dst")}/out"
+        val before = tree(src)
+        intercept[IllegalArgumentException](run(src, dst))
+        assert(tree(src) == before && tree(dst).isEmpty,
+          s"$site wrote before refusing '$src'")
+      }
     }
   }
 }

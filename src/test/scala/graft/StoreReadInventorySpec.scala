@@ -43,6 +43,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * appears once under `graft/operators` — in `Dedup`'s shared band
   * helper — and `.foreachBatch {` appears once in
   * `graft/streaming/Streams.scala`.
+  *
+  * A seventh keeps one store gate and one visible-file walk: outside
+  * comments, under `graft/operators`, `graft/sources` and
+  * `graft/streaming`, `PathState.Foreign` appears only in
+  * `graft/sources/` (operators open their stores through
+  * `StoreParquet`'s append-or-create and must-exist gates), and a
+  * recursive `listFiles(…, true)` appears once, in
+  * `graft/sources/PathState.scala`.
   */
 class StoreReadInventorySpec extends AnyFunSuite {
 
@@ -85,6 +93,12 @@ class StoreReadInventorySpec extends AnyFunSuite {
   private val bandHome = "graft/operators/Dedup.scala"
   private val sinkWiring = """\.\s*foreachBatch\s*\{""".r
   private val sinkHome = "graft/streaming/Streams.scala"
+
+  private val foreignState = """\bPathState\s*\.\s*Foreign\b""".r
+  private val recursiveListing =
+    """\blistFiles\s*\((?:[^()]|\([^()]*\))*,\s*true\s*\)""".r
+  private val gateDirs = Seq("graft/operators", "graft/sources", "graft/streaming")
+  private val walkHome = "graft/sources/PathState.scala"
 
   private val root = java.nio.file.Paths.get("src/main/scala")
   private val testRoot = java.nio.file.Paths.get("src/test/scala")
@@ -182,6 +196,17 @@ class StoreReadInventorySpec extends AnyFunSuite {
         s"foreachBatch helper instead of spelling the chain again; found: $sinks")
   }
 
+  test("one store gate and one visible-file walk in graft.sources") {
+    val foreign = gateDirs.map(scan(_, foreignState)).reduce(_ ++ _)
+    assert(foreign.nonEmpty && foreign.keySet.forall(_.startsWith("graft/sources/")),
+      "open a store through StoreParquet.openAppendable / openExisting " +
+        s"instead of spelling the PathState.Foreign refusal; found: $foreign")
+    val walks = gateDirs.map(scan(_, recursiveListing)).reduce(_ ++ _)
+    assert(walks == Map(walkHome -> 1),
+      "list a store's visible files through PathState instead of a " +
+        s"recursive listFiles walk of its own; found: $walks")
+  }
+
   test("the scan sees the spellings it gates") {
     val src = """val a = spark.read.parquet(s"$p/vectors")
       |val b = spark.read.option("basePath", w)
@@ -237,5 +262,18 @@ class StoreReadInventorySpec extends AnyFunSuite {
       |  * via `foreachBatch` + appendIndex in a scaladoc, .foreachBatch { too
       |.foreachBatch(new VoidFunction2[Dataset[Row], java.lang.Long] {""".stripMargin
     assert(sinkWiring.findAllMatchIn(code(sink)).size == 2)
+    val gate = """require(state != PathState.Foreign, refusal)
+      |  graft.sources.PathState .Foreign
+      |// PathState.Foreign commented
+      |  * [[PathState.Foreign]] in a scaladoc, PathState.Foreign too
+      |val PathStateForeign = PathState.Foreigner""".stripMargin
+    assert(foreignState.findAllMatchIn(code(gate)).size == 2)
+    val walk = """val it = fs.listFiles(hPath, true)
+      |  fs.listFiles (new Path(dir), true)
+      |// fs.listFiles(p, true) commented
+      |  * `fs.listFiles(p, true)` in a scaladoc, listFiles(p, true) too
+      |fs.listFiles(p, false)
+      |new java.io.File(d).listFiles()""".stripMargin
+    assert(recursiveListing.findAllMatchIn(code(walk)).size == 2)
   }
 }
