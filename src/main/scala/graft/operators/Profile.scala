@@ -217,22 +217,20 @@ object Profile {
     * [[graft.operators.Sketches.appendDistinctSketches]] when distinct
     * trends matter (mergeable HLL, same batch-ledger discipline).
     *
-    * Replaying a `batchId` already in the store is a no-op (the
-    * Sketches-store contract). Foreign content refuses loudly.
+    * Appends run the sketch stores' append-once gate
+    * ([[graft.operators.Sketches.appendOnce]]): replaying a `batchId`
+    * already in the store is a no-op, foreign content refuses loudly, and
+    * a fresh card lands in one write job that counts its own rows.
     *
     * @return card rows appended (0 on replay)
     */
   def appendProfile(df: DataFrame, cols: Seq[String], batchId: String,
       storeDir: String): Long = {
-    val spark = df.sparkSession
     require(cols.nonEmpty, "appendProfile needs at least one column")
     require(cols.distinct.size == cols.size, s"duplicate columns in $cols")
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"columns not in schema: ${missing.mkString(", ")}")
     val vt = cols.map(c => c -> valueTypeOf(df.schema(c).dataType)).toMap
-    if (StoreParquet.openAppendable(spark, storeDir,
-        s"profile store '$storeDir' holds non-parquet content — refusing to append")
-        .exists(_.where(col("batch_id") === batchId).limit(1).count() > 0)) return 0L
     // fractional min/max normalize -0.0 → 0.0 BEFORE rendering (ADVICE
     // r11): -0.0 and 0.0 parse back to EQUAL doubles but render as
     // DISTINCT strings, so a stored "-0.0" would make [[mergedProfile]]'s
@@ -248,22 +246,19 @@ object Profile {
         render(c)(min(col(c))).as(s"__mn_$c"),
         render(c)(max(col(c))).as(s"__mx_$c"))
     }
-    val card = df.agg(aggs.head, aggs.tail: _*)
-      .select(col("n_rows"), explode(array(cols.map { c =>
-        struct(lit(c).as("column"), lit(vt(c)).as("value_type"),
-          col(s"__nn_$c").as("n_non_null"),
-          col(s"__mn_$c").as("min_value"), col(s"__mx_$c").as("max_value"))
-      }: _*)).as("m"))
-      .select(col("m.column").as("column"), col("m.value_type").as("value_type"),
-        lit(batchId).as("batch_id"), col("n_rows"),
-        col("m.n_non_null").as("n_non_null"),
-        col("m.min_value").as("min_value"), col("m.max_value").as("max_value"))
-      .persist()
-    try {
-      val n = card.count()
-      card.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(storeDir)
-      n
-    } finally { card.unpersist(); () }
+    // the gate sets `batch_id` in place, keeping the stored column order
+    Sketches.appendOnce(df, batchId, storeDir, kind = "profile") {
+      df.agg(aggs.head, aggs.tail: _*)
+        .select(col("n_rows"), explode(array(cols.map { c =>
+          struct(lit(c).as("column"), lit(vt(c)).as("value_type"),
+            col(s"__nn_$c").as("n_non_null"),
+            col(s"__mn_$c").as("min_value"), col(s"__mx_$c").as("max_value"))
+        }: _*)).as("m"))
+        .select(col("m.column").as("column"), col("m.value_type").as("value_type"),
+          lit(batchId).as("batch_id"), col("n_rows"),
+          col("m.n_non_null").as("n_non_null"),
+          col("m.min_value").as("min_value"), col("m.max_value").as("max_value"))
+    }
   }
 
   /** Fold stored per-batch cards into one quality card (all batches, or a

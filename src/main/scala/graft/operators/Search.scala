@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
-import graft.sources.StoreParquet
+import graft.sources.{PathState, SidecarParquet, StoreParquet}
 
 /** Similarity search — the reference's implied query surface (pgvector
   * `ORDER BY embedding <=> q LIMIT k`, `/root/reference/README.md:16,83-91`),
@@ -128,12 +128,34 @@ object Search {
   def writeTextIndex(docs: DataFrame, idCol: String, tokensCol: String,
       path: String): Unit = {
     val base = docs.select(col(idCol).as("id"), col(tokensCol).as("toks"))
-    postingsOf(base)
-      .repartitionByRange(col("term"))
+    writeTextArtifacts(docs.sparkSession, path, postingsOf(base),
+      doclensOf(base))
+    ()
+  }
+
+  /** The one writer of a text index's three artifacts, overwriting each:
+    * postings range-partitioned and sorted on term (into `postingsFiles`
+    * files when given), doclens, and the stats sidecar from an observation
+    * ON the doclens write (R168: no read-back scan). The observation sits
+    * above any exchange in `doclens`, so a range layout's boundary
+    * sampling does not count the rows twice.
+    *
+    * @return number of documents written
+    */
+  private def writeTextArtifacts(spark: SparkSession, path: String,
+      postings: DataFrame, doclens: DataFrame,
+      postingsFiles: Option[Int] = None): Long = {
+    postingsFiles.fold(postings.repartitionByRange(col("term")))(
+        postings.repartitionByRange(_, col("term")))
       .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$path/postings")
-    doclensOf(base).write.mode("overwrite").parquet(s"$path/doclens")
-    statsOf(base).write.mode("overwrite").parquet(s"$path/stats")
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/postings")
+    val obs = org.apache.spark.sql.Observation()
+    doclens.observe(obs, count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/doclens")
+    val n = obs.get("n_docs").asInstanceOf[Long]
+    writeTextStats(spark, path, n, obs.get("sum_dl").asInstanceOf[Long])
+    n
   }
 
   private def postingsOf(base: DataFrame): DataFrame = base
@@ -143,10 +165,6 @@ object Search {
 
   private def doclensOf(base: DataFrame): DataFrame =
     base.select(col("id"), size(col("toks")).cast("long").as("dl"))
-
-  private def statsOf(base: DataFrame): DataFrame =
-    base.agg(count(lit(1)).as("n_docs"),
-      sum(size(col("toks")).cast("long")).as("sum_dl"))
 
   /** Append a document batch to a [[writeTextIndex]] index. Docs whose ids
     * are already indexed are anti-joined out (the id read is one pruned
@@ -180,12 +198,12 @@ object Search {
         // below recaches-by-path every cached plan that reads doclens —
         // including `base` (its anti-join) — and a post-append recompute of
         // base would see its own ids as "already indexed" and go empty
-        val batch = statsOf(base).head()
+        val batch = base.agg(count(lit(1)), sum(size(col("toks")).cast("long")))
+          .head()
         val (oldN, oldSum) =
           if (stored.isEmpty) (0L, 0L)
           else {
             // driver-side read of the 1-row stats sidecar (zero jobs — r20)
-            import graft.sources.SidecarParquet
             val r = SidecarParquet.readGroups(s"$path/stats",
               spark.sparkContext.hadoopConfiguration).head
             (SidecarParquet.longAt(r, "n_docs"),
@@ -205,18 +223,15 @@ object Search {
     */
   private def writeTextStats(spark: SparkSession, path: String,
       nDocs: Long, sumDl: Long): Unit =
-    graft.sources.SidecarParquet.writeFlat(s"$path/stats",
+    SidecarParquet.writeFlat(s"$path/stats",
       spark.sparkContext.hadoopConfiguration,
       Seq("n_docs" -> "long", "sum_dl" -> "long"), Seq(Seq(nDocs, sumDl)))
 
   /** The new-directory rewrite shared by [[removeFromTextIndex]] and
     * [[updateTextIndex]]: the source minus `drop`, with survivor postings
     * re-deduped per (term, id) — orphan postings from a crashed append
-    * must not survive with doubled tf — plus `fresh` docs indexed anew;
-    * postings re-range-partitioned on term, then doclens, with the stats
-    * observed ON the doclens write (r19 — the R168 no-read-back
-    * discipline: the job-committed write's own counts are exactly what a
-    * re-read would aggregate, without the extra scan).
+    * must not survive with doubled tf — plus `fresh` docs indexed anew,
+    * written by [[writeTextArtifacts]].
     *
     * @return number of documents in the new index
     */
@@ -227,20 +242,11 @@ object Search {
     val survivors = StoreParquet.open(spark, s"$srcPath/postings")
       .join(drop, Seq("id"), "left_anti")
       .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
-    fresh.fold(survivors)(f => survivors.unionByName(postingsOf(f)))
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$dstPath/postings")
-    val obs = org.apache.spark.sql.Observation()
     val doclens = StoreParquet.open(spark, s"$srcPath/doclens")
       .join(drop, Seq("id"), "left_anti")
-    fresh.fold(doclens)(f => doclens.unionByName(doclensOf(f)))
-      .observe(obs, count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$dstPath/doclens")
-    val n = obs.get("n_docs").asInstanceOf[Long]
-    writeTextStats(spark, dstPath, n, obs.get("sum_dl").asInstanceOf[Long])
-    n
+    writeTextArtifacts(spark, dstPath,
+      fresh.fold(survivors)(f => survivors.unionByName(postingsOf(f))),
+      fresh.fold(doclens)(f => doclens.unionByName(doclensOf(f))))
   }
 
   /** Rebuild a text index MINUS the given doc ids into a NEW directory —
@@ -340,14 +346,9 @@ object Search {
       idCol: String, vecCol: String): Long = {
     requireIvfBatchColumns("updateIvfIndex", refreshBatch,
       StoreParquet.open(spark, s"$srcPath/vectors"))
-    VectorStores.update(VectorStores.Ivf, "updateIvfIndex", spark, srcPath,
-      dstPath, retireIds, refreshBatch, idCol, vecCol)
-    // the return count comes from the drift-stats seed — a narrow
-    // (vec + cluster_id) scan of the NEW store, which is MORE than the
-    // metadata-only count() it replaces but is bounded by the full-store
-    // rewrite this op just paid, and it keeps every policy tick after an
-    // update O(stats) instead of O(store) (R183)
-    seedIvfDriftStats(spark, dstPath, vecCol)
+    driftStatsStep(spark, dstPath, SeedDrift(vecCol))(
+      VectorStores.update(VectorStores.Ivf, "updateIvfIndex", spark, srcPath,
+        dstPath, retireIds, refreshBatch, idCol, vecCol))
   }
 
   /** BM25 top-k against a persisted [[writeTextIndex]] index. Same formula
@@ -641,26 +642,10 @@ object Search {
     * SearchSpec), so scan cost divides by nClusters/nProbe at any scale.
     */
   def writeIvfIndex(df: DataFrame, vecCol: String,
-      centroids: Seq[(Int, Array[Float])], path: String): Long = {
-    import org.apache.spark.sql.SaveMode
-    ivfAssign(df, vecCol, centroids)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster_id").parquet(s"$path/vectors")
-    val spark = df.sparkSession
-    import spark.implicits._
-    writeCentroidsSidecar(spark, path, centroids)
-    // seed the drift-stats sidecar from a READ-BACK of the written store,
-    // never from a second evaluation of `df`: a non-deterministic input
-    // (sample, rand-derived) re-evaluates to different rows, and the seed
-    // would then certify stats that describe rows not in the store (the
-    // fingerprint matches — the fallback never triggers). One narrow
-    // (vec + cluster_id) scan, bounded by the write that just produced it;
-    // a healthy maintainVectorIndex tick then observes KB of stats
-    // instead of re-scoring the store (VERDICT r15 #2). The seed's count
-    // doubles as the builder's return value (r19 optimization round), so
-    // refresh callers need no read-back count job.
-    seedIvfDriftStats(spark, path, vecCol)
-  }
+      centroids: Seq[(Int, Array[Float])], path: String): Long =
+    // IVF's encode keeps every column of `df`, so it takes no id column
+    driftStatsStep(df.sparkSession, path, SeedDrift(vecCol))(
+      VectorStores.write(VectorStores.Ivf, df, "", vecCol, centroids, path))
 
   /** Incrementally maintain a persisted IVF index: assign a NEW batch to
     * the FROZEN sidecar centroids and append into the cluster-partitioned
@@ -684,43 +669,13 @@ object Search {
   def appendIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
       path: String): Long = {
     val spark = batch.sparkSession
-    val existing = StoreParquet.openExisting(spark, s"$path/vectors",
-      s"appendIvfIndex requires an existing index at '$path' " +
-        "(writeIvfIndex first — appends need its frozen centroids)")
-    val centroids = readIvfCentroids(spark, path)
-    requireIvfBatchColumns("appendIvfIndex", batch, existing)
-    val fresh = batch
-      .join(existing, batch(idCol) === existing(idCol), "left_anti")
-      .dropDuplicates(idCol).persist()
-    try {
-      val n = fresh.count()
-      if (n > 0) {
-        // sidecar currency is judged BEFORE the write: if the recorded
-        // fingerprint matches the pre-append listing, this batch's delta
-        // rows extend it incrementally (exact long sums — associative);
-        // otherwise the store is pre-sidecar or crash-staled and ONE
-        // re-seed scan heals it, after which appends are incremental again.
-        // The delta is also COLLECTED before the write: writing into
-        // `vectors` invalidates `fresh`'s cache and refreshes the path's
-        // file index, so a post-write re-evaluation would anti-join the
-        // batch against itself and see zero rows
-        val validBefore = readDriftMarker(spark, path)
-          .contains(storeFingerprint(spark, s"$path/vectors"))
-        val delta =
-          if (validBefore) collectDriftRows(
-            ivfAssign(fresh, vecCol, centroids), vecCol, centroids)
-          else Seq.empty[(Int, Long, Long)]
-        ivfAssign(fresh, vecCol, centroids)
-          .write.mode(SaveMode.Append)
-          .partitionBy("cluster_id").parquet(s"$path/vectors")
-        if (validBefore) {
-          writeDriftRows(spark, path, delta, SaveMode.Append)
-          writeDriftMarker(spark, path,
-            storeFingerprint(spark, s"$path/vectors"))
-        } else { seedIvfDriftStats(spark, path, vecCol); () }
-      }
-      n
-    } finally { fresh.unpersist(); () }
+    // a missing store is left to the family's append gate
+    if (PathState.hasData(s"$path/vectors", spark.sparkContext.hadoopConfiguration))
+      requireIvfBatchColumns("appendIvfIndex", batch,
+        StoreParquet.open(spark, s"$path/vectors"))
+    driftStatsStep(spark, path, ExtendDrift(vecCol))(
+      VectorStores.append(VectorStores.Ivf, "appendIvfIndex", batch, idCol,
+        vecCol, path))
   }
 
   /** Files written into an IVF store must carry the index's exact column
@@ -831,9 +786,14 @@ object Search {
     * a content hash; hashing bytes would cost the full-store read the
     * sidecar exists to avoid.)
     */
-  def storeFingerprint(spark: SparkSession, dir: String): String = {
-    val entries = graft.sources.PathState.visibleParquet(dir,
-        spark.sparkContext.hadoopConfiguration)
+  def storeFingerprint(spark: SparkSession, dir: String): String =
+    fingerprintOf(PathState.visibleParquet(dir,
+      spark.sparkContext.hadoopConfiguration))
+
+  /** [[storeFingerprint]] of one listing. */
+  private def fingerprintOf(
+      listing: Seq[(String, org.apache.hadoop.fs.FileStatus)]): String = {
+    val entries = listing
       .map { case (rel, f) => s"$rel:${f.getLen}:${f.getModificationTime}" }.sorted
     java.security.MessageDigest.getInstance("MD5")
       .digest(entries.mkString("\n").getBytes("UTF-8"))
@@ -875,52 +835,50 @@ object Search {
     }
   }
 
-  /** Collected stat rows are nClusters-bounded (the coarse quantizer's
-    * size, hundreds at most) — a documented driver-bounded collect.
-    */
   private def writeDriftRows(spark: SparkSession, path: String,
       rows: Seq[(Int, Long, Long)], mode: SaveMode): Unit =
     // nClusters-bounded driver rows → driver-side write, zero jobs (r20)
-    graft.sources.SidecarParquet.writeFlat(driftStatsDir(path),
+    SidecarParquet.writeFlat(driftStatsDir(path),
       spark.sparkContext.hadoopConfiguration,
       Seq("cluster_id" -> "int", "n" -> "long", "sim_fp_sum" -> "long"),
       rows.map(r => Seq[Any](r._1, r._2, r._3)),
       append = mode == SaveMode.Append)
 
-  private def collectDriftRows(assigned: DataFrame, vecCol: String,
-      centroids: Seq[(Int, Array[Float])]): Seq[(Int, Long, Long)] = {
-    val spark = assigned.sparkSession
+  /** A drift stats frame's rows on the driver — nClusters-bounded (the
+    * coarse quantizer's size, hundreds at most): a documented
+    * driver-bounded collect, shared by the seed, the append delta and the
+    * compaction carry.
+    */
+  private def collectDriftRows(stats: DataFrame): Seq[(Int, Long, Long)] = {
+    val spark = stats.sparkSession
     import spark.implicits._
-    driftStatRows(assigned, vecCol, centroids)
-      .select(col("cluster_id").cast("int"), col("n"), col("sim_fp_sum"))
+    stats.select(col("cluster_id").cast("int"), col("n"), col("sim_fp_sum"))
       .as[(Int, Long, Long)].collect().toSeq
   }
 
   /** Seed (or re-seed) the drift-stats sidecar of a persisted IVF store
-    * from the frame in hand — the mutators call this with the batch they
-    * are already scanning, so seeding is one extra NARROW aggregate pass
-    * over the input, never a re-read of the store just written.
+    * from a READ-BACK of the store (one narrow vec + cluster_id scan),
+    * never from a re-evaluation of the written frame: a non-deterministic
+    * input would re-evaluate to rows not in the store, and the seed would
+    * certify them (the fingerprint matches — the fallback never triggers).
     *
-    * Parity-checked before certifying (ADVICE r16): the stat rows come
-    * from an inner join against the centroids sidecar, so a vectors row
-    * whose `cluster_id` is missing from `centroids` (a corrupt or
-    * hand-edited store) would silently drop from both the count and the
-    * drift statistic — the seed compares Σn against a plain count of the
-    * frame and refuses loudly on mismatch, mirroring the compaction
-    * row-parity requires. The count is a second pass, but only on seed
-    * paths that are already O(store) by construction.
+    * Parity-checked (ADVICE r16): the stat rows come from an inner join
+    * against the centroids, so a row whose `cluster_id` is missing there
+    * (a corrupt or hand-edited store) would silently drop — Σn must equal
+    * `total` (a write's own observed count; a count of the store if None).
     *
-    * @return total vectors accounted (Σ n, == the frame's row count)
+    * @return total vectors accounted (Σ n, == the store's row count)
     */
-  private def seedDriftStatsFrom(assigned: DataFrame, vecCol: String,
-      centroids: Seq[(Int, Array[Float])], path: String): Long = {
-    val spark = assigned.sparkSession
-    val rows = collectDriftRows(assigned, vecCol, centroids)
+  private def seedDriftStats(spark: SparkSession, path: String,
+      vecCol: String, total: Option[Long]): Long = {
+    val store = StoreParquet.open(spark, s"$path/vectors")
+    val rows = collectDriftRows(driftStatRows(store, vecCol,
+      readIvfCentroids(spark, path)))
     val accounted = rows.map(_._2).sum
-    val total = assigned.count()
-    require(accounted == total,
-      s"drift-stats seed at '$path' accounted $accounted of $total " +
-        s"vectors — ${total - accounted} row(s) carry a cluster_id " +
+    val n = total.getOrElse(store.count())
+    require(accounted == n,
+      s"drift-stats seed at '$path' accounted $accounted of $n " +
+        s"vectors — ${n - accounted} row(s) carry a cluster_id " +
         "missing from the centroids sidecar (corrupt or hand-edited " +
         "store); refusing to certify statistics that undercount")
     writeDriftRows(spark, path, rows, SaveMode.Overwrite)
@@ -929,15 +887,64 @@ object Search {
   }
 
   /** Re-seed a store's sidecar from the STORE (one narrow scan of
-    * vec + cluster_id) — the self-heal path for a pre-sidecar store or a
-    * crash-staled one. After one seed, maintenance is incremental again.
+    * vec + cluster_id, plus a count for the parity check) — the self-heal
+    * path for a pre-sidecar store or a crash-staled one. After one seed,
+    * maintenance is incremental again.
     *
     * @return total vectors accounted (Σ n)
     */
   def seedIvfDriftStats(spark: SparkSession, path: String,
       vecCol: String): Long =
-    seedDriftStatsFrom(StoreParquet.open(spark, s"$path/vectors"), vecCol,
-      readIvfCentroids(spark, path), path)
+    seedDriftStats(spark, path, vecCol, None)
+
+  /** What [[driftStatsStep]] does around an IVF operation. */
+  private sealed trait DriftUpkeep
+  private final case class SeedDrift(vecCol: String) extends DriftUpkeep
+  private final case class ExtendDrift(vecCol: String) extends DriftUpkeep
+  private final case class CarryDrift(src: String) extends DriftUpkeep
+
+  /** The drift-stats sidecar's upkeep around one IVF store operation `op`
+    * ([[VectorStores]] knows nothing of it), for the store at `path`:
+    *   - seed (`op` wrote the whole store): re-seed from the store, with
+    *     `op`'s observed count as the parity total — no re-count job;
+    *   - extend (`op` appended): a sidecar current before the append gets
+    *     delta rows aggregated from exactly the files the append added —
+    *     the difference of the listings the fingerprints take anyway —
+    *     (exact long sums, associative); a stale or absent one (a
+    *     pre-sidecar or crash-staled store) is re-seeded from the store;
+    *   - carry (`op` compacted `src` row for row): a VALID source sidecar
+    *     carries over aggregated; a stale or absent one heals later (R183).
+    *
+    * @return `op`'s count
+    */
+  private def driftStatsStep(spark: SparkSession, path: String,
+      upkeep: DriftUpkeep)(op: => Long): Long = {
+    def listing = PathState.visibleParquet(s"$path/vectors",
+      spark.sparkContext.hadoopConfiguration)
+    val before = upkeep match { case ExtendDrift(_) => listing; case _ => Nil }
+    val current = before.nonEmpty &&
+      readDriftMarker(spark, path).contains(fingerprintOf(before))
+    val n = op
+    upkeep match {
+      case SeedDrift(vecCol) => seedDriftStats(spark, path, vecCol, Some(n))
+      case ExtendDrift(vecCol) if n > 0 && !current =>
+        seedIvfDriftStats(spark, path, vecCol)
+      case ExtendDrift(vecCol) if n > 0 =>
+        val after = listing
+        val known = before.map(_._1).toSet
+        val added = after.map(_._1).filterNot(known).map(r => s"$path/vectors/$r")
+        writeDriftRows(spark, path, collectDriftRows(driftStatRows(
+          StoreParquet.open(spark, s"$path/vectors", added), vecCol,
+          readIvfCentroids(spark, path))), SaveMode.Append)
+        writeDriftMarker(spark, path, fingerprintOf(after))
+      case CarryDrift(src) => ivfDriftStatsFromSidecar(spark, src).foreach { st =>
+        writeDriftRows(spark, path, collectDriftRows(st), SaveMode.Overwrite)
+        writeDriftMarker(spark, path, fingerprintOf(listing))
+      }
+      case _ =>
+    }
+    n
+  }
 
   /** The sidecar's per-cluster totals IF they are provably current for
     * the store's content (recorded fingerprint == one fresh listing of
@@ -949,39 +956,17 @@ object Search {
     */
   def ivfDriftStatsFromSidecar(spark: SparkSession,
       path: String): Option[DataFrame] = {
-    import graft.sources.PathState
-    val hconf = spark.sparkContext.hadoopConfiguration
     readDriftMarker(spark, path) match {
       case Some(digest)
           if digest == storeFingerprint(spark, s"$path/vectors") &&
-            PathState.hasData(driftStatsDir(path), hconf) =>
+            PathState.hasData(driftStatsDir(path),
+              spark.sparkContext.hadoopConfiguration) =>
         Some(guardDriftStatOverflow(StoreParquet.open(spark, driftStatsDir(path))
           .groupBy(col("cluster_id"))
           .agg(sum(col("n")).as("n"), sum(col("sim_fp_sum")).as("sim_fp_sum"))))
       case _ => None
     }
   }
-
-  /** Driver-side centroid-sidecar write (KB model rows already on the
-    * driver; the old toDF+coalesce(1) write was one Spark job per index
-    * build/refresh — r20, guide §5).
-    */
-  private def writeCentroidsSidecar(spark: SparkSession, path: String,
-      centroids: Seq[(Int, Array[Float])]): Unit =
-    graft.sources.SidecarParquet.writeFlat(s"$path/centroids",
-      spark.sparkContext.hadoopConfiguration,
-      Seq("cluster_id" -> "int", "centroid" -> "floatarray"),
-      centroids.map(c => Seq[Any](c._1, c._2)))
-
-  /** [[writeCentroidsSidecar]]'s codebook twin. */
-  private def writeCodebooksSidecar(spark: SparkSession, path: String,
-      cb: PqCodebooks): Unit =
-    graft.sources.SidecarParquet.writeFlat(s"$path/codebooks",
-      spark.sparkContext.hadoopConfiguration,
-      Seq("s" -> "int", "j" -> "int", "center" -> "floatarray"),
-      cb.centers.zipWithIndex.flatMap { case (cents, s) =>
-        cents.zipWithIndex.map { case (c, j) => Seq[Any](s, j, c) }
-      })
 
   /** Load the sidecar centroids of a persisted IVF index — a DRIVER-SIDE
     * parquet read ([[graft.sources.SidecarParquet]], r20 optimization
@@ -992,7 +977,6 @@ object Search {
     * the old `cast("array<float>")` did), so the result is bit-identical.
     */
   def readIvfCentroids(spark: SparkSession, path: String): Seq[(Int, Array[Float])] = {
-    import graft.sources.SidecarParquet
     SidecarParquet.readGroups(s"$path/centroids",
         spark.sparkContext.hadoopConfiguration)
       .map(g => (SidecarParquet.intAt(g, "cluster_id"),
@@ -1024,17 +1008,14 @@ object Search {
     */
   def writeIvfIndexQuantized(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Int, Array[Float])], path: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    import graft.functions.VectorFunctions
-    ivfAssign(df, vecCol, centroids)
-      .select(col(idCol), col("cluster_id"),
-        transform(VectorFunctions.i8Codes(col(vecCol)), _.cast("byte")).as("codes"),
-        VectorFunctions.i8Scale(col(vecCol)).cast("float").as("scale"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster_id").parquet(s"$path/vectors")
-    val spark = df.sparkSession
-    import spark.implicits._
-    writeCentroidsSidecar(spark, path, centroids)
+    // the IVF family with (codes, scale) stored in place of the vector
+    VectorStores.write(VectorStores.Ivf.copy[VectorStores.Centroids](
+      encode = (b, id, vec, cents) => ivfAssign(b, vec, cents).select(
+        col(id), col("cluster_id"),
+        transform(i8Codes(col(vec)), _.cast("byte")).as("codes"),
+        i8Scale(col(vec)).cast("float").as("scale"))),
+      df, idCol, vecCol, centroids, path)
+    ()
   }
 
   /** ANN over a quantized IVF index with full-precision rescoring: probe
@@ -1431,24 +1412,15 @@ object Search {
     * session state; appends reuse [[appendPqIndex]] on the rotated batch.
     */
   def opqWriteIndex(df: DataFrame, idCol: String, vecCol: String,
-      model: OpqModel, path: String): Long = {
-    val n = pqWriteIndex(rotated(df, idCol, vecCol, model.rotation), idCol,
-      vecCol, model.cb, path)
-    val spark = df.sparkSession
-    // driver-local model rows → driver-side write, zero jobs (r20)
-    graft.sources.SidecarParquet.writeFlat(s"$path/rotation",
-      spark.sparkContext.hadoopConfiguration,
-      Seq("i" -> "int", "row" -> "floatarray"),
-      model.rotation.zipWithIndex.map { case (row, i) => Seq[Any](i, row) })
-    n
-  }
+      model: OpqModel, path: String): Long =
+    VectorStores.write(VectorStores.Opq, df, idCol, vecCol,
+      model.copy(cb = byteCodes(model.cb)), path)
 
   /** Load a persisted OPQ model (codebook + rotation sidecars) —
     * driver-side parquet reads, zero Spark jobs ([[readIvfCentroids]]'s
     * rationale).
     */
   def readOpqModel(spark: SparkSession, path: String): OpqModel = {
-    import graft.sources.SidecarParquet
     val rows = SidecarParquet.readGroups(s"$path/rotation",
         spark.sparkContext.hadoopConfiguration)
       .map(g => (SidecarParquet.intAt(g, "i"),
@@ -1614,12 +1586,16 @@ object Search {
     * by [[pqTopKFromIndex]] with no session state.
     */
   def pqWriteIndex(df: DataFrame, idCol: String, vecCol: String,
-      cb: PqCodebooks, path: String): Long = {
+      cb: PqCodebooks, path: String): Long =
+    VectorStores.write(VectorStores.Pq, df, idCol, vecCol, byteCodes(cb),
+      path)
+
+  /** `cb`, refused unless its codes fit the stored signed bytes — in front
+    * of every PQ-family build and refresh.
+    */
+  private def byteCodes(cb: PqCodebooks): PqCodebooks = {
     require(cb.ksub <= 128, s"ksub=${cb.ksub} > 128 codes do not fit tinyint")
-    val n = VectorStores.writeCounted(pqEncodedBytes(df, idCol, vecCol, cb),
-      s"$path/codes")
-    writeCodebooksSidecar(df.sparkSession, path, cb)
-    n
+    cb
   }
 
   /** [[pqEncode]] with the codes narrowed to the stored tinyint array. */
@@ -1632,7 +1608,6 @@ object Search {
     * parquet read, zero Spark jobs ([[readIvfCentroids]]'s rationale).
     */
   def readPqCodebooks(spark: SparkSession, path: String): PqCodebooks = {
-    import graft.sources.SidecarParquet
     val rows = SidecarParquet.readGroups(s"$path/codebooks",
         spark.sparkContext.hadoopConfiguration)
       .map(g => (SidecarParquet.intAt(g, "s"), SidecarParquet.intAt(g, "j"),
@@ -1700,16 +1675,9 @@ object Search {
     */
   def writeIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Int, Array[Float])], cb: PqCodebooks,
-      path: String): Long = {
-    require(cb.ksub <= 128, s"ksub=${cb.ksub} > 128 codes do not fit tinyint")
-    val n = VectorStores.writeCounted(
-      ivfPqEncoded(df, idCol, vecCol, centroids, cb),
-      s"$path/codes", partitionCol = Some("cluster_id"))
-    val spark = df.sparkSession
-    writeCentroidsSidecar(spark, path, centroids)
-    writeCodebooksSidecar(spark, path, cb)
-    n
-  }
+      path: String): Long =
+    VectorStores.write(VectorStores.IvfPq, df, idCol, vecCol,
+      (centroids, byteCodes(cb)), path)
 
   /** ANN top-k against a persisted [[writeIvfPqIndex]] index: probe
     * clusters chosen driver-side from the centroid sidecar
@@ -1889,20 +1857,9 @@ object Search {
     */
   def writeIvfPqResidualIndex(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Int, Array[Float])], cb: PqCodebooks,
-      path: String): Long = {
-    require(cb.ksub <= 128, s"ksub=${cb.ksub} > 128 codes do not fit tinyint")
-    val n = VectorStores.writeCounted(
-      ivfPqResidualEncoded(df, idCol, vecCol, centroids, cb),
-      s"$path/codes", partitionCol = Some("cluster_id"))
-    val spark = df.sparkSession
-    writeCentroidsSidecar(spark, path, centroids)
-    writeCodebooksSidecar(spark, path, cb)
-    // driver-local marker → driver-side write, zero jobs (r20)
-    graft.sources.SidecarParquet.writeFlat(s"$path/encoding",
-      spark.sparkContext.hadoopConfiguration,
-      Seq("encoding" -> "string"), Seq(Seq("fp_residual")))
-    n
-  }
+      path: String): Long =
+    VectorStores.write(VectorStores.IvfPqResidual, df, idCol, vecCol,
+      (centroids, byteCodes(cb)), path)
 
   /** The ADC candidate stage of [[ivfPqResidualTopKFromIndex]]: one
     * partition-pruned scan of the probed clusters scored by the residual
@@ -2122,9 +2079,10 @@ object Search {
   def refreshIvfIndex(df: DataFrame, idCol: String, vecCol: String,
       srcPath: String, dstPath: String, nClusters: Int,
       salt: String = "refresh"): Long =
-    VectorStores.refresh(VectorStores.Ivf, "refreshIvfIndex", df, idCol,
-      vecCol, srcPath, dstPath)(
-      sampledCentroids(df, idCol, vecCol, nClusters, salt))
+    driftStatsStep(df.sparkSession, dstPath, SeedDrift(vecCol))(
+      VectorStores.refresh(VectorStores.Ivf, "refreshIvfIndex", df, idCol,
+        vecCol, srcPath, dstPath)(
+        sampledCentroids(df, idCol, vecCol, nClusters, salt)))
 
   /** [[refreshIvfIndex]] for the flat PQ family: codebooks re-train on
     * the current corpus via the deterministic sampled recipe
@@ -2137,7 +2095,7 @@ object Search {
       ksub: Int): Long =
     VectorStores.refresh(VectorStores.Pq, "refreshPqIndex", df, idCol,
       vecCol, srcPath, dstPath)(
-      pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub))
+      byteCodes(pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub)))
 
   /** [[refreshIvfIndex]] for the composed IVF-PQ family: BOTH models —
     * coarse centroids and PQ codebooks — re-train on the current corpus
@@ -2152,7 +2110,7 @@ object Search {
     VectorStores.refresh(VectorStores.IvfPq, "refreshIvfPqIndex", df, idCol,
       vecCol, srcPath, dstPath)(
       (sampledCentroids(df, idCol, vecCol, nClusters, salt),
-        pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub)))
+        byteCodes(pqSampledCodebooks(df, idCol, vecCol, dim, m, ksub))))
 
   /** [[refreshIvfPqIndex]] for the RESIDUAL family: centroids re-sample,
     * residual codebooks re-train against them
@@ -2168,8 +2126,8 @@ object Search {
     VectorStores.refresh(VectorStores.IvfPqResidual,
       "refreshIvfPqResidualIndex", df, idCol, vecCol, srcPath, dstPath) {
       val cents = sampledCentroids(df, idCol, vecCol, nClusters, salt)
-      (cents, pqResidualSampledCodebooks(df, idCol, vecCol, cents, dim, m,
-        ksub))
+      (cents, byteCodes(pqResidualSampledCodebooks(df, idCol, vecCol, cents,
+        dim, m, ksub)))
     }
 
   /** [[refreshPqIndex]] for the OPQ family — completing refresh symmetry
@@ -2187,8 +2145,11 @@ object Search {
       srcPath: String, dstPath: String, dim: Int, m: Int, ksub: Int,
       seed: Long = 42L, maxIter: Int = 20, opqIters: Int = 4): Long =
     VectorStores.refresh(VectorStores.Opq, "refreshOpqIndex", df, idCol,
-      vecCol, srcPath, dstPath)(
-      opqTrainCodebooks(df, vecCol, dim, m, ksub, seed, maxIter, opqIters))
+      vecCol, srcPath, dstPath) {
+      val model = opqTrainCodebooks(df, vecCol, dim, m, ksub, seed, maxIter,
+        opqIters)
+      model.copy(cb = byteCodes(model.cb))
+    }
 
   // ------------------------------------------ the drift-policy loop ---
   //
@@ -2210,12 +2171,17 @@ object Search {
   def minCorpusClusterSimilarity(spark: SparkSession, path: String,
       corpus: DataFrame, vecCol: String): Double = {
     val cents = readIvfCentroids(spark, path)
-    val h = driftStatRows(ivfAssign(corpus, vecCol, cents), vecCol, cents)
-      .agg(min(col("sim_fp_sum").cast("double") /
-        (col("n").cast("double") * lit(DriftFpScale.toDouble))).as("m"))
-      .head()
-    require(!h.isNullAt(0),
-      "empty corpus — nothing to observe drift on")
+    minMeanSimilarity(driftStatRows(ivfAssign(corpus, vecCol, cents), vecCol,
+      cents), "empty corpus — nothing to observe drift on")
+  }
+
+  /** The smallest per-cluster fixed-point mean cosine of drift stat rows;
+    * refuses rows that hold no vector, saying `empty`.
+    */
+  private def minMeanSimilarity(stats: DataFrame, empty: => String): Double = {
+    val h = stats.agg(min(col("sim_fp_sum").cast("double") /
+      (col("n").cast("double") * lit(DriftFpScale.toDouble))).as("m")).head()
+    require(!h.isNullAt(0), empty)
     h.getDouble(0)
   }
 
@@ -2232,15 +2198,9 @@ object Search {
     // full recompute, same value bit-for-bit (both paths are the 1e-9
     // fixed-point mean, so the threshold comparison cannot flap on
     // which path served it).
-    val stats = ivfDriftStatsFromSidecar(spark, path)
-      .getOrElse(ivfDriftStatsExact(spark, path, vecCol))
-    val h = stats
-      .agg(min(col("sim_fp_sum").cast("double") /
-        (col("n").cast("double") * lit(DriftFpScale.toDouble))).as("m"))
-      .head()
-    require(!h.isNullAt(0),
+    minMeanSimilarity(ivfDriftStatsFromSidecar(spark, path)
+        .getOrElse(ivfDriftStatsExact(spark, path, vecCol)),
       s"'$path' holds no vectors — nothing to observe drift on")
-    h.getDouble(0)
   }
 
   /** The operational drift loop as ONE operator (VERDICT r14 item 6 —
@@ -2287,8 +2247,7 @@ object Search {
     * file count does not justify.
     */
   def dataFileCount(spark: SparkSession, dir: String): Int =
-    graft.sources.PathState.visibleParquet(dir,
-      spark.sparkContext.hadoopConfiguration).size
+    PathState.visibleParquet(dir, spark.sparkContext.hadoopConfiguration).size
 
   /** [[maintainVectorIndex]] on the LAYOUT axis for the text index: a
     * text store has no model to drift — what sustained
@@ -2337,34 +2296,17 @@ object Search {
       dstPath: String, targetFiles: Int = 16): Long = {
     StoreParquet.requireNewDirectory("compactTextIndex", srcPath, dstPath)
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    StoreParquet.openExisting(spark, s"$srcPath/postings",
+    val postings = StoreParquet.openExisting(spark, s"$srcPath/postings",
       s"'$srcPath/postings' holds no parquet data files — not a text index")
       .groupBy(col("term"), col("id")).agg(first(col("tf")).as("tf"))
-      .repartitionByRange(targetFiles, col("term"))
-      .sortWithinPartitions(col("term"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dstPath/postings")
     val dl = StoreParquet.open(spark, s"$srcPath/doclens")
+    // the source count is the deliberate parity check on the written rows
     val n = dl.count()
-    // stats come from an Observation ON the doclens write job — the same
-    // "from the WRITTEN rows, cannot stale" guarantee the read-back gave,
-    // without re-reading what was just written (VERDICT r14 — the store's
-    // own R168 discipline applied to its compactor); the source count
-    // above stays as the deliberate parity check
-    // the metrics node sits ABOVE the range exchange: below it, the
-    // boundary-sampling pass executes the observed subtree a second time
-    // and doubles the counts
-    val obs = org.apache.spark.sql.Observation("compact_doclens")
-    dl.repartitionByRange(math.max(1, targetFiles / 4), col("id"))
-      .sortWithinPartitions(col("id"))
-      .observe(obs, count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dstPath/doclens")
-    val written = obs.get("n_docs").asInstanceOf[Long]
+    val written = writeTextArtifacts(spark, dstPath, postings,
+      dl.repartitionByRange(math.max(1, targetFiles / 4), col("id"))
+        .sortWithinPartitions(col("id")), Some(targetFiles))
     require(written == n,
       s"doclens compaction row mismatch: source $n, wrote $written")
-    writeTextStats(spark, dstPath, written, obs.get("sum_dl") match {
-      case null => 0L
-      case x: java.lang.Number => x.longValue
-    })
     written
   }
 
@@ -2406,23 +2348,10 @@ object Search {
     * @return number of vectors in the compacted index
     */
   def compactIvfIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, targetFilesPerCluster: Int = 1): Long = {
-    val out = VectorStores.compact(VectorStores.Ivf, "compactIvfIndex", spark,
-      srcPath, dstPath, targetFilesPerCluster)
-    // compaction preserves content row-for-row, so a VALID source sidecar
-    // carries verbatim (aggregated — the per-batch delta rows collapse);
-    // a stale/absent one is simply not carried and heals later (R183)
-    ivfDriftStatsFromSidecar(spark, srcPath).foreach { st =>
-      import spark.implicits._
-      val rows = st
-        .select(col("cluster_id").cast("int"), col("n"), col("sim_fp_sum"))
-        .as[(Int, Long, Long)].collect().toSeq
-      writeDriftRows(spark, dstPath, rows, SaveMode.Overwrite)
-      writeDriftMarker(spark, dstPath,
-        storeFingerprint(spark, s"$dstPath/vectors"))
-    }
-    out
-  }
+      dstPath: String, targetFilesPerCluster: Int = 1): Long =
+    driftStatsStep(spark, dstPath, CarryDrift(srcPath))(
+      VectorStores.compact(VectorStores.Ivf, "compactIvfIndex", spark,
+        srcPath, dstPath, targetFilesPerCluster))
 
   /** [[compactIvfIndex]] for the composed IVF-PQ families (plain AND
     * residual — the `encoding` sidecar rides along when present, so the
@@ -2537,11 +2466,28 @@ object Search {
       .select(col("_id"), col("_tb.t").as("_t"), col("_tb.bucket").as("_b"))
   }
 
-  /** [[seededBands]] as the persisted `bands` rows (id, t, bucket). */
-  private def seededBandRows(codes: DataFrame, dim: Int, numTables: Int,
-      bitsPerTable: Int): DataFrame =
-    seededBands(codes, dim, numTables, bitsPerTable)
-      .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket"))
+  /** The persisted rows of hashed `codes`: (id, t, bucket) for `bands`,
+    * (id, code) for `codes`.
+    */
+  private def seededRows(codes: DataFrame, dim: Int, numTables: Int,
+      bitsPerTable: Int): (DataFrame, DataFrame) =
+    (seededBands(codes, dim, numTables, bitsPerTable)
+      .select(col("_id").as("id"), col("_t").as("t"), col("_b").as("bucket")),
+      codes.select(col("_id").as("id"), col("_c").as("code")))
+
+  /** Write a seeded-LSH store's (bands, codes) rows: `bands` FIRST, as
+    * the `codes` leg is the append's idempotency gate — a crash between
+    * the two leaves orphan band rows the retry re-appends (the read path's
+    * (id1, id2) dedup absorbs them); the reverse order would gate the
+    * retry out with its band rows never landed (silent recall loss).
+    *
+    * @return code rows written
+    */
+  private def writeSeededLegs(path: String, mode: SaveMode,
+      legs: (DataFrame, DataFrame)): Long = {
+    legs._1.write.mode(mode).partitionBy("t").parquet(s"$path/bands")
+    VectorStores.writeCounted(legs._2, s"$path/codes", mode = mode)
+  }
 
   /** Keep the candidate pairs (`a`, `b`) whose float codes `_c1`/`_c2`
     * reach `simThreshold` in quantized cosine — integer-exact dots,
@@ -2601,16 +2547,11 @@ object Search {
   def writeSeededLshIndex(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, path: String, numTables: Int = 4, bitsPerTable: Int = 12): Unit = {
     require(numTables > 0 && bitsPerTable > 0 && bitsPerTable < 31)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val codes = seededCodes(df, idCol, vecCol)
-    seededBandRows(codes, dim, numTables, bitsPerTable)
-      .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$path/bands")
-    codes.select(col("_id").as("id"), col("_c").as("code"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
+    writeSeededLegs(path, SaveMode.Overwrite, seededRows(
+      seededCodes(df, idCol, vecCol), dim, numTables, bitsPerTable))
     // driver-local family shape → driver-side write, zero jobs (r20)
-    graft.sources.SidecarParquet.writeFlat(s"$path/meta",
-      spark.sparkContext.hadoopConfiguration,
+    SidecarParquet.writeFlat(s"$path/meta",
+      df.sparkSession.sparkContext.hadoopConfiguration,
       Seq("dim" -> "int", "num_tables" -> "int", "bits_per_table" -> "int"),
       Seq(Seq(dim, numTables, bitsPerTable)))
   }
@@ -2621,7 +2562,6 @@ object Search {
     */
   private def readSeededLshMeta(spark: SparkSession,
       path: String): (Int, Int, Int) = {
-    import graft.sources.SidecarParquet
     val g = SidecarParquet.readGroups(s"$path/meta",
       spark.sparkContext.hadoopConfiguration).head
     (SidecarParquet.intAt(g, "dim"), SidecarParquet.intAt(g, "num_tables"),
@@ -2631,12 +2571,8 @@ object Search {
   /** Append a batch to a [[writeSeededLshIndex]] index under the frozen
     * family shape — the R81/R85 maintenance discipline: already-indexed
     * ids anti-join out against a column-pruned id scan of `codes`, so
-    * replays are no-ops; band rows commit FIRST and codes SECOND, because
-    * the CODES store is the idempotency gate — a crash between the two
-    * appends leaves orphan band rows the retry re-appends, which the read
-    * path's (id1, id2) dedup absorbs, whereas the reverse order would
-    * gate the retry out with its band rows never landed (silent recall
-    * loss).
+    * replays are no-ops; the legs append in [[writeSeededLegs]]' crash-safe
+    * order.
     *
     * @return number of NEW vectors appended (0 for a pure replay)
     */
@@ -2662,12 +2598,8 @@ object Search {
         requireUniqueSeededIds("appendSeededLshIndex", fresh, idCol, n)
         val codes = seededCodes(fresh, idCol, vecCol)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          seededBandRows(codes, dim, nt, bpt)
-            .write.mode(SaveMode.Append).partitionBy("t").parquet(s"$path/bands")
-          codes.select(col("_id").as("id"), col("_c").as("code"))
-            .write.mode(SaveMode.Append).parquet(s"$path/codes")
-        } finally { codes.unpersist(false); () }
+        try writeSeededLegs(path, SaveMode.Append, seededRows(codes, dim, nt, bpt))
+        finally { codes.unpersist(false); () }
       }
       n
     } finally { fresh.unpersist(); () }
@@ -2692,27 +2624,52 @@ object Search {
     * ([[appendSeededLshIndex]] being the insert half): copy bands, codes
     * and meta MINUS the given ids into a NEW directory — the
     * removeFromTextIndex contract (job-commit all-or-nothing, source
-    * readable throughout, caller swaps atomically). The rewrite also
-    * re-dedups (id, t, bucket) band rows and per-id codes, so orphans
-    * from any crashed append are compacted away rather than carried
-    * forever.
+    * readable throughout, caller swaps atomically).
     *
     * @return number of surviving vectors in the new index
     */
   def removeFromSeededLshIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, removeIds: DataFrame, idCol: String): Long = {
-    StoreParquet.requireNewDirectory("removeFromSeededLshIndex", srcPath, dstPath)
-    val drop = removeIds.select(col(idCol).as("id")).distinct()
-    StoreParquet.open(spark, s"$srcPath/bands")
-      .join(drop, Seq("id"), "left_anti")
-      .dropDuplicates("id", "t", "bucket")
-      .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$dstPath/bands")
-    val n = VectorStores.writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-        .join(drop, Seq("id"), "left_anti")
-        .dropDuplicates("id"),
-      s"$dstPath/codes")
-    VectorStores.copySidecarFiles(spark, s"$srcPath/meta", s"$dstPath/meta")
-    n
+      dstPath: String, removeIds: DataFrame, idCol: String): Long =
+    rewriteSeededLshIndex(spark, "removeFromSeededLshIndex", srcPath,
+      dstPath, removeIds, idCol)
+
+  /** The new-directory rewrite of [[removeFromSeededLshIndex]] and
+    * [[updateSeededLshIndex]]: `bands` and `codes` minus `retireIds` and
+    * the refresh batch's ids, re-deduped on (id, t, bucket) and on id (a
+    * crashed append's orphans go), plus the optional (batch, vecCol)
+    * hashed under the frozen `meta` shape after [[requireUniqueSeededIds]];
+    * `meta` copies verbatim. Off [[VectorStores]]: two data artifacts, a
+    * conflicting-id refusal and no model generation.
+    *
+    * @return number of vectors in the new index
+    */
+  private def rewriteSeededLshIndex(spark: SparkSession, op: String,
+      srcPath: String, dstPath: String, retireIds: DataFrame, idCol: String,
+      refresh: Option[(DataFrame, String)] = None): Long = {
+    StoreParquet.requireNewDirectory(op, srcPath, dstPath)
+    val (dim, nt, bpt) = readSeededLshMeta(spark, srcPath)
+    val fresh = refresh.map { case (b, vecCol) =>
+      (b.dropDuplicates(idCol, vecCol).persist(), vecCol) }
+    try {
+      fresh.foreach { case (f, _) =>
+        requireUniqueSeededIds(op, f, idCol, f.count()) }
+      val retired = retireIds.select(col(idCol).as("id"))
+      val drop = fresh.fold(retired)(f =>
+        retired.unionByName(f._1.select(col(idCol).as("id")))).distinct()
+      def kept(leg: String, key: String*): DataFrame =
+        StoreParquet.open(spark, s"$srcPath/$leg")
+          .join(drop, Seq("id"), "left_anti").dropDuplicates(key)
+      val codes = fresh.map { case (f, vecCol) => seededCodes(f, idCol, vecCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) }
+      try {
+        val survivors = (kept("bands", "id", "t", "bucket"), kept("codes", "id"))
+        val n = writeSeededLegs(dstPath, SaveMode.Overwrite,
+          codes.map(seededRows(_, dim, nt, bpt)).fold(survivors) { case (b, c) =>
+            (survivors._1.unionByName(b), survivors._2.unionByName(c)) })
+        VectorStores.copySidecarFiles(spark, s"$srcPath/meta", s"$dstPath/meta")
+        n
+      } finally codes.foreach(_.unpersist(false))
+    } finally fresh.foreach(_._1.unpersist())
   }
 
   /** FUSED seeded-LSH update ([[updateIvfIndex]] contract): survivors
@@ -2726,34 +2683,9 @@ object Search {
     */
   def updateSeededLshIndex(spark: SparkSession, srcPath: String,
       dstPath: String, retireIds: DataFrame, refreshBatch: DataFrame,
-      idCol: String, vecCol: String): Long = {
-    StoreParquet.requireNewDirectory("updateSeededLshIndex", srcPath, dstPath)
-    val (dim, nt, bpt) = readSeededLshMeta(spark, srcPath)
-    val fresh = refreshBatch.dropDuplicates(idCol, vecCol).persist()
-    try {
-      requireUniqueSeededIds("updateSeededLshIndex", fresh, idCol,
-        fresh.count())
-      val drop = retireIds.select(col(idCol).as("id"))
-        .unionByName(fresh.select(col(idCol).as("id"))).distinct()
-      val codes = seededCodes(fresh, idCol, vecCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out =
-        try {
-          StoreParquet.open(spark, s"$srcPath/bands")
-            .join(drop, Seq("id"), "left_anti")
-            .dropDuplicates("id", "t", "bucket")
-            .unionByName(seededBandRows(codes, dim, nt, bpt))
-            .write.mode(SaveMode.Overwrite).partitionBy("t").parquet(s"$dstPath/bands")
-          VectorStores.writeCounted(StoreParquet.open(spark, s"$srcPath/codes")
-              .join(drop, Seq("id"), "left_anti")
-              .dropDuplicates("id")
-              .unionByName(codes.select(col("_id").as("id"), col("_c").as("code"))),
-            s"$dstPath/codes")
-        } finally { codes.unpersist(false); () }
-      VectorStores.copySidecarFiles(spark, s"$srcPath/meta", s"$dstPath/meta")
-      out
-    } finally { fresh.unpersist(); () }
-  }
+      idCol: String, vecCol: String): Long =
+    rewriteSeededLshIndex(spark, "updateSeededLshIndex", srcPath, dstPath,
+      retireIds, idCol, Some((refreshBatch, vecCol)))
 
   /** Online near-dup LOOKUP against a persisted seeded-LSH index — the
     * dedup-at-ingest serving path ("is this new batch a near-dup of

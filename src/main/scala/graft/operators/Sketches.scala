@@ -45,22 +45,23 @@ object Sketches {
         .exists(g => SidecarParquet.stringAt(g, "batch_id") == batchId))
   }
 
-  /** The append gate shared by all four stores: refuse a directory that
-    * holds non-parquet content, no-op a replayed `batchId`
-    * ([[alreadyApplied]]), otherwise append `sketches` tagged with the
-    * batch id. The row count is observed ON the write job itself
+  /** The append gate shared by all four stores and
+    * [[Profile.appendProfile]]'s card store: refuse a directory that holds
+    * non-parquet content (naming the `kind` of store), no-op a replayed
+    * `batchId` ([[alreadyApplied]]), otherwise append `rows` tagged with
+    * the batch id. The row count is observed ON the write job itself
     * ([[VectorStores.writeCounted]]) — one job, exactly the rows the
     * job-committed append landed.
     *
-    * @return number of group rows appended (0 on replay)
+    * @return number of rows appended (0 on replay)
     */
-  private def appendOnce(df: DataFrame, batchId: String, storeDir: String)(
-      sketches: => DataFrame): Long = {
+  private[graft] def appendOnce(df: DataFrame, batchId: String,
+      storeDir: String, kind: String = "sketch")(rows: => DataFrame): Long = {
     val spark = df.sparkSession
     if (StoreParquet.openAppendable(spark, storeDir,
-        s"sketch store '$storeDir' holds non-parquet content — refusing to append")
+        s"$kind store '$storeDir' holds non-parquet content — refusing to append")
         .exists(alreadyApplied(spark, storeDir, _, batchId))) 0L
-    else VectorStores.writeCounted(sketches.withColumn("batch_id", lit(batchId)),
+    else VectorStores.writeCounted(rows.withColumn("batch_id", lit(batchId)),
       storeDir, mode = SaveMode.Append)
   }
 

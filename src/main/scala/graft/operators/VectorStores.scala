@@ -15,13 +15,15 @@ import Search.{OpqModel, PqCodebooks}
   *
   * Store layout: one data artifact (`vectors` or `codes`, optionally
   * partitioned by `cluster_id`) plus frozen-model sidecars (centroids,
-  * codebooks, rotation, encoding). Appends encode under the FROZEN models
+  * codebooks, rotation, encoding). A build ([[write]]) encodes the corpus
+  * and writes the models' sidecars. Appends encode under the FROZEN models
   * and anti-join already-indexed ids, so replays are no-ops; remove,
   * update and compact rewrite into a NEW directory (job-commit
   * all-or-nothing, the source stays readable, the caller swaps
   * atomically) and carry the sidecars verbatim; refresh re-trains the
-  * models and re-encodes the corpus into a new directory as the next
-  * model generation.
+  * models and re-builds into a new directory as the next model
+  * generation. No operation is specific to one family: the IVF store's
+  * drift-stats sidecar is kept by `Search` around these calls.
   *
   * Model-version discipline: serving a store whose artifacts mix two
   * model generations — a subtree-level swap that died half-way — would be
@@ -49,33 +51,37 @@ private[graft] object VectorStores {
     * @param writer     the public first-build name, for refusals
     * @param readModel  loads the frozen model from a store path
     * @param encode     (batch, idCol, vecCol, model) → rows of `data`
-    * @param write      (corpus, idCol, vecCol, model, path) → rows written
+    * @param writeModel writes the model's sidecars into a store path
     */
   final case class VectorFamily[M](family: String, data: String,
       sidecars: Seq[String], partitioned: Boolean, encoding: Option[String],
       writer: String,
       readModel: (SparkSession, String) => M,
       encode: (DataFrame, String, String, M) => DataFrame,
-      write: (DataFrame, String, String, M, String) => Long) {
+      writeModel: (SparkSession, String, M) => Unit) {
     def artifacts: Seq[String] = data +: sidecars
   }
 
   val Ivf: VectorFamily[Centroids] = VectorFamily("ivf", "vectors",
     Seq("centroids"), partitioned = true, encoding = None, "writeIvfIndex",
     Search.readIvfCentroids,
-    (b, _, vec, cents) => Search.ivfAssign(b, vec, cents),
-    (df, _, vec, cents, p) => Search.writeIvfIndex(df, vec, cents, p))
+    (b, _, vec, cents) => Search.ivfAssign(b, vec, cents), writeCentroids)
 
   val Pq: VectorFamily[PqCodebooks] = VectorFamily("pq", "codes",
     Seq("codebooks"), partitioned = false, encoding = None, "pqWriteIndex",
-    Search.readPqCodebooks, Search.pqEncodedBytes, Search.pqWriteIndex)
+    Search.readPqCodebooks, Search.pqEncodedBytes, writeCodebooks)
 
   val Opq: VectorFamily[OpqModel] = VectorFamily("opq", "codes",
     Seq("codebooks", "rotation"), partitioned = false, encoding = None,
     "opqWriteIndex", Search.readOpqModel,
     (b, id, vec, m) => Search.pqEncodedBytes(
       Search.rotated(b, id, vec, m.rotation), id, vec, m.cb),
-    Search.opqWriteIndex)
+    (spark, path, m) => {
+      writeCodebooks(spark, path, m.cb)
+      SidecarParquet.writeFlat(s"$path/rotation", hconf(spark),
+        Seq("i" -> "int", "row" -> "floatarray"),
+        m.rotation.zipWithIndex.map { case (row, i) => Seq[Any](i, row) })
+    })
 
   private def ivfPqModel(spark: SparkSession,
       path: String): (Centroids, PqCodebooks) =
@@ -85,15 +91,33 @@ private[graft] object VectorStores {
     "codes", Seq("centroids", "codebooks"), partitioned = true,
     encoding = None, "writeIvfPqIndex", ivfPqModel,
     (b, id, vec, m) => Search.ivfPqEncoded(b, id, vec, m._1, m._2),
-    (df, id, vec, m, p) => Search.writeIvfPqIndex(df, id, vec, m._1, m._2, p))
+    (spark, path, m) => {
+      writeCentroids(spark, path, m._1)
+      writeCodebooks(spark, path, m._2)
+    })
 
   val IvfPqResidual: VectorFamily[(Centroids, PqCodebooks)] = VectorFamily(
     "ivfpq_residual", "codes", Seq("centroids", "codebooks", "encoding"),
     partitioned = true, encoding = Some("fp_residual"),
     "writeIvfPqResidualIndex", ivfPqModel,
     (b, id, vec, m) => Search.ivfPqResidualEncoded(b, id, vec, m._1, m._2),
-    (df, id, vec, m, p) =>
-      Search.writeIvfPqResidualIndex(df, id, vec, m._1, m._2, p))
+    IvfPq.writeModel)
+
+  // model rows are driver-local and KB-scale: driver-side writes, zero jobs
+
+  private def writeCentroids(spark: SparkSession, path: String,
+      centroids: Centroids): Unit =
+    SidecarParquet.writeFlat(s"$path/centroids", hconf(spark),
+      Seq("cluster_id" -> "int", "centroid" -> "floatarray"),
+      centroids.map(c => Seq[Any](c._1, c._2)))
+
+  private def writeCodebooks(spark: SparkSession, path: String,
+      cb: PqCodebooks): Unit =
+    SidecarParquet.writeFlat(s"$path/codebooks", hconf(spark),
+      Seq("s" -> "int", "j" -> "int", "center" -> "floatarray"),
+      cb.centers.zipWithIndex.flatMap { case (cents, s) =>
+        cents.zipWithIndex.map { case (c, j) => Seq[Any](s, j, c) }
+      })
 
   private val families: Seq[VectorFamily[_]] =
     Seq(Ivf, Pq, Opq, IvfPq, IvfPqResidual)
@@ -102,6 +126,24 @@ private[graft] object VectorStores {
     spark.sparkContext.hadoopConfiguration
 
   // ------------------------------------------------------ operations ---
+
+  /** Build a store — the first build and every refresh's re-encode:
+    * `f.encode`'s rows under `model` as the data artifact, counted on the
+    * write job ([[writeCounted]]), then the model's sidecars and the
+    * family's `encoding` marker, if any.
+    *
+    * @return number of vectors written
+    */
+  def write[M](f: VectorFamily[M], df: DataFrame, idCol: String,
+      vecCol: String, model: M, path: String): Long = {
+    val spark = df.sparkSession
+    val n = writeCounted(f.encode(df, idCol, vecCol, model),
+      s"$path/${f.data}", partitionCol(f))
+    f.writeModel(spark, path, model)
+    f.encoding.foreach(e => SidecarParquet.writeFlat(s"$path/encoding",
+      hconf(spark), Seq("encoding" -> "string"), Seq(Seq(e))))
+    n
+  }
 
   /** Append a batch under the frozen models: ids already in `data` are
     * anti-joined out (a column-pruned id scan), and the append itself is a
@@ -124,8 +166,8 @@ private[graft] object VectorStores {
     try {
       val n = fresh.count()
       if (n > 0)
-        writeData(f, f.encode(fresh, idCol, vecCol, model), path,
-          SaveMode.Append)
+        writeCounted(f.encode(fresh, idCol, vecCol, model),
+          s"$path/${f.data}", partitionCol(f), SaveMode.Append)
       n
     } finally { fresh.unpersist(); () }
   }
@@ -166,7 +208,8 @@ private[graft] object VectorStores {
   /** Rewrite the data artifact against small-file drift: a partitioned
     * store is laid out per cluster ([[Search.clusterCompactionLayout]]),
     * a flat one into `targetFiles` id-range-sorted files (id probes prune
-    * on row-group stats). Rows are parity-checked against the source.
+    * on row-group stats). Rows are parity-checked against the source (a
+    * partitioned store counts them on the write job, above the exchange).
     *
     * @return number of vectors in the compacted index
     */
@@ -182,14 +225,11 @@ private[graft] object VectorStores {
       val out =
         if (!f.partitioned)
           StoreParquet.rewriteSorted(src, Seq(col(idCol)), targetFiles, dst)
-        else {
-          // nClusters from a driver-side sidecar read, evaluated only when
-          // the per-cluster file budget needs it
-          writeData(f, Search.clusterCompactionLayout(src, idCol,
-            SidecarParquet.readGroups(s"$srcPath/centroids", hconf(spark))
-              .size.toLong, targetFiles), dstPath, SaveMode.Overwrite)
-          StoreParquet.open(spark, dst).count()
-        }
+        // nClusters from a driver-side sidecar read, evaluated only when
+        // the per-cluster file budget needs it
+        else writeCounted(Search.clusterCompactionLayout(src, idCol,
+          SidecarParquet.readGroups(s"$srcPath/centroids", hconf(spark))
+            .size.toLong, targetFiles), dst, partitionCol(f))
       require(out == n,
         s"${f.data} compaction row mismatch: source $n, got $out")
       out
@@ -212,7 +252,7 @@ private[graft] object VectorStores {
         f.writer)
     requireEncoding(f, spark, srcPath, op)
     val version = readModelVersion(spark, srcPath) + 1
-    val n = f.write(df, idCol, vecCol, train, dstPath)
+    val n = write(f, df, idCol, vecCol, train, dstPath)
     f.artifacts.foreach(a => tagModelVersion(s"$dstPath/$a", version,
       hconf(spark)))
     writeModelMarker(spark, dstPath, version, f.family)
@@ -244,13 +284,6 @@ private[graft] object VectorStores {
 
   private def partitionCol[M](f: VectorFamily[M]): Option[String] =
     if (f.partitioned) Some("cluster_id") else None
-
-  /** Write `df` as the data artifact of the store at `path`. */
-  private def writeData[M](f: VectorFamily[M], df: DataFrame, path: String,
-      mode: SaveMode): Unit = {
-    val w = df.write.mode(mode)
-    partitionCol(f).fold(w)(c => w.partitionBy(c)).parquet(s"$path/${f.data}")
-  }
 
   /** The one read entry of every family's `*FromIndex` reader: refuse a
     * store of another encoding or a torn model generation (driver-side,

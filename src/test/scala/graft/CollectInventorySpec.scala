@@ -15,7 +15,7 @@ class CollectInventorySpec extends AnyFunSuite {
   /** file (relative to src/main/scala) -> inventoried collect() count */
   private val inventoried: Map[String, Int] = Map(
     "graft/Queries.scala" -> 9,
-    "graft/operators/Search.scala" -> 4,
+    "graft/operators/Search.scala" -> 3,
     "graft/operators/LmScore.scala" -> 1,
     "graft/RecallBench.scala" -> 7,
     "graft/operators/Sampling.scala" -> 5,

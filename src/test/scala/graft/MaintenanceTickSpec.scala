@@ -112,7 +112,7 @@ class MaintenanceTickSpec extends SparkSpec {
       idle = 0.0, past = _ + 0.25,
       live => { Search.appendIvfIndex(oneHot(Seq(501L)), "vec_id",
         "embedding", live); () },
-      jobs = 8),
+      jobs = 6),
     Row("text",
       () => catalog("ticktext") { g0 =>
         Search.writeTextIndex(docs(0L, 40), "doc_id", "toks", g0)

@@ -202,6 +202,26 @@ class ProfileSpec extends SparkSpec {
       Profile.appendProfile(d1, Seq("id"), "b1", foreign.toString))
   }
 
+  test("appendProfile: a fresh batch is a replay probe plus one counted write; a replay adds no file") {
+    import java.nio.file.Files
+    val store = Files.createTempDirectory("profjobs").toString
+    def files: Set[String] = {
+      val it = Files.walk(java.nio.file.Paths.get(store))
+      try { val b = Set.newBuilder[String]; it.forEach(p => { b += p.toString; () }); b.result() }
+      finally it.close()
+    }
+    val d1 = Seq((1L, 9.5), (2L, 9.75)).toDF("id", "x")
+    val d2 = Seq((3L, 10.5), (4L, 0.125)).toDF("id", "x")
+    assert(Profile.appendProfile(d1, Seq("id", "x"), "j1", store) === 2L)
+    val (n, jobs) = countJobs(
+      Profile.appendProfile(d2, Seq("id", "x"), "j2", store))
+    assert(n === 2L)
+    assert(jobs == 4, s"a fresh-batch append ran $jobs jobs")
+    val before = files
+    assert(Profile.appendProfile(d2, Seq("id", "x"), "j2", store) === 0L)
+    assert(files == before, "a replay must add no file")
+  }
+
   test("quantileCard ≡ driver-side order statistics; tiebreak-independent; guards") {
     val rnd = new scala.util.Random(99)
     val vals = (1 to 537).map(_ => rnd.nextInt(1000).toLong)

@@ -15,7 +15,7 @@ import graft.sources.StoreParquet
   * store gate once: the append-or-create sites refuse a foreign
   * directory without writing into it and treat commit leftovers as an
   * empty store; the must-exist sites refuse an empty or missing store
-  * before any write.
+  * (and the IVF append an index missing its centroids) before any write.
   */
 class StoreParquetSpec extends SparkSpec {
   import spark.implicits._
@@ -287,9 +287,18 @@ class StoreParquetSpec extends SparkSpec {
         Dedup.compactSequenceStore(spark, src, dst); () }),
       ("Dedup.compactSequencePairs", "pairs", (src, dst) => {
         Dedup.compactSequencePairs(spark, src, dst, upToBatchId = 0); () }))
+    // an IVF store whose `centroids` sidecar is gone: the append's family
+    // gate refuses it before any write
+    val noCentroids = s"${tmp("gate-nocent")}/store"
+    Search.writeIvfIndex(vecs, "embedding",
+      Seq(0 -> Array(1f, 0f), 1 -> Array(0f, 1f)), noCentroids)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(noCentroids, "centroids"))
     sites.foreach { case (site, leg, run) =>
       val missing = s"${tmp("gate-missing")}/store"
-      Seq(missing, seeded("success", leg)).foreach { src =>
+      val stores = Seq(missing, seeded("success", leg)) ++
+        (if (site == "Search.appendIvfIndex") Seq(noCentroids) else Nil)
+      stores.foreach { src =>
         val dst = s"${tmp("gate-dst")}/out"
         val before = tree(src)
         intercept[IllegalArgumentException](run(src, dst))

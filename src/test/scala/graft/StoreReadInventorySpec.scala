@@ -51,6 +51,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * `StoreParquet`'s append-or-create and must-exist gates), and a
   * recursive `listFiles(…, true)` appears once, in
   * `graft/sources/PathState.scala`.
+  *
+  * An eighth keeps one writer per persisted index: outside comments, the
+  * store writes in `graft/operators/Search.scala` and
+  * `graft/operators/VectorStores.scala` — `.write.` chains and
+  * `writeCounted(` calls — are pinned at [[writeSites]], so a new write
+  * path goes through `VectorStores.write` / `writeCounted` or the text
+  * index's one writer instead of growing another hand-copied one.
   */
 class StoreReadInventorySpec extends AnyFunSuite {
 
@@ -99,6 +106,12 @@ class StoreReadInventorySpec extends AnyFunSuite {
     """\blistFiles\s*\((?:[^()]|\([^()]*\))*,\s*true\s*\)""".r
   private val gateDirs = Seq("graft/operators", "graft/sources", "graft/streaming")
   private val walkHome = "graft/sources/PathState.scala"
+
+  private val storeWrite =
+    """\.\s*write\s*\.|(?<!def\s)\bwriteCounted\s*\(""".r
+  private val writeHomes = Set("graft/operators/Search.scala",
+    "graft/operators/VectorStores.scala")
+  private val writeSites = 12
 
   private val root = java.nio.file.Paths.get("src/main/scala")
   private val testRoot = java.nio.file.Paths.get("src/test/scala")
@@ -207,6 +220,14 @@ class StoreReadInventorySpec extends AnyFunSuite {
         s"recursive listFiles walk of its own; found: $walks")
   }
 
+  test("one writer per persisted index: the store writes in Search and VectorStores are pinned") {
+    val counts = scan("graft/operators", storeWrite).filter(c => writeHomes(c._1))
+    assert(counts.values.sum == writeSites,
+      "write a vector store through VectorStores.write / writeCounted and " +
+        "the text index through its one writer instead of adding a write " +
+        s"path; $writeSites pinned, found: $counts")
+  }
+
   test("the scan sees the spellings it gates") {
     val src = """val a = spark.read.parquet(s"$p/vectors")
       |val b = spark.read.option("basePath", w)
@@ -275,5 +296,13 @@ class StoreReadInventorySpec extends AnyFunSuite {
       |fs.listFiles(p, false)
       |new java.io.File(d).listFiles()""".stripMargin
     assert(recursiveListing.findAllMatchIn(code(walk)).size == 2)
+    val writes = """df.write.mode(SaveMode.Overwrite).parquet(p)
+      |  .write .mode("overwrite")
+      |val n = VectorStores.writeCounted(rows, s"$p/codes")
+      |// df.write.parquet(commented)
+      |  * [[writeCounted]] in a scaladoc, df.write.parquet(x) too
+      |def writeCounted(df: DataFrame, path: String,
+      |out.write(bytes); SidecarParquet.writeFlat(dir, conf, f, r)""".stripMargin
+    assert(storeWrite.findAllMatchIn(code(writes)).size == 3)
   }
 }

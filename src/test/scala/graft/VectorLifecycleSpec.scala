@@ -16,7 +16,8 @@ import graft.sources.SidecarParquet
   * return count, an order-free content fingerprint of the data artifact
   * and the operation's Spark job count ([[SparkSpec.countJobs]]). The id
   * set of every store is also checked against the set the step sequence
-  * implies, so the pins describe correct stores.
+  * implies, so the pins describe correct stores, and every IVF step but
+  * removal must leave a drift-stats sidecar equal to the exact recompute.
   */
 class VectorLifecycleSpec extends SparkSpec {
 
@@ -147,6 +148,15 @@ class VectorLifecycleSpec extends SparkSpec {
       s"tags=${tags.mkString(",")} marker=$marker enc=$enc fp=$fp"
   }
 
+  /** The IVF store's drift-stats sidecar, None when it is not current. */
+  private def driftSidecar(path: String): Option[Seq[(Int, Long, Long)]] =
+    Search.ivfDriftStatsFromSidecar(spark, path).map(driftRows)
+
+  private def driftRows(stats: DataFrame): Seq[(Int, Long, Long)] =
+    stats.select(col("cluster_id").cast("int"), col("n"), col("sim_fp_sum"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1).toSeq
+
   /** Distinct ids stored in the data artifact of `path`. */
   private def storedIds(f: Family, path: String): Set[Long] =
     spark.read.parquet(s"$path/${f.data}").select(idCol).distinct()
@@ -163,6 +173,11 @@ class VectorLifecycleSpec extends SparkSpec {
       val expect = if (want < 0) live.size.toLong else want
       assert(rows == expect, s"${f.name} $name returned $rows, expected $expect")
       assert(storedIds(f, path) == live.keySet, s"${f.name} $name: stored ids")
+      // every IVF operation but removal leaves a current drift sidecar
+      if (f.name == "ivf" && !name.startsWith("remove"))
+        assert(driftSidecar(path).contains(driftRows(
+          Search.ivfDriftStatsExact(spark, path, vecCol))),
+          s"ivf $name: the drift sidecar must equal the exact recompute")
       out += observe(f, name, path, rows, jobs)
     }
     val p0 = tmp(s"lc-${f.name}-0")
@@ -201,17 +216,17 @@ class VectorLifecycleSpec extends SparkSpec {
     */
   private val expected: Map[String, Seq[String]] = Map(
     "ivf" -> Seq(
-      "write rows=90 jobs=6 dirs=centroids,driftstats,vectors " +
+      "write rows=90 jobs=4 dirs=centroids,driftstats,vectors " +
         "tags= marker=none enc=none fp=2798922393506168316",
       "append rows=20 jobs=9 dirs=centroids,driftstats,vectors " +
         "tags= marker=none enc=none fp=-6768755623290157986",
       "remove rows=106 jobs=3 dirs=centroids,vectors " +
         "tags= marker=none enc=none fp=8442097251495635409",
-      "update rows=106 jobs=10 dirs=centroids,driftstats,vectors " +
+      "update rows=106 jobs=8 dirs=centroids,driftstats,vectors " +
         "tags= marker=none enc=none fp=-2969268774220682687",
-      "compact rows=106 jobs=8 dirs=centroids,driftstats,vectors " +
+      "compact rows=106 jobs=6 dirs=centroids,driftstats,vectors " +
         "tags= marker=none enc=none fp=-2969268774220682687",
-      "refresh rows=106 jobs=8 dirs=centroids,driftstats,model,vectors " +
+      "refresh rows=106 jobs=6 dirs=centroids,driftstats,model,vectors " +
         "tags=centroids:v1,vectors:v1 marker=v1/ivf enc=none fp=-3764286630181963043",
       "remove-after-refresh rows=104 jobs=3 dirs=centroids,model,vectors " +
         "tags=centroids:v1,vectors:v1 marker=v1/ivf enc=none fp=-3015522842708398800"),
@@ -254,7 +269,7 @@ class VectorLifecycleSpec extends SparkSpec {
         "tags= marker=none enc=none fp=-6958480707194166477",
       "update rows=106 jobs=5 dirs=centroids,codebooks,codes " +
         "tags= marker=none enc=none fp=3683270357315827573",
-      "compact rows=106 jobs=6 dirs=centroids,codebooks,codes " +
+      "compact rows=106 jobs=4 dirs=centroids,codebooks,codes " +
         "tags= marker=none enc=none fp=3683270357315827573",
       "refresh rows=106 jobs=7 dirs=centroids,codebooks,codes,model " +
         "tags=centroids:v1,codebooks:v1,codes:v1 marker=v1/ivfpq enc=none fp=5761516726647204503",
@@ -269,7 +284,7 @@ class VectorLifecycleSpec extends SparkSpec {
         "tags= marker=none enc=fp_residual fp=3185855663941930001",
       "update rows=106 jobs=5 dirs=centroids,codebooks,codes,encoding " +
         "tags= marker=none enc=fp_residual fp=-9133061710733205334",
-      "compact rows=106 jobs=6 dirs=centroids,codebooks,codes,encoding " +
+      "compact rows=106 jobs=4 dirs=centroids,codebooks,codes,encoding " +
         "tags= marker=none enc=fp_residual fp=-9133061710733205334",
       "refresh rows=106 jobs=7 dirs=centroids,codebooks,codes,encoding,model " +
         "tags=centroids:v1,codebooks:v1,codes:v1,encoding:v1 marker=v1/ivfpq_residual enc=fp_residual fp=2667019756587248300",
