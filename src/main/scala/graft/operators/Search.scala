@@ -346,9 +346,9 @@ object Search {
       idCol: String, vecCol: String): Long = {
     requireIvfBatchColumns("updateIvfIndex", refreshBatch,
       StoreParquet.open(spark, s"$srcPath/vectors"))
-    driftStatsStep(spark, dstPath, SeedDrift(vecCol))(
+    seedDriftStats(spark, dstPath, vecCol, Some(
       VectorStores.update(VectorStores.Ivf, "updateIvfIndex", spark, srcPath,
-        dstPath, retireIds, refreshBatch, idCol, vecCol))
+        dstPath, retireIds, refreshBatch, idCol, vecCol)))
   }
 
   /** BM25 top-k against a persisted [[writeTextIndex]] index. Same formula
@@ -644,8 +644,8 @@ object Search {
   def writeIvfIndex(df: DataFrame, vecCol: String,
       centroids: Seq[(Int, Array[Float])], path: String): Long =
     // IVF's encode keeps every column of `df`, so it takes no id column
-    driftStatsStep(df.sparkSession, path, SeedDrift(vecCol))(
-      VectorStores.write(VectorStores.Ivf, df, "", vecCol, centroids, path))
+    seedDriftStats(df.sparkSession, path, vecCol, Some(
+      VectorStores.write(VectorStores.Ivf, df, "", vecCol, centroids, path)))
 
   /** Incrementally maintain a persisted IVF index: assign a NEW batch to
     * the FROZEN sidecar centroids and append into the cluster-partitioned
@@ -673,7 +673,7 @@ object Search {
     if (PathState.hasData(s"$path/vectors", spark.sparkContext.hadoopConfiguration))
       requireIvfBatchColumns("appendIvfIndex", batch,
         StoreParquet.open(spark, s"$path/vectors"))
-    driftStatsStep(spark, path, ExtendDrift(vecCol))(
+    extendingDrift(spark, path, vecCol)(
       VectorStores.append(VectorStores.Ivf, "appendIvfIndex", batch, idCol,
         vecCol, path))
   }
@@ -865,7 +865,9 @@ object Search {
     * Parity-checked (ADVICE r16): the stat rows come from an inner join
     * against the centroids, so a row whose `cluster_id` is missing there
     * (a corrupt or hand-edited store) would silently drop — Σn must equal
-    * `total` (a write's own observed count; a count of the store if None).
+    * `total` (a count of the store if None). A full write passes itself
+    * as `total` (`Some(VectorStores.write(…))`): it runs first, and its
+    * observed count spares the re-count job.
     *
     * @return total vectors accounted (Σ n, == the store's row count)
     */
@@ -897,51 +899,32 @@ object Search {
       vecCol: String): Long =
     seedDriftStats(spark, path, vecCol, None)
 
-  /** What [[driftStatsStep]] does around an IVF operation. */
-  private sealed trait DriftUpkeep
-  private final case class SeedDrift(vecCol: String) extends DriftUpkeep
-  private final case class ExtendDrift(vecCol: String) extends DriftUpkeep
-  private final case class CarryDrift(src: String) extends DriftUpkeep
-
-  /** The drift-stats sidecar's upkeep around one IVF store operation `op`
-    * ([[VectorStores]] knows nothing of it), for the store at `path`:
-    *   - seed (`op` wrote the whole store): re-seed from the store, with
-    *     `op`'s observed count as the parity total — no re-count job;
-    *   - extend (`op` appended): a sidecar current before the append gets
-    *     delta rows aggregated from exactly the files the append added —
-    *     the difference of the listings the fingerprints take anyway —
-    *     (exact long sums, associative); a stale or absent one (a
-    *     pre-sidecar or crash-staled store) is re-seeded from the store;
-    *   - carry (`op` compacted `src` row for row): a VALID source sidecar
-    *     carries over aggregated; a stale or absent one heals later (R183).
+  /** Run `op`, an append into the IVF store at `path`, and extend its
+    * drift-stats sidecar: one current before the append gets delta rows
+    * aggregated from exactly the files the append added — the difference
+    * of the listings the fingerprints take anyway — (exact long sums,
+    * associative); a stale or absent one (a pre-sidecar or crash-staled
+    * store) is re-seeded from the store.
     *
     * @return `op`'s count
     */
-  private def driftStatsStep(spark: SparkSession, path: String,
-      upkeep: DriftUpkeep)(op: => Long): Long = {
+  private def extendingDrift(spark: SparkSession, path: String,
+      vecCol: String)(op: => Long): Long = {
     def listing = PathState.visibleParquet(s"$path/vectors",
       spark.sparkContext.hadoopConfiguration)
-    val before = upkeep match { case ExtendDrift(_) => listing; case _ => Nil }
+    val before = listing
     val current = before.nonEmpty &&
       readDriftMarker(spark, path).contains(fingerprintOf(before))
     val n = op
-    upkeep match {
-      case SeedDrift(vecCol) => seedDriftStats(spark, path, vecCol, Some(n))
-      case ExtendDrift(vecCol) if n > 0 && !current =>
-        seedIvfDriftStats(spark, path, vecCol)
-      case ExtendDrift(vecCol) if n > 0 =>
-        val after = listing
-        val known = before.map(_._1).toSet
-        val added = after.map(_._1).filterNot(known).map(r => s"$path/vectors/$r")
-        writeDriftRows(spark, path, collectDriftRows(driftStatRows(
-          StoreParquet.open(spark, s"$path/vectors", added), vecCol,
-          readIvfCentroids(spark, path))), SaveMode.Append)
-        writeDriftMarker(spark, path, fingerprintOf(after))
-      case CarryDrift(src) => ivfDriftStatsFromSidecar(spark, src).foreach { st =>
-        writeDriftRows(spark, path, collectDriftRows(st), SaveMode.Overwrite)
-        writeDriftMarker(spark, path, fingerprintOf(listing))
-      }
-      case _ =>
+    if (n > 0 && !current) seedIvfDriftStats(spark, path, vecCol)
+    else if (n > 0) {
+      val after = listing
+      val known = before.map(_._1).toSet
+      val added = after.map(_._1).filterNot(known).map(r => s"$path/vectors/$r")
+      writeDriftRows(spark, path, collectDriftRows(driftStatRows(
+        StoreParquet.open(spark, s"$path/vectors", added), vecCol,
+        readIvfCentroids(spark, path))), SaveMode.Append)
+      writeDriftMarker(spark, path, fingerprintOf(after))
     }
     n
   }
@@ -2079,10 +2062,10 @@ object Search {
   def refreshIvfIndex(df: DataFrame, idCol: String, vecCol: String,
       srcPath: String, dstPath: String, nClusters: Int,
       salt: String = "refresh"): Long =
-    driftStatsStep(df.sparkSession, dstPath, SeedDrift(vecCol))(
+    seedDriftStats(df.sparkSession, dstPath, vecCol, Some(
       VectorStores.refresh(VectorStores.Ivf, "refreshIvfIndex", df, idCol,
         vecCol, srcPath, dstPath)(
-        sampledCentroids(df, idCol, vecCol, nClusters, salt)))
+        sampledCentroids(df, idCol, vecCol, nClusters, salt))))
 
   /** [[refreshIvfIndex]] for the flat PQ family: codebooks re-train on
     * the current corpus via the deterministic sampled recipe
@@ -2348,10 +2331,18 @@ object Search {
     * @return number of vectors in the compacted index
     */
   def compactIvfIndex(spark: SparkSession, srcPath: String,
-      dstPath: String, targetFilesPerCluster: Int = 1): Long =
-    driftStatsStep(spark, dstPath, CarryDrift(srcPath))(
-      VectorStores.compact(VectorStores.Ivf, "compactIvfIndex", spark,
-        srcPath, dstPath, targetFilesPerCluster))
+      dstPath: String, targetFilesPerCluster: Int = 1): Long = {
+    val n = VectorStores.compact(VectorStores.Ivf, "compactIvfIndex", spark,
+      srcPath, dstPath, targetFilesPerCluster)
+    // a VALID source drift sidecar carries over aggregated (compaction
+    // keeps every row); a stale or absent one heals later (R183)
+    ivfDriftStatsFromSidecar(spark, srcPath).foreach { st =>
+      writeDriftRows(spark, dstPath, collectDriftRows(st), SaveMode.Overwrite)
+      writeDriftMarker(spark, dstPath,
+        storeFingerprint(spark, s"$dstPath/vectors"))
+    }
+    n
+  }
 
   /** [[compactIvfIndex]] for the composed IVF-PQ families (plain AND
     * residual — the `encoding` sidecar rides along when present, so the

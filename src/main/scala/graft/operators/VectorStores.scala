@@ -208,8 +208,8 @@ private[graft] object VectorStores {
   /** Rewrite the data artifact against small-file drift: a partitioned
     * store is laid out per cluster ([[Search.clusterCompactionLayout]]),
     * a flat one into `targetFiles` id-range-sorted files (id probes prune
-    * on row-group stats). Rows are parity-checked against the source (a
-    * partitioned store counts them on the write job, above the exchange).
+    * on row-group stats). Rows are parity-checked against the source by
+    * re-reading the committed output, so the check verifies the rewrite.
     *
     * @return number of vectors in the compacted index
     */
@@ -225,11 +225,16 @@ private[graft] object VectorStores {
       val out =
         if (!f.partitioned)
           StoreParquet.rewriteSorted(src, Seq(col(idCol)), targetFiles, dst)
-        // nClusters from a driver-side sidecar read, evaluated only when
-        // the per-cluster file budget needs it
-        else writeCounted(Search.clusterCompactionLayout(src, idCol,
-          SidecarParquet.readGroups(s"$srcPath/centroids", hconf(spark))
-            .size.toLong, targetFiles), dst, partitionCol(f))
+        else {
+          // nClusters from a driver-side sidecar read, evaluated only when
+          // the per-cluster file budget needs it
+          Search.clusterCompactionLayout(src, idCol,
+            SidecarParquet.readGroups(s"$srcPath/centroids", hconf(spark))
+              .size.toLong, targetFiles)
+            .write.mode(SaveMode.Overwrite).partitionBy("cluster_id")
+            .parquet(dst)
+          StoreParquet.open(spark, dst).count()
+        }
       require(out == n,
         s"${f.data} compaction row mismatch: source $n, got $out")
       out

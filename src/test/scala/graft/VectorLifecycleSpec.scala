@@ -224,7 +224,7 @@ class VectorLifecycleSpec extends SparkSpec {
         "tags= marker=none enc=none fp=8442097251495635409",
       "update rows=106 jobs=8 dirs=centroids,driftstats,vectors " +
         "tags= marker=none enc=none fp=-2969268774220682687",
-      "compact rows=106 jobs=6 dirs=centroids,driftstats,vectors " +
+      "compact rows=106 jobs=8 dirs=centroids,driftstats,vectors " +
         "tags= marker=none enc=none fp=-2969268774220682687",
       "refresh rows=106 jobs=6 dirs=centroids,driftstats,model,vectors " +
         "tags=centroids:v1,vectors:v1 marker=v1/ivf enc=none fp=-3764286630181963043",
@@ -269,7 +269,7 @@ class VectorLifecycleSpec extends SparkSpec {
         "tags= marker=none enc=none fp=-6958480707194166477",
       "update rows=106 jobs=5 dirs=centroids,codebooks,codes " +
         "tags= marker=none enc=none fp=3683270357315827573",
-      "compact rows=106 jobs=4 dirs=centroids,codebooks,codes " +
+      "compact rows=106 jobs=6 dirs=centroids,codebooks,codes " +
         "tags= marker=none enc=none fp=3683270357315827573",
       "refresh rows=106 jobs=7 dirs=centroids,codebooks,codes,model " +
         "tags=centroids:v1,codebooks:v1,codes:v1 marker=v1/ivfpq enc=none fp=5761516726647204503",
@@ -284,7 +284,7 @@ class VectorLifecycleSpec extends SparkSpec {
         "tags= marker=none enc=fp_residual fp=3185855663941930001",
       "update rows=106 jobs=5 dirs=centroids,codebooks,codes,encoding " +
         "tags= marker=none enc=fp_residual fp=-9133061710733205334",
-      "compact rows=106 jobs=4 dirs=centroids,codebooks,codes,encoding " +
+      "compact rows=106 jobs=6 dirs=centroids,codebooks,codes,encoding " +
         "tags= marker=none enc=fp_residual fp=-9133061710733205334",
       "refresh rows=106 jobs=7 dirs=centroids,codebooks,codes,encoding,model " +
         "tags=centroids:v1,codebooks:v1,codes:v1,encoding:v1 marker=v1/ivfpq_residual enc=fp_residual fp=2667019756587248300",
